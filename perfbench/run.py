@@ -5,8 +5,8 @@
 Run from the root of the checkout whose program is measured. Workloads are listed in BENCHMARK.json;
 ``analytics_sf0.1`` is also accepted for manual runs (see NOTES.md). With
 ``--trace 0`` the run is timed with tracing off and reports the end-to-end
-metrics; with ``--trace 1`` it runs a fixed sequence twice, untraced and
-traced, and reports the per-layer metrics of the traced one. The last line
+metrics; with ``--trace 1`` it runs a fixed sequence untraced and traced
+and reports the per-layer metrics of the traced one. The last line
 of standard output is the result object; the line before it holds the
 details (per-operation medians, environment, failures). Exits 1 when any
 operation failed or returned a wrong result, 2 when the program under test
@@ -30,6 +30,14 @@ ROOT = os.getcwd()
 SPEC = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCHMARK.json")
 WORK = os.path.join(ROOT, ".bench_build", "perfbench")
 DRIVER_MEM = "3g"
+# Fixed heap layout, so that peak RSS and GC pauses follow the program's
+# allocation rather than timing: the heap committed at its maximum from the
+# start (no resizing), a fixed young generation (G1 otherwise resizes it
+# after every pause to meet its pause-time goal) and old-generation marking
+# started at a fixed occupancy instead of a predicted one.
+JVM_HEAP_OPTS = (
+    f"-Xms{DRIVER_MEM} -Xmn512m -XX:-G1UseAdaptiveIHOP -XX:InitiatingHeapOccupancyPercent=45"
+)
 WORKLOADS = {"analytics_sf0.01": 0.01, "analytics_sf0.1": 0.1, "versioned_oltp": None}
 
 
@@ -50,10 +58,13 @@ def pin_environment() -> dict[str, str]:
         "SPARK_LOCAL_DIRS": os.path.join(WORK, "spark-local"),
         "SPARK_GRAFT_WAREHOUSE": os.path.join(WORK, "warehouse"),
         "TMPDIR": tmp,
+        # glibc otherwise gives threads up to 8 malloc arenas per core, and
+        # how many get touched depends on thread timing
+        "MALLOC_ARENA_MAX": "2",
         "PYSPARK_SUBMIT_ARGS": " ".join(
             [
                 "--driver-java-options",
-                shlex.quote(f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"),
+                shlex.quote(f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData {JVM_HEAP_OPTS}"),
                 "--conf spark.ui.showConsoleProgress=false",
                 "pyspark-shell",
             ]
@@ -88,8 +99,10 @@ class Context:
         self.start_s = time.perf_counter() - self._t_start
         return self.spark, all_queries()
 
-    def mark_setup(self) -> None:
-        self.setup_s = time.perf_counter() - self._t_start
+    def mark_setup(self, excluded_s: float = 0.0) -> None:
+        """Set-up ends now; ``excluded_s`` is time spent on the benchmark's
+        own checks, not on the program."""
+        self.setup_s = time.perf_counter() - self._t_start - excluded_s
 
     def tracer(self):
         from spans import Tracer
