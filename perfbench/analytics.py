@@ -1,4 +1,9 @@
-"""Analytics workloads: a fixed set of registered queries at one scale.
+"""Analytics workloads: a fixed set of registered queries on one fixture set.
+
+The tables are the repo's deterministic analytics fixtures (TESTDATA.md,
+FIXTURES.md), the same ones the tests and ``bench.py`` read; ``fixtures/``
+holds byte-identical copies of the sf0.001 and sf0.01 sets, because a run
+reads nothing outside its checkout.
 
 Each query is one operation: ``registry.all_queries()[name].fn(spark,
 sf_dir)`` followed by ``collect()``. Set-up runs one discarded pass at the
@@ -15,7 +20,6 @@ import os
 import random
 import time
 
-import datagen
 from measure import geomean, summary
 
 # The 17 headline queries of bench.py, plus two heavy-tail targets.
@@ -43,10 +47,6 @@ QUERIES = [
     "events_interarrival_stats",
 ]
 
-# The fixture tables are fixed per scale; the run seed orders the queries.
-DATA_SEED = 42
-
-
 def _load_oracle_tools(root: str):
     spec = importlib.util.spec_from_file_location(
         "check_oracle", os.path.join(root, "tools", "check_oracle.py")
@@ -69,8 +69,8 @@ class _Fetched:
         return self.rows
 
 
-def run(ctx, sf: float) -> dict:
-    sf_dir = datagen.ensure_tables(os.path.join(ctx.work, "data"), sf, DATA_SEED)
+def run(ctx, sf_dir: str) -> dict:
+    """The run seed orders the queries; the tables are fixed."""
     spark, qs = ctx.start_session()
     oracle = _load_oracle_tools(ctx.root)
     con = oracle.duck_con(sf_dir)
@@ -123,7 +123,7 @@ def run(ctx, sf: float) -> dict:
             failures.append(f"{name}: {len(rows)} rows, oracle has {expected_rows.get(name)}")
         return dt
 
-    detail: dict = {"scale": sf, "queries": QUERIES}
+    detail: dict = {"data": sf_dir, "queries": QUERIES}
     if not ctx.trace:
         rng = random.Random(ctx.seed + 1)
         walls: dict[str, list[float]] = {q: [] for q in QUERIES}

@@ -388,7 +388,8 @@ def run(ctx) -> dict:
         # The untraced twin runs only the start of the traced sequence (load and
         # first cycle, same seed); the overhead compares that shared part.
         walls = []
-        for tracer, cycles in ((ctx.no_tracer(), 1), (ctx.tracer(), TRACE_CYCLES)):
+        for make_tracer, cycles in ((ctx.no_tracer, 1), (ctx.tracer, TRACE_CYCLES)):
+            tracer = make_tracer()
             store = Store(spark, os.path.join(ctx.work, "oltp"), ctx.seed, tracer)
             stores.append(store)
             before = _listing(store)

@@ -10,7 +10,7 @@ and reports the per-layer metrics of the traced one. The last line
 of standard output is the result object; the line before it holds the
 details (per-operation medians, environment, failures). Exits 1 when any
 operation failed or returned a wrong result, 2 when the program under test
-is missing.
+or the fixture set is missing.
 """
 
 from __future__ import annotations
@@ -38,7 +38,9 @@ DRIVER_MEM = "3g"
 JVM_HEAP_OPTS = (
     f"-Xms{DRIVER_MEM} -Xmn512m -XX:-G1UseAdaptiveIHOP -XX:InitiatingHeapOccupancyPercent=45"
 )
-WORKLOADS = {"analytics_sf0.01": 0.01, "analytics_sf0.1": 0.1, "versioned_oltp": None}
+# Analytics workloads name the fixture set they read; the store workload none.
+WORKLOADS = {"analytics_sf0.01": "sf0.01", "analytics_sf0.1": "sf0.1", "versioned_oltp": None}
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 def pin_environment() -> dict[str, str]:
@@ -160,10 +162,20 @@ def main() -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument(
+        "--data",
+        help="fixture set an analytics workload reads (default: fixtures/<scale> here; "
+        "sf0.1 has no copy there, so analytics_sf0.1 needs this)",
+    )
     args = ap.parse_args()
 
     if not os.path.isdir(os.path.join(ROOT, "db_core_spark")):
         print(f"perfbench: no db_core_spark package in {ROOT}; run from a checkout", file=sys.stderr)
+        return 2
+    scale = WORKLOADS[args.workload]
+    sf_dir = args.data or (scale and os.path.join(FIXTURES, scale))
+    if scale and not os.path.isfile(os.path.join(sf_dir, "lineitem.parquet")):
+        print(f"perfbench: no fixture set at {sf_dir}", file=sys.stderr)
         return 2
     with open(SPEC) as fh:
         spec = json.load(fh)
@@ -174,9 +186,8 @@ def main() -> int:
     import oltp
 
     ctx = Context(args, spec)
-    sf = WORKLOADS[args.workload]
     try:
-        res = oltp.run(ctx) if sf is None else analytics.run(ctx, sf)
+        res = analytics.run(ctx, sf_dir) if scale else oltp.run(ctx)
     finally:
         rss = _stop(ctx.spark) if ctx.spark is not None else 0.0
     metrics = res["metrics"]

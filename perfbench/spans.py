@@ -70,9 +70,6 @@ class Tracer:
         self._jvm = self._sc._jvm
         self._sql_store = spark._jsparkSession.sharedState().statusStore()
         self._last_execution = -1
-        if enabled:
-            self._drain()
-            self._last_execution = self._max_execution_id()
 
     # ------------------------------------------------------------- spans
 
@@ -106,6 +103,10 @@ class Tracer:
         if not self.enabled:
             yield None
             return
+        # SQL executions started before this operation (by the benchmark,
+        # or by program calls outside any operation) are not its own
+        self._drain()
+        self._last_execution = self._max_execution_id()
         try:
             with self.span(kind, **attrs) as rec:
                 group = f"perfbench-op-{rec['id']}"
@@ -126,11 +127,9 @@ class Tracer:
         self._jsc.listenerBus().waitUntilEmpty()
 
     def _max_execution_id(self) -> int:
+        # the store lists executions in id order
         n = self._sql_store.executionsCount()
-        if n == 0:
-            return -1
-        execs = self._sql_store.executionsList(max(0, n - RECENT), RECENT)
-        return max(execs.apply(i).executionId() for i in range(execs.size()))
+        return self._sql_store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
 
     def _collect(self, group: str, wall0: float, wall1: float) -> dict:
         self._drain()
@@ -168,20 +167,19 @@ class Tracer:
         return counts
 
     def _python_metrics(self) -> dict:
-        """Sum the Python-node SQL metrics of executions started since the
-        previous operation (each op runs alone, so they are all its own)."""
+        """Sum the Python-node SQL metrics of the executions started since
+        the operation began (operations run one at a time, so they are all
+        its own)."""
         out: dict[str, float] = {}
         n = self._sql_store.executionsCount()
         if n == 0:
             return out
         execs = self._sql_store.executionsList(max(0, n - RECENT), RECENT)
-        newest = self._last_execution
-        for i in range(execs.size()):
+        for i in reversed(range(execs.size())):
             ex = execs.apply(i)
             eid = ex.executionId()
             if eid <= self._last_execution:
-                continue
-            newest = max(newest, eid)
+                break  # id order: the rest are older
             names = {}
             metrics = ex.metrics()
             for j in range(metrics.size()):
@@ -196,7 +194,6 @@ class Tracer:
                 key = names.get(acc_text._1())
                 if key is not None:
                     out[f"py_{key}"] = out.get(f"py_{key}", 0.0) + parse_metric(acc_text._2())
-        self._last_execution = newest
         return out
 
     # ------------------------------------------------------------- output

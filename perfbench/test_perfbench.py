@@ -35,7 +35,7 @@ def tiny(monkeypatch):
     monkeypatch.chdir(ROOT)
     monkeypatch.setattr(run, "ROOT", ROOT)
     monkeypatch.setattr(run, "WORK", os.path.join(ROOT, ".bench_build", "perfbench-test"))
-    monkeypatch.setitem(run.WORKLOADS, "analytics_sf0.01", 0.001)
+    monkeypatch.setitem(run.WORKLOADS, "analytics_sf0.01", "sf0.001")
     for name, value in (("INITIAL_ROWS", 3000), ("BULK_ROWS", 1000), ("TRACE_CYCLES", 1)):
         monkeypatch.setattr(oltp, name, value)
     monkeypatch.setattr(analytics, "QUERIES", analytics.QUERIES[:4] + analytics.QUERIES[-3:])
