@@ -127,40 +127,39 @@ def run(ctx, sf_dir: str) -> dict:
     if not ctx.trace:
         rng = random.Random(ctx.seed + 1)
         walls: dict[str, list[float]] = {q: [] for q in QUERIES}
-        # at least one whole pass, so that every query has a sample
+        # whole passes, at least one, so that every query has as many
+        # samples as every other however fast the run goes
         t0 = time.perf_counter()
         passes = 0
         while passes == 0 or time.perf_counter() - t0 < ctx.seconds:
             for name in rng.sample(QUERIES, len(QUERIES)):
                 walls[name].append(one(name))
-                if passes and time.perf_counter() - t0 >= ctx.seconds:
-                    break
             passes += 1
         medians = [summary(walls[q])["median"] for q in QUERIES]
-        metrics = {
-            "op_set_s": sum(medians),
-            "op_geomean_s": geomean(medians),
-        }
+        metrics = {"op_set_s": sum(medians)}
         detail["passes"] = passes
+        detail["op_geomean_s"] = geomean(medians)
         detail["per_query_s"] = {q: summary(walls[q]) for q in QUERIES}
     else:
-        fixed = sorted(QUERIES)
-        t0 = time.perf_counter()
-        for name in fixed:
-            one(name)
-        untraced = time.perf_counter() - t0
+        # Every query runs once untraced and once traced, the two in turn
+        # first, so that the warm-up still under way after set-up falls on
+        # both alike and their difference is the tracing overhead.
         tracer = ctx.tracer()
-        t0 = time.perf_counter()
-        for name in fixed:
-            one(name, tracer)
-        traced = time.perf_counter() - t0
+        untraced = traced = 0.0
+        for i, name in enumerate(sorted(QUERIES)):
+            for tr in (None, tracer) if i % 2 == 0 else (tracer, None):
+                if tr is None:
+                    untraced += one(name)
+                else:
+                    traced += one(name, tr)
         metrics = ctx.layer_metrics(tracer, traced - untraced)
+        metrics["op_geomean_s"] = geomean([s["end"] - s["start"] for s in tracer.ops("query")])
         for span in tracer.ops("query"):
             metrics[f"queries.{span['query']}.jobs"] = span["counts"]["jobs"]
         detail["per_query_traced_s"] = {
             s["query"]: {"wall_s": s["end"] - s["start"], **s["counts"]} for s in tracer.ops("query")
         }
-        detail["untraced_pass_s"] = untraced
-        detail["traced_pass_s"] = traced
+        detail["untraced_s"] = untraced
+        detail["traced_s"] = traced
     detail["failures"] = failures
     return {"attempted": attempted, "failed": failed, "metrics": metrics, "detail": detail}
