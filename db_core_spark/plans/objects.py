@@ -5,11 +5,17 @@ VersionedTable rows keyed (obj_id, chunk_no).
 
 An object is a chunked byte stream: chunk k holds bytes
 [k*chunk_size, (k+1)*chunk_size). seek(offset) is chunk arithmetic — a read
-of [off, off+len) scans ONLY the covering chunk rows (predicate pushdown on
-chunk_no), mirroring the cursor walk of block_driver.rs:530-586 without
-touching the rest of the object. write-at-offset is read-modify-write of the
+of [off, off+len) returns the covering chunks, mirroring the cursor walk of
+block_driver.rs:530-586. write-at-offset is read-modify-write of the
 affected chunks inside the transaction (write_ins semantics,
 block_driver.rs:353-382), which becomes new row versions at commit.
+
+Committed reads (reader=None: read, read_at, length, read_snapshot) run no
+Spark job: VersionedTable.lookup_table folds the object's one bucket
+(bucket_cols=["obj_id"]) in the driver process and the bytes come straight
+from that Arrow table — the reference's in-process version-chain walk
+(block_driver.rs:461-486). Transaction reads go through Transaction.read()
+so they see the transaction's own writes.
 
 Client reads return driver-side `bytes` — the reference API is a client
 byte-copy loop (read_next into a buffer); bulk analytics over object payloads
@@ -122,14 +128,16 @@ class ObjectStore:
     def read(self, reader, obj_id: int) -> bytes | None:
         """Full sequential read (read_next loop). `reader` is a Transaction
         (read-your-own-writes) or None (latest committed snapshot)."""
-        chunks = self._chunks(reader, obj_id)
-        if not chunks:
-            return None
-        return b"".join(chunks[c] for c in sorted(chunks))
+        return _concat(self._chunks(reader, obj_id))
 
     def read_at(self, reader, obj_id: int, offset: int, length: int) -> bytes | None:
-        """seek(offset) + read(length): scans only covering chunks
-        (block_driver.rs:530-586)."""
+        """seek(offset) + read(length) over the covering chunks
+        (block_driver.rs:530-586). None if the object does not exist; a
+        zero-length read of an existing object is b""."""
+        if offset < 0 or length < 0:
+            raise ValueError(f"read_at offset and length must be >= 0, got {offset}, {length}")
+        if length == 0:
+            return b"" if self._chunks(reader, obj_id) else None
         cs = self.chunk_size
         first, last = offset // cs, (offset + length - 1) // cs
         chunks = self._chunks(reader, obj_id, first, last)
@@ -140,35 +148,45 @@ class ObjectStore:
         return span[rel : rel + length]
 
     def length(self, reader, obj_id: int) -> int:
-        df = self._chunk_df(reader).filter(F.col("obj_id") == obj_id)
+        if reader is None:
+            return sum(map(len, self._chunks(None, obj_id).values()))
+        df = reader.read().filter(F.col("obj_id") == obj_id)
         row = df.agg(F.sum(F.octet_length("payload")).alias("n")).collect()[0]
         return int(row.n or 0)
 
     def read_snapshot(self, obj_id: int, as_of_csn: int) -> bytes | None:
         """Historical read at an explicit csn (update_read_csn inverse —
         pin an OLD snapshot; system/instance.rs:378-387)."""
-        df = self.table.snapshot(as_of_csn).filter(F.col("obj_id") == obj_id)
-        rows = df.select("chunk_no", "payload").collect()
-        if not rows:
-            return None
-        return b"".join(bytes(r.payload) for r in sorted(rows, key=lambda r: r.chunk_no))
+        return _concat(_chunk_map(self.table.lookup_table({"obj_id": obj_id}, as_of_csn)))
 
     # ------------------------------------------------------------- internals
 
-    def _chunk_df(self, reader):
-        if reader is None:
-            return self.table.snapshot()
-        return reader.read()
-
     def _chunks(self, reader, obj_id: int, first: int | None = None, last: int | None = None):
-        df = self._chunk_df(reader).filter(F.col("obj_id") == obj_id)
+        """{chunk_no: payload} of one object, chunks first..last if given.
+        Committed reads (reader=None) fold the object's bucket in-process;
+        transaction reads go through the transaction's DataFrame."""
+        if reader is None:
+            chunks = _chunk_map(self.table.lookup_table({"obj_id": obj_id}))
+            if first is None:
+                return chunks
+            return {c: p for c, p in chunks.items() if first <= c <= last}
+        df = reader.read().filter(F.col("obj_id") == obj_id)
         if first is not None:
             df = df.filter((F.col("chunk_no") >= first) & (F.col("chunk_no") <= last))
         return {r.chunk_no: bytes(r.payload) for r in df.select("chunk_no", "payload").collect()}
 
-    def _chunk_nos(self, reader, obj_id: int) -> list[int]:
+    def _chunk_nos(self, txn: Transaction, obj_id: int) -> list[int]:
         """Chunk ids only — no payload bytes cross the wire. put()/delete()
         need just the id set; collecting payloads made a replace/delete
         O(object size) in driver memory for no reason."""
-        df = self._chunk_df(reader).filter(F.col("obj_id") == obj_id)
+        df = txn.read().filter(F.col("obj_id") == obj_id)
         return [r.chunk_no for r in df.select("chunk_no").collect()]
+
+
+def _chunk_map(tbl) -> dict[int, bytes]:
+    return dict(zip(tbl.column("chunk_no").to_pylist(), tbl.column("payload").to_pylist()))
+
+
+def _concat(chunks: dict[int, bytes]) -> bytes | None:
+    """The object's bytes in chunk order; None if it has no chunks."""
+    return b"".join(chunks[c] for c in sorted(chunks)) if chunks else None

@@ -29,10 +29,12 @@ Snapshot reads go through the `versioned` Python DataSource: one input
 partition per bucket group, each listing ONLY its buckets' files and
 resolving "newest visible version per key" in-partition — zero shuffle, the
 Spark analog of the reference's O(versions-of-that-object) chain walk
-(block_driver.rs:461-486). Point lookups (`lookup()`) plan a single
-partition for the key's bucket. Checkpoints resolve per-bucket through the
-same reader and write partitionBy(bucket) — shuffle-free end to end — and
-bound reader input to (checkpoint, S] deltas. The legacy window resolution
+(block_driver.rs:461-486). Point reads (`lookup()`, and the committed
+reads of ObjectStore) run that reader's fold for the key's one bucket in
+the driver process and schedule no Spark job. Checkpoints resolve
+per-bucket through the same reader and write partitionBy(bucket) —
+shuffle-free end to end — and bound reader input to (checkpoint, S]
+deltas. The legacy window resolution
 (one global shuffle on the key) remains as `snapshot(engine="window")` and
 for unbucketed (num_buckets=0) tables.
 """
@@ -591,29 +593,54 @@ class VersionedTable:
         )
 
     def lookup(self, key: dict) -> DataFrame:
-        """Point/prefix lookup by bucket-column values: computes the key's
-        bucket, plans a SINGLE input partition, and reads only that bucket's
-        files — O(versions of that key's bucket), the direct analog of the
-        reference's per-object version-chain walk (block_driver.rs:461-486).
+        """Point/prefix lookup by bucket-column values, answered in-process:
+        the key's one bucket is folded on the driver and the rows come back
+        as a local relation, so collecting them runs no Spark job
+        — the analog of the reference's per-object version-chain walk
+        (block_driver.rs:461-486), which schedules nothing either. The
+        snapshot is pinned when lookup() is called: the DataFrame keeps
+        returning those rows after later commits, checkpoints and vacuums.
         `key` must provide every bucket column; extra key columns narrow the
-        row filter further."""
+        row filter further. Unbucketed tables return a lazy window-snapshot
+        filter instead."""
         if self.num_buckets <= 0:
-            sn = self.snapshot(engine="window")
-            for c, v in key.items():
-                sn = sn.filter(F.col(c) == F.lit(v))
-            return sn
+            return self._window_lookup(key, None)
+        tbl, schema = self._fold_key(key, None)
+        return self.spark.createDataFrame(tbl, schema=schema)
+
+    def lookup_table(self, key: dict, as_of_csn: int | None = None):
+        """The rows of `lookup(key)` at `as_of_csn` (default: latest) as a
+        driver-side pyarrow Table — what ObjectStore reads take their bytes
+        from."""
+        if self.num_buckets <= 0:
+            return self._window_lookup(key, as_of_csn).toArrow()
+        return self._fold_key(key, as_of_csn)[0]
+
+    def _fold_key(self, key: dict, as_of_csn: int | None):
+        """Pin the op list (vacuum-reclaimed history raises
+        SnapshotUnavailableError here) and run the versioned reader's fold
+        for the key's one bucket in this process, the key pushed into the
+        parquet scan. Returns (pyarrow table, its Spark schema)."""
         missing = [c for c in self.bucket_cols if c not in key]
         if missing:
             raise ValueError(f"lookup needs all bucket columns; missing {missing}")
-        from db_core_spark.sources import register_versioned_format  # noqa: PLC0415
-
-        register_versioned_format(self.spark)
-        return (
-            self.spark.read.format("versioned")
-            .option("path", self.path)
-            .option("keyEquals", json.dumps(key))
-            .load()
+        from db_core_spark.sources.versioned_datasource import (  # noqa: PLC0415
+            VersionedSnapshotReader,
         )
+
+        reader = VersionedSnapshotReader(
+            self.schema,
+            {"path": self.path, "keyequals": json.dumps(key)},
+            ops=self._committed_ops(as_of_csn),
+        )
+        (part,) = reader.partitions()
+        return reader.fold(part), reader.output_schema()
+
+    def _window_lookup(self, key: dict, as_of_csn: int | None) -> DataFrame:
+        sn = self.snapshot(as_of_csn, engine="window")
+        for c, v in key.items():
+            sn = sn.filter(F.col(c) == F.lit(v))
+        return sn
 
     def history(self) -> DataFrame:
         """Every row version with metadata (the version-store chain view)."""

@@ -184,10 +184,11 @@ def mvcc_version_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 def versioned_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-key read through the bucketed layout end-to-end: commit a
     per-customer aggregate into a fresh VersionedTable, then lookup() one
-    key — which plans exactly ONE input partition and lists only that
-    key's bucket=<b>/ files (the per-object version-chain walk of
-    block_driver.rs:461-486 as physical IO; pruning asserted separately in
-    tests/test_plan_audits.py). The oracle recomputes the same row
+    key — which folds only that key's bucket=<b>/ files in the driver
+    process and returns a local relation, so no Spark job runs (the
+    per-object version-chain walk of block_driver.rs:461-486; pruning
+    asserted in tests/test_plan_audits.py, the job count in
+    tests/test_point_reads.py). The oracle recomputes the same row
     relationally."""
     import tempfile
 

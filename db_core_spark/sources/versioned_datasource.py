@@ -25,9 +25,13 @@ Scale design: the snapshot reader's partitions are key-hash bucket groups
 matching the physical bucket=<b>/ layout: each partition LISTS ONLY its
 buckets' files across ops and resolves versions locally — pruned IO and no
 shuffle (the same co-location argument as the reference's per-object version
-chains). keyEquals=<json> plans a single partition for a point lookup;
-includeMeta=true emits (_csn,_opseq,_deleted,bucket) winners so checkpoints
-write partitionBy(bucket) without a shuffle. Unbucketed (legacy) tables fall
+chains). keyEquals=<json> plans a single partition for a point lookup and
+pushes the bound key columns into the parquet scan; VersionedTable.lookup
+and the ObjectStore's committed reads run that partition's fold
+(`VersionedSnapshotReader.fold`) in the driver process instead of as a
+Spark job — one fold implementation for both. includeMeta=true emits
+(_csn,_opseq,_deleted,bucket) winners so checkpoints write
+partitionBy(bucket) without a shuffle. Unbucketed (legacy) tables fall
 back to full-scan + seedless row-hash filtering; ops whose bucket count
 differs from the table meta (layout migration) fall back per-op.
 """
@@ -201,13 +205,15 @@ def _group_visible(manifest: dict, path: str) -> bool:
     )
 
 
-def _op_table_dir(dir_path: str, op: dict, data_cols: list[str], data_schema=None):
+def _op_table_dir(
+    dir_path: str, op: dict, data_cols: list[str], data_schema=None, row_filter=None
+):
     """Load one directory (an op dir, or one bucket=<b>/ subdir of it) as a
     pyarrow table with _csn/_opseq/_deleted attached. Op part files
     physically carry (data cols, _deleted, _opseq); checkpoints carry _csn
-    too. Column projection happens at the parquet reader. Columns added by
-    alter_add_column after this op was written are null-filled (pass
-    `data_schema` to type the fill)."""
+    too. Column projection and `row_filter` (a pyarrow expression) happen at
+    the parquet reader. Columns added by alter_add_column after this op was
+    written are null-filled (pass `data_schema` to type the fill)."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
@@ -215,7 +221,7 @@ def _op_table_dir(dir_path: str, op: dict, data_cols: list[str], data_schema=Non
     ds = pads.dataset(dir_path, format="parquet")
     avail = set(ds.schema.names)
     present = [c for c in want if c in avail]
-    tbl = ds.to_table(columns=present)
+    tbl = ds.to_table(columns=present, filter=row_filter)
     missing = [c for c in want if c not in avail]
     if missing:
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -260,6 +266,40 @@ def _op_table_dir(dir_path: str, op: dict, data_cols: list[str], data_schema=Non
     return tbl
 
 
+def _key_scan_filter(key_equals: dict, key_cols: list[str], data_schema):
+    """Split keyEquals into a pyarrow scan predicate and the entries left for
+    the row filter after version resolution. Only key columns are pushed:
+    equality on a subset of key_cols keeps or drops a key's versions as a
+    whole, so the newest-version rule is unchanged; a predicate on any other
+    column could hide a tombstone and resurrect an older version. A value is
+    pushed only when it converts exactly to the column's arrow type;
+    anything else (a string for an int column, null, NaN) stays with the
+    pandas `==` filter, which answers it as before instead of raising an
+    Arrow type error."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    types = {f.name: f.type for f in to_arrow_schema(data_schema)}
+    pushed, rest = None, {}
+    for c, v in key_equals.items():
+        t = types.get(c)
+        scalar = None
+        if c in key_cols and t is not None and not pa.types.is_nested(t):
+            try:
+                s = pa.scalar(v, type=t)
+                if s.is_valid and s.as_py() == v:
+                    scalar = s
+            except (pa.ArrowException, TypeError, ValueError, OverflowError):
+                pass
+        if scalar is None:
+            rest[c] = v
+            continue
+        term = pads.field(c) == scalar
+        pushed = term if pushed is None else pushed & term
+    return pushed, rest
+
+
 @dataclass
 class KeyBucketPartition(InputPartition):
     """Legacy-layout partition: reads every op file, row-filters its hash
@@ -294,14 +334,19 @@ class VersionedSnapshotReader(DataSourceReader):
     each lists only its buckets' bucket=<b>/ subdirs of each op — pruned
     file listings + in-partition version resolution, no shuffle anywhere
     (parity: per-object chain walk, block_driver.rs:461-486). A keyEquals
-    option plans a SINGLE partition for the key's bucket. Ops written with a
+    option plans a SINGLE partition for the key's bucket and filters its key
+    columns in the parquet scan. Ops written with a
     different bucket count than the table meta (layout migration) fall back
     to read+row-filter for that op only.
 
     includeMeta=true emits (_csn, _opseq, _deleted, bucket) winners for the
-    shuffle-free checkpoint writer."""
+    shuffle-free checkpoint writer.
 
-    def __init__(self, schema: T.StructType, options: dict):
+    `fold(partition)` is the whole read as one pyarrow table. Spark tasks
+    stream it from `read`; VersionedTable point reads call it on the driver
+    with the op list they pinned (`ops`), so one fold serves both."""
+
+    def __init__(self, schema: T.StructType, options: dict, ops: list[dict] | None = None):
         self.path = options["path"]
         as_of = options.get("asofcsn")
         self.as_of = int(as_of) if as_of is not None else None
@@ -311,7 +356,7 @@ class VersionedSnapshotReader(DataSourceReader):
         )
         key_eq = options.get("keyequals")
         self.key_equals: dict | None = json.loads(key_eq) if key_eq else None
-        self.ops = _committed_ops(self.path, self.as_of)
+        self.ops = ops if ops is not None else _committed_ops(self.path, self.as_of)
         if self.num_buckets > 0:
             if self.key_equals is not None:
                 missing = [c for c in self.bucket_cols if c not in self.key_equals]
@@ -388,7 +433,17 @@ class VersionedSnapshotReader(DataSourceReader):
 
     # -------------------------------------------------------------- reading
 
+    def output_schema(self) -> T.StructType:
+        if self.include_meta:
+            return T.StructType(list(self.data_schema.fields) + META_SCHEMA_FIELDS)
+        return self.data_schema
+
     def read(self, partition):
+        yield from self.fold(partition).to_batches()
+
+    def fold(self, partition):
+        """Resolve this partition's rows: newest visible version per key,
+        tombstones hidden, as a pyarrow table typed by `output_schema()`."""
         import pandas as pd
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -396,11 +451,21 @@ class VersionedSnapshotReader(DataSourceReader):
         from db_core_spark.plans.versioned import bucket_of_py
 
         data_cols = [f.name for f in self.data_schema.fields]
+        out_cols = self.output_schema().fieldNames()
+        out_schema = to_arrow_schema(self.output_schema())
+        empty = out_schema.empty_table()
         if not self.ops:
-            return
+            return empty
+        scan_filter, row_filter = None, {}
+        if self.key_equals is not None:
+            scan_filter, row_filter = _key_scan_filter(
+                self.key_equals, self.key_cols, self.data_schema
+            )
         tables = []
         for d, op, pruned in self.dirs_for_partition(partition):
-            tbl = _op_table_dir(d, op, data_cols, data_schema=self.data_schema)
+            tbl = _op_table_dir(
+                d, op, data_cols, data_schema=self.data_schema, row_filter=scan_filter
+            )
             if pruned:
                 b = int(os.path.basename(d).split("=", 1)[1])
                 tbl = tbl.append_column(
@@ -408,7 +473,7 @@ class VersionedSnapshotReader(DataSourceReader):
                 )
             tables.append(tbl)
         if not tables:
-            return
+            return empty
         tbl = pa.concat_tables(tables, promote_options="permissive")
         pdf = tbl.to_pandas()
         if "bucket" not in pdf.columns or pdf["bucket"].isna().any():
@@ -436,7 +501,7 @@ class VersionedSnapshotReader(DataSourceReader):
                 )
                 pdf = pdf[h == partition.bucket]
         if len(pdf) == 0:
-            return
+            return empty
         # visibility rule (block_driver.rs:457-486): newest (_csn,_opseq)
         # version per key wins; tombstone winners hide the key
         pdf = (
@@ -444,21 +509,12 @@ class VersionedSnapshotReader(DataSourceReader):
             .drop_duplicates(self.key_cols, keep="first")
         )
         pdf = pdf[~pdf["_deleted"]]
-        if self.key_equals is not None:
-            for c, v in self.key_equals.items():
-                pdf = pdf[pdf[c] == v]
+        for c, v in row_filter.items():
+            pdf = pdf[pdf[c] == v]
         if len(pdf) == 0:
-            return
-        if self.include_meta:
-            out_cols = data_cols + ["_csn", "_opseq", "_deleted", "bucket"]
-            out_schema = to_arrow_schema(
-                T.StructType(list(self.data_schema.fields) + META_SCHEMA_FIELDS)
-            )
-        else:
-            out_cols = data_cols
-            out_schema = to_arrow_schema(self.data_schema)
+            return empty
         out = pa.Table.from_pandas(pdf[out_cols], preserve_index=False).select(out_cols)
-        yield from out.cast(out_schema).to_batches()
+        return out.cast(out_schema)
 
 
 @dataclass
