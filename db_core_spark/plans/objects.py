@@ -14,8 +14,10 @@ Committed reads (reader=None: read, read_at, length, read_snapshot) run no
 Spark job: VersionedTable.lookup_table folds the object's one bucket
 (bucket_cols=["obj_id"]) in the driver process and the bytes come straight
 from that Arrow table — the reference's in-process version-chain walk
-(block_driver.rs:461-486). Transaction reads go through Transaction.read()
-so they see the transaction's own writes.
+(block_driver.rs:461-486). A transaction with no buffered ops reads the
+same way at its start csn; that covers the chunk listing put() and delete()
+do before they stage anything. Once a transaction has buffered ops, its
+reads go through Transaction.read() so they see its own writes.
 
 Client reads return driver-side `bytes` — the reference API is a client
 byte-copy loop (read_next into a buffer); bulk analytics over object payloads
@@ -148,8 +150,9 @@ class ObjectStore:
         return span[rel : rel + length]
 
     def length(self, reader, obj_id: int) -> int:
-        if reader is None:
-            return sum(map(len, self._chunks(None, obj_id).values()))
+        tbl = self._committed(reader, obj_id)
+        if tbl is not None:
+            return sum(map(len, _chunk_map(tbl).values()))
         df = reader.read().filter(F.col("obj_id") == obj_id)
         row = df.agg(F.sum(F.octet_length("payload")).alias("n")).collect()[0]
         return int(row.n or 0)
@@ -161,12 +164,26 @@ class ObjectStore:
 
     # ------------------------------------------------------------- internals
 
+    def _committed(self, reader, obj_id: int):
+        """The object's rows as `reader` sees them, folded in-process as a
+        pyarrow table — when that view is committed state: the latest
+        snapshot for reader=None, the start snapshot for a transaction with
+        no buffered ops. None for a transaction with buffered ops: only
+        Transaction.read() layers those over the committed rows."""
+        if reader is None:
+            return self.table.lookup_table({"obj_id": obj_id})
+        reader._check_open()
+        if reader._ops:
+            return None
+        return self.table.lookup_table({"obj_id": obj_id}, reader.start_csn)
+
     def _chunks(self, reader, obj_id: int, first: int | None = None, last: int | None = None):
         """{chunk_no: payload} of one object, chunks first..last if given.
-        Committed reads (reader=None) fold the object's bucket in-process;
-        transaction reads go through the transaction's DataFrame."""
-        if reader is None:
-            chunks = _chunk_map(self.table.lookup_table({"obj_id": obj_id}))
+        Committed views fold the object's bucket in-process; a transaction
+        with buffered ops reads through its DataFrame."""
+        tbl = self._committed(reader, obj_id)
+        if tbl is not None:
+            chunks = _chunk_map(tbl)
             if first is None:
                 return chunks
             return {c: p for c, p in chunks.items() if first <= c <= last}
@@ -179,6 +196,9 @@ class ObjectStore:
         """Chunk ids only — no payload bytes cross the wire. put()/delete()
         need just the id set; collecting payloads made a replace/delete
         O(object size) in driver memory for no reason."""
+        tbl = self._committed(txn, obj_id)
+        if tbl is not None:
+            return tbl.column("chunk_no").to_pylist()
         df = txn.read().filter(F.col("obj_id") == obj_id)
         return [r.chunk_no for r in df.select("chunk_no").collect()]
 

@@ -25,16 +25,18 @@ Reference-parity map (citations into /root/reference):
 Scale design: data files are immutable parquet under
 data/tsn=<n>/opseq=<k>/bucket=<crc32(key)%B>/ — a key-hash-bucketed layout
 shared by BOTH writers (JVM txn commits and the pyarrow bulk-append parts).
-Snapshot reads go through the `versioned` Python DataSource: one input
-partition per bucket group, each listing ONLY its buckets' files and
-resolving "newest visible version per key" in-partition — zero shuffle, the
-Spark analog of the reference's O(versions-of-that-object) chain walk
-(block_driver.rs:461-486). Point reads (`lookup()`, and the committed
-reads of ObjectStore) run that reader's fold for the key's one bucket in
-the driver process and schedule no Spark job. Checkpoints resolve
-per-bucket through the same reader and write partitionBy(bucket) —
-shuffle-free end to end — and bound reader input to (checkpoint, S]
-deltas. The legacy window resolution
+Snapshot reads go through the `versioned` Python DataSource with
+min(num_buckets, defaultParallelism) input partitions — one Python task per
+core, never more tasks than buckets. Each task owns a group of buckets,
+lists ONLY those buckets' files and resolves "newest visible version per
+key" one bucket at a time — zero shuffle, the Spark analog of the
+reference's O(versions-of-that-object) chain walk (block_driver.rs:461-486).
+Point reads (`lookup()`, and the ObjectStore reads that see no buffered
+writes) run that reader's fold for the key's one bucket in the driver
+process and schedule no Spark job. Checkpoints resolve through the same
+reader at the same width and write partitionBy(bucket) — shuffle-free end
+to end, one file per non-empty bucket — and bound reader input to
+(checkpoint, S] deltas. The legacy window resolution
 (one global shuffle on the key) remains as `snapshot(engine="window")` and
 for unbucketed (num_buckets=0) tables.
 """
@@ -149,8 +151,11 @@ def publish_manifest(log_dir: str, name: str, manifest: dict) -> bool:
     csn allocation (mirrors the CAS publish of latest_commit_csn,
     system/instance.rs:212-219). On object stores this becomes a conditional put."""
     tmp = os.path.join(log_dir, f"_tmp-{uuid.uuid4().hex}.json")
+    # json.dumps runs the C encoder; json.dump streams through the pure
+    # Python one (2-3x slower on a 50k-key write set)
+    payload = json.dumps(manifest)
     with open(tmp, "w") as f:
-        json.dump(manifest, f)
+        f.write(payload)
         f.flush()
         os.fsync(f.fileno())
     final = os.path.join(log_dir, name)
@@ -563,8 +568,9 @@ class VersionedTable:
         — the visibility rule of block_driver.rs:457-486.
 
         Bucketed tables (the default) read through the `versioned` Python
-        DataSource: one input partition per bucket group, each listing ONLY
-        its buckets' files and resolving versions in-partition — no global
+        DataSource (`_bucketed_read`): min(num_buckets, defaultParallelism)
+        bucket-group partitions, each listing ONLY its buckets' files and
+        resolving versions in-partition, one bucket at a time — no global
         window shuffle, the per-object chain-walk cost model of the
         reference. engine="window" forces the legacy JVM window resolution
         (the only path for unbucketed tables)."""
@@ -573,17 +579,11 @@ class VersionedTable:
         if engine == "bucketed" and self.num_buckets <= 0:
             raise ValueError("table has no bucketed layout (created with num_buckets=0)")
         if engine != "window" and self.num_buckets > 0:
-            from db_core_spark.sources import register_versioned_format  # noqa: PLC0415
-
             # availability check runs here, driver-side, so vacuum-reclaimed
             # history raises a typed SnapshotUnavailableError (exceptions
             # inside DataSource planning surface as opaque PythonExceptions)
             self._committed_ops(as_of_csn)
-            register_versioned_format(self.spark)
-            reader = self.spark.read.format("versioned").option("path", self.path)
-            if as_of_csn is not None:
-                reader = reader.option("asOfCsn", str(as_of_csn))
-            return reader.load()
+            return self._bucketed_read(as_of_csn)
         vs = self._versions(as_of_csn)
         w = W.partitionBy(*self.key_cols).orderBy(F.desc("_csn"), F.desc("_opseq"))
         return (
@@ -591,6 +591,36 @@ class VersionedTable:
             .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
             .drop("_rn", *META_COLS)
         )
+
+    def _bucketed_read(self, as_of_csn: int | None, include_meta: bool = False) -> DataFrame:
+        """The versioned DataSource read behind snapshot() and checkpoint().
+
+        Width: min(num_buckets, defaultParallelism) bucket-group partitions
+        through the reader's numPartitions option. Every Python task pays a
+        fixed worker cost before the fold starts (SCALING.md), so the task
+        count follows the cores, never the bucket count or a size estimate.
+
+        The read schema is declared, so Spark skips the source's Python
+        schema() planning call. It is taken from _meta.json now, not from
+        this handle's `self.schema`: another handle's alter_add_column makes
+        that stale, and the reader emits the columns _meta.json names."""
+        from db_core_spark.sources import (  # noqa: PLC0415
+            VersionedDataSource,
+            register_versioned_format,
+        )
+
+        options = {"path": self.path, "includemeta": str(include_meta).lower()}
+        register_versioned_format(self.spark)
+        width = min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
+        reader = (
+            self.spark.read.format("versioned")
+            .schema(VersionedDataSource(options).schema())
+            .options(**options)
+            .option("numPartitions", str(width))
+        )
+        if as_of_csn is not None:
+            reader = reader.option("asOfCsn", str(as_of_csn))
+        return reader.load()
 
     def lookup(self, key: dict) -> DataFrame:
         """Point/prefix lookup by bucket-column values, answered in-process:
@@ -747,18 +777,11 @@ class VersionedTable:
         out_dir = os.path.join(self._data_dir, f"checkpoint-{csn:010d}")
         if self.num_buckets > 0:
             # bucketed: resolve in-partition via the datasource reader (each
-            # task folds only its buckets' files) and write partitionBy the
-            # carried bucket id — end-to-end shuffle-free checkpointing
-            from db_core_spark.sources import register_versioned_format  # noqa: PLC0415
-
-            register_versioned_format(self.spark)
-            resolved = (
-                self.spark.read.format("versioned")
-                .option("path", self.path)
-                .option("asOfCsn", str(csn))
-                .option("includeMeta", "true")
-                .load()
-            )
+            # task folds only its buckets' files, one bucket at a time) and
+            # write partitionBy the carried bucket id — end-to-end
+            # shuffle-free checkpointing; every bucket lives in one task, so
+            # each non-empty bucket gets exactly one file
+            resolved = self._bucketed_read(csn, include_meta=True)
             # r11: write first, then probe the result driver-side — the
             # former limit(1).count() emptiness pre-check cost a full extra
             # datasource read job per checkpoint just to pick the writer

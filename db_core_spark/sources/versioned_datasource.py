@@ -23,9 +23,13 @@ Reference-parity map (citations into /root/reference):
 
 Scale design: the snapshot reader's partitions are key-hash bucket groups
 matching the physical bucket=<b>/ layout: each partition LISTS ONLY its
-buckets' files across ops and resolves versions locally — pruned IO and no
-shuffle (the same co-location argument as the reference's per-object version
-chains). keyEquals=<json> plans a single partition for a point lookup and
+buckets' files across ops and resolves versions locally, one bucket at a
+time — pruned IO and no shuffle (the same co-location argument as the
+reference's per-object version chains). A direct format("versioned") read
+plans one partition per bucket unless numPartitions says otherwise;
+VersionedTable.snapshot() and checkpoint() ask for
+min(num_buckets, defaultParallelism) and declare the schema.
+keyEquals=<json> plans a single partition for a point lookup and
 pushes the bound key columns into the parquet scan; VersionedTable.lookup
 and the ObjectStore's committed reads run that partition's fold
 (`VersionedSnapshotReader.fold`) in the driver process instead of as a
@@ -330,10 +334,13 @@ class VersionedSnapshotReader(DataSourceReader):
     is resolved once at planning time (driver) so every task folds the same
     manifest set — a consistent read even while writers keep committing.
 
-    Bucketed tables (meta num_buckets > 0): partitions are bucket groups;
-    each lists only its buckets' bucket=<b>/ subdirs of each op — pruned
-    file listings + in-partition version resolution, no shuffle anywhere
-    (parity: per-object chain walk, block_driver.rs:461-486). A keyEquals
+    Bucketed tables (meta num_buckets > 0): partitions are bucket groups —
+    numPartitions of them (default: one per bucket), bucket b in group
+    b % numPartitions. Each lists only its buckets' bucket=<b>/ subdirs of
+    each op — pruned file listings + in-partition version resolution, no
+    shuffle anywhere (parity: per-object chain walk,
+    block_driver.rs:461-486). `read` folds a group one bucket at a time, so
+    a task holds one bucket's versions however wide its group. A keyEquals
     option plans a SINGLE partition for the key's bucket and filters its key
     columns in the parquet scan. Ops written with a
     different bucket count than the table meta (layout migration) fall back
@@ -342,9 +349,10 @@ class VersionedSnapshotReader(DataSourceReader):
     includeMeta=true emits (_csn, _opseq, _deleted, bucket) winners for the
     shuffle-free checkpoint writer.
 
-    `fold(partition)` is the whole read as one pyarrow table. Spark tasks
-    stream it from `read`; VersionedTable point reads call it on the driver
-    with the op list they pinned (`ops`), so one fold serves both."""
+    `fold(partition)` resolves a partition as one pyarrow table. Spark
+    tasks stream per-bucket folds from `read`; VersionedTable point reads
+    call it on the driver with the op list they pinned (`ops`), so one fold
+    serves both."""
 
     def __init__(self, schema: T.StructType, options: dict, ops: list[dict] | None = None):
         self.path = options["path"]
@@ -439,7 +447,13 @@ class VersionedSnapshotReader(DataSourceReader):
         return self.data_schema
 
     def read(self, partition):
-        yield from self.fold(partition).to_batches()
+        parts = (
+            [BucketSetPartition(buckets=(b,)) for b in partition.buckets]
+            if isinstance(partition, BucketSetPartition)
+            else [partition]
+        )
+        for part in parts:
+            yield from self.fold(part).to_batches()
 
     def fold(self, partition):
         """Resolve this partition's rows: newest visible version per key,

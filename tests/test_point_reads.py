@@ -184,3 +184,38 @@ def test_read_at_zero_length_and_negative_ranges(store):
         with pytest.raises(ValueError):
             store.read_at(reader, 1, 0, -1)
     t.rollback()
+
+
+def test_transaction_reads_before_buffered_ops_run_no_job(spark, store):
+    """A transaction with nothing buffered reads its start snapshot
+    in-process: put()/delete() list chunks without a Spark job, and a
+    commit that lands after begin() stays invisible to it."""
+    t = store.begin()
+    other = store.begin()
+    store.put(other, 2, b"later")
+    other.commit()
+    with job_count(spark) as n:
+        assert store.read(t, 2) == b"small"
+        assert store.length(t, 1) == 3 * CHUNK + 4
+        assert store.read_at(t, 1, CHUNK - 2, 4) == bytes([254, 255, 0, 1])
+        assert store.read(t, 99) is None
+        store.delete(t, 1)
+    assert n == [0]
+    t.rollback()
+    with pytest.raises(RuntimeError):
+        store.read(t, 2)
+
+
+def test_transaction_reads_see_buffered_writes(spark, store):
+    """Once ops are buffered, reads layer them over the start snapshot: a
+    second put in the same transaction tombstones the chunks past the new
+    end that the first put wrote."""
+    t = store.begin()
+    store.put(t, 3, b"x" * (3 * CHUNK))
+    assert store.length(t, 3) == 3 * CHUNK
+    store.put(t, 3, b"short")
+    assert store.read(t, 3) == b"short"
+    assert store.read(None, 3) is None
+    t.commit()
+    assert store.read(None, 3) == b"short"
+    assert store.table.lookup_table({"obj_id": 3}).num_rows == 1
