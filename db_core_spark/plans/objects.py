@@ -8,7 +8,10 @@ An object is a chunked byte stream: chunk k holds bytes
 of [off, off+len) returns the covering chunks, mirroring the cursor walk of
 block_driver.rs:530-586. write-at-offset is read-modify-write of the
 affected chunks inside the transaction (write_ins semantics,
-block_driver.rs:353-382), which becomes new row versions at commit.
+block_driver.rs:353-382), which becomes new row versions at commit. The
+chunk rows are driver-built literal frames, so the commit writes them
+in-process (Transaction._stage's LocalRelation path): one toArrow() job
+per op and no Spark write job.
 
 Committed reads (reader=None: read, read_at, length, read_snapshot) run no
 Spark job: VersionedTable.lookup_table folds the object's one bucket

@@ -24,7 +24,15 @@ Reference-parity map (citations into /root/reference):
 
 Scale design: data files are immutable parquet under
 data/tsn=<n>/opseq=<k>/bucket=<crc32(key)%B>/ — a key-hash-bucketed layout
-shared by BOTH writers (JVM txn commits and the pyarrow bulk-append parts).
+with two writers that agree on it: the JVM partitionBy("bucket") write job
+and `write_bucketed`, one pyarrow function (the python bucket twin). A
+commit stages an op whose frame is a LocalRelation (rows already on the
+driver: pandas/Arrow frames, delete_keys lists, object chunks) in-process
+through `write_bucketed` after one toArrow() job — the reference's commit
+writes in-process too (system/instance.rs:141-187) — and any other frame
+through the Spark write job; the versioned DataSource's batch and stream
+writers call `write_bucketed` on the executors. Every writer records its
+write-set through `key_string`.
 Snapshot reads go through the `versioned` Python DataSource with
 min(num_buckets, defaultParallelism) input partitions — one Python task per
 core, never more tasks than buckets. Each task owns a group of buckets,
@@ -43,11 +51,13 @@ for unbucketed (num_buckets=0) tables.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import threading
 import time
 import uuid
+import zlib
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
@@ -84,7 +94,7 @@ def bucket_expr(cols: list[str], num_buckets: int) -> F.Column:
     """JVM-side bucket id for a row: crc32 of the canonical key string mod B.
 
     crc32 (not xxhash64) because the SAME function must be computable by the
-    pyarrow bulk-append writer (zlib.crc32) — both writers must land a key in
+    pyarrow writer, write_bucketed (zlib.crc32) — both writers must land a key in
     the same bucket=<b>/ subdir or in-partition version resolution breaks.
     Canonical form: each column cast to string, NULL -> 'None', joined with
     NUL. Stick to int/string bucket columns; float formatting differs across
@@ -96,38 +106,124 @@ def bucket_expr(cols: list[str], num_buckets: int) -> F.Column:
     return (F.crc32(F.encode(canon, "UTF-8")) % num_buckets).cast("int")
 
 
+def _bucket_canon(v) -> str:
+    if v is None:
+        return "None"
+    if isinstance(v, bool):
+        return "true" if v else "false"  # JVM casts booleans lowercase
+    if isinstance(v, datetime.datetime):
+        # JVM timestamp->string trims trailing zeros of the fraction
+        # and omits it entirely at .000000; python str() keeps 6 digits
+        s = v.strftime("%Y-%m-%d %H:%M:%S")
+        if v.microsecond:
+            s += "." + f"{v.microsecond:06d}".rstrip("0")
+        return s
+    return str(v)
+
+
 def bucket_of_py(values, num_buckets: int) -> int:
     """Python twin of bucket_expr — identical canonicalization, zlib.crc32.
     Property-tested elementwise against the JVM expression across ints,
     strings, NULLs, booleans, dates and timestamps
     (tests/test_scale_patterns.py)."""
-    import datetime as _dt
-    import zlib
+    return _crc_bucket(map(_bucket_canon, values), num_buckets)
 
-    def canon(v):
-        if v is None:
-            return "None"
-        if isinstance(v, bool):
-            return "true" if v else "false"  # JVM casts booleans lowercase
-        if isinstance(v, _dt.datetime):
-            # JVM timestamp->string trims trailing zeros of the fraction
-            # and omits it entirely at .000000; python str() keeps 6 digits
-            s = v.strftime("%Y-%m-%d %H:%M:%S")
-            if v.microsecond:
-                s += "." + f"{v.microsecond:06d}".rstrip("0")
-            return s
-        return str(v)
 
-    s = "\x00".join(canon(v) for v in values)
-    return zlib.crc32(s.encode("utf-8")) % num_buckets
+def _crc_bucket(canon_values, num_buckets: int) -> int:
+    return zlib.crc32("\x00".join(canon_values).encode("utf-8")) % num_buckets
+
+
+def _column_encoder(arrow_type, canon):
+    """``canon`` for the values of one arrow column, or plain ``str`` where
+    the two agree (every type but booleans and timestamps), so a
+    column-at-a-time encode of a large op skips the per-value call."""
+    import pyarrow as pa
+
+    if pa.types.is_boolean(arrow_type) or pa.types.is_timestamp(arrow_type):
+        return canon
+    return str
+
+
+def physical_arrow_schema(data_schema: T.StructType):
+    """Arrow schema of an op data file: the data columns, _deleted, _opseq
+    (_csn stays virtual until a manifest assigns it)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(
+        T.StructType(
+            list(data_schema.fields)
+            + [
+                T.StructField("_deleted", T.BooleanType()),
+                T.StructField("_opseq", T.LongType()),
+            ]
+        )
+    )
+
+
+def write_bucketed(tbl, out_dir: str, num_buckets: int, bucket_cols: list[str]) -> list[str]:
+    """The pyarrow writer of an op's data files: split the physical rows
+    (data columns, _deleted, _opseq) of pyarrow table ``tbl`` by
+    bucket_of_py and write ONE parquet file per non-empty bucket=<b>/
+    subdir of ``out_dir`` — the layout the Spark writer's
+    partitionBy("bucket") makes. An unbucketed table (num_buckets=0) gets
+    one file in ``out_dir`` itself, even when empty. Returns the written
+    paths relative to ``out_dir``; empty when a bucketed ``tbl`` has no
+    rows. Shared by Transaction._stage (driver-resident ops) and the
+    versioned DataSource writers (executor-side parts)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    part = f"part-{uuid.uuid4().hex}.parquet"
+    if num_buckets <= 0:
+        os.makedirs(out_dir, exist_ok=True)
+        pq.write_table(tbl, os.path.join(out_dir, part))
+        return [part]
+    canon = [
+        map(_column_encoder(tbl.schema.field(c).type, _bucket_canon), tbl.column(c).to_pylist())
+        for c in bucket_cols
+    ]
+    buckets = pa.array(
+        [_crc_bucket(k, num_buckets) for k in zip(*canon)], type=pa.int32()
+    )
+    rel_paths = []
+    for b in sorted(pc.unique(buckets).to_pylist()):
+        rel = os.path.join(f"bucket={b}", part)
+        os.makedirs(os.path.join(out_dir, f"bucket={b}"), exist_ok=True)
+        pq.write_table(tbl.filter(pc.equal(buckets, b)), os.path.join(out_dir, rel))
+        rel_paths.append(rel)
+    return rel_paths
+
+
+def key_string(v) -> str:
+    """Canonical write-set string of one key value: ``str()`` of the
+    python value, with a tz-aware timestamp first converted to naive UTC.
+    Every writer records its manifest ``write_keys`` through this, so a
+    key encodes the same whether it was read back from a Spark-written
+    file (naive timestamps), pulled with ``DataFrame.toArrow()`` or staged
+    from a UTC-cast pyarrow table (tz-aware) — the conflict check and
+    merge_from compare these strings directly."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return str(v)
+
+
+def write_set_keys(tbl, key_cols: list[str]) -> set[tuple[str, ...]]:
+    """The key_string write-set of a pyarrow table or record batch."""
+    cols = [
+        map(_column_encoder(tbl.schema.field(c).type, key_string), tbl.column(c).to_pylist())
+        for c in key_cols
+    ]
+    return set(zip(*cols))
 
 
 def _staging_parts(df: DataFrame, num_buckets: int) -> int:
-    """Shuffle width for a staged op write: enough partitions that each
-    write task handles ~128 MB (guide §6 output sizing), clamped to
-    [1, num_buckets] — hash-partitioning on the bucket column can never
-    populate more than num_buckets tasks, and a tiny commit (the common
-    transactional case) needs exactly ONE task instead of num_buckets
+    """Shuffle width for an op staged through a Spark write job (a frame
+    that is not a driver-resident LocalRelation — see Transaction._stage):
+    enough partitions that each write task handles ~128 MB (guide §6
+    output sizing), clamped to [1, num_buckets] — hash-partitioning on the
+    bucket column can never populate more than num_buckets tasks, and a
+    small distributed op needs exactly ONE task instead of num_buckets
     stubs of pure scheduling overhead. Catalyst's optimizedPlan estimate
     is free (no data read); an unknown estimate (e.g. a Python-RDD or
     DataSource scan) keeps the full num_buckets width, the pre-r11
@@ -1126,30 +1222,20 @@ class VersionedTable:
             .drop("_opseq")
         )
         # Membership against apply_keys must use the SAME encoding that
-        # produced write_keys — Python str() over arrow-materialized values
-        # (_stage, above). Spark's cast('string') diverges for booleans
-        # ('true' vs 'True'), tz-aware timestamps, and floats in scientific
-        # notation, and a miss here silently DROPS a branch change (the
-        # unsafe direction — unlike the conflict check, where a collision
-        # is merely a spurious conflict). So: collect the branch's distinct
-        # changed keys (bounded by max_tracked_keys — merge already
-        # requires tracked write-sets), str-encode them driver-side exactly
-        # like _stage, and join back on the TYPED key values.
-        import datetime as _dt  # noqa: PLC0415
-
-        def _enc(v) -> str:
-            # DataFrame.toArrow() materializes timestamps tz-aware (session
-            # tz = UTC); _stage's parquet read yields them NAIVE. Normalize
-            # to the naive form str() saw when write_keys were recorded.
-            if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-                v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return str(v)
-
+        # produced write_keys — key_string over arrow-materialized values.
+        # Spark's cast('string') diverges for booleans ('true' vs 'True')
+        # and floats in scientific notation, and a miss here silently
+        # DROPS a branch change (the unsafe direction — unlike the conflict
+        # check, where a collision is merely a spurious conflict). So:
+        # collect the branch's distinct changed keys (bounded by
+        # max_tracked_keys — merge already requires tracked write-sets),
+        # encode them driver-side like every writer, and join back on the
+        # TYPED key values.
         key_schema = latest_all.select(*kc).schema
         arrow_keys = latest_all.select(*kc).toArrow()
         typed_rows = list(zip(*(arrow_keys.column(c).to_pylist() for c in kc)))
         wanted_typed = [
-            r for r in typed_rows if tuple(_enc(v) for v in r) in apply_keys
+            r for r in typed_rows if tuple(key_string(v) for v in r) in apply_keys
         ]
         if not wanted_typed:
             return {"applied": 0, "deleted": 0, "conflicts": len(conflicts)}
@@ -1582,6 +1668,13 @@ class Transaction:
         multi-table GroupTransaction can stage ALL tables before claiming
         any csn (plans/group.py).
 
+        Two ways to write an op, one layout (one parquet file per non-empty
+        bucket=<b>/ dir): an op whose frame is a LocalRelation stages in
+        this process (_local_rows: one toArrow() job, then write_bucketed,
+        write-set taken from the in-memory table); any other frame runs a
+        Spark repartition + partitionBy("bucket") write job sized by
+        _staging_parts, and its write-set is read back from the files.
+
         CDC before-images (config.cdc_preimages or commit(capture_preimages=
         True)): for each op, the previous values of the op's keys — folded
         through EARLIER ops of the same txn, so multi-op txns retract
@@ -1603,27 +1696,35 @@ class Transaction:
         my_keys: set[tuple] | None = set()
         for op in self._ops:
             out_dir = os.path.join(t._data_dir, f"tsn={self.tsn}", f"opseq={op.opseq}")
-            full = self._full_rows(op).drop("_csn")  # csn attached at read via manifest
-            if t.num_buckets > 0:
-                # key-hash layout: rows land under bucket=<b>/ so readers
-                # prune file lists per bucket; the repartition bounds output
-                # to one file per non-empty bucket (at real scale you'd
-                # repartition(N >= B, "bucket") to keep write parallelism)
-                full = full.withColumn("bucket", bucket_expr(t.bucket_cols, t.num_buckets))
-                full.repartition(
-                    _staging_parts(full, t.num_buckets), F.col("bucket")
-                ).write.partitionBy("bucket").mode("errorifexists").parquet(out_dir)
+            local = self._local_rows(op)
+            if local is not None:
+                has_files = bool(
+                    write_bucketed(local, out_dir, t.num_buckets, t.bucket_cols)
+                )
             else:
-                full.write.mode("errorifexists").parquet(out_dir)
+                full = self._full_rows(op).drop("_csn")  # csn attached at read via manifest
+                if t.num_buckets > 0:
+                    # key-hash layout: rows land under bucket=<b>/ so readers
+                    # prune file lists per bucket; the repartition bounds
+                    # output to one file per non-empty bucket
+                    full = full.withColumn(
+                        "bucket", bucket_expr(t.bucket_cols, t.num_buckets)
+                    )
+                    full.repartition(
+                        _staging_parts(full, t.num_buckets), F.col("bucket")
+                    ).write.partitionBy("bucket").mode("errorifexists").parquet(out_dir)
+                else:
+                    full.write.mode("errorifexists").parquet(out_dir)
+                has_files = any(
+                    f.endswith(".parquet")
+                    for _, _, files in os.walk(out_dir)
+                    for f in files
+                )
             # an op that staged ZERO rows (empty upsert / delete of nothing)
-            # writes no parquet files under partitionBy — referencing its
-            # dir would break every reader, so it is dropped from the
-            # manifest (the commit still publishes, possibly with ops: [])
-            has_files = any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(out_dir)
-                for f in files
-            )
+            # writes no parquet files under the bucketed layout —
+            # referencing its dir would break every reader, so it is dropped
+            # from the manifest (the commit still publishes, possibly with
+            # ops: [])
             if not has_files:
                 import shutil  # noqa: PLC0415
 
@@ -1653,26 +1754,65 @@ class Transaction:
                 else:
                     state = state.join(op_keys, kc, "left_anti")
             if my_keys is not None:
-                # write-set keys come from the FILES JUST WRITTEN (pyarrow
-                # column read, streamed in batches), not from re-executing
-                # op.df — one plan execution per op instead of two, and the
-                # tracked set is exactly what landed on disk even if the
-                # source plan were nondeterministic. Canonical string form:
-                # JSON-safe for any key type and identical on both sides of
-                # the conflict comparison (cross-type str collisions can
-                # only cause a SPURIOUS conflict — the safe direction).
-                import pyarrow.dataset as pads  # noqa: PLC0415
+                # write-set keys come from the rows that landed on disk:
+                # the in-memory table of a driver-staged op, else the FILES
+                # JUST WRITTEN (pyarrow column read, streamed in batches)
+                # rather than a second execution of op.df — so the tracked
+                # set is exact even if the source plan were
+                # nondeterministic. key_string form: JSON-safe for any key
+                # type and identical across writers (cross-type str
+                # collisions can only cause a SPURIOUS conflict — the safe
+                # direction).
+                if local is not None:
+                    batches = [local]
+                else:
+                    import pyarrow.dataset as pads  # noqa: PLC0415
 
+                    batches = pads.dataset(out_dir, format="parquet").to_batches(
+                        columns=kc, batch_size=65536
+                    )
                 cap = t.config.max_tracked_keys
-                for batch in pads.dataset(out_dir, format="parquet").to_batches(
-                    columns=t.key_cols, batch_size=65536
-                ):
-                    rows = zip(*(batch.column(c).to_pylist() for c in t.key_cols))
-                    my_keys.update(tuple(str(v) for v in r) for r in rows)
+                for batch in batches:
+                    my_keys |= write_set_keys(batch, kc)
                     if len(my_keys) > cap:
                         my_keys = None  # degrade: conflicts with anything
                         break
         return ops_meta, my_keys
+
+    def _local_rows(self, op: _Op):
+        """The op's physical rows (data columns, _deleted, _opseq) as a
+        pyarrow table when its frame is a LocalRelation — rows that already
+        sit on the driver (a pandas or Arrow createDataFrame, a
+        literal_frame, a delete_keys list) — else None. The rows come over
+        in ONE ``toArrow()`` job (a JVM-side local scan: no Python worker,
+        no shuffle, no write stage), so the op stages in-process instead of
+        through a Spark write job. A frame whose column types differ from
+        the table's keeps the Spark path, which writes the frame's own
+        types."""
+        t = self.table
+        if op.df._jdf.queryExecution().optimizedPlan().nodeName() != "LocalRelation":
+            return None
+        names = [f.name for f in t.schema.fields] if op.kind == "upsert" else t.key_cols
+        given = op.df.select(*names).schema.fields  # analysis only: resolved names
+        if [f.dataType for f in given] != [t.schema[n].dataType for n in names]:
+            return None
+        import pyarrow as pa  # noqa: PLC0415
+
+        physical = physical_arrow_schema(t.schema)
+        arrow = op.df.toArrow()
+        n = arrow.num_rows
+        cols = {name: arrow.column(f.name) for name, f in zip(names, given)}
+        return pa.Table.from_arrays(
+            [
+                cols[f.name].cast(f.type) if f.name in cols else pa.nulls(n, f.type)
+                for f in list(physical)[:-2]
+            ]
+            + [
+                pa.repeat(pa.scalar(op.kind == "delete"), n),
+                pa.repeat(pa.scalar(op.opseq, pa.int64()), n),
+            ],
+            schema=physical,
+        )
 
     def _claim(
         self,

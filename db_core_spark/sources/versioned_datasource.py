@@ -656,67 +656,35 @@ def _stage_rows(
     out_dir: str,
 ) -> tuple[list, int, list | None]:
     """Executor-side staging shared by the batch and streaming writers:
-    materialize this partition's rows as parquet under ``out_dir``
-    (bucket=<b>/ subdirs when the table is bucketed — the python twin of the
-    JVM bucket_expr; both writer kinds MUST agree or in-partition version
-    resolution breaks, tested) and return (relative file paths, row count,
-    canonical-string write-set or None when above the tracking cap)."""
+    materialize this partition's rows as parquet under ``out_dir`` through
+    write_bucketed (bucket=<b>/ subdirs when the table is bucketed — the
+    same writer Transaction._stage uses for driver-resident ops, and the
+    python twin of the JVM bucket_expr; the writers MUST agree or
+    in-partition version resolution breaks, tested) and return (relative
+    file paths, row count, key_string write-set or None when above the
+    tracking cap)."""
     import pandas as pd
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from db_core_spark.plans.versioned import bucket_of_py
+    from db_core_spark.plans.versioned import (
+        physical_arrow_schema,
+        write_bucketed,
+        write_set_keys,
+    )
 
     data_cols = [f.name for f in data_schema.fields]
     rows = [tuple(r) for r in iterator]
     pdf = pd.DataFrame(rows, columns=data_cols)
     pdf["_deleted"] = False
     pdf["_opseq"] = 0
-    arrow_schema = to_arrow_schema(
-        T.StructType(
-            list(data_schema.fields)
-            + [
-                T.StructField("_deleted", T.BooleanType()),
-                T.StructField("_opseq", T.LongType()),
-            ]
-        )
+    tbl = pa.Table.from_pandas(pdf, preserve_index=False).cast(
+        physical_arrow_schema(data_schema)
     )
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False).cast(arrow_schema)
-    part_id = uuid.uuid4().hex
-    rel_paths: list = []
-    if num_buckets > 0:
-        key_vals = tbl.select(bucket_cols).to_pylist()
-        buckets = pa.array(
-            [
-                bucket_of_py([r[c] for c in bucket_cols], num_buckets)
-                for r in key_vals
-            ],
-            type=pa.int32(),
-        )
-        for b in pc.unique(buckets).to_pylist():
-            mask = pc.equal(buckets, b)
-            sub = tbl.filter(mask)
-            bdir = os.path.join(out_dir, f"bucket={b}")
-            os.makedirs(bdir, exist_ok=True)
-            rel = os.path.join(f"bucket={b}", f"part-{part_id}.parquet")
-            pq.write_table(sub, os.path.join(out_dir, rel))
-            rel_paths.append(rel)
-    else:
-        os.makedirs(out_dir, exist_ok=True)
-        rel = f"part-{part_id}.parquet"
-        pq.write_table(tbl, os.path.join(out_dir, rel))
-        rel_paths.append(rel)
-    # canonical string form of the part's write-set (same encoding as
-    # Transaction.commit so the writer kinds compare like-for-like); arrow
-    # to_pylist yields python-native values (datetime, int, str) matching
-    # what Spark Rows stringify to on the txn side
+    rel_paths = write_bucketed(tbl, out_dir, num_buckets, bucket_cols)
+    # the part's write-set in the key_string form every writer records, so
+    # the writer kinds compare like-for-like
     cap = 100_000  # VersionedTable.MAX_TRACKED_KEYS (no driver-side import here)
-    key_tbl = tbl.select(key_cols)
-    part_keys: list | None = list(
-        {tuple(str(r[c]) for c in key_cols) for r in key_tbl.to_pylist()}
-    )
+    part_keys: list | None = list(write_set_keys(tbl, key_cols))
     if len(part_keys) > cap:
         part_keys = None
     return rel_paths, len(rows), part_keys

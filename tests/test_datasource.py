@@ -278,6 +278,48 @@ def test_bulk_append_conflicts_optimistic_txn_both_ways(vt, spark):
     assert rows_of(vt.snapshot())[42] == ("free", 0.5)
 
 
+@pytest.mark.parametrize("local", [True, False], ids=["local-txn", "spark-txn"])
+def test_timestamp_key_bulk_append_conflicts_with_txn(spark, tmp_path, local):
+    """A bulk append and a concurrent Transaction that write the same
+    timestamp key must conflict, in both orders. The pyarrow writers see
+    the key tz-aware (UTC-cast table, toArrow()), a Spark-written file
+    reads back naive; every writer records write_keys through key_string,
+    so both spell the key the same and the overlap is not lost."""
+    import datetime as dt
+
+    from db_core_spark.operators.litframe import literal_frame
+    from db_core_spark.plans.versioned import ConflictError
+    from db_core_spark.sources.versioned_datasource import VersionedAppendWriter
+
+    register_versioned_format(spark)
+    schema = T.StructType(
+        [T.StructField("ts", T.TimestampType(), False), T.StructField("v", T.StringType())]
+    )
+    vt = VersionedTable.create(spark, str(tmp_path / "ts"), key_cols=["ts"], schema=schema)
+    key = dt.datetime(2024, 1, 2, 3, 4, 5, 600000)
+
+    def frame(v):
+        df = literal_frame(spark, [(key, v)], schema)
+        return df if local else df.repartition(2)
+
+    t = vt.begin()
+    t.upsert(frame("txn"))
+    spark.createDataFrame([(key, "bulk")], schema).write.format("versioned").mode(
+        "append"
+    ).option("path", vt.path).save()
+    with pytest.raises(ConflictError):
+        t.commit()
+
+    w = VersionedAppendWriter(schema, {"path": vt.path})
+    msg = w.write(iter([(key, "bulk2")]))
+    t = vt.begin()
+    t.upsert(frame("txn2"))
+    t.commit()
+    with pytest.raises(ConflictError):
+        w.commit([msg])
+    assert [tuple(r) for r in vt.snapshot().collect()] == [(key, "txn2")]
+
+
 def test_jvm_and_python_writers_agree_on_buckets(vt, spark):
     """The JVM bucket_expr (txn commits) and python bucket_of_py (bulk
     append parts) MUST place a key in the same bucket=<b>/ dir, or
