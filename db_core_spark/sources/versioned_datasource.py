@@ -31,20 +31,29 @@ VersionedTable.snapshot() and checkpoint() ask for
 min(num_buckets, defaultParallelism) and declare the schema.
 keyEquals=<json> plans a single partition for a point lookup and
 pushes the bound key columns into the parquet scan; VersionedTable.lookup
-and the ObjectStore's committed reads run that partition's fold
-(`VersionedSnapshotReader.fold`) in the driver process instead of as a
-Spark job — one fold implementation for both. includeMeta=true emits
-(_csn,_opseq,_deleted,bucket) winners so checkpoints write
-partitionBy(bucket) without a shuffle. Unbucketed (legacy) tables fall
-back to full-scan + seedless row-hash filtering; ops whose bucket count
-differs from the table meta (layout migration) fall back per-op.
+and the ObjectStore's committed reads hand the key over as Python values
+and run that partition's fold (`VersionedSnapshotReader.fold`) in the
+driver process instead of as a Spark job — one fold implementation for
+both. includeMeta=true emits (_csn,_opseq,_deleted,bucket) winners so
+checkpoints write partitionBy(bucket) without a shuffle. Unbucketed
+(legacy) tables fall back to full-scan + seedless row-hash filtering; ops
+whose bucket count differs from the table meta (layout migration) fall
+back per-op.
+
+Commit log: this module keeps no copy of the protocol. Readers and writers
+call the functions in plans/versioned.py that VersionedTable and
+Transaction call — log_names, committed_ops (op list from the newest
+checkpoint, group visibility, the reclaimed-history guard),
+visible_manifests, claim_csn (the conflict-checked csn claim) and
+merge_write_sets — passing the group grace persisted in the table's
+_meta.json (`_table_grace`), since a DataSource has no EngineConfig.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass
 from typing import Iterator, Tuple
@@ -59,6 +68,22 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql import types as T
+
+from db_core_spark.config import DEFAULT_CONFIG
+from db_core_spark.plans.versioned import (
+    bucket_of_py,
+    claim_csn,
+    committed_ops,
+    latest_csn,
+    log_names,
+    merge_write_sets,
+    physical_arrow_schema,
+    read_manifest,
+    reclaimed_csns,
+    visible_manifests,
+    write_bucketed,
+    write_set_keys,
+)
 
 META_FIELDS = [
     T.StructField("_csn", T.LongType()),
@@ -78,80 +103,6 @@ def _load_meta(path: str) -> tuple[list[str], T.StructType, int, list[str]]:
     )
 
 
-def _log_names(path: str) -> list[tuple[int, bool, str]]:
-    """(csn, is_checkpoint, filename) parsed from commit-log names only —
-    no JSON reads (same bound as VersionedTable._log_names)."""
-    log_dir = os.path.join(path, "_commitlog")
-    out = []
-    for name in os.listdir(log_dir):
-        if not name.endswith(".json") or name.startswith("_tmp"):
-            continue
-        stem = name[:-5]
-        try:
-            if stem.startswith("checkpoint-"):
-                out.append((int(stem.split("-", 1)[1]), True, name))
-            elif stem != "_last_checkpoint":
-                out.append((int(stem), False, name))
-        except ValueError:
-            continue
-    return sorted(out)
-
-
-def _read_manifest(path: str, name: str) -> dict:
-    with open(os.path.join(path, "_commitlog", name)) as f:
-        return json.load(f)
-
-
-def _manifests(path: str) -> list[dict]:
-    out = [_read_manifest(path, name) for _, _, name in _log_names(path)]
-    return sorted(out, key=lambda m: m["csn"])
-
-
-def _committed_ops(path: str, as_of: int | None) -> list[dict]:
-    """(dir, csn, opseq, kind, checkpoint) visible at as_of, starting from
-    the newest checkpoint <= as_of — same resolution as
-    VersionedTable._committed_ops (kept file-format compatible), including
-    the completeness guard: a csn gap between the fold base and the target
-    proves vacuum reclaimed needed history -> error, never a partial fold.
-    IO bound: name-only planning, opens 1 checkpoint + the deltas above it."""
-    names = _log_names(path)
-    in_scope = [e for e in names if as_of is None or e[0] <= as_of]
-    ckpt = max((e for e in in_scope if e[1]), default=None, key=lambda e: e[0])
-    delta_csns = {c for c, is_ck, _ in in_scope if not is_ck}
-    overall_max = max((c for c, _, _ in names), default=0)
-    hi = min(as_of, overall_max) if as_of is not None else overall_max
-    lo = ckpt[0] if ckpt is not None else 0
-    missing = set(range(lo + 1, hi + 1)) - delta_csns
-    if missing:
-        raise RuntimeError(
-            f"snapshot as_of={as_of} needs vacuum-reclaimed commits "
-            f"{sorted(missing)}; oldest available fold base is csn {lo}"
-        )
-    ops = []
-    if ckpt is not None:
-        base = _read_manifest(path, ckpt[2])
-        ops.append(
-            {"dir": base["dir"], "csn": -1, "opseq": -1, "kind": "checkpoint",
-             "checkpoint": True, "buckets": base.get("buckets", 0)}
-        )
-    for csn, is_ck, name in in_scope:
-        if is_ck or csn <= lo:
-            continue
-        m = _read_manifest(path, name)
-        if not _group_visible(m, path):
-            continue
-        for op in m["ops"]:
-            ops.append(
-                {"dir": op["dir"], "csn": m["csn"], "opseq": op["opseq"],
-                 "kind": op["kind"], "checkpoint": False,
-                 "buckets": op.get("buckets", 0)}
-            )
-    return ops
-
-
-import functools
-
-
 def _table_grace(path: str) -> float:
     """The grace window persisted in the table's _meta.json at create time;
     falls back to the library default for tables created before the field
@@ -161,8 +112,6 @@ def _table_grace(path: str) -> float:
     (path, meta mtime) — one stat per call instead of one JSON parse, and
     a table dropped and recreated at the same path (or a rebucket's meta
     rewrite) refreshes instead of serving the dead table's value."""
-    from db_core_spark.config import DEFAULT_CONFIG
-
     meta_path = os.path.join(path, "_meta.json")
     try:
         mtime = os.stat(meta_path).st_mtime_ns
@@ -173,8 +122,6 @@ def _table_grace(path: str) -> float:
 
 @functools.lru_cache(maxsize=256)
 def _table_grace_at(meta_path: str, mtime: int) -> float:
-    from db_core_spark.config import DEFAULT_CONFIG
-
     try:
         with open(meta_path) as fh:
             meta = json.load(fh)
@@ -189,24 +136,6 @@ def _table_grace_at(meta_path: str, mtime: int) -> float:
         # planning (the publish path writes meta tmp+replace, but a reader
         # can still race a torn NFS view or a hand-edited file).
         return DEFAULT_CONFIG.group_pending_grace_seconds
-
-
-def _group_visible(manifest: dict, path: str) -> bool:
-    """Multi-table commit visibility: a manifest carrying a `group` field
-    counts only if its group marker resolved to committed (pending groups
-    are force-resolved after the TABLE's configured grace window —
-    plans/versioned.py resolve_group_status). Runs at planning time on the
-    driver, same place VersionedTable's own read path resolves it."""
-    if manifest.get("group") is None:
-        return True
-    from db_core_spark.plans.versioned import resolve_group_status
-
-    return (
-        resolve_group_status(
-            manifest["group"], manifest.get("ts", 0.0), _table_grace(path)
-        )
-        == "committed"
-    )
 
 
 def _op_table_dir(
@@ -270,6 +199,23 @@ def _op_table_dir(
     return tbl
 
 
+def _typed_key(key: dict, data_schema: T.StructType) -> dict:
+    """Key values as the fold compares them: a datetime bound to a
+    TimestampType column becomes tz-aware UTC, a naive one read as UTC —
+    the session time zone and key_string's rule — for the bucket choice
+    and the row filter alike. Without it a naive key never equals the
+    column's tz-aware values."""
+    import datetime
+
+    utc = datetime.timezone.utc
+    out = dict(key)
+    for f in data_schema.fields:
+        v = key.get(f.name)
+        if isinstance(f.dataType, T.TimestampType) and isinstance(v, datetime.datetime):
+            out[f.name] = (v if v.tzinfo else v.replace(tzinfo=utc)).astimezone(utc)
+    return out
+
+
 def _key_scan_filter(key_equals: dict, key_cols: list[str], data_schema):
     """Split keyEquals into a pyarrow scan predicate and the entries left for
     the row filter after version resolution. Only key columns are pushed:
@@ -279,7 +225,11 @@ def _key_scan_filter(key_equals: dict, key_cols: list[str], data_schema):
     pushed only when it converts exactly to the column's arrow type;
     anything else (a string for an int column, null, NaN) stays with the
     pandas `==` filter, which answers it as before instead of raising an
-    Arrow type error."""
+    Arrow type error. Timestamps stay with the row filter too: the JVM
+    writer stores them naive (timestamp[ns]) and the pyarrow writer
+    tz-aware, and the scan compares against each file's own type, so no
+    one scalar matches both; the row filter sees them after
+    `_op_table_dir` casts every file to the table's type."""
     import pyarrow as pa
     import pyarrow.dataset as pads
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -289,7 +239,9 @@ def _key_scan_filter(key_equals: dict, key_cols: list[str], data_schema):
     for c, v in key_equals.items():
         t = types.get(c)
         scalar = None
-        if c in key_cols and t is not None and not pa.types.is_nested(t):
+        if c in key_cols and t is not None and not (
+            pa.types.is_nested(t) or pa.types.is_timestamp(t)
+        ):
             try:
                 s = pa.scalar(v, type=t)
                 if s.is_valid and s.as_py() == v:
@@ -351,10 +303,17 @@ class VersionedSnapshotReader(DataSourceReader):
 
     `fold(partition)` resolves a partition as one pyarrow table. Spark
     tasks stream per-bucket folds from `read`; VersionedTable point reads
-    call it on the driver with the op list they pinned (`ops`), so one fold
-    serves both."""
+    call it on the driver with the op list they pinned (`ops`) and the key
+    as Python values (`key_equals`, so dates and timestamps need no JSON
+    form), so one fold serves both."""
 
-    def __init__(self, schema: T.StructType, options: dict, ops: list[dict] | None = None):
+    def __init__(
+        self,
+        schema: T.StructType,
+        options: dict,
+        ops: list[dict] | None = None,
+        key_equals: dict | None = None,
+    ):
         self.path = options["path"]
         as_of = options.get("asofcsn")
         self.as_of = int(as_of) if as_of is not None else None
@@ -362,9 +321,16 @@ class VersionedSnapshotReader(DataSourceReader):
         self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols = _load_meta(
             self.path
         )
-        key_eq = options.get("keyequals")
-        self.key_equals: dict | None = json.loads(key_eq) if key_eq else None
-        self.ops = ops if ops is not None else _committed_ops(self.path, self.as_of)
+        if key_equals is None and options.get("keyequals"):
+            key_equals = json.loads(options["keyequals"])
+        self.key_equals: dict | None = (
+            _typed_key(key_equals, self.data_schema) if key_equals is not None else None
+        )
+        self.ops = (
+            ops
+            if ops is not None
+            else committed_ops(self.path, self.as_of, _table_grace(self.path))
+        )
         if self.num_buckets > 0:
             if self.key_equals is not None:
                 missing = [c for c in self.bucket_cols if c not in self.key_equals]
@@ -372,8 +338,6 @@ class VersionedSnapshotReader(DataSourceReader):
                     raise ValueError(
                         f"keyEquals must bind every bucket column; missing {missing}"
                     )
-                from db_core_spark.plans.versioned import bucket_of_py
-
                 target = bucket_of_py(
                     [self.key_equals[c] for c in self.bucket_cols], self.num_buckets
                 )
@@ -461,8 +425,6 @@ class VersionedSnapshotReader(DataSourceReader):
         import pandas as pd
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
-
-        from db_core_spark.plans.versioned import bucket_of_py
 
         data_cols = [f.name for f in self.data_schema.fields]
         out_cols = self.output_schema().fieldNames()
@@ -571,19 +533,17 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
         return {"csn": self.start_csn}
 
     def latestOffset(self) -> dict:
-        deltas = [c for c, is_ck, _ in _log_names(self.path) if not is_ck]
+        deltas = [c for c, is_ck, _ in log_names(self.path) if not is_ck]
         return {"csn": max(deltas, default=self.start_csn)}
 
     def partitions(self, start: dict, end: dict) -> list[CDCPartition]:
-        lo, hi = start["csn"], end["csn"]
         parts: list[CDCPartition] = []
-        # name-bounded: only manifests inside the batch window are opened
-        for csn, is_ck, name in _log_names(self.path):
-            if is_ck or not (lo < csn <= hi):
-                continue
-            m = _read_manifest(self.path, name)
-            if not _group_visible(m, self.path):
-                continue  # aborted/force-aborted group: no change rows
+        # name-bounded: only manifests inside the batch window are opened;
+        # an aborted/force-aborted group contributes no change rows
+        for m in visible_manifests(
+            self.path, log_names(self.path), start["csn"], end["csn"],
+            _table_grace(self.path),
+        ):
             for op in m["ops"]:
                 has_pre = bool(op.get("preimages"))
                 pre_dir = os.path.join(op["dir"], "_preimg")
@@ -666,12 +626,6 @@ def _stage_rows(
     import pandas as pd
     import pyarrow as pa
 
-    from db_core_spark.plans.versioned import (
-        physical_arrow_schema,
-        write_bucketed,
-        write_set_keys,
-    )
-
     data_cols = [f.name for f in data_schema.fields]
     rows = [tuple(r) for r in iterator]
     pdf = pd.DataFrame(rows, columns=data_cols)
@@ -683,9 +637,8 @@ def _stage_rows(
     rel_paths = write_bucketed(tbl, out_dir, num_buckets, bucket_cols)
     # the part's write-set in the key_string form every writer records, so
     # the writer kinds compare like-for-like
-    cap = 100_000  # VersionedTable.MAX_TRACKED_KEYS (no driver-side import here)
     part_keys: list | None = list(write_set_keys(tbl, key_cols))
-    if len(part_keys) > cap:
+    if len(part_keys) > DEFAULT_CONFIG.max_tracked_keys:
         part_keys = None
     return rel_paths, len(rows), part_keys
 
@@ -704,12 +657,16 @@ class VersionedAppendWriter(DataSourceWriter):
     ONE manifest for all of them (group commit, system/instance.rs:102-111). A
     failed job leaves only unpublished files — invisible by construction.
 
-    Conflict protection is symmetric with Transaction (tran_mgr parity):
-    each part enumerates its distinct key set (degrading to 'conflicts with
-    anything' above MAX_TRACKED_KEYS, same rule as Transaction.commit);
-    commit() aborts with ConflictError when any manifest published after the
-    writer was planned overlaps — so two concurrent bulk appends upserting
-    the same keys can no longer both win (no silent last-csn lost update)."""
+    Conflict protection is Transaction's own (tran_mgr parity): each part
+    enumerates its distinct key set, merge_write_sets unions them
+    (degrading to 'conflicts with anything' above
+    DEFAULT_CONFIG.max_tracked_keys), and commit() claims its csn through
+    claim_csn over the conflict window that opens at `start_csn`, pinned
+    at planning time (Spark pickles the planned instance and runs commit()
+    on it). Any overlapping commit published in that window aborts the
+    append with ConflictError, and so does a window that vacuum partly
+    reclaimed, so two concurrent writers upserting the same keys can no
+    longer both win (no silent last-csn lost update)."""
 
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
@@ -725,7 +682,7 @@ class VersionedAppendWriter(DataSourceWriter):
         self.op_dir = os.path.join(self.path, "data", f"tsn={self.tsn}", "opseq=0")
         # snapshot pin at plan time: manifests committed after this are
         # 'concurrent' for the optimistic conflict check in commit()
-        self.start_csn = max((c for c, _, _ in _log_names(self.path)), default=0)
+        self.start_csn = latest_csn(self.path)
 
     def write(self, iterator) -> StagedPart:
         rel_paths, n_rows, part_keys = _stage_rows(
@@ -744,58 +701,17 @@ class VersionedAppendWriter(DataSourceWriter):
         return StagedPart(file_path=fname, n_rows=n_rows, keys=part_keys)
 
     def commit(self, messages) -> None:
-        from db_core_spark.plans.versioned import ConflictError, VersionedTable, publish_manifest
-
-        n = sum(m.n_rows for m in messages if m is not None)
-        my_keys: set | None = set()
-        for m in messages:
-            if m is None:
-                continue
-            if m.keys is None:
-                my_keys = None
-                break
-            my_keys.update(tuple(k) for k in m.keys)
-        if my_keys is not None and len(my_keys) > VersionedTable.MAX_TRACKED_KEYS:
-            my_keys = None  # degrade, same rule as Transaction.commit
-        log_dir = os.path.join(self.path, "_commitlog")
-        manifest_ops = [
-            {"dir": self.op_dir, "opseq": 0, "kind": "upsert",
-             "buckets": self.num_buckets}
-        ]
-        for _ in range(50):
-            names = _log_names(self.path)
-            candidate = max((c for c, _, _ in names), default=0) + 1
-            # optimistic conflict check vs everything committed since plan
-            # time (mirrors Transaction._check_conflicts); only manifests
-            # inside the window are opened
-            for csn, is_ck, name in names:
-                if is_ck or not (self.start_csn < csn < candidate):
-                    continue
-                m = _read_manifest(self.path, name)
-                if not _group_visible(m, self.path):
-                    continue  # aborted multi-table commit: nothing to conflict with
-                theirs = m.get("write_keys")
-                if my_keys is None or theirs is None:
-                    raise ConflictError(
-                        f"bulk append {self.tsn}: concurrent commit csn={m['csn']} "
-                        "with untracked write-set"
-                    )
-                if my_keys & {tuple(k) for k in theirs}:
-                    raise ConflictError(
-                        f"bulk append {self.tsn}: write-set overlaps concurrent "
-                        f"commit csn={m['csn']}"
-                    )
-            manifest = {
-                "csn": candidate,
-                "tsn": self.tsn,
-                "ops": manifest_ops,
-                "write_keys": sorted(my_keys) if my_keys is not None else None,
-                "rows": n,
-                "ts": time.time(),
-            }
-            if publish_manifest(log_dir, f"{candidate:010d}.json", manifest):
-                return
-        raise RuntimeError("could not claim a csn (too much commit contention)")
+        parts = [m for m in messages if m is not None]
+        claim_csn(
+            self.path,
+            self.start_csn,
+            self.tsn,
+            [{"dir": self.op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
+            merge_write_sets(m.keys for m in parts),
+            _table_grace(self.path),
+            f"bulk append {self.tsn}",
+            extra={"rows": sum(m.n_rows for m in parts)},
+        )
 
     def abort(self, messages) -> None:
         import shutil
@@ -830,10 +746,12 @@ class VersionedStreamWriter(DataSourceStreamWriter):
     marker plays the recovery-dedup role of the reference's tsn replay
     check (system/instance.rs:221-304).
 
-    Concurrency: optimistic write-set check against manifests committed
-    since this writer's last publish (own manifests skipped), mirroring
-    VersionedAppendWriter.commit; an overlap raises ConflictError and the
-    stream fails loudly rather than losing an update."""
+    Concurrency: the epoch claims its csn through claim_csn, Transaction's
+    own conflict check, over the manifests committed since
+    `last_seen_csn` with this writer's own manifests skipped; an overlap,
+    or a window vacuum partly reclaimed, raises ConflictError and the
+    stream fails loudly rather than losing an update. `last_seen_csn` is
+    the newest csn when this instance was built, or its own last publish."""
 
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
@@ -896,9 +814,7 @@ class VersionedStreamWriter(DataSourceStreamWriter):
             "_staging",
             hashlib.md5(self.writer_id.encode()).hexdigest()[:16],
         )
-        self.last_seen_csn = max(
-            (c for c, _, _ in _log_names(self.path)), default=0
-        )
+        self.last_seen_csn = latest_csn(self.path)
 
     def write(self, iterator) -> StagedStreamPart:
         rel_paths, n_rows, part_keys = _stage_rows(
@@ -924,19 +840,13 @@ class VersionedStreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId: int) -> None:
         import shutil
 
-        from db_core_spark.plans.versioned import (
-            ConflictError,
-            VersionedTable,
-            publish_manifest,
-        )
-
         live = [m for m in messages if m is not None and m.n_rows > 0]
         if not live:
             self._discard(messages)
             return
         # exactly-once: a replayed epoch is already durable — drop the stage
-        for _, _, name in _log_names(self.path):
-            mf = _read_manifest(self.path, name)
+        for _, _, name in log_names(self.path):
+            mf = read_manifest(self.path, name)
             if (
                 mf.get("writer") == self.writer_id
                 and mf.get("epoch") == batchId
@@ -950,58 +860,22 @@ class VersionedStreamWriter(DataSourceStreamWriter):
                 dest = os.path.join(op_dir, rel)
                 os.makedirs(os.path.dirname(dest), exist_ok=True)
                 os.rename(os.path.join(self.stage_root, rel), dest)
-        n = sum(m.n_rows for m in live)
-        my_keys: set | None = set()
-        for m in live:
-            if m.keys is None:
-                my_keys = None
-                break
-            my_keys.update(tuple(k) for k in m.keys)
-        if my_keys is not None and len(my_keys) > VersionedTable.MAX_TRACKED_KEYS:
-            my_keys = None
-        log_dir = os.path.join(self.path, "_commitlog")
-        for _ in range(50):
-            names = _log_names(self.path)
-            candidate = max((c for c, _, _ in names), default=0) + 1
-            for csn, is_ck, name in names:
-                if is_ck or not (self.last_seen_csn < csn < candidate):
-                    continue
-                mf = _read_manifest(self.path, name)
-                if mf.get("writer") == self.writer_id or not _group_visible(mf, self.path):
-                    continue
-                theirs = mf.get("write_keys")
-                if my_keys is None or theirs is None:
-                    raise ConflictError(
-                        f"stream sink epoch {batchId}: concurrent commit "
-                        f"csn={mf['csn']} with untracked write-set"
-                    )
-                if my_keys & {tuple(k) for k in theirs}:
-                    raise ConflictError(
-                        f"stream sink epoch {batchId}: write-set overlaps "
-                        f"concurrent commit csn={mf['csn']}"
-                    )
-            manifest = {
-                "csn": candidate,
-                "tsn": tsn,
-                "ops": [
-                    {
-                        "dir": op_dir,
-                        "opseq": 0,
-                        "kind": "upsert",
-                        "buckets": self.num_buckets,
-                    }
-                ],
-                "write_keys": sorted(my_keys) if my_keys is not None else None,
-                "rows": n,
+        self.last_seen_csn = claim_csn(
+            self.path,
+            self.last_seen_csn,
+            tsn,
+            [{"dir": op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
+            merge_write_sets(m.keys for m in live),
+            _table_grace(self.path),
+            f"stream sink epoch {batchId}",
+            extra={
+                "rows": sum(m.n_rows for m in live),
                 "writer": self.writer_id,
                 "epoch": batchId,
-                "ts": time.time(),
-            }
-            if publish_manifest(log_dir, f"{candidate:010d}.json", manifest):
-                self.last_seen_csn = candidate
-                shutil.rmtree(self.stage_root, ignore_errors=True)
-                return
-        raise RuntimeError("could not claim a csn (too much commit contention)")
+            },
+            own_writer=self.writer_id,
+        )
+        shutil.rmtree(self.stage_root, ignore_errors=True)
 
     def abort(self, messages, batchId: int) -> None:
         self._discard(messages)
@@ -1077,25 +951,24 @@ class VersionedChangesBatchReader(DataSourceReader):
 
     def __init__(self, schema: T.StructType, options: dict):
         self._delegate = VersionedChangeStreamReader(schema, options)
-        path = options["path"]
+        names = log_names(options["path"])
         from_csn = int(options.get("fromcsn", 0))
         to = options.get("tocsn")
-        deltas = {c for c, is_ck, _ in _log_names(path) if not is_ck}
         if to is not None:
             to_csn = int(to)
         else:
-            to_csn = max(deltas, default=0)
+            to_csn = max((c for c, is_ck, _ in names if not is_ck), default=0)
         if from_csn > to_csn:
             raise ValueError(f"fromCsn {from_csn} > toCsn {to_csn}")
         # completeness guard (the engine's complete-fold-or-loud-error
         # contract): a vacuum-reclaimed commit inside the requested window
         # would otherwise just be ABSENT from the feed — the consumer sees
         # a silently incomplete ledger, the unsafe direction for CDC
-        missing = set(range(from_csn + 1, to_csn + 1)) - deltas
+        missing = reclaimed_csns(names, from_csn, to_csn)
         if missing:
             raise RuntimeError(
                 f"changes({from_csn}, {to_csn}): commits "
-                f"{sorted(missing)[:10]} were vacuum-reclaimed inside the "
+                f"{missing[:10]} were vacuum-reclaimed inside the "
                 "window; the batch change feed cannot be complete"
             )
         self._window = ({"csn": from_csn}, {"csn": to_csn})

@@ -640,15 +640,8 @@ def stream_into_database(events: DataFrame, db, checkpoint_dir: str, split_fn):
     with fresh staging (the stream does not die)."""
     from db_core_spark.plans.versioned import (  # noqa: PLC0415
         ConflictError,
-        resolve_group_status,
+        group_visible,
     )
-
-    def _durable(m: dict, grace: float) -> bool:
-        if m.get("group") is None:
-            return True
-        return (
-            resolve_group_status(m["group"], m.get("ts", 0.0), grace) == "committed"
-        )
 
     epoch_caches: dict[str, dict] = {}  # per-table incremental replay state
 
@@ -662,7 +655,7 @@ def stream_into_database(events: DataFrame, db, checkpoint_dir: str, split_fn):
                 t,
                 checkpoint_dir,
                 epoch_caches.setdefault(name, {}),
-                durable=lambda m, g=grace: _durable(m, g),
+                durable=lambda m, g=grace: group_visible(m, g),
             )
             if max_epoch is not None and epoch_id <= max_epoch:
                 return  # replayed epoch: already durable atomically

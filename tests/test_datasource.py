@@ -320,6 +320,33 @@ def test_timestamp_key_bulk_append_conflicts_with_txn(spark, tmp_path, local):
     assert [tuple(r) for r in vt.snapshot().collect()] == [(key, "txn2")]
 
 
+@pytest.mark.parametrize("kind", ["append", "stream"])
+def test_writer_conflict_window_reclaimed_by_vacuum_raises(vt, spark, kind):
+    """A DataSource writer whose conflict window vacuum partly reclaimed
+    cannot check the commits that were in it, so its commit raises
+    ConflictError like a Transaction's would, instead of publishing over
+    a concurrent write to the same key. The bulk writer's commit runs on
+    the instance Spark pickled at planning time, so its window opens
+    before the concurrent commit in real writes too."""
+    from db_core_spark.plans.versioned import ConflictError
+    from db_core_spark.sources.versioned_datasource import (
+        VersionedAppendWriter,
+        VersionedStreamWriter,
+    )
+
+    if kind == "append":
+        w = VersionedAppendWriter(SCHEMA, {"path": vt.path})
+    else:
+        w = VersionedStreamWriter(SCHEMA, {"path": vt.path, "writerid": "w1"})
+    _commit(vt, spark, [(1, "txn", 2.0)])
+    vt.checkpoint()
+    vt.vacuum(retain_seconds=0)
+    msgs = [w.write(iter([(1, "bulk", 5.0)]))]
+    with pytest.raises(ConflictError, match="reclaimed"):
+        w.commit(msgs) if kind == "append" else w.commit(msgs, batchId=0)
+    assert rows_of(vt.snapshot()) == {1: ("txn", 2.0)}
+
+
 def test_jvm_and_python_writers_agree_on_buckets(vt, spark):
     """The JVM bucket_expr (txn commits) and python bucket_of_py (bulk
     append parts) MUST place a key in the same bucket=<b>/ dir, or
@@ -592,10 +619,8 @@ def test_datasource_group_visibility_uses_table_grace(spark, tmp_path):
 
     from db_core_spark.config import DEFAULT_CONFIG, EngineConfig
     from db_core_spark.plans import Database
-    from db_core_spark.sources.versioned_datasource import (
-        _group_visible,
-        _table_grace,
-    )
+    from db_core_spark.plans.versioned import group_visible
+    from db_core_spark.sources.versioned_datasource import _table_grace
 
     patient = EngineConfig(group_pending_grace_seconds=3600.0, num_buckets=4)
     db = Database.create(spark, str(tmp_path / "gdb"), config=patient)
@@ -651,7 +676,7 @@ def test_datasource_group_visibility_uses_table_grace(spark, tmp_path):
     publish_manifest(
         db.group_dir, f"{g.gid}.json", {"status": "committed", "by": "test"}
     )
-    assert _group_visible(pending[0], apath)
+    assert group_visible(pending[0], _table_grace(apath))
 
 
 def test_table_grace_survives_malformed_meta(tmp_path):

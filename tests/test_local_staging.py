@@ -226,9 +226,8 @@ def test_local_and_spark_staging_are_equivalent(spark, tmp_path, kind):
     assert snap == _sorted_rows(dist.snapshot())
     assert snap == _sorted_rows(loc.snapshot(engine="window"))
     assert snap == _sorted_rows(dist.snapshot(engine="window"))
-    if kind not in ("date", "timestamp"):  # lookup's keyEquals option is JSON
-        for k in keys:
-            assert _sorted_rows(loc.lookup({"k": k})) == _sorted_rows(dist.lookup({"k": k}))
+    for k in keys:
+        assert _sorted_rows(loc.lookup({"k": k})) == _sorted_rows(dist.lookup({"k": k}))
     assert _sorted_rows(loc.changes(include_opseq=True)) == _sorted_rows(
         dist.changes(include_opseq=True)
     )

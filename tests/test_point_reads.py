@@ -136,6 +136,54 @@ def test_non_key_filter_applies_after_version_resolution(vt):
     assert [(r.k, r.v) for r in vt.lookup({"k": 3, "v": "b3"}).collect()] == [(3, "b3")]
 
 
+def test_lookup_on_date_and_timestamp_keys(spark, tmp_path):
+    """Date and timestamp keys reach the fold as Python values, not JSON. A
+    naive timestamp key means UTC (the session time zone), so it and the
+    same instant given tz-aware find the row. The date is filtered in the
+    parquet scan; the timestamp, stored naive by the Spark writer and
+    tz-aware by the pyarrow one, in the row filter. lookup_table answers
+    the same."""
+    import datetime as dt
+
+    schema = T.StructType(
+        [
+            T.StructField("d", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("v", T.StringType()),
+        ]
+    )
+    vt = VersionedTable.create(
+        spark, str(tmp_path / "dt"), key_cols=["d", "ts"], schema=schema, num_buckets=4
+    )
+    day = dt.date(2024, 2, 29)
+    naive = dt.datetime(2024, 2, 29, 12, 0, 0, 500)
+    t = vt.begin()
+    t.upsert(spark.createDataFrame(
+        [(day, naive, "x"), (day, dt.datetime(2024, 2, 29, 12), "y")], schema
+    ))
+    t.commit()
+    aware = naive.replace(tzinfo=dt.timezone.utc).astimezone(
+        dt.timezone(dt.timedelta(hours=-5))
+    )
+    for ts in (naive, aware):
+        got = [(r.d, r.ts, r.v) for r in vt.lookup({"d": day, "ts": ts}).collect()]
+        assert got == [(day, naive, "x")]
+        assert vt.lookup_table({"d": day, "ts": ts}).column("v").to_pylist() == ["x"]
+    assert vt.lookup({"d": day, "ts": naive + dt.timedelta(microseconds=1)}).collect() == []
+
+    from db_core_spark.sources.versioned_datasource import (
+        VersionedSnapshotReader,
+        _key_scan_filter,
+    )
+
+    reader = VersionedSnapshotReader(
+        schema, {"path": vt.path}, key_equals={"d": day, "ts": naive}
+    )
+    pushed, rest = _key_scan_filter(reader.key_equals, ["d", "ts"], schema)
+    assert str(pushed) == "(d == 2024-02-29)" and list(rest) == ["ts"]
+    assert rest["ts"] == naive.replace(tzinfo=dt.timezone.utc)
+
+
 def test_key_scan_filter_pushes_key_columns_only():
     from db_core_spark.sources.versioned_datasource import _key_scan_filter
 
