@@ -29,8 +29,8 @@ from dataclasses import dataclass
 class EngineConfig:
     #: byte-stream object chunk size (reference block_size, datastore.rs:92-96)
     chunk_size: int = 4096
-    #: key-hash buckets of the physical layout; size so one bucket is
-    #: ~10-50 GB at the target scale (0 = legacy unbucketed)
+    #: key-hash buckets of the physical layout (at least 1); size so one
+    #: bucket is ~10-50 GB at the target scale
     num_buckets: int = 16
     #: MVCC version retention window for vacuum (config.rs:162)
     version_retain_seconds: float = 3600.0

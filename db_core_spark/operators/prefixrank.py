@@ -111,11 +111,6 @@ def resolve_num_parts(df: DataFrame, num_parts: int | None) -> int:
     return min(max(cores, size_parts), cores * 64)
 
 
-# Retired private alias (pre-r10 cross-module consumers imported the
-# underscore name; ADVICE r9 promoted it).
-_resolve_num_parts = resolve_num_parts
-
-
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
     """Parse a Spark byte-size conf value ('128m', '134217728b', '4mb')."""
     try:
@@ -208,7 +203,7 @@ def _staged(df: DataFrame, sort_cols: list[Column], num_parts: int | None) -> Da
     it pass 2 would re-run the (sampled) range partitioner and could disagree
     with the offsets pass 1 collected.
     """
-    num_parts = _resolve_num_parts(df, num_parts)
+    num_parts = resolve_num_parts(df, num_parts)
     return (
         df.repartitionByRange(num_parts, *sort_cols)
         .sortWithinPartitions(*sort_cols)

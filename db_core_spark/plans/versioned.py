@@ -8,7 +8,7 @@ Reference-parity map (citations into /root/reference):
 - snapshot visibility          <- src/storage/block_driver.rs:457-486
   (entry.csn <= reader.csn, else walk prev-version chain). Here: rows carry
   (_csn, _opseq); 'walk the chain' becomes keep newest version per key with
-  _csn <= S via one window.
+  _csn <= S, folded one bucket at a time.
 - tombstone delete             <- src/system/instance.rs:191-210 (deleted flag
   on entries). Here: _deleted=true rows that win the window hide the key.
 - optimistic conflict check    <- src/tran_mgr/tran_mgr.rs:85-127 replaces
@@ -22,22 +22,24 @@ Reference-parity map (citations into /root/reference):
   reclamation (src/storage/version_store.rs:14-17, 264-309): materialize the
   resolved snapshot at csn C into compact files; reclaim older versions.
 
-Scale design: data files are immutable parquet under
-data/tsn=<n>/opseq=<k>/bucket=<crc32(key)%B>/ — a key-hash-bucketed layout
-with two writers that agree on it: the JVM partitionBy("bucket") write job
-and `write_bucketed`, one pyarrow function (the python bucket twin). A
-commit stages an op whose frame is a LocalRelation (rows already on the
-driver: pandas/Arrow frames, delete_keys lists, object chunks) in-process
-through `write_bucketed` after one toArrow() job — the reference's commit
-writes in-process too (system/instance.rs:141-187) — and any other frame
-through the Spark write job; the versioned DataSource's batch and stream
-writers call `write_bucketed` on the executors. Every writer records its
-write-set through `key_string`, and every writer claims its csn through
-`claim_csn`: the commit-log protocol (name-only log listing, op-list
-resolution from the newest checkpoint, group visibility, the
-reclaimed-history guard, the conflict-checked claim) exists once, as the
-module-level functions below, for VersionedTable, Transaction and the
-DataSource's readers and writers alike.
+Scale design: one layout. Data files are immutable parquet under
+data/tsn=<n>/opseq=<k>/bucket=<crc32(key)%B>/ and checkpoints under
+data/checkpoint-<csn>/bucket=<b>/ — every table is key-hash bucketed
+(num_buckets >= 1). `write_bucket_file` writes every pyarrow data file:
+`write_bucketed` splits an op's rows by bucket through it, and so does each
+checkpoint task. A commit stages an op whose frame is a LocalRelation (rows
+already on the driver: pandas/Arrow frames, delete_keys lists, object
+chunks) in-process through `write_bucketed` after one toArrow() job — the
+reference's commit writes in-process too (system/instance.rs:141-187) —
+and any other frame through a Spark partitionBy("bucket") write job, whose
+bucket id is `bucket_expr`, the JVM twin of bucket_of_py; the versioned
+DataSource's batch and stream writers call `write_bucketed` on the
+executors. Every writer records its write-set through `key_string`, and
+every writer claims its csn through `claim_csn`: the commit-log protocol
+(name-only log listing, op-list resolution from the newest checkpoint,
+group visibility, the reclaimed-history guard, the conflict-checked claim)
+exists once, as the module-level functions below, for VersionedTable,
+Transaction and the DataSource's readers and writers alike.
 Snapshot reads go through the `versioned` Python DataSource with
 min(num_buckets, defaultParallelism) input partitions — one Python task per
 core, never more tasks than buckets. Each task owns a group of buckets,
@@ -46,19 +48,22 @@ key" one bucket at a time — zero shuffle, the Spark analog of the
 reference's O(versions-of-that-object) chain walk (block_driver.rs:461-486).
 Point reads (`lookup()`, and the ObjectStore reads that see no buffered
 writes) run that reader's fold for the key's one bucket in the driver
-process and schedule no Spark job. Checkpoints resolve through the same
-reader at the same width and write partitionBy(bucket) — shuffle-free end
-to end, one file per non-empty bucket — and bound reader input to
-(checkpoint, S] deltas. The legacy window resolution
-(one global shuffle on the key) remains as `snapshot(engine="window")` and
-for unbucketed (num_buckets=0) tables.
+process and schedule no Spark job. Checkpoints pin the op list on the
+driver and run the same reader's fold in one Spark job at the same width:
+each task writes each non-empty bucket's winners as one file, the driver
+publishes the manifest — shuffle-free end to end — and later reads fold
+only the (checkpoint, S] deltas above it. The version-chain view
+(`history()`, `Transaction.read()`) reads every visible version through
+`_versions`.
 """
 
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import os
+import shutil
 import threading
 import time
 import uuid
@@ -71,6 +76,11 @@ from db_core_spark.config import DEFAULT_CONFIG, EngineConfig
 from db_core_spark.operators.litframe import literal_frame
 
 META_COLS = ("_csn", "_opseq", "_deleted")
+META_SCHEMA_FIELDS = [
+    T.StructField("_csn", T.LongType()),
+    T.StructField("_opseq", T.LongType()),
+    T.StructField("_deleted", T.BooleanType()),
+]
 
 DEFAULT_NUM_BUCKETS = DEFAULT_CONFIG.num_buckets  # sized so a bucket is ~10-50 GB at scale
 
@@ -165,39 +175,100 @@ def physical_arrow_schema(data_schema: T.StructType):
     )
 
 
+def check_num_buckets(num_buckets: int) -> None:
+    """Every table has the one key-hash bucketed layout: refuse a bucket
+    count below 1 (the unbucketed layout, num_buckets=0, is gone)."""
+    if num_buckets < 1:
+        raise ValueError(
+            f"num_buckets={num_buckets}: every table uses the key-hash "
+            "bucket=<b>/ layout, which needs num_buckets >= 1 (the "
+            "unbucketed layout is not supported)"
+        )
+
+
+def table_meta(path: str) -> dict:
+    """The table's _meta.json, refused (ValueError) when it names no
+    bucketed layout — a missing num_buckets means an unbucketed table."""
+    with open(os.path.join(path, "_meta.json")) as fh:
+        meta = json.load(fh)
+    check_num_buckets(meta.get("num_buckets", 0))
+    return meta
+
+
+def bucket_ids(tbl, bucket_cols: list[str], num_buckets: int):
+    """bucket_of_py of every row of pyarrow table ``tbl``, encoded a
+    column at a time, as an int32 array."""
+    import pyarrow as pa
+
+    canon = [
+        map(_column_encoder(tbl.schema.field(c).type, _bucket_canon), tbl.column(c).to_pylist())
+        for c in bucket_cols
+    ]
+    return pa.array([_crc_bucket(k, num_buckets) for k in zip(*canon)], type=pa.int32())
+
+
+def write_bucket_file(tbl, out_dir: str, bucket: int, name: str) -> str:
+    """Write pyarrow table ``tbl`` as the parquet file ``name`` under
+    ``out_dir/bucket=<bucket>/`` and return its path relative to
+    ``out_dir`` — the one writer of every pyarrow data file (op parts and
+    checkpoints). No ARROW:schema footer (store_schema=False, ~440 B a
+    file): every reader casts a file to the table schema. A column is
+    dictionary-encoded only when its first 4096 rows hold at most one
+    distinct value per two rows — the JVM parquet writer's first-page
+    choice; a dictionary over unique keys adds ~2 B of indices a row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    head = tbl.slice(0, 4096)
+    dict_cols = [
+        f.name for f in tbl.schema
+        if not pa.types.is_nested(f.type)
+        and 2 * pc.count_distinct(head[f.name]).as_py() <= head.num_rows
+    ]
+    rel = os.path.join(f"bucket={bucket}", name)
+    os.makedirs(os.path.join(out_dir, f"bucket={bucket}"), exist_ok=True)
+    pq.write_table(
+        tbl, os.path.join(out_dir, rel), store_schema=False, use_dictionary=dict_cols
+    )
+    return rel
+
+
 def write_bucketed(tbl, out_dir: str, num_buckets: int, bucket_cols: list[str]) -> list[str]:
     """The pyarrow writer of an op's data files: split the physical rows
     (data columns, _deleted, _opseq) of pyarrow table ``tbl`` by
     bucket_of_py and write ONE parquet file per non-empty bucket=<b>/
     subdir of ``out_dir`` — the layout the Spark writer's
-    partitionBy("bucket") makes. An unbucketed table (num_buckets=0) gets
-    one file in ``out_dir`` itself, even when empty. Returns the written
-    paths relative to ``out_dir``; empty when a bucketed ``tbl`` has no
-    rows. Shared by Transaction._stage (driver-resident ops) and the
-    versioned DataSource writers (executor-side parts)."""
-    import pyarrow as pa
+    partitionBy("bucket") makes. Returns the written paths relative to
+    ``out_dir``; empty when ``tbl`` has no rows. Shared by
+    Transaction._stage (driver-resident ops) and the versioned DataSource
+    writers (executor-side parts)."""
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     part = f"part-{uuid.uuid4().hex}.parquet"
-    if num_buckets <= 0:
-        os.makedirs(out_dir, exist_ok=True)
-        pq.write_table(tbl, os.path.join(out_dir, part))
-        return [part]
-    canon = [
-        map(_column_encoder(tbl.schema.field(c).type, _bucket_canon), tbl.column(c).to_pylist())
-        for c in bucket_cols
+    buckets = bucket_ids(tbl, bucket_cols, num_buckets)
+    return [
+        write_bucket_file(tbl.filter(pc.equal(buckets, b)), out_dir, b, part)
+        for b in sorted(pc.unique(buckets).to_pylist())
     ]
-    buckets = pa.array(
-        [_crc_bucket(k, num_buckets) for k in zip(*canon)], type=pa.int32()
-    )
-    rel_paths = []
-    for b in sorted(pc.unique(buckets).to_pylist()):
-        rel = os.path.join(f"bucket={b}", part)
-        os.makedirs(os.path.join(out_dir, f"bucket={b}"), exist_ok=True)
-        pq.write_table(tbl.filter(pc.equal(buckets, b)), os.path.join(out_dir, rel))
-        rel_paths.append(rel)
-    return rel_paths
+
+
+def _checkpoint_task(reader, out_dir: str, parts: list, batches):
+    """The checkpoint job's mapInArrow function. Each input row is the index
+    of one reader partition: fold its buckets one at a time and write each
+    non-empty bucket's winners as one file (write_bucket_file); yields the
+    written paths relative to ``out_dir``."""
+    import pyarrow as pa
+
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    for batch in batches:
+        for i in batch.column(0).to_pylist():
+            paths = [
+                write_bucket_file(tbl, out_dir, b, name)
+                for b, tbl in reader.bucket_folds(parts[i])
+                if tbl.num_rows
+            ]
+            yield pa.RecordBatch.from_pydict({"path": pa.array(paths, pa.string())})
 
 
 def key_string(v) -> str:
@@ -587,12 +658,10 @@ class VersionedTable:
         self.config = config or DEFAULT_CONFIG
         self._log_dir = os.path.join(path, _LOG)
         self._data_dir = os.path.join(path, "data")
-        with open(os.path.join(path, "_meta.json")) as fh:
-            meta = json.load(fh)
+        meta = table_meta(path)
         self.key_cols: list[str] = meta["key_cols"]
         self.schema: T.StructType = T.StructType.fromJson(meta["schema"])
-        # 0 = legacy unbucketed layout (round-1 tables); bucketed is default
-        self.num_buckets: int = meta.get("num_buckets", 0)
+        self.num_buckets: int = meta["num_buckets"]
         self.bucket_cols: list[str] = meta.get("bucket_cols", self.key_cols)
 
     # ---------------------------------------------------------------- setup
@@ -618,11 +687,12 @@ class VersionedTable:
         (block_driver.rs:461-486) instead of a full-table window shuffle.
         `bucket_cols` may be a PREFIX/subset of key_cols (default: all of
         them) — e.g. byte-stream objects bucket by obj_id only, co-locating
-        all chunks + versions of one object. num_buckets=0 keeps the legacy
-        unbucketed layout."""
+        all chunks + versions of one object. `num_buckets` must be at least
+        1: the bucketed layout is the only one."""
         config = config or DEFAULT_CONFIG
         if num_buckets is None:
             num_buckets = config.num_buckets
+        check_num_buckets(num_buckets)
         os.makedirs(os.path.join(path, _LOG), exist_ok=False)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         for k in key_cols:
@@ -748,55 +818,45 @@ class VersionedTable:
         )
 
     def _empty(self) -> DataFrame:
-        full = T.StructType(
-            list(self.schema.fields)
-            + [
-                T.StructField("_csn", T.LongType()),
-                T.StructField("_opseq", T.LongType()),
-                T.StructField("_deleted", T.BooleanType()),
-            ]
-        )
+        full = T.StructType(list(self.schema.fields) + META_SCHEMA_FIELDS)
         return literal_frame(self.spark, [], full)
 
-    def _pad_missing(self, df: DataFrame) -> DataFrame:
-        """Schema evolution: files written before an alter_add_column lack
-        the new columns; reads null-fill them (latest schema governs every
-        read, Delta-style)."""
-        for f in self.schema.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return df
-
     def _versions(self, as_of: int | None) -> DataFrame:
-        """All visible row versions with (_csn,_opseq,_deleted) attached."""
+        """All visible row versions with (_csn,_opseq,_deleted) attached —
+        the version-store chain view behind history() and Transaction.read().
+
+        Both the checkpoint and the delta dirs are read with an EXPLICIT
+        schema, not inference: after alter_add_column the op dirs have
+        mixed schemas, and inference samples one file — a sampled OLD file
+        would silently drop the new column from NEW files; the explicit
+        schema null-fills it per file instead. It also reads a file-less
+        checkpoint (every key tombstoned) as empty, where inference raises,
+        and spares the inference job. `bucket`, the partition-dir
+        column of checkpoint and op dirs alike, is dropped by the select."""
         ops = self._committed_ops(as_of)
         if not ops:
             return self._empty()
+        data = list(self.schema.fields)
+        bucket = T.StructField("bucket", T.IntegerType())
+        out_cols = [*[f.name for f in data], *META_COLS]
         parts = []
         delta_dirs = [o for o in ops if not o["checkpoint"]]
         ckpt_dirs = [o["dir"] for o in ops if o["checkpoint"]]
         if ckpt_dirs:
-            # checkpoint files carry physical _csn/_opseq columns already;
-            # single uniform-schema dir, so inference + null-padding is safe;
-            # the select drops the bucket partition-dir column if bucketed
+            # checkpoint files carry physical _csn/_opseq columns already
             parts.append(
-                self._pad_missing(self.spark.read.parquet(*ckpt_dirs)).select(
-                    *[f.name for f in self.schema.fields], *META_COLS
-                )
+                self.spark.read.schema(T.StructType(data + META_SCHEMA_FIELDS + [bucket]))
+                .parquet(*ckpt_dirs)
+                .select(*out_cols)
             )
         if delta_dirs:
-            # EXPLICIT read schema, not inference: after alter_add_column the
-            # op dirs have mixed schemas, and inference samples one file — a
-            # sampled OLD file would silently drop the new column from NEW
-            # files. The explicit schema null-fills it per-file instead.
-            read_fields = list(self.schema.fields) + [
+            read_fields = data + [
                 T.StructField("_deleted", T.BooleanType()),
                 T.StructField("_opseq", T.LongType()),
                 T.StructField("tsn", T.StringType()),
                 T.StructField("opseq", T.IntegerType()),
+                bucket,
             ]
-            if self.num_buckets > 0:
-                read_fields.append(T.StructField("bucket", T.IntegerType()))
             df = self.spark.read.schema(T.StructType(read_fields)).option(
                 "basePath", self._data_dir
             ).parquet(*[o["dir"] for o in delta_dirs])
@@ -822,66 +882,49 @@ class VersionedTable:
                 .withColumn("_opseq", F.col("opseq").cast("long"))
                 .drop("tsn", "opseq")
             )
-            parts.append(df.select(*[f.name for f in self.schema.fields], *META_COLS))
+            parts.append(df.select(*out_cols))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
 
-    def snapshot(self, as_of_csn: int | None = None, engine: str = "auto") -> DataFrame:
+    def _read_width(self) -> int:
+        """Bucket-group partitions of a snapshot or checkpoint read:
+        min(num_buckets, defaultParallelism). Every Python task pays a fixed
+        worker cost before its fold starts (SCALING.md), so the task count
+        follows the cores, never the bucket count or a size estimate."""
+        return min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
+
+    def snapshot(self, as_of_csn: int | None = None) -> DataFrame:
         """Snapshot read: newest visible version per key, tombstones dropped
         — the visibility rule of block_driver.rs:457-486.
 
-        Bucketed tables (the default) read through the `versioned` Python
-        DataSource (`_bucketed_read`): min(num_buckets, defaultParallelism)
+        Reads through the `versioned` Python DataSource with `_read_width()`
         bucket-group partitions, each listing ONLY its buckets' files and
         resolving versions in-partition, one bucket at a time — no global
         window shuffle, the per-object chain-walk cost model of the
-        reference. engine="window" forces the legacy JVM window resolution
-        (the only path for unbucketed tables)."""
-        if engine not in ("auto", "window", "bucketed"):
-            raise ValueError(f"engine must be auto|window|bucketed, got {engine!r}")
-        if engine == "bucketed" and self.num_buckets <= 0:
-            raise ValueError("table has no bucketed layout (created with num_buckets=0)")
-        if engine != "window" and self.num_buckets > 0:
-            # availability check runs here, driver-side, so vacuum-reclaimed
-            # history raises a typed SnapshotUnavailableError (exceptions
-            # inside DataSource planning surface as opaque PythonExceptions)
-            self._committed_ops(as_of_csn)
-            return self._bucketed_read(as_of_csn)
-        vs = self._versions(as_of_csn)
-        w = W.partitionBy(*self.key_cols).orderBy(F.desc("_csn"), F.desc("_opseq"))
-        return (
-            vs.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
-            .drop("_rn", *META_COLS)
-        )
-
-    def _bucketed_read(self, as_of_csn: int | None, include_meta: bool = False) -> DataFrame:
-        """The versioned DataSource read behind snapshot() and checkpoint().
-
-        Width: min(num_buckets, defaultParallelism) bucket-group partitions
-        through the reader's numPartitions option. Every Python task pays a
-        fixed worker cost before the fold starts (SCALING.md), so the task
-        count follows the cores, never the bucket count or a size estimate.
+        reference.
 
         The read schema is declared, so Spark skips the source's Python
-        schema() planning call. It is taken from _meta.json now, not from
-        this handle's `self.schema`: another handle's alter_add_column makes
-        that stale, and the reader emits the columns _meta.json names."""
+        schema() planning call. It is taken from _meta.json, not from this
+        handle's `self.schema`: another handle's alter_add_column makes that
+        stale, and the reader emits the columns _meta.json names."""
         from db_core_spark.sources import (  # noqa: PLC0415
             VersionedDataSource,
             register_versioned_format,
         )
 
-        options = {"path": self.path, "includemeta": str(include_meta).lower()}
+        # availability check runs here, driver-side, so vacuum-reclaimed
+        # history raises a typed SnapshotUnavailableError (exceptions
+        # inside DataSource planning surface as opaque PythonExceptions)
+        self._committed_ops(as_of_csn)
+        options = {"path": self.path}
         register_versioned_format(self.spark)
-        width = min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
         reader = (
             self.spark.read.format("versioned")
             .schema(VersionedDataSource(options).schema())
             .options(**options)
-            .option("numPartitions", str(width))
+            .option("numPartitions", str(self._read_width()))
         )
         if as_of_csn is not None:
             reader = reader.option("asOfCsn", str(as_of_csn))
@@ -896,10 +939,7 @@ class VersionedTable:
         snapshot is pinned when lookup() is called: the DataFrame keeps
         returning those rows after later commits, checkpoints and vacuums.
         `key` must provide every bucket column; extra key columns narrow the
-        row filter further. Unbucketed tables return a lazy window-snapshot
-        filter instead."""
-        if self.num_buckets <= 0:
-            return self._window_lookup(key, None)
+        row filter further."""
         tbl, schema = self._fold_key(key, None)
         return self.spark.createDataFrame(tbl, schema=schema)
 
@@ -907,8 +947,6 @@ class VersionedTable:
         """The rows of `lookup(key)` at `as_of_csn` (default: latest) as a
         driver-side pyarrow Table — what ObjectStore reads take their bytes
         from."""
-        if self.num_buckets <= 0:
-            return self._window_lookup(key, as_of_csn).toArrow()
         return self._fold_key(key, as_of_csn)[0]
 
     def _fold_key(self, key: dict, as_of_csn: int | None):
@@ -929,12 +967,6 @@ class VersionedTable:
         )
         (part,) = reader.partitions()
         return reader.fold(part), reader.output_schema()
-
-    def _window_lookup(self, key: dict, as_of_csn: int | None) -> DataFrame:
-        sn = self.snapshot(as_of_csn, engine="window")
-        for c, v in key.items():
-            sn = sn.filter(F.col(c) == F.lit(v))
-        return sn
 
     def history(self) -> DataFrame:
         """Every row version with metadata (the version-store chain view)."""
@@ -1033,47 +1065,37 @@ class VersionedTable:
             return 0
         if any(is_ck and c == csn for c, is_ck, _ in self._log_names()):
             # Idempotent: this exact state is already checkpointed. MUST
-            # return before touching storage — re-resolving would
-            # mode("overwrite") the live checkpoint dir while the lazy scan
-            # is still reading it as the fold base (Spark clears the target
-            # before the read job runs), leaving an EMPTY checkpoint.
+            # return before touching storage — re-resolving would clear the
+            # live checkpoint dir that readers fold as their base.
             return csn
+        from db_core_spark.sources.versioned_datasource import (  # noqa: PLC0415
+            VersionedSnapshotReader,
+        )
+
+        # the versioned reader's fold, pinned driver-side at csn and planned
+        # at the snapshot width; each task folds its buckets one at a time
+        # and writes each non-empty bucket as one file (_checkpoint_task) —
+        # shuffle-free end to end, and the same pyarrow writer as every op
+        reader = VersionedSnapshotReader(
+            self.schema, {"path": self.path, "numpartitions": str(self._read_width())},
+            ops=self._committed_ops(csn), include_meta=True,
+        )
         out_dir = os.path.join(self._data_dir, f"checkpoint-{csn:010d}")
-        if self.num_buckets > 0:
-            # bucketed: resolve in-partition via the datasource reader (each
-            # task folds only its buckets' files, one bucket at a time) and
-            # write partitionBy the carried bucket id — end-to-end
-            # shuffle-free checkpointing; every bucket lives in one task, so
-            # each non-empty bucket gets exactly one file
-            resolved = self._bucketed_read(csn, include_meta=True)
-            # r11: write first, then probe the result driver-side — the
-            # former limit(1).count() emptiness pre-check cost a full extra
-            # datasource read job per checkpoint just to pick the writer
-            # branch. partitionBy writes NO parquet files for empty input,
-            # which would leave an unreadable checkpoint dir (e.g. every
-            # key tombstoned) — detected from the written dir (os.walk, no
-            # job) and repaired by one empty non-partitioned file so the
-            # fold base always parses; bucket-pruned readers skip it.
-            resolved.write.partitionBy("bucket").mode("overwrite").parquet(out_dir)
-            wrote_any = any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(out_dir)
-                for f in files
-            )
-            if not wrote_any:
-                resolved.drop("bucket").write.mode("overwrite").parquet(out_dir)
-        else:
-            vs = self._versions(csn)
-            w = W.partitionBy(*self.key_cols).orderBy(F.desc("_csn"), F.desc("_opseq"))
-            resolved = (
-                vs.withColumn("_rn", F.row_number().over(w))
-                .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
-                .drop("_rn")
-            )
-            resolved.write.mode("overwrite").parquet(out_dir)
+        # made before the job, so a fully tombstoned table gets a file-less
+        # fold base that still reads as empty; files of a checkpoint that
+        # died before its publish are cleared first
+        shutil.rmtree(out_dir, ignore_errors=True)
+        os.makedirs(out_dir)
+        # a mapInArrow job, not an RDD one: it runs in the Python workers
+        # the snapshot reads already started, where an RDD job's first use
+        # in a process starts another worker pool (~2 s)
+        parts = reader.partitions()
+        self.spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
+            functools.partial(_checkpoint_task, reader, out_dir, parts), "path string"
+        ).collect()
         manifest = {
             "type": "checkpoint", "csn": csn, "dir": out_dir, "ts": time.time(),
-            "buckets": self.num_buckets,
+            "buckets": reader.num_buckets,  # the layout _meta.json names
         }
         self._publish(f"checkpoint-{csn:010d}.json", manifest)
         # Delta-style _last_checkpoint pointer (advisory, overwrite-in-place):
@@ -1093,7 +1115,7 @@ class VersionedTable:
         bytes at will; here the schema widens, never breaks). The LATEST
         schema governs every read including as-of time travel
         (Delta-style): rows written before the alter read back with the new
-        column null on both read engines. Existing files are never
+        column null in snapshots and history alike. Existing files are never
         rewritten. Drops/renames are deliberately unsupported — they would
         change the meaning of already-written bytes."""
         if name in self.schema.fieldNames():
@@ -1143,12 +1165,7 @@ class VersionedTable:
         while new writes land under the new layout immediately. Old-layout
         files are reclaimed by the next vacuum once outside retention.
         Returns the checkpoint csn (0 if the table is empty)."""
-        if self.num_buckets <= 0:
-            raise ValueError(
-                "rebucket from an unbucketed legacy layout is unsupported "
-                "(mixed partition structures cannot share one scan); "
-                "recreate the table bucketed instead"
-            )
+        check_num_buckets(new_num_buckets)
         bucket_cols = list(bucket_cols) if bucket_cols is not None else self.bucket_cols
         if not set(bucket_cols) <= set(self.key_cols):
             raise ValueError(f"bucket_cols {bucket_cols} must be a subset of key_cols")
@@ -1193,8 +1210,6 @@ class VersionedTable:
         Mirrors the reference's checkpoint-as-copy protocol
         (/root/reference/src/system/checkpointer.rs:96-176 copies live
         state to a second root) generalized to a full writable fork."""
-        import shutil  # noqa: PLC0415
-
         src_csn = self.latest_csn() if as_of_csn is None else as_of_csn
         # validates contiguity: raises SnapshotUnavailableError if vacuum
         # already reclaimed history this snapshot needs
@@ -1527,8 +1542,6 @@ class VersionedTable:
         manifests = self._manifests()
         cutoff = time.time() - retain_seconds
         removed = 0
-        import shutil
-
         # Orphan sweep (independent of checkpoints): op dirs no manifest
         # references — a bulk append or stream-sink epoch that crashed
         # between staging/move and publish — plus stale _staging leftovers.
@@ -1866,32 +1879,25 @@ class Transaction:
                     write_bucketed(local, out_dir, t.num_buckets, t.bucket_cols)
                 )
             else:
-                full = self._full_rows(op).drop("_csn")  # csn attached at read via manifest
-                if t.num_buckets > 0:
-                    # key-hash layout: rows land under bucket=<b>/ so readers
-                    # prune file lists per bucket; the repartition bounds
-                    # output to one file per non-empty bucket
-                    full = full.withColumn(
-                        "bucket", bucket_expr(t.bucket_cols, t.num_buckets)
-                    )
-                    full.repartition(
-                        _staging_parts(full, t.num_buckets), F.col("bucket")
-                    ).write.partitionBy("bucket").mode("errorifexists").parquet(out_dir)
-                else:
-                    full.write.mode("errorifexists").parquet(out_dir)
+                # csn attached at read via manifest; the repartition on the
+                # bucket bounds output to one file per non-empty bucket
+                full = self._full_rows(op).drop("_csn").withColumn(
+                    "bucket", bucket_expr(t.bucket_cols, t.num_buckets)
+                )
+                full.repartition(
+                    _staging_parts(full, t.num_buckets), F.col("bucket")
+                ).write.partitionBy("bucket").mode("errorifexists").parquet(out_dir)
                 has_files = any(
                     f.endswith(".parquet")
                     for _, _, files in os.walk(out_dir)
                     for f in files
                 )
             # an op that staged ZERO rows (empty upsert / delete of nothing)
-            # writes no parquet files under the bucketed layout —
-            # referencing its dir would break every reader, so it is dropped
+            # writes no parquet files — referencing its dir would break
+            # every reader, so it is dropped
             # from the manifest (the commit still publishes, possibly with
             # ops: [])
             if not has_files:
-                import shutil  # noqa: PLC0415
-
                 shutil.rmtree(out_dir, ignore_errors=True)
                 continue
             ops_meta.append(
@@ -2008,8 +2014,6 @@ class Transaction:
         """Delete this txn's staged-but-unpublished tsn= directory. Safe at
         any point before a successful _claim: staged files are invisible to
         every reader until a manifest references them."""
-        import shutil
-
         shutil.rmtree(os.path.join(self.table._data_dir, f"tsn={self.tsn}"), ignore_errors=True)
 
     # ------------------------------------------------------------ internals

@@ -21,24 +21,24 @@ Reference-parity map (citations into /root/reference):
   double-buffered WAL appends), the driver's single `commit()` publishes one
   manifest atomically (flush-on-commit).
 
-Scale design: the snapshot reader's partitions are key-hash bucket groups
-matching the physical bucket=<b>/ layout: each partition LISTS ONLY its
-buckets' files across ops and resolves versions locally, one bucket at a
-time — pruned IO and no shuffle (the same co-location argument as the
-reference's per-object version chains). A direct format("versioned") read
-plans one partition per bucket unless numPartitions says otherwise;
-VersionedTable.snapshot() and checkpoint() ask for
-min(num_buckets, defaultParallelism) and declare the schema.
-keyEquals=<json> plans a single partition for a point lookup and
-pushes the bound key columns into the parquet scan; VersionedTable.lookup
-and the ObjectStore's committed reads hand the key over as Python values
-and run that partition's fold (`VersionedSnapshotReader.fold`) in the
-driver process instead of as a Spark job — one fold implementation for
-both. includeMeta=true emits (_csn,_opseq,_deleted,bucket) winners so
-checkpoints write partitionBy(bucket) without a shuffle. Unbucketed
-(legacy) tables fall back to full-scan + seedless row-hash filtering; ops
-whose bucket count differs from the table meta (layout migration) fall
-back per-op.
+Scale design: the table has one layout, key-hash bucket=<b>/ subdirs in
+every op and checkpoint dir, and the snapshot reader's partitions are
+groups of those buckets: each partition LISTS ONLY its buckets' files
+across ops and resolves versions locally, one bucket at a time — pruned IO
+and no shuffle (the same co-location argument as the reference's
+per-object version chains). A direct format("versioned") read plans one
+partition per bucket unless numPartitions says otherwise;
+VersionedTable.snapshot() asks for min(num_buckets, defaultParallelism)
+and declares the schema. keyEquals=<json> plans a single partition for a
+point lookup and pushes the bound key columns into the parquet scan. Three
+callers run the reader's fold (`VersionedSnapshotReader.fold`) outside a
+DataSource scan, so one fold implementation serves them all:
+VersionedTable.lookup and the ObjectStore's committed reads hand the key
+over as Python values and fold its bucket in the driver process, and
+VersionedTable.checkpoint builds the reader with include_meta=True (winners
+keep _csn, _opseq, _deleted) and writes each task's bucket folds with the
+pyarrow writer. Ops whose bucket count differs from the table meta (layout
+migration) are read whole and row-filtered by bucket, per op.
 
 Commit log: this module keeps no copy of the protocol. Readers and writers
 call the functions in plans/versioned.py that VersionedTable and
@@ -71,6 +71,8 @@ from pyspark.sql import types as T
 
 from db_core_spark.config import DEFAULT_CONFIG
 from db_core_spark.plans.versioned import (
+    META_SCHEMA_FIELDS,
+    bucket_ids,
     bucket_of_py,
     claim_csn,
     committed_ops,
@@ -80,6 +82,7 @@ from db_core_spark.plans.versioned import (
     physical_arrow_schema,
     read_manifest,
     reclaimed_csns,
+    table_meta,
     visible_manifests,
     write_bucketed,
     write_set_keys,
@@ -92,13 +95,12 @@ META_FIELDS = [
 
 
 def _load_meta(path: str) -> tuple[list[str], T.StructType, int, list[str]]:
-    with open(os.path.join(path, "_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = table_meta(path)
     key_cols = meta["key_cols"]
     return (
         key_cols,
         T.StructType.fromJson(meta["schema"]),
-        meta.get("num_buckets", 0),
+        meta["num_buckets"],
         meta.get("bucket_cols", key_cols),
     )
 
@@ -257,28 +259,11 @@ def _key_scan_filter(key_equals: dict, key_cols: list[str], data_schema):
 
 
 @dataclass
-class KeyBucketPartition(InputPartition):
-    """Legacy-layout partition: reads every op file, row-filters its hash
-    slice (the correct fallback when the physical layout is unbucketed)."""
-
-    bucket: int
-    num_buckets: int
-
-
-@dataclass
 class BucketSetPartition(InputPartition):
-    """Bucketed-layout partition: owns a set of physical buckets and lists
-    ONLY their bucket=<b>/ files — layout-pruned IO, the 100 TB path."""
+    """A snapshot partition: owns a set of physical buckets and lists ONLY
+    their bucket=<b>/ files — layout-pruned IO, the 100 TB path."""
 
     buckets: tuple
-
-
-META_SCHEMA_FIELDS = [
-    T.StructField("_csn", T.LongType()),
-    T.StructField("_opseq", T.LongType()),
-    T.StructField("_deleted", T.BooleanType()),
-    T.StructField("bucket", T.IntegerType()),
-]
 
 
 class VersionedSnapshotReader(DataSourceReader):
@@ -286,26 +271,26 @@ class VersionedSnapshotReader(DataSourceReader):
     is resolved once at planning time (driver) so every task folds the same
     manifest set — a consistent read even while writers keep committing.
 
-    Bucketed tables (meta num_buckets > 0): partitions are bucket groups —
-    numPartitions of them (default: one per bucket), bucket b in group
-    b % numPartitions. Each lists only its buckets' bucket=<b>/ subdirs of
-    each op — pruned file listings + in-partition version resolution, no
-    shuffle anywhere (parity: per-object chain walk,
-    block_driver.rs:461-486). `read` folds a group one bucket at a time, so
-    a task holds one bucket's versions however wide its group. A keyEquals
-    option plans a SINGLE partition for the key's bucket and filters its key
-    columns in the parquet scan. Ops written with a
-    different bucket count than the table meta (layout migration) fall back
-    to read+row-filter for that op only.
+    Partitions are bucket groups — numPartitions of them (default: one per
+    bucket), bucket b in group b % numPartitions. Each lists only its
+    buckets' bucket=<b>/ subdirs of each op — pruned file listings +
+    in-partition version resolution, no shuffle anywhere (parity:
+    per-object chain walk, block_driver.rs:461-486). `read` folds a group
+    one bucket at a time (`bucket_folds`), so a task holds one bucket's
+    versions however wide its group. A keyEquals option plans a SINGLE
+    partition for the key's bucket and filters its key columns in the
+    parquet scan. Ops written with a different bucket count than the table
+    meta (layout migration) fall back to read+row-filter for that op only.
 
-    includeMeta=true emits (_csn, _opseq, _deleted, bucket) winners for the
-    shuffle-free checkpoint writer.
+    ``include_meta=True`` keeps (_csn, _opseq, _deleted) on the winners:
+    the rows checkpoint() writes.
 
     `fold(partition)` resolves a partition as one pyarrow table. Spark
-    tasks stream per-bucket folds from `read`; VersionedTable point reads
-    call it on the driver with the op list they pinned (`ops`) and the key
-    as Python values (`key_equals`, so dates and timestamps need no JSON
-    form), so one fold serves both."""
+    tasks stream per-bucket folds from `read` and checkpoint tasks write
+    them (`bucket_folds`); VersionedTable point reads call it on the driver
+    with the op list they pinned (`ops`) and the key as Python values
+    (`key_equals`, so dates and timestamps need no JSON form), so one fold
+    serves all three."""
 
     def __init__(
         self,
@@ -313,11 +298,12 @@ class VersionedSnapshotReader(DataSourceReader):
         options: dict,
         ops: list[dict] | None = None,
         key_equals: dict | None = None,
+        include_meta: bool = False,
     ):
         self.path = options["path"]
         as_of = options.get("asofcsn")
         self.as_of = int(as_of) if as_of is not None else None
-        self.include_meta = str(options.get("includemeta", "false")).lower() == "true"
+        self.include_meta = include_meta
         self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols = _load_meta(
             self.path
         )
@@ -331,29 +317,23 @@ class VersionedSnapshotReader(DataSourceReader):
             if ops is not None
             else committed_ops(self.path, self.as_of, _table_grace(self.path))
         )
-        if self.num_buckets > 0:
-            if self.key_equals is not None:
-                missing = [c for c in self.bucket_cols if c not in self.key_equals]
-                if missing:
-                    raise ValueError(
-                        f"keyEquals must bind every bucket column; missing {missing}"
-                    )
-                target = bucket_of_py(
-                    [self.key_equals[c] for c in self.bucket_cols], self.num_buckets
+        if self.key_equals is not None:
+            missing = [c for c in self.bucket_cols if c not in self.key_equals]
+            if missing:
+                raise ValueError(
+                    f"keyEquals must bind every bucket column; missing {missing}"
                 )
-                self.bucket_groups = [(target,)]
-            else:
-                p = int(options.get("numpartitions", self.num_buckets))
-                p = max(1, min(p, self.num_buckets))
-                self.bucket_groups = [
-                    tuple(b for b in range(self.num_buckets) if b % p == i)
-                    for i in range(p)
-                ]
+            target = bucket_of_py(
+                [self.key_equals[c] for c in self.bucket_cols], self.num_buckets
+            )
+            self.bucket_groups = [(target,)]
         else:
-            if self.include_meta:
-                raise ValueError("includeMeta requires a bucketed table layout")
-            self.legacy_parts = int(options.get("numpartitions", 8))
-            self.bucket_groups = None
+            p = int(options.get("numpartitions", self.num_buckets))
+            p = max(1, min(p, self.num_buckets))
+            self.bucket_groups = [
+                tuple(b for b in range(self.num_buckets) if b % p == i)
+                for i in range(p)
+            ]
 
     # NOTE — filter pushdown (DataSourceReader.pushFilters) was implemented
     # and then REMOVED after a verified correctness leak: Spark constructs
@@ -368,21 +348,14 @@ class VersionedSnapshotReader(DataSourceReader):
     # ------------------------------------------------------------- planning
 
     def partitions(self):
-        if self.bucket_groups is not None:
-            return [BucketSetPartition(buckets=g) for g in self.bucket_groups]
-        return [
-            KeyBucketPartition(b, self.legacy_parts) for b in range(self.legacy_parts)
-        ]
+        return [BucketSetPartition(buckets=g) for g in self.bucket_groups]
 
     def dirs_for_partition(self, partition) -> list[tuple[str, dict, bool]]:
         """(dir, op, pruned) listing this partition will read — planning is
         inspectable so tests can assert single-bucket IO pruning."""
         out = []
         for op in self.ops:
-            if (
-                isinstance(partition, BucketSetPartition)
-                and op["buckets"] == self.num_buckets
-            ):
+            if op["buckets"] == self.num_buckets:
                 if not os.path.isdir(op["dir"]):
                     # the op list was pinned at plan time; the whole op dir
                     # vanishing means vacuum reclaimed it between planning
@@ -410,28 +383,27 @@ class VersionedSnapshotReader(DataSourceReader):
             return T.StructType(list(self.data_schema.fields) + META_SCHEMA_FIELDS)
         return self.data_schema
 
+    def bucket_folds(self, partition):
+        """(bucket, fold) for each bucket of a partition, one bucket at a
+        time."""
+        for b in partition.buckets:
+            yield b, self.fold(BucketSetPartition(buckets=(b,)))
+
     def read(self, partition):
-        parts = (
-            [BucketSetPartition(buckets=(b,)) for b in partition.buckets]
-            if isinstance(partition, BucketSetPartition)
-            else [partition]
-        )
-        for part in parts:
-            yield from self.fold(part).to_batches()
+        for _, tbl in self.bucket_folds(partition):
+            yield from tbl.to_batches()
 
     def fold(self, partition):
         """Resolve this partition's rows: newest visible version per key,
         tombstones hidden, as a pyarrow table typed by `output_schema()`."""
-        import pandas as pd
         import pyarrow as pa
+        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
         data_cols = [f.name for f in self.data_schema.fields]
         out_cols = self.output_schema().fieldNames()
         out_schema = to_arrow_schema(self.output_schema())
         empty = out_schema.empty_table()
-        if not self.ops:
-            return empty
         scan_filter, row_filter = None, {}
         if self.key_equals is not None:
             scan_filter, row_filter = _key_scan_filter(
@@ -442,40 +414,15 @@ class VersionedSnapshotReader(DataSourceReader):
             tbl = _op_table_dir(
                 d, op, data_cols, data_schema=self.data_schema, row_filter=scan_filter
             )
-            if pruned:
-                b = int(os.path.basename(d).split("=", 1)[1])
-                tbl = tbl.append_column(
-                    "bucket", pa.array([b] * len(tbl), type=pa.int32())
-                )
+            if not pruned:
+                # an op written under another bucket count (rebucket): keep
+                # its rows that fall in this partition's buckets now
+                ids = bucket_ids(tbl, self.bucket_cols, self.num_buckets)
+                tbl = tbl.filter(pc.is_in(ids, pa.array(partition.buckets, pa.int32())))
             tables.append(tbl)
         if not tables:
             return empty
-        tbl = pa.concat_tables(tables, promote_options="permissive")
-        pdf = tbl.to_pandas()
-        if "bucket" not in pdf.columns or pdf["bucket"].isna().any():
-            # unpruned rows: compute the bucket (bucketed layout) or the
-            # legacy seedless pandas hash slice, then filter to ours
-            if self.bucket_groups is not None:
-                key_vals = pdf[self.bucket_cols].itertuples(index=False, name=None)
-                computed = pd.Series(
-                    [bucket_of_py(list(kv), self.num_buckets) for kv in key_vals],
-                    index=pdf.index,
-                    dtype="int64",
-                )
-                if "bucket" in pdf.columns:
-                    pdf["bucket"] = pdf["bucket"].fillna(computed).astype("int64")
-                else:
-                    pdf["bucket"] = computed
-                pdf = pdf[pdf["bucket"].isin(list(partition.buckets))]
-            else:
-                h = (
-                    pd.util.hash_pandas_object(
-                        pdf[self.key_cols].astype(str).agg("\x00".join, axis=1),
-                        index=False,
-                    )
-                    % partition.num_buckets
-                )
-                pdf = pdf[h == partition.bucket]
+        pdf = pa.concat_tables(tables, promote_options="permissive").to_pandas()
         if len(pdf) == 0:
             return empty
         # visibility rule (block_driver.rs:457-486): newest (_csn,_opseq)
@@ -496,7 +443,7 @@ class VersionedSnapshotReader(DataSourceReader):
 @dataclass
 class CDCPartition(InputPartition):
     """One executor task of a CDC micro-batch: a single directory (an op
-    dir, or one bucket=<b>/ subdir of it for bucketed layouts) plus the
+    dir's bucket=<b>/ subdirs, or an op's _preimg dir) plus the
     commit identity to stamp on its rows. ``opseq`` is the op's position
     WITHIN its transaction — surfaced as an ``_opseq`` column only when
     the reader was opened with includeOpseq (merge_from needs it: a txn
@@ -514,8 +461,8 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
     micro-batch is every change row published in (start_csn, end_csn].
     WAL-tailing parity: src/log_mgr/io.rs:254-441.
 
-    Scale shape: the driver only lists manifests (metadata); each op dir —
-    per bucket subdir when the layout is bucketed — becomes its own input
+    Scale shape: the driver only lists manifests (metadata); each bucket
+    subdir of an op dir becomes its own input
     partition, so a large backfill replay fans out across executors instead
     of funneling through the driver (the round-1 Simple reader read every
     batch driver-side; this keeps its csn-offset contract)."""
@@ -566,7 +513,7 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
                         for d in os.listdir(op["dir"])
                         if d.startswith("bucket=")
                     )
-                    if op.get("buckets", 0) > 0 and os.path.isdir(op["dir"])
+                    if os.path.isdir(op["dir"])
                     else []
                 )
                 for d in bucket_dirs or [op["dir"]]:
@@ -616,11 +563,11 @@ def _stage_rows(
     out_dir: str,
 ) -> tuple[list, int, list | None]:
     """Executor-side staging shared by the batch and streaming writers:
-    materialize this partition's rows as parquet under ``out_dir`` through
-    write_bucketed (bucket=<b>/ subdirs when the table is bucketed — the
-    same writer Transaction._stage uses for driver-resident ops, and the
-    python twin of the JVM bucket_expr; the writers MUST agree or
-    in-partition version resolution breaks, tested) and return (relative
+    materialize this partition's rows as parquet under ``out_dir``'s
+    bucket=<b>/ subdirs through write_bucketed (the same writer
+    Transaction._stage uses for driver-resident ops, and the python twin
+    of the JVM bucket_expr; the writers MUST agree or in-partition version
+    resolution breaks, tested) and return (relative
     file paths, row count, key_string write-set or None when above the
     tracking cap)."""
     import pandas as pd
@@ -645,7 +592,6 @@ def _stage_rows(
 
 @dataclass
 class StagedPart(WriterCommitMessage):
-    file_path: str
     n_rows: int
     # canonical-string write-set of this part; None = too large to track
     keys: list | None = None
@@ -685,7 +631,7 @@ class VersionedAppendWriter(DataSourceWriter):
         self.start_csn = latest_csn(self.path)
 
     def write(self, iterator) -> StagedPart:
-        rel_paths, n_rows, part_keys = _stage_rows(
+        _, n_rows, part_keys = _stage_rows(
             iterator,
             self.data_schema,
             self.key_cols,
@@ -693,20 +639,19 @@ class VersionedAppendWriter(DataSourceWriter):
             self.bucket_cols,
             self.op_dir,
         )
-        fname = (
-            self.op_dir
-            if self.num_buckets > 0
-            else os.path.join(self.op_dir, rel_paths[0])
-        )
-        return StagedPart(file_path=fname, n_rows=n_rows, keys=part_keys)
+        return StagedPart(n_rows=n_rows, keys=part_keys)
 
     def commit(self, messages) -> None:
         parts = [m for m in messages if m is not None]
+        # an append that staged no row wrote no op dir: publish the commit
+        # without the op, as Transaction._stage drops an empty op —
+        # naming the missing dir would break every later read
+        op = {"dir": self.op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}
         claim_csn(
             self.path,
             self.start_csn,
             self.tsn,
-            [{"dir": self.op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
+            [op] if any(m.n_rows for m in parts) else [],
             merge_write_sets(m.keys for m in parts),
             _table_grace(self.path),
             f"bulk append {self.tsn}",
@@ -901,8 +846,6 @@ class VersionedDataSource(DataSource):
                 # (_csn, _change) for every existing consumer/oracle
                 fields = fields + [T.StructField("_opseq", T.LongType())]
             return T.StructType(fields)
-        if str(self.options.get("includemeta", "false")).lower() == "true":
-            return T.StructType(list(data_schema.fields) + META_SCHEMA_FIELDS)
         return data_schema
 
     def reader(self, schema: T.StructType) -> DataSourceReader:

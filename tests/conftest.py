@@ -50,3 +50,20 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMALL}/{t}.parquet')"
         )
     return con
+
+
+def window_snapshot(vt, as_of_csn=None):
+    """Reference resolution of a VersionedTable snapshot, the check on its
+    bucketed reader: one JVM window over every visible version
+    (`_versions`), newest (_csn, _opseq) per key, tombstones dropped."""
+    from pyspark.sql import Window, functions as F
+
+    from db_core_spark.plans.versioned import META_COLS
+
+    w = Window.partitionBy(*vt.key_cols).orderBy(F.desc("_csn"), F.desc("_opseq"))
+    return (
+        vt._versions(as_of_csn)
+        .withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") == 1) & ~F.col("_deleted"))
+        .drop("_rn", *META_COLS)
+    )

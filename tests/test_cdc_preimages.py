@@ -13,6 +13,7 @@ from pyspark.sql import functions as F, types as T
 
 from db_core_spark.config import EngineConfig
 from db_core_spark.plans import VersionedTable
+from tests.conftest import window_snapshot
 
 SCHEMA = T.StructType(
     [
@@ -179,6 +180,6 @@ def test_preimg_dirs_invisible_to_snapshot_readers(vt, spark, tmp_path):
     t.commit()
     # both read engines resolve to the new value only
     assert {(r.k, r.v) for r in vt.snapshot().collect()} == {(1, 11)}
-    assert {(r.k, r.v) for r in vt.snapshot(engine="window").collect()} == {(1, 11)}
+    assert {(r.k, r.v) for r in window_snapshot(vt).collect()} == {(1, 11)}
     # history (raw version scan) also unpolluted by preimage files
     assert vt.history().count() == 2

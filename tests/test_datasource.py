@@ -15,6 +15,7 @@ from pyspark.sql import functions as F, types as T
 
 from db_core_spark.plans import VersionedTable
 from db_core_spark.sources import register_versioned_format
+from tests.conftest import window_snapshot
 
 SCHEMA = T.StructType(
     [
@@ -109,6 +110,25 @@ def test_append_write_then_read(vt, spark):
     df2.write.format("versioned").mode("append").option("path", vt.path).save()
     back = spark.read.format("versioned").option("path", vt.path).load()
     assert rows_of(back) == {1: ("a", 1.0), 2: ("b2", 2.5)}
+
+
+def test_empty_bulk_append_publishes_no_op(spark, tmp_path):
+    """A bulk append whose parts staged no row wrote no op dir, so its
+    commit must not name one: the table stays readable, checkpoints, and
+    takes later appends."""
+    register_versioned_format(spark)
+    vt = VersionedTable.create(
+        spark, str(tmp_path / "t"), key_cols=["k"], schema=SCHEMA, num_buckets=4
+    )
+    empty = spark.createDataFrame([(1, "a", 1.0)], SCHEMA).filter("k < 0")
+    empty.write.format("versioned").mode("append").save(vt.path)
+    assert vt.latest_csn() == 1
+    assert vt.snapshot().count() == 0
+    assert vt.checkpoint() == 1
+    assert vt.snapshot().count() == 0
+    df = spark.createDataFrame([(2, "b", 2.0)], SCHEMA)
+    df.write.format("versioned").mode("append").save(vt.path)
+    assert rows_of(vt.snapshot()) == {2: ("b", 2.0)}
 
 
 def test_overwrite_mode_rejected(vt, spark):
@@ -450,7 +470,7 @@ def test_rebucket_layout_migration(spark, tmp_path):
     }
     assert ck_buckets and all(int(b.split("=")[1]) < 8 for b in ck_buckets)
     assert rows_of(vt.snapshot()) == before
-    assert rows_of(vt.snapshot(engine="window")) == before
+    assert rows_of(window_snapshot(vt)) == before
     # new writes land under the new bucket count and lookups prune to one
     _commit(vt, spark, [(99, "post", 9.0)])
     got = vt.lookup({"k": 99}).collect()

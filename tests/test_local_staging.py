@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 from db_core_spark.operators.litframe import literal_frame
 from db_core_spark.plans import ObjectStore, VersionedTable
 from db_core_spark.plans.versioned import bucket_of_py
+from tests.conftest import window_snapshot
 
 
 @contextmanager
@@ -134,21 +135,6 @@ def test_empty_local_upsert_publishes_no_op_dir(spark, tmp_path):
     assert vt.snapshot().count() == 0
 
 
-def test_unbucketed_table_stages_locally(spark, tmp_path):
-    vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=0)
-    txn = vt.begin()
-    txn.upsert(literal_frame(spark, [(1, "a", 1.0), (2, "b", None)], KV_SCHEMA))
-    txn.commit()
-    txn = vt.begin()
-    txn.delete_keys([{"k": 1}])
-    txn.commit()
-    for m in _manifests(vt):
-        (op,) = m["ops"]
-        files = os.listdir(op["dir"])
-        assert "_SUCCESS" not in files and any(f.endswith(".parquet") for f in files)
-    assert [tuple(r) for r in vt.snapshot().collect()] == [(2, "b", None)]
-
-
 # ------------------------------------------------------------ equivalence
 
 _KEYS = {
@@ -224,8 +210,8 @@ def test_local_and_spark_staging_are_equivalent(spark, tmp_path, kind):
     ]
     snap = _sorted_rows(loc.snapshot())
     assert snap == _sorted_rows(dist.snapshot())
-    assert snap == _sorted_rows(loc.snapshot(engine="window"))
-    assert snap == _sorted_rows(dist.snapshot(engine="window"))
+    assert snap == _sorted_rows(window_snapshot(loc))
+    assert snap == _sorted_rows(window_snapshot(dist))
     for k in keys:
         assert _sorted_rows(loc.lookup({"k": k})) == _sorted_rows(dist.lookup({"k": k}))
     assert _sorted_rows(loc.changes(include_opseq=True)) == _sorted_rows(
@@ -243,10 +229,16 @@ def test_local_and_spark_staging_are_equivalent(spark, tmp_path, kind):
         ]
 
     assert buckets(loc) == buckets(dist)
+    # the pyarrow-written checkpoint reads back as the window reference,
+    # through the bucketed reader and through history()
     for vt in (loc, dist):
         vt.checkpoint()
-    assert _sorted_rows(loc.snapshot()) == snap
-    assert _sorted_rows(dist.snapshot()) == snap
+        assert _sorted_rows(vt.snapshot()) == snap
+        assert _sorted_rows(window_snapshot(vt)) == snap
+        hist = vt.history()
+        assert _sorted_rows(hist.drop("_csn", "_opseq", "_deleted")) == snap
+        assert hist.filter("_deleted").count() == 0
+    assert _sorted_rows(loc.history()) == _sorted_rows(dist.history())
 
 
 # -------------------------------------------------------------- mixed ops
@@ -276,6 +268,6 @@ def test_mixed_local_and_spark_ops_resolve_by_opseq(spark, tmp_path):
     txn.commit()
     want = [(1, "dist2", 0.0), (3, "local2", 5.0)]
     assert _sorted_rows(vt.snapshot()) == want
-    assert _sorted_rows(vt.snapshot(engine="window")) == want
+    assert _sorted_rows(window_snapshot(vt)) == want
     assert _sorted_rows(vt.lookup({"k": 3})) == [(3, "local2", 5.0)]
     assert _manifests(vt)[-1]["write_keys"] == [["1"], ["3"]]

@@ -12,7 +12,7 @@ import re
 import pytest
 
 from db_core_spark.registry import all_queries
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, window_snapshot
 
 
 def plan_of(df) -> str:
@@ -275,7 +275,7 @@ def test_full_snapshot_partitions_cover_each_bucket_dir_exactly_once(spark, tmp_
     assert set(seen) == on_disk
     # correctness: bucketed in-partition resolution == window resolution
     got = {(r.k, r.v) for r in vt.snapshot().collect()}
-    want = {(r.k, r.v) for r in vt.snapshot(engine="window").collect()}
+    want = {(r.k, r.v) for r in window_snapshot(vt).collect()}
     assert got == want and len(got) == 200
 
 
@@ -286,10 +286,6 @@ def test_snapshot_plan_has_no_exchange(spark, tmp_path):
     vt, _schema = _mk_bucketed_table(spark, tmp_path)
     plan = vt.snapshot()._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-    legacy = (
-        vt.snapshot(engine="window")._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" in legacy  # the old cost, kept only as explicit fallback
 
 
 def test_weighted_sample_uses_topk_not_global_sort(spark, queries):

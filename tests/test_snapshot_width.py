@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import types as T
 
 from db_core_spark.plans import VersionedTable
@@ -76,7 +77,10 @@ def test_checkpoint_writes_one_file_per_non_empty_bucket(spark, tmp_path):
         bucket_of_py([k], BUCKETS) for k in live
     }
     for d in bucket_dirs:
-        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+        (f,) = glob.glob(os.path.join(d, "*.parquet"))
+        # pyarrow-written, without the ARROW:schema footer
+        assert b"ARROW:schema" not in (pq.read_metadata(f).metadata or {}), f
+    assert sorted(os.listdir(ck_dir)) == sorted(os.path.basename(d) for d in bucket_dirs)
     assert {k for k, _ in _rows(vt.snapshot())} == live
 
 

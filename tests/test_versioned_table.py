@@ -14,12 +14,15 @@ Reference tests mirrored (citations into /root/reference):
 
 from __future__ import annotations
 
+import json
+import os
 import threading
 
 import pytest
 from pyspark.sql import functions as F, types as T
 
 from db_core_spark.plans import ConflictError, VersionedTable
+from tests.conftest import window_snapshot
 
 SCHEMA = T.StructType(
     [
@@ -566,12 +569,61 @@ def test_auto_maintain_batch_commits(spark, tmp_path):
     assert {r.k for r in vt.snapshot().collect()} == {0, 1, 2}
 
 
+def test_fully_tombstoned_checkpoint_reads_empty(vt, spark, tmp_path):
+    """A checkpoint of a table whose every key is tombstoned writes no
+    data file, only its (empty) dir: snapshot(), history(), lookup() and
+    clone() read it as empty, and later commits land on top of it."""
+    t = vt.begin()
+    t.upsert(spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], SCHEMA))
+    t.commit()
+    t = vt.begin()
+    t.delete_keys([{"k": 1}, {"k": 2}])
+    t.commit()
+    assert vt.checkpoint() == 2
+    ck_dir = os.path.join(vt.path, "data", "checkpoint-0000000002")
+    assert os.listdir(ck_dir) == []
+    assert vt.snapshot().count() == 0
+    assert vt.history().count() == 0
+    assert vt.lookup({"k": 1}).count() == 0
+    clone = vt.clone(str(tmp_path / "clone"))
+    assert clone.snapshot().count() == 0
+    t = vt.begin()
+    t.upsert(spark.createDataFrame([(3, "c", 3.0)], SCHEMA))
+    t.commit()
+    assert rows_of(vt.snapshot()) == {3: ("c", 3.0)}
+    assert vt.history().count() == 1
+    assert rows_of(vt.lookup({"k": 3})) == {3: ("c", 3.0)}
+    t = clone.begin()
+    t.upsert(spark.createDataFrame([(4, "d", 4.0)], SCHEMA))
+    t.commit()
+    assert rows_of(clone.snapshot()) == {4: ("d", 4.0)}
+
+
+def test_unbucketed_layout_is_refused(spark, tmp_path):
+    """Every table is key-hash bucketed: create() refuses num_buckets < 1,
+    and open() refuses a _meta.json without a bucket count."""
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="layout"):
+            VersionedTable.create(
+                spark, str(tmp_path / f"t{n}"), key_cols=["k"], schema=SCHEMA, num_buckets=n
+            )
+        assert not os.path.exists(tmp_path / f"t{n}")
+    vt = VersionedTable.create(spark, str(tmp_path / "t"), key_cols=["k"], schema=SCHEMA)
+    meta_path = os.path.join(vt.path, "_meta.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    del meta["num_buckets"]
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="layout"):
+        VersionedTable.open(spark, vt.path)
+
+
 @pytest.mark.heavy
 def test_checkpoint_of_fully_deleted_table(vt, spark):
-    """Edge: every key tombstoned -> the resolved snapshot is EMPTY, and a
-    partitionBy write would emit zero files, leaving an unreadable
-    checkpoint. The empty-file fallback keeps the fold base parseable for
-    both read engines, through vacuum."""
+    """Edge: every key tombstoned -> the resolved snapshot is EMPTY and the
+    checkpoint writes no file, only its dir. The file-less fold base stays
+    readable for the reader and the window reference, through vacuum."""
     t = vt.begin()
     t.upsert(spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], SCHEMA))
     t.commit()
@@ -581,7 +633,7 @@ def test_checkpoint_of_fully_deleted_table(vt, spark):
     ck = vt.checkpoint()
     assert ck == 2
     assert vt.snapshot().count() == 0
-    assert vt.snapshot(engine="window").count() == 0
+    assert window_snapshot(vt).count() == 0
     vt.vacuum(retain_seconds=0.0)
     assert vt.snapshot().count() == 0
     # and the table keeps working after
@@ -645,7 +697,7 @@ def test_alter_add_column_schema_evolution(vt, spark):
 
     want = {1: ("a", None), 2: ("b2", "edited"), 3: ("c", "fresh")}
     assert rows_with_note(vt.snapshot()) == want
-    assert rows_with_note(vt.snapshot(engine="window")) == want
+    assert rows_with_note(window_snapshot(vt)) == want
     # as-of before the alter: latest schema governs, old rows padded
     assert rows_with_note(vt.snapshot(c1)) == {1: ("a", None), 2: ("b", None)}
     # checkpoint folds mixed-schema ops; reads stay correct after
@@ -680,7 +732,7 @@ def test_empty_op_commit_is_harmless(vt, spark):
     t.delete_keys([])
     assert t.commit() == 2
     assert rows_of(vt.snapshot()) == {1: ("a", 1.0)}
-    assert rows_of(vt.snapshot(engine="window")) == {1: ("a", 1.0)}
+    assert rows_of(window_snapshot(vt)) == {1: ("a", 1.0)}
     from db_core_spark.sources.versioned_datasource import VersionedChangeStreamReader
 
     rdr = VersionedChangeStreamReader(SCHEMA, {"path": vt.path})
