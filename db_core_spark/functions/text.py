@@ -141,17 +141,9 @@ def simhash_frame(df, id_col: str = "doc_id", text_col: str = "text",
     import numpy as np
     import pandas as pd
 
-    src = df.select(id_col, text_col)
-    # Parallelism floor, same condition as minhash_lsh_pairs' signature
-    # pass: a tiny corpus arrives as fewer input splits than cores (one
-    # small parquet file at fixture SFs) which would serialize the Python
-    # workers; at real scale the scan has more splits than cores and the
-    # raw text is never shuffled.
-    from db_core_spark.operators.prefixrank import scan_num_splits
+    from db_core_spark.operators.prefixrank import parallelism_floor
 
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if scan_num_splits(src) < target:
-        src = src.repartition(target)
+    src = parallelism_floor(df.select(id_col, text_col))
 
     id_type = df.schema[id_col].dataType.simpleString()
     ws_re = _re.compile(r"\s+")

@@ -143,9 +143,10 @@ def scan_num_splits(df: DataFrame) -> int:
         maxSplit = min(maxPartitionBytes, max(openCost, total / parallelism))
         splits  ~= ceil(total / maxSplit)
 
-    Every consumer uses this ONLY as a parallelism guard ("repartition
-    when the scan has fewer splits than cores" — true at fixture scale,
-    false at 100 TB by construction), so a close estimate is sufficient.
+    Its one consumer, :func:`parallelism_floor`, uses it ONLY as a guard
+    ("repartition when the scan has fewer splits than cores" — true at
+    fixture scale, false at 100 TB by construction), so a close estimate
+    is sufficient.
     If a file size cannot be stat'd (non-POSIX store), the helper returns
     a large count so the guard does NOT fire — under-firing merely keeps
     the scan's own parallelism (the no-guard behavior), while over-firing
@@ -178,6 +179,18 @@ def scan_num_splits(df: DataFrame) -> int:
             return 1 << 30
     max_split = min(max_part, max(open_cost, total // parallelism or 1))
     return max(1, math.ceil(total / max_split))
+
+
+def parallelism_floor(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to ``defaultParallelism`` when its file scan has
+    fewer input splits than cores (:func:`scan_num_splits`), else ``df``
+    itself. A tiny input (one small parquet file at fixture scale) would
+    otherwise run a Python or per-row-heavy pass on one task; at real scale
+    the scan has more splits than cores and the input is never shuffled."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if scan_num_splits(df) < target:
+        return df.repartition(target)
+    return df
 
 
 def _py_offset(dtype, v):

@@ -1271,13 +1271,10 @@ def fuzzy_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       entity strings are longer) and it costs integer ops. Exact by the
       standard edit-distance lower bound — result unchanged,
       oracle-verified at three SFs."""
-    from db_core_spark.operators.prefixrank import scan_num_splits
+    from db_core_spark.operators.prefixrank import parallelism_floor
 
     p = table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_name")
-    a, b = p.alias("a"), p.alias("b")
-    target = spark.sparkContext.defaultParallelism
-    if scan_num_splits(p) < target:
-        a = p.repartition(target).alias("a")
+    a, b = parallelism_floor(p).alias("a"), p.alias("b")
     dist = F.levenshtein(F.col("a.p_name"), F.col("b.p_name"))
     len_gap = F.abs(
         F.length(F.col("a.p_name")) - F.length(F.col("b.p_name"))

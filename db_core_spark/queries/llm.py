@@ -422,18 +422,9 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     d = table(spark, sf_dir, "documents")
-    src = d.select("doc_id", "text")
-    # Parallelism floor for the Arrow pass: a tiny corpus arrives as fewer
-    # input splits than cores (one 584 KB file here), which would serialize
-    # the Python workers. Repartition ONLY in that case — at real scale the
-    # scan has far more splits than cores and the raw text is never
-    # shuffled (shuffling a 100 TB corpus for parallelism would be the
-    # §8 anti-pattern; the condition is false there by construction).
-    from db_core_spark.operators.prefixrank import scan_num_splits
+    from db_core_spark.operators.prefixrank import parallelism_floor
 
-    target = spark.sparkContext.defaultParallelism
-    if scan_num_splits(src) < target:
-        src = src.repartition(target)
+    src = parallelism_floor(d.select("doc_id", "text"))
 
     mh_a = np.array([a for a, _ in _MH_COEFFS], dtype=np.int64)
     mh_b = np.array([b for _, b in _MH_COEFFS], dtype=np.int64)

@@ -27,16 +27,14 @@ class RegisteredQuery:
 
 _REGISTRY: dict[str, RegisteredQuery] = {}
 
-# Emission order for queries()/oracle_sql(): the driver's correctness run
-# caps at the FIRST 50 registry entries, so coverage rotates round-over-round:
-# queries whose driver row errored/mismatched in a committed round and were
-# never since seen green sort FIRST (fix re-confirmation beats breadth), then
-# queries that never earned a driver CORRECTNESS row (green or rows-only) in
-# any committed CORRECTNESS_r*.json — oracle-eligible before
-# rows-only — so each round's 50-slot window lands on fresh evidence. Ties
-# break by category priority below (custom/high-value surfaces lead), then
-# registration order. Once every operator has a driver row, the order
-# degenerates to pure category priority — the round-1/2 behavior.
+# Emission order for queries()/oracle_sql(), built by all_queries() from the
+# committed driver CORRECTNESS_r*.json history: queries whose driver row
+# errored or mismatched and that were never since seen green come first, then
+# queries the driver never checked, then the rest. Within each band,
+# oracle-eligible queries lead rows-only ones, then the category priority
+# below decides (custom/high-value surfaces lead), then registration order.
+# While every query has a usable driver row and none errored, only those
+# last three rules apply.
 CATEGORY_PRIORITY = [
     "mvcc",
     "object",
@@ -59,213 +57,6 @@ CATEGORY_PRIORITY = [
 ]
 
 
-# Names whose IMPLEMENTATION (or oracle) materially changed after their last
-# driver-green round: rotation otherwise never re-fronts a green query, so a
-# changed plan would carry stale evidence forever (ADVICE r6 on the q15
-# rewrite). Maps name -> round number the change landed in; an entry
-# self-neutralizes once a CORRECTNESS_r{M}.json with M >= that round shows
-# the query green (so a forgotten entry cannot waste window slots). Sorts
-# immediately after errored-never-green names, ahead of stale conversions.
-#
-# r7: q15_top_supplier (localCheckpoint single-scan rewrite),
-#     dedup_exact_keep (text-partitioned window -> sha256 min_by aggregate),
-#     ann_ivf_topk / ann_ivf_recall_sweep (fixed K=16 centroid cap — the
-#     uncapped % 31 rule grew K with the corpus, quadratic assignment).
-REVERIFY: dict[str, int] = {
-    "q15_top_supplier": 7,
-    "dedup_exact_keep": 7,
-    "ann_ivf_topk": 7,
-    "ann_ivf_recall_sweep": 7,
-    "cohort_retention": 7,  # one-shuffle collect_set rewrite
-    "window_moving_median": 7,  # bounded-frame array median replaces pandas
-    "q18_large_orders": 7,  # reuse the HAVING aggregate; one lineitem pass
-    "dau_new_vs_returning": 7,  # one-shuffle collect_set rewrite
-    # r8 entry for events_interarrival_stats (lag via boundary stitching +
-    # integer-us bucketed quantiles) is superseded by its r9 entry below.
-    # r8: continuous-percentile buffer migration (r7-verdict watch item 2)
-    # — F.percentile over continuous/per-user measures replaced by
-    # bucketed_exact_quantiles; fences bit-identical, oracles unchanged
-    # r10: bucketed_exact_quantiles' fence search collapsed to one linear
-    # pipeline (one Window node supplies cumulative AND per-group total; the
-    # former persist + distinct + cumulative re-join are gone — three
-    # exchanges and a persist materialization fewer per call, identical
-    # fence rows), so every rider re-verifies; funnel/rfm additionally
-    # pin their staging frame with localCheckpoint(eager=False) (the
-    # materialization folds into the fence collect, one job saved).
-    "funnel_latency_percentiles": 10,
-    "rfm_customer_segments": 10,
-    "agg_percentiles": 10,
-    # r10: minhash signatures are one Arrow pass (shingle + md5 + numpy
-    # affine mins per batch; bit-identical to the former JVM 64-column
-    # aggregate, postings never exist as rows), and verification
-    # re-shingles candidates per-row (array_distinct + array_intersect
-    # replace the posting window / distinct / sizes-aggregate / posting
-    # self-join); byte-identical pairs, 2.44 s -> 1.42 s at sf0.1.
-    "minhash_lsh_pairs": 10,
-    # r9 entries (prefixrank defaultParallelism staging, null-safe fences,
-    # kcore localCheckpoint, tile kernel B=ceil(n/8192)) all self-
-    # neutralized against CORRECTNESS_r09; the names below carry r10.
-    #
-    # r10: prefixrank staging partition count is now size-aware —
-    # max(defaultParallelism, Catalyst est_bytes / 512 MB, capped at
-    # cores*64) so partition SIZE, not count, is the scaling invariant
-    # (r9 verdict #3: cores-only left ~10 GB sort partitions at 100 TB /
-    # 10k cores). At fixture SFs the resolved count is unchanged
-    # (estimates < 512 MB), but the resolver is shared-operator code, so
-    # every riding query re-verifies. events_interarrival_stats
-    # additionally rides grouped_lagged_value's new pass-1 NULL-sort-value
-    # probe (enforced contract, r9 verdict #6).
-    "events_interarrival_stats": 10,
-    "agg_weighted_median": 10,
-    "agg_value_deciles": 10,
-    "stats_mann_whitney_u": 10,
-    "abc_part_classification": 10,
-    "skyline_pareto_frontier": 10,
-    "zipf_token_slope": 10,
-    "corpus_heaps_law_fit": 10,
-    "pipeline_multimodal_prepare": 10,
-    "pack_training_sequences": 10,
-    "pareto_revenue_concentration": 10,
-    "graph_kcore_suppliers": 10,  # r10: kcore peel rounds checkpoint lazily
-    # r10: blocked-cosine tile kernel block assignment is
-    # pmod(hash(vec_id), B) — the raw `vec_id % B` silently DROPPED
-    # negative-id vectors (Spark % keeps the dividend's sign; a negative
-    # block id matches no tile-pair row) and skewed tiles on
-    # sparse/stride id domains (r9 verdict #1). Values are
-    # tiling-invariant; all three kernel consumers re-verify.
-    "embedding_neardup_pairs": 10,
-    "embedding_semantic_clusters": 10,
-    "embedding_threshold_sweep": 10,
-    # r10: localCheckpoint(eager=False) sweep — every eager checkpoint
-    # whose first consumer is a full-scan action now pins lazily, folding
-    # the dedicated materialization job into that action (values
-    # unchanged; per-run driver-blocking job counts drop ~10-20%). Riders
-    # of the changed sites re-verify.
-    "ngram_jaccard_pairs": 10,
-    "ngram_containment_pairs": 10,
-    # r10 resume 6: simhash_frame is a one-pass Arrow map (per-row distinct
-    # words + md5 + vectorized vote tally in mapInPandas; bit-identical to
-    # the retired explode/posting-shuffle/60-sum aggregate, parity-pinned by
-    # test_simhash_arrow_pass_matches_agg_formulation) — both fingerprint
-    # consumers re-verify.
-    "simhash_hamming_pairs": 10,
-    "simhash_buckets": 10,
-    "dedup_cluster_components": 10,
-    "q15_top_supplier": 10,
-    "multimodal_phash_neardup_pairs": 10,
-    "graph_pagerank_trade": 10,
-    "bpe_train_merges": 10,
-    # r10 batch 2: driver-literal frames (quantile q/fence/below frames,
-    # prefixrank offsets/boundaries, the weighted-median fence, the
-    # histogram-sketch q frame) are Arrow-backed single-partition scans
-    # instead of 32-partition pickled-Python RDDs (operators/litframe.py —
-    # 0.40 s -> 0.08 s per downstream action, values identical); the
-    # quantile operator additionally grew the opt-in bucket_aggs fusion
-    # (funnel/interarrival base stats ride the fence window, one full
-    # input scan fewer), rfm derives its global max order date from the
-    # per-customer frame (one full orders scan fewer), and interarrival's
-    # staging sheds the event_id tiebreak (lag value == sort key, so ties
-    # are value-harmless). The tile-pair / centroid / query-vector /
-    # audit-result literals in vectors.py and analytics.py ride the same
-    # litframe conversion. Riders not already re-fronted above:
-    "agg_histogram_quantile_sketch": 10,
-    "embedding_kmeans_lloyd": 10,
-    "embedding_pq_topk": 10,
-    "dq_join_fanout_audit": 10,
-    "ann_ivf_recall_sweep": 10,
-    "embedding_logreg_train": 10,
-    "embedding_pca_whitening": 10,
-    # r10 resume 6: the grouped-map Python stages get an EXPLICIT
-    # size-aware repartition on the group key (resolve_num_parts) — AQE's
-    # byte-based coalescing squeezed their thousands of per-group Python
-    # calls onto 2 post-coalesce partitions (zscore 20.1 s -> 2.3 s, gini
-    # 15.2 s -> 2.0 s, ewma 3.0 s -> 0.8 s at sf0.1); zscore's floor
-    # quantization additionally vectorized (np.floor for .apply). The
-    # logreg/kmeans partial-moments Arrow rewrites above re-use their
-    # existing r10 entries.
-    "applyinpandas_zscore": 10,
-    "applyinpandas_udaf_gini": 10,
-    "ewma_user_value": 10,
-    # r10 resume 6: fuzzy_levenshtein_pairs probe side gets the guarded
-    # parallelism floor (its ~8M candidate x levenshtein probe ran on the
-    # dimension scan's ONE split: 14.4 s -> 1.3 s) plus the exact
-    # length-gap lower-bound pre-filter; resolve_num_parts additionally
-    # caps Catalyst's post-join size estimates by 8x the plan's leaf
-    # sizes (pareto's 1.4 MB staging frame estimated 1219 GB and
-    # scheduled ~6000 tasks; 9.1 s -> 1.5 s) — its riders are already
-    # fronted above.
-    "fuzzy_levenshtein_pairs": 10,
-    # r10 resume 6: two latent sf0.1-only oracle mismatches found by this
-    # resume's full sf0.1 gate (the graded sf0.01 gate never saw either),
-    # both pre-existing: join_inner_agg's per-order revenue now sums
-    # DECIMAL on both engines (order-dependent double noise flipped the
-    # 2-dp round on 17 of 28k groups), and feature_store_pit_join's
-    # carry-forward window gets a TOTAL order (two same-date orders by
-    # one customer tied on (us, kind), leaving last_order_price
-    # engine-dependent).
-    "join_inner_agg": 10,
-    "feature_store_pit_join": 10,
-    # ---- r11 (second optimization round) ----
-    # Versioned/mvcc family: the _versions tsn->csn manifest map,
-    # delete_keys' list path, merge_from's wanted frame and the queries'
-    # own commit-input/result frames are Arrow literal_frames; staged op
-    # writes shuffle through a size-aware width (1 task for tiny commits,
-    # num_buckets at scale); checkpoint() writes first and probes the
-    # produced files instead of a limit(1).count() pre-read; the
-    # restore_rebucket / schema_evolution audit probes fold their two
-    # counts into one aggregation. Values identical (oracle-green at
-    # sf0.001/0.01/0.1); every query exercising VersionedTable re-verifies.
-    "versioned_commit_audit": 11,
-    "versioned_restore_rebucket": 11,
-    "versioned_schema_evolution": 11,
-    "versioned_merge_upsert": 11,
-    "versioned_point_lookup": 11,
-    "versioned_snapshot_diff": 11,
-    "versioned_clone_divergence": 11,
-    "versioned_view_masked_sql": 11,
-    "versioned_branch_merge": 11,
-    "versioned_incremental_mv": 11,
-    "versioned_datasource_agg": 11,
-    "versioned_cdc_feed": 11,
-    "versioned_cdc_preimages": 11,
-    "group_txn_two_tables": 11,
-    "object_chunked_scan": 11,
-    "object_reassembly": 11,
-    "object_seek_slice": 11,
-    "multimodal_binary_meta": 11,
-    "stream_native_sink_versioned": 11,
-    "stream_group_sink_database": 11,
-    "stream_clone_fork_diff": 11,
-    "funnel_signup_to_purchase": 11,
-    # r11: connected-components loops share min_label_components (pointer
-    # doubling, rounds O(log diameter) — 17 -> 5 at sf0.1 — convergence
-    # counted every 2nd round; fixpoint equality pinned by pytest + the
-    # recursive-CTE oracles at 3 SFs).
-    "dedup_cluster_components": 11,
-    "dedup_keep_best_quality": 11,
-    "embedding_semantic_clusters": 11,
-    # r11: fuzzy joins without the forced broadcast hint (planner decides
-    # by size — identical plan at fixture SFs, no OOM path at scale); the
-    # split-count guards read scan_num_splits (inputFiles arithmetic)
-    # instead of df.rdd.getNumPartitions(); logreg/kmeans driver folds use
-    # math.fsum (order-independent).
-    "fuzzy_levenshtein_pairs": 11,
-    "minhash_lsh_pairs": 11,
-    "simhash_buckets": 11,
-    "simhash_hamming_pairs": 11,
-    "embedding_kmeans_lloyd": 11,
-    "embedding_logreg_train": 11,
-    # r11: blocked_cosine_pairs gains a guarded cores-derived floor on
-    # the block count (below ~tile_rows vectors the size rule gave B=1 —
-    # the whole n x n matmul on ONE task; measured 2.0-2.15 -> 1.0-1.2 s
-    # for embedding_neardup_pairs at sf0.1). Results invariant to B
-    # (pytested); both direct kernel consumers re-verify
-    # (embedding_semantic_clusters already carries its r11 entry above).
-    "embedding_neardup_pairs": 11,
-    "embedding_threshold_sweep": 11,
-}
-
-
 def query(name: str, oracle: str | None = None, category: str = "relational"):
     """Register ``fn(spark, sf_dir) -> DataFrame`` under ``name``.
 
@@ -284,22 +75,19 @@ def query(name: str, oracle: str | None = None, category: str = "relational"):
 
 
 def _driver_history() -> tuple[frozenset[str], frozenset[str], frozenset[str]]:
-    """Return ``(green, rows_only, errored)`` driver CORRECTNESS history.
+    """Return ``(green, rows_only, errored)`` from one pass over the driver
+    CORRECTNESS history.
 
     ``green``: names with a fully-passing driver row (rows + schema + hash) in
-    some committed round — hard evidence regardless of later oracle changes.
-    ``rows_only``: names whose ONLY usable driver rows were the intentional
+    some committed round.
+    ``rows_only``: names whose only usable driver rows were the intentional
     rows-only path (``err == "no_oracle"``) and that were never hash-green.
-    Whether such a row still counts as "checked" depends on the CURRENT
-    registration: once the query gains an oracle, the historical rows-only row
-    is stale and the query must re-enter the window for hash verification
-    (resolved in :func:`all_queries`, which can see the live registry).
+    Such a row counts as "checked" only while the registration still has no
+    oracle (resolved in :func:`all_queries`, which sees the live registry).
     ``errored``: names whose row errored or mismatched in some round and that
-    have NEVER been seen green/rows-only by the driver — these re-enter the
-    FRONT of the rotation (ahead even of never-checked registrations) until
-    the driver confirms the fix. Mirrors the reference's recovery discipline:
-    finish replaying in-flight work before accepting new work
-    (/root/reference/src/system/instance.rs:239-304).
+    were never seen green or rows-only. They sort first until the driver
+    confirms the fix, as the reference replays in-flight work before it
+    accepts new work (``src/system/instance.rs``).
     """
     import json
     from pathlib import Path
@@ -333,93 +121,26 @@ def _driver_history() -> tuple[frozenset[str], frozenset[str], frozenset[str]]:
     )
 
 
-def _green_rounds() -> tuple[dict[str, int], dict[str, int]]:
-    """(green, rows_only): name -> highest round number with a fully-green /
-    an intentional rows-only (``err == "no_oracle"``) driver row. Used to
-    self-neutralize REVERIFY entries: green evidence from a round >= the
-    change round supersedes the re-verify request — and for a registration
-    that HAS no oracle, a rows-only row at such a round is the strongest
-    evidence the driver can ever produce, so it neutralizes too (r11: the
-    r10 entries for the two oracle-None vector queries could otherwise
-    never clear and would pin window slots forever)."""
-    import json
-    import re as _re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    out: dict[str, int] = {}
-    ro: dict[str, int] = {}
-    for path in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = _re.search(r"_r(\d+)\.json$", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                out[name] = max(out.get(name, 0), rnd)
-            elif row.get("err") == "no_oracle":
-                ro[name] = max(ro.get(name, 0), rnd)
-    return out, ro
-
-
 def all_queries() -> dict[str, RegisteredQuery]:
     # Import for side effect: each module registers its operators.
     from db_core_spark import queries as _q  # noqa: F401
 
     green, rows_only, errored = _driver_history()
-    green_rounds, rows_only_rounds = _green_rounds()
-
-    def _needs_reverify(name: str, since_round: int) -> bool:
-        if green_rounds.get(name, -1) >= since_round:
-            return False
-        rq = _REGISTRY.get(name)
-        # oracle-None registration: a driver rows-only row at/after the
-        # change round is the maximum obtainable evidence — neutralize
-        if (
-            rq is not None
-            and rq.oracle is None
-            and rows_only_rounds.get(name, -1) >= since_round
-        ):
-            return False
-        return True
-
-    reverify = frozenset(
-        name
-        for name, since_round in REVERIFY.items()
-        if _needs_reverify(name, since_round)
-    )
     rank = {c: i for i, c in enumerate(CATEGORY_PRIORITY)}
     order = {name: i for i, name in enumerate(_REGISTRY)}
 
-    def is_stale_conversion(name: str, rq: RegisteredQuery) -> bool:
-        # Historical rows-only row, but the registration has since gained an
-        # oracle: the driver never hash-verified this query. Re-front it.
-        return name in rows_only and rq.oracle is not None
-
     def is_checked(name: str, rq: RegisteredQuery) -> bool:
-        if name in green:
-            return True
-        return name in rows_only and rq.oracle is None
+        # A rows-only row stops counting once the query gains an oracle:
+        # the driver never hash-verified it.
+        return name in green or (name in rows_only and rq.oracle is None)
 
     return dict(
         sorted(
             _REGISTRY.items(),
             key=lambda kv: (
-                kv[0] not in errored,  # driver-errored rows front the window
-                kv[0] not in reverify,  # then changed-implementation re-verifies
-                not is_stale_conversion(*kv),  # then rows-only -> oracle conversions
-                is_checked(*kv),  # then never-driver-checked
-                kv[1].oracle is None,  # oracle-eligible before rows-only
+                kv[0] not in errored,
+                is_checked(*kv),
+                kv[1].oracle is None,
                 rank.get(kv[1].category, len(rank)),
                 order[kv[0]],
             ),

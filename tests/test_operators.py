@@ -1154,3 +1154,22 @@ class TestMinLabelComponents:
                 ).collect()
             }
             assert got == base, f"check_every={k} diverged"
+
+
+def test_parallelism_floor_repartitions_only_below_cores(spark, tmp_path):
+    from db_core_spark.operators.prefixrank import parallelism_floor, scan_num_splits
+
+    cores = spark.sparkContext.defaultParallelism
+    one_file = table(spark, SF_SMALL, "documents").select("doc_id", "text")
+    assert scan_num_splits(one_file) < cores
+    floored = parallelism_floor(one_file)
+    assert floored.rdd.getNumPartitions() == cores
+    assert sorted(r.doc_id for r in floored.collect()) == sorted(
+        r.doc_id for r in one_file.collect()
+    )
+
+    wide_path = str(tmp_path / "wide")
+    spark.range(4 * cores).repartition(2 * cores).write.parquet(wide_path)
+    wide = spark.read.parquet(wide_path)
+    assert scan_num_splits(wide) >= cores
+    assert parallelism_floor(wide) is wide

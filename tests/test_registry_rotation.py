@@ -1,14 +1,16 @@
-"""Rotation ordering of the query registry (driver-evidence window).
+"""Emission order of the query registry (driver-evidence window).
 
 The driver's correctness run grades the FIRST 50 entries of ``queries()``,
-so emission order IS the evidence pipeline. Pins the r5-verdict staleness
-rule: a historical ``err == "no_oracle"`` driver row counts as "checked"
-only while the registration still lacks an oracle; once the query is
-converted to a full oracle, the stale rows-only row must re-front the
-window (behind errored-never-green names, ahead of never-checked breadth).
+so emission order decides which queries it checks. Pins the rules that
+order follows: errored-never-green names first; a historical
+``err == "no_oracle"`` driver row counts as "checked" only while the
+registration still lacks an oracle, so a query converted to a full oracle
+sorts with the never-checked names; then category priority.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import db_core_spark.registry as registry
 from db_core_spark.registry import all_queries
@@ -53,75 +55,44 @@ def test_errored_still_outranks_stale_conversion(monkeypatch):
     assert order[1] == converted
 
 
-def test_reverify_band_outranks_breadth_but_not_errored(monkeypatch):
-    """A green query whose implementation changed (REVERIFY) re-enters the
-    window immediately after errored-never-green names and ahead of stale
-    conversions and never-checked breadth — changed plans must not carry
-    stale driver evidence (ADVICE r6)."""
+def test_live_history_order_is_category_priority():
+    """On the committed CORRECTNESS history every query has a usable driver
+    row and none errored, so the order is (oracle-eligible first, category
+    priority, registration order)."""
     qs = all_queries()
-    oracled = [n for n, rq in qs.items() if rq.oracle is not None]
-    errored_name = next(n for n in oracled if n not in registry.REVERIFY)
-    converted = next(
-        n for n in oracled if n not in registry.REVERIFY and n != errored_name
+    rank = {c: i for i, c in enumerate(registry.CATEGORY_PRIORITY)}
+    registered = list(registry._REGISTRY)
+    expected = sorted(
+        registered,
+        key=lambda n: (
+            qs[n].oracle is None,
+            rank.get(qs[n].category, len(rank)),
+            registered.index(n),
+        ),
     )
-    green = set(qs) - {errored_name, converted}
-
-    # no green row since the change round -> every re-verify is live
-    monkeypatch.setattr(registry, "_green_rounds", lambda: ({}, {}))
-    order = _order_with_history(monkeypatch, green, {converted}, {errored_name})
-    assert order[0] == errored_name
-    band = set(registry.REVERIFY)
-    k = len(band)
-    assert set(order[1 : 1 + k]) == band  # the whole re-verify band next
-    assert order[1 + k] == converted  # stale conversions follow
-
-
-def test_reverify_self_neutralizes_on_later_green(monkeypatch):
-    """A REVERIFY entry stops fronting once the driver re-greens the query
-    in a round >= the change round — a forgotten entry cannot waste window
-    slots forever."""
-    qs = all_queries()
-    reverify_name, since_round = next(iter(registry.REVERIFY.items()))
-    green = set(qs)
-
-    # every re-verify satisfied (green at exactly its change round) ->
-    # pure category-priority order; no REVERIFY name at the window front
-    monkeypatch.setattr(
-        registry, "_green_rounds", lambda: (dict(registry.REVERIFY), {})
-    )
-    order = _order_with_history(monkeypatch, green, set(), set())
-    first_cat = qs[order[0]].category
-    assert registry.CATEGORY_PRIORITY.index(first_cat) == 0
-    assert order[0] not in registry.REVERIFY
-    # but a green round OLDER than the change round keeps this one live
-    stale = dict(registry.REVERIFY)
-    stale[reverify_name] = since_round - 1
-    monkeypatch.setattr(registry, "_green_rounds", lambda: (stale, {}))
-    order = _order_with_history(monkeypatch, green, set(), set())
-    assert order[0] == reverify_name
-
-
-def test_live_history_fronts_r5_conversions():
-    """On the real committed CORRECTNESS history, the five queries converted
-    rows-only -> full-oracle in round 5 must lead the window until the driver
-    hash-verifies them (this test self-neutralizes once that happens)."""
-    green, rows_only, _ = registry._driver_history()
-    qs = all_queries()
-    expected_front = [
-        n
-        for n in (
-            "minhash_lsh_pairs",
-            "simhash_buckets",
-            "agg_cms_heavy_hitters",
-            "ann_lsh_topk",
-            "ann_ivf_topk",
-        )
-        if n in rows_only and qs[n].oracle is not None
+    assert list(qs) == expected
+    assert list(qs)[:5] == [
+        "mvcc_latest_per_key",
+        "mvcc_snapshot_asof",
+        "versioned_merge_upsert",
+        "mvcc_version_history",
+        "versioned_point_lookup",
     ]
-    # errored-never-green and changed-implementation (REVERIFY) names sort
-    # ahead of the stale-conversion band; skip past them before asserting
-    _, _, errored = registry._driver_history()
-    order = list(qs)
-    off = sum(1 for n in order if n in errored or n in registry.REVERIFY)
-    for i, name in enumerate(expected_front):
-        assert order[off + i] == name, f"expected {name} at window position {off + i}"
+
+
+def test_one_history_pass_per_call(monkeypatch):
+    """One ``all_queries()`` call reads each CORRECTNESS_r*.json once."""
+    reads: list[str] = []
+    real_read_text = Path.read_text
+
+    def counting_read_text(self, *args, **kwargs):
+        if self.name.startswith("CORRECTNESS_r"):
+            reads.append(self.name)
+        return real_read_text(self, *args, **kwargs)
+
+    monkeypatch.setattr(Path, "read_text", counting_read_text)
+    all_queries()
+    repo = Path(registry.__file__).resolve().parent.parent
+    files = sorted(p.name for p in repo.glob("CORRECTNESS_r*.json"))
+    assert files
+    assert sorted(reads) == files

@@ -8,11 +8,12 @@ Usage: python tools/catalog.py > CATALOG.md
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from db_core_spark.registry import all_queries  # noqa: E402
 

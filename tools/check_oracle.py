@@ -16,7 +16,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from db_core_spark.registry import all_queries  # noqa: E402
 from db_core_spark.session import get_spark  # noqa: E402

@@ -19,9 +19,10 @@ Exit code 1 if any query produced different answers across regimes.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from db_core_spark.registry import all_queries  # noqa: E402
 from db_core_spark.session import get_spark  # noqa: E402

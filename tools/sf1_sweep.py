@@ -21,7 +21,6 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import EXTRA, HEADLINE  # noqa: E402
