@@ -13,7 +13,8 @@ re-exposed here; per SURVEY.md §4.2 they map to session/cluster config:
 |                                 |    commit model counts commits, not bytes)|
 | version_retain_time (3600 s)    | -> version_retain_seconds                |
 | writer_num, block_fill_ratio    | Spark task writers / parquet row groups  |
-| lock striping (tran_mgr)        | -> max_tracked_keys degradation bound    |
+| lock striping (tran_mgr)        | -> plans.versioned.MAX_TRACKED_KEYS, a   |
+|                                 |    constant write-set degradation bound  |
 | wait_for timeouts (tran_mgr.rs:108-127) | -> conflict_retry_attempts       |
 
 Session-level knobs (cores, shuffle partitions, AQE, Arrow) live in
@@ -34,9 +35,6 @@ class EngineConfig:
     num_buckets: int = 16
     #: MVCC version retention window for vacuum (config.rs:162)
     version_retain_seconds: float = 3600.0
-    #: write-set size above which conflict tracking degrades to
-    #: 'conflicts with anything' (bounded driver memory, safe direction)
-    max_tracked_keys: int = 100_000
     #: auto-checkpoint trigger for maybe_checkpoint(): materialize when this
     #: many commits accumulated since the last checkpoint (the group-commit
     #: analog of checkpoint_data_threshold, config.rs:161 + checkpointer.rs

@@ -22,24 +22,28 @@ Reference-parity map (citations into /root/reference):
   reclamation (src/storage/version_store.rs:14-17, 264-309): materialize the
   resolved snapshot at csn C into compact files; reclaim older versions.
 
-Scale design: one layout. Data files are immutable parquet under
+Scale design: one layout, one writer. Data files are immutable parquet under
 data/tsn=<n>/opseq=<k>/bucket=<crc32(key)%B>/ and checkpoints under
 data/checkpoint-<csn>/bucket=<b>/ — every table is key-hash bucketed
-(num_buckets >= 1). `write_bucket_file` writes every pyarrow data file:
-`write_bucketed` splits an op's rows by bucket through it, and so does each
-checkpoint task. A commit stages an op whose frame is a LocalRelation (rows
+(num_buckets >= 1). `write_bucket_file` writes every data file, as a
+`_tmp-` file renamed into place (readers skip `_`-prefixed files).
+`stage_part` writes one part of an op: it splits the rows by
+`bucket_of_py` through `write_bucketed` and records their write-set. A
+commit casts each op to the table's types (`physical_rows`) and stages it
+in-process after one toArrow() job when its frame is a LocalRelation (rows
 already on the driver: pandas/Arrow frames, delete_keys lists, object
-chunks) in-process through `write_bucketed` after one toArrow() job — the
-reference's commit writes in-process too (system/instance.rs:141-187) —
-and any other frame through a Spark partitionBy("bucket") write job, whose
-bucket id is `bucket_expr`, the JVM twin of bucket_of_py; the versioned
-DataSource's batch and stream writers call `write_bucketed` on the
-executors. Every writer records its write-set through `key_string`, and
-every writer claims its csn through `claim_csn`: the commit-log protocol
-(name-only log listing, op-list resolution from the newest checkpoint,
-group visibility, the reclaimed-history guard, the conflict-checked claim)
-exists once, as the module-level functions below, for VersionedTable,
-Transaction and the DataSource's readers and writers alike.
+chunks) — the reference's commit writes in-process too
+(system/instance.rs:141-187) — else in one shuffle-free mapInArrow job
+over the frame's own partitions; the versioned DataSource's batch and
+stream writers call `stage_part` on the executors. A driver publishing
+task-written files first deletes those no successful task reported
+(`keep_reported`). Every writer caps its write-set (`key_string` form)
+through `merge_write_sets` and claims its csn through `claim_csn`: the
+commit-log protocol (name-only log listing, op-list resolution from the
+newest checkpoint, group visibility, the reclaimed-history guard, the
+conflict-checked claim) exists once, as the module-level functions below,
+for VersionedTable, Transaction and the DataSource's readers and writers
+alike.
 Snapshot reads go through the `versioned` Python DataSource with
 min(num_buckets, defaultParallelism) input partitions — one Python task per
 core, never more tasks than buckets. Each task owns a group of buckets,
@@ -68,7 +72,7 @@ import threading
 import time
 import uuid
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
 
@@ -105,30 +109,13 @@ class SnapshotUnavailableError(Exception):
     a partial fold."""
 
 
-def bucket_expr(cols: list[str], num_buckets: int) -> F.Column:
-    """JVM-side bucket id for a row: crc32 of the canonical key string mod B.
-
-    crc32 (not xxhash64) because the SAME function must be computable by the
-    pyarrow writer, write_bucketed (zlib.crc32) — both writers must land a key in
-    the same bucket=<b>/ subdir or in-partition version resolution breaks.
-    Canonical form: each column cast to string, NULL -> 'None', joined with
-    NUL. Stick to int/string bucket columns; float formatting differs across
-    engines (documented constraint, enforced nowhere — keys are ints/strings
-    in practice)."""
-    canon = F.concat_ws(
-        "\x00", *[F.coalesce(F.col(c).cast("string"), F.lit("None")) for c in cols]
-    )
-    return (F.crc32(F.encode(canon, "UTF-8")) % num_buckets).cast("int")
-
-
 def _bucket_canon(v) -> str:
     if v is None:
         return "None"
     if isinstance(v, bool):
-        return "true" if v else "false"  # JVM casts booleans lowercase
+        return "true" if v else "false"
     if isinstance(v, datetime.datetime):
-        # JVM timestamp->string trims trailing zeros of the fraction
-        # and omits it entirely at .000000; python str() keeps 6 digits
+        # fraction trimmed of trailing zeros, and omitted at .000000
         s = v.strftime("%Y-%m-%d %H:%M:%S")
         if v.microsecond:
             s += "." + f"{v.microsecond:06d}".rstrip("0")
@@ -137,10 +124,13 @@ def _bucket_canon(v) -> str:
 
 
 def bucket_of_py(values, num_buckets: int) -> int:
-    """Python twin of bucket_expr — identical canonicalization, zlib.crc32.
-    Property-tested elementwise against the JVM expression across ints,
-    strings, NULLs, booleans, dates and timestamps
-    (tests/test_scale_patterns.py)."""
+    """Bucket id of one key: zlib.crc32 of the canonical key string (each
+    value as Spark casts it to string, NULL -> 'None', joined with NUL)
+    mod B. crc32 so the id is stable across processes and releases. Every
+    file on disk was placed by this function; a golden test pins its ids
+    across ints, strings, NULLs, booleans and timestamps
+    (tests/test_scale_patterns.py), so existing tables keep their
+    placement."""
     return _crc_bucket(map(_bucket_canon, values), num_buckets)
 
 
@@ -215,7 +205,10 @@ def write_bucket_file(tbl, out_dir: str, bucket: int, name: str) -> str:
     file): every reader casts a file to the table schema. A column is
     dictionary-encoded only when its first 4096 rows hold at most one
     distinct value per two rows — the JVM parquet writer's first-page
-    choice; a dictionary over unique keys adds ~2 B of indices a row."""
+    choice; a dictionary over unique keys adds ~2 B of indices a row.
+    The file is written as ``_tmp-<name>`` and renamed into place: every
+    reader skips ``_``-prefixed files, so a task killed mid-write leaves no
+    torn file in view (keep_reported deletes the leftover)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -226,23 +219,21 @@ def write_bucket_file(tbl, out_dir: str, bucket: int, name: str) -> str:
         if not pa.types.is_nested(f.type)
         and 2 * pc.count_distinct(head[f.name]).as_py() <= head.num_rows
     ]
-    rel = os.path.join(f"bucket={bucket}", name)
-    os.makedirs(os.path.join(out_dir, f"bucket={bucket}"), exist_ok=True)
-    pq.write_table(
-        tbl, os.path.join(out_dir, rel), store_schema=False, use_dictionary=dict_cols
-    )
-    return rel
+    bucket_dir = os.path.join(out_dir, f"bucket={bucket}")
+    os.makedirs(bucket_dir, exist_ok=True)
+    tmp = os.path.join(bucket_dir, f"_tmp-{name}")
+    pq.write_table(tbl, tmp, store_schema=False, use_dictionary=dict_cols)
+    os.rename(tmp, os.path.join(bucket_dir, name))
+    return os.path.join(f"bucket={bucket}", name)
 
 
 def write_bucketed(tbl, out_dir: str, num_buckets: int, bucket_cols: list[str]) -> list[str]:
     """The pyarrow writer of an op's data files: split the physical rows
     (data columns, _deleted, _opseq) of pyarrow table ``tbl`` by
     bucket_of_py and write ONE parquet file per non-empty bucket=<b>/
-    subdir of ``out_dir`` — the layout the Spark writer's
-    partitionBy("bucket") makes. Returns the written paths relative to
-    ``out_dir``; empty when ``tbl`` has no rows. Shared by
-    Transaction._stage (driver-resident ops) and the versioned DataSource
-    writers (executor-side parts)."""
+    subdir of ``out_dir``. Returns the written paths relative to
+    ``out_dir``; empty when ``tbl`` has no rows. Called through
+    stage_part by every op writer."""
     import pyarrow.compute as pc
 
     part = f"part-{uuid.uuid4().hex}.parquet"
@@ -271,14 +262,33 @@ def _checkpoint_task(reader, out_dir: str, parts: list, batches):
             yield pa.RecordBatch.from_pydict({"path": pa.array(paths, pa.string())})
 
 
+def _stage_task(data_schema, names, deleted, opseq, out_dir, num_buckets, bucket_cols,
+                key_cols, batches):
+    """Transaction._stage's mapInArrow function for an op frame that is not
+    on the driver: the task's rows, cast to the table's types, staged as
+    one part (stage_part); yields one row of (relative paths, write-set)."""
+    import pyarrow as pa
+
+    batches = list(batches)
+    paths, keys = [], set()
+    if batches:
+        tbl = physical_rows(pa.Table.from_batches(batches), data_schema, names, deleted, opseq)
+        paths, keys = stage_part(tbl, out_dir, num_buckets, bucket_cols, key_cols)
+    yield pa.RecordBatch.from_pydict(
+        {"paths": [paths], "keys": [None if keys is None else [list(k) for k in keys]]},
+        schema=pa.schema([("paths", pa.list_(pa.string())),
+                          ("keys", pa.list_(pa.list_(pa.string())))]),
+    )
+
+
 def key_string(v) -> str:
     """Canonical write-set string of one key value: ``str()`` of the
     python value, with a tz-aware timestamp first converted to naive UTC.
     Every writer records its manifest ``write_keys`` through this, so a
-    key encodes the same whether it was read back from a Spark-written
-    file (naive timestamps), pulled with ``DataFrame.toArrow()`` or staged
-    from a UTC-cast pyarrow table (tz-aware) — the conflict check and
-    merge_from compare these strings directly."""
+    key encodes the same whether its value is naive or tz-aware (pulled
+    with ``DataFrame.toArrow()``, or staged from a UTC-cast pyarrow
+    table) — the conflict check and merge_from compare these strings
+    directly."""
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
         v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return str(v)
@@ -293,28 +303,71 @@ def write_set_keys(tbl, key_cols: list[str]) -> set[tuple[str, ...]]:
     return set(zip(*cols))
 
 
-def _staging_parts(df: DataFrame, num_buckets: int) -> int:
-    """Shuffle width for an op staged through a Spark write job (a frame
-    that is not a driver-resident LocalRelation — see Transaction._stage):
-    enough partitions that each write task handles ~128 MB (guide §6
-    output sizing), clamped to [1, num_buckets] — hash-partitioning on the
-    bucket column can never populate more than num_buckets tasks, and a
-    small distributed op needs exactly ONE task instead of num_buckets
-    stubs of pure scheduling overhead. Catalyst's optimizedPlan estimate
-    is free (no data read); an unknown estimate (e.g. a Python-RDD or
-    DataSource scan) keeps the full num_buckets width, the pre-r11
-    behavior. The output-file invariant is unchanged at every width: each
-    bucket lands in exactly one task, so partitionBy writes at most one
-    file per non-empty bucket."""
-    try:
-        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        if 0 < est < (1 << 53):
-            import math  # noqa: PLC0415
+#: write-set size above which conflict tracking degrades to 'conflicts
+#: with anything' (bounded driver memory, the safe direction); applied
+#: only through merge_write_sets
+MAX_TRACKED_KEYS = 100_000
 
-            return max(1, min(num_buckets, math.ceil(est / (128 << 20))))
-    except Exception:
-        pass
-    return num_buckets
+
+def merge_write_sets(parts) -> set[tuple] | None:
+    """Union of per-part key_string write-sets (iterables of keys; None =
+    a part too large to track). Degrades to None — conflicts with
+    anything — when any part is untracked or the union exceeds
+    MAX_TRACKED_KEYS. Every writer caps its write-set here."""
+    keys: set[tuple] = set()
+    for part in parts:
+        if part is None:
+            return None
+        keys.update(tuple(k) for k in part)
+        if len(keys) > MAX_TRACKED_KEYS:
+            return None
+    return keys
+
+
+def physical_rows(tbl, data_schema: T.StructType, names: list, deleted: bool, opseq: int):
+    """An op's physical rows (data columns, _deleted, _opseq) from pyarrow
+    table ``tbl``, whose columns are the op's columns ``names`` in order
+    (all data columns of an upsert, the key columns of a delete). Every
+    column is cast to the table's type, so every file has the table's
+    types; the columns a delete lacks are null."""
+    import pyarrow as pa
+
+    physical = physical_arrow_schema(data_schema)
+    n = tbl.num_rows
+    cols = dict(zip(names, tbl.columns))
+    return pa.Table.from_arrays(
+        [
+            cols[f.name].cast(f.type) if f.name in cols else pa.nulls(n, f.type)
+            for f in list(physical)[:-2]
+        ]
+        + [pa.repeat(pa.scalar(deleted), n), pa.repeat(pa.scalar(opseq, pa.int64()), n)],
+        schema=physical,
+    )
+
+
+def stage_part(tbl, out_dir: str, num_buckets: int, bucket_cols: list, key_cols: list):
+    """Stage one part of an op: write the physical rows of pyarrow table
+    ``tbl`` through write_bucketed and return (relative paths, key_string
+    write-set, or None above MAX_TRACKED_KEYS). Every op writer calls it:
+    Transaction._stage in the driver or in a mapInArrow task, and the
+    DataSource's batch and stream writers."""
+    paths = write_bucketed(tbl, out_dir, num_buckets, bucket_cols)
+    return paths, merge_write_sets([write_set_keys(tbl, key_cols)])
+
+
+def keep_reported(out_dir: str, rel_paths) -> None:
+    """Delete every file under ``out_dir`` that no successful task reported
+    (a failed or killed attempt's files, its ``_tmp-`` files included) and
+    every directory left empty below ``out_dir`` — what Spark's file
+    committer guaranteed. The driver calls it before it publishes."""
+    keep = {os.path.normpath(p) for p in rel_paths}
+    for root, _dirs, files in os.walk(out_dir, topdown=False):
+        for f in files:
+            full = os.path.join(root, f)
+            if os.path.relpath(full, out_dir) not in keep:
+                os.remove(full)
+        if root != out_dir and not os.listdir(root):
+            os.rmdir(root)
 
 
 def publish_manifest(log_dir: str, name: str, manifest: dict) -> bool:
@@ -607,27 +660,11 @@ def claim_csn(
     raise RuntimeError("could not claim a csn (too much commit contention)")
 
 
-def merge_write_sets(parts) -> set[tuple] | None:
-    """Union of per-part key_string write-sets (lists of keys; None = a
-    part too large to track). Degrades to None — conflicts with anything —
-    when any part is untracked or the union exceeds
-    DEFAULT_CONFIG.max_tracked_keys, the rule Transaction._stage applies."""
-    keys: set[tuple] = set()
-    for part in parts:
-        if part is None:
-            return None
-        keys.update(tuple(k) for k in part)
-        if len(keys) > DEFAULT_CONFIG.max_tracked_keys:
-            return None
-    return keys
-
-
 @dataclass
 class _Op:
     kind: str  # "upsert" | "delete"
     df: DataFrame
     opseq: int
-    keys: list[tuple] | None = None  # collected at commit for conflict check
 
 
 class VersionedTable:
@@ -1090,9 +1127,10 @@ class VersionedTable:
         # the snapshot reads already started, where an RDD job's first use
         # in a process starts another worker pool (~2 s)
         parts = reader.partitions()
-        self.spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
+        written = self.spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
             functools.partial(_checkpoint_task, reader, out_dir, parts), "path string"
         ).collect()
+        keep_reported(out_dir, [r.path for r in written])
         manifest = {
             "type": "checkpoint", "csn": csn, "dir": out_dir, "ts": time.time(),
             "buckets": reader.num_buckets,  # the layout _meta.json names
@@ -1407,7 +1445,7 @@ class VersionedTable:
         # DROPS a branch change (the unsafe direction — unlike the conflict
         # check, where a collision is merely a spurious conflict). So:
         # collect the branch's distinct changed keys (bounded by
-        # max_tracked_keys — merge already requires tracked write-sets),
+        # MAX_TRACKED_KEYS — merge already requires tracked write-sets),
         # encode them driver-side like every writer, and join back on the
         # TYPED key values.
         key_schema = latest_all.select(*kc).schema
@@ -1845,12 +1883,17 @@ class Transaction:
         multi-table GroupTransaction can stage ALL tables before claiming
         any csn (plans/group.py).
 
-        Two ways to write an op, one layout (one parquet file per non-empty
-        bucket=<b>/ dir): an op whose frame is a LocalRelation stages in
-        this process (_local_rows: one toArrow() job, then write_bucketed,
-        write-set taken from the in-memory table); any other frame runs a
-        Spark repartition + partitionBy("bucket") write job sized by
-        _staging_parts, and its write-set is read back from the files.
+        One writer, two places to run it: every op is cast to the table's
+        types (physical_rows) and staged through stage_part. An op whose
+        frame is a LocalRelation (rows already on the driver: a pandas or
+        Arrow createDataFrame, a literal_frame, a delete_keys list) comes
+        over in ONE ``toArrow()`` job (a JVM-side local scan: no Python
+        worker, no shuffle) and is staged in this process. Any other frame
+        runs one mapInArrow job over its own partitions (_stage_task): each
+        task stages its rows as one part, so the op writes at most one file
+        per partition and non-empty bucket, and the driver keeps only the
+        files the successful tasks reported (keep_reported). The write-set
+        is the union of the parts' write-sets (merge_write_sets).
 
         CDC before-images (config.cdc_preimages or commit(capture_preimages=
         True)): for each op, the previous values of the op's keys — folded
@@ -1870,34 +1913,34 @@ class Transaction:
         state = t.snapshot(as_of_csn=self.start_csn) if capture else None
         kc = t.key_cols
         ops_meta = []
-        my_keys: set[tuple] | None = set()
+        write_sets = []
         for op in self._ops:
             out_dir = os.path.join(t._data_dir, f"tsn={self.tsn}", f"opseq={op.opseq}")
-            local = self._local_rows(op)
-            if local is not None:
-                has_files = bool(
-                    write_bucketed(local, out_dir, t.num_buckets, t.bucket_cols)
+            names = [f.name for f in t.schema.fields] if op.kind == "upsert" else kc
+            frame = op.df.select(*names)
+            args = (t.schema, names, op.kind == "delete", op.opseq)
+            # toArrow() reuses the plan this check optimized
+            if frame._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation":
+                paths, keys = stage_part(
+                    physical_rows(frame.toArrow(), *args), out_dir, t.num_buckets,
+                    t.bucket_cols, kc,
                 )
+                write_sets.append(keys)
             else:
-                # csn attached at read via manifest; the repartition on the
-                # bucket bounds output to one file per non-empty bucket
-                full = self._full_rows(op).drop("_csn").withColumn(
-                    "bucket", bucket_expr(t.bucket_cols, t.num_buckets)
-                )
-                full.repartition(
-                    _staging_parts(full, t.num_buckets), F.col("bucket")
-                ).write.partitionBy("bucket").mode("errorifexists").parquet(out_dir)
-                has_files = any(
-                    f.endswith(".parquet")
-                    for _, _, files in os.walk(out_dir)
-                    for f in files
-                )
+                staged = frame.mapInArrow(
+                    functools.partial(
+                        _stage_task, *args, out_dir, t.num_buckets, t.bucket_cols, kc
+                    ),
+                    "paths array<string>, keys array<array<string>>",
+                ).collect()
+                paths = [p for r in staged for p in r.paths]
+                keep_reported(out_dir, paths)
+                write_sets.extend(r.keys for r in staged)
             # an op that staged ZERO rows (empty upsert / delete of nothing)
             # writes no parquet files — referencing its dir would break
-            # every reader, so it is dropped
-            # from the manifest (the commit still publishes, possibly with
-            # ops: [])
-            if not has_files:
+            # every reader, so it is dropped from the manifest (the commit
+            # still publishes, possibly with ops: [])
+            if not paths:
                 shutil.rmtree(out_dir, ignore_errors=True)
                 continue
             ops_meta.append(
@@ -1923,66 +1966,13 @@ class Transaction:
                     ).unionByName(state.join(op_keys, kc, "left_anti"))
                 else:
                     state = state.join(op_keys, kc, "left_anti")
-            if my_keys is not None:
-                # write-set keys come from the rows that landed on disk:
-                # the in-memory table of a driver-staged op, else the FILES
-                # JUST WRITTEN (pyarrow column read, streamed in batches)
-                # rather than a second execution of op.df — so the tracked
-                # set is exact even if the source plan were
-                # nondeterministic. key_string form: JSON-safe for any key
-                # type and identical across writers (cross-type str
-                # collisions can only cause a SPURIOUS conflict — the safe
-                # direction).
-                if local is not None:
-                    batches = [local]
-                else:
-                    import pyarrow.dataset as pads  # noqa: PLC0415
-
-                    batches = pads.dataset(out_dir, format="parquet").to_batches(
-                        columns=kc, batch_size=65536
-                    )
-                cap = t.config.max_tracked_keys
-                for batch in batches:
-                    my_keys |= write_set_keys(batch, kc)
-                    if len(my_keys) > cap:
-                        my_keys = None  # degrade: conflicts with anything
-                        break
-        return ops_meta, my_keys
-
-    def _local_rows(self, op: _Op):
-        """The op's physical rows (data columns, _deleted, _opseq) as a
-        pyarrow table when its frame is a LocalRelation — rows that already
-        sit on the driver (a pandas or Arrow createDataFrame, a
-        literal_frame, a delete_keys list) — else None. The rows come over
-        in ONE ``toArrow()`` job (a JVM-side local scan: no Python worker,
-        no shuffle, no write stage), so the op stages in-process instead of
-        through a Spark write job. A frame whose column types differ from
-        the table's keeps the Spark path, which writes the frame's own
-        types."""
-        t = self.table
-        if op.df._jdf.queryExecution().optimizedPlan().nodeName() != "LocalRelation":
-            return None
-        names = [f.name for f in t.schema.fields] if op.kind == "upsert" else t.key_cols
-        given = op.df.select(*names).schema.fields  # analysis only: resolved names
-        if [f.dataType for f in given] != [t.schema[n].dataType for n in names]:
-            return None
-        import pyarrow as pa  # noqa: PLC0415
-
-        physical = physical_arrow_schema(t.schema)
-        arrow = op.df.toArrow()
-        n = arrow.num_rows
-        cols = {name: arrow.column(f.name) for name, f in zip(names, given)}
-        return pa.Table.from_arrays(
-            [
-                cols[f.name].cast(f.type) if f.name in cols else pa.nulls(n, f.type)
-                for f in list(physical)[:-2]
-            ]
-            + [
-                pa.repeat(pa.scalar(op.kind == "delete"), n),
-                pa.repeat(pa.scalar(op.opseq, pa.int64()), n),
-            ],
-            schema=physical,
-        )
+        # write-set keys come from the rows that were staged, not from a
+        # second execution of op.df, so the tracked set is exact even if a
+        # source plan were nondeterministic. key_string form: JSON-safe
+        # for any key type and identical across writers (cross-type str
+        # collisions can only cause a SPURIOUS conflict — the safe
+        # direction).
+        return ops_meta, merge_write_sets(write_sets)
 
     def _claim(
         self,

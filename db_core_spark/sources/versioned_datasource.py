@@ -76,16 +76,17 @@ from db_core_spark.plans.versioned import (
     bucket_of_py,
     claim_csn,
     committed_ops,
+    keep_reported,
     latest_csn,
     log_names,
     merge_write_sets,
     physical_arrow_schema,
+    physical_rows,
     read_manifest,
     reclaimed_csns,
+    stage_part,
     table_meta,
     visible_manifests,
-    write_bucketed,
-    write_set_keys,
 )
 
 META_FIELDS = [
@@ -170,10 +171,11 @@ def _op_table_dir(
             )
     if data_schema is not None:
         # Normalize data columns to the table's canonical arrow schema:
-        # JVM-written parquet (txn/checkpoint path; INT96 -> timestamp[ns]
-        # naive) and python-staged parquet (batch/stream writers ->
-        # timestamp[us, tz=UTC]) must concat into ONE arrow table, and
-        # naive-vs-tz timestamp fields refuse to merge. Both writers store
+        # parquet from a Spark write job (tables written before every op
+        # was staged by pyarrow; INT96 -> timestamp[ns] naive, a frame's
+        # own column types) and pyarrow-staged parquet (timestamp[us,
+        # tz=UTC]) must concat into ONE arrow table, and naive-vs-tz
+        # timestamp fields refuse to merge. Both writers store
         # UTC instants at microsecond semantic precision, so casting to the
         # Spark schema's arrow type (time truncation allowed: ns -> us) is
         # value-exact.
@@ -227,11 +229,12 @@ def _key_scan_filter(key_equals: dict, key_cols: list[str], data_schema):
     pushed only when it converts exactly to the column's arrow type;
     anything else (a string for an int column, null, NaN) stays with the
     pandas `==` filter, which answers it as before instead of raising an
-    Arrow type error. Timestamps stay with the row filter too: the JVM
-    writer stores them naive (timestamp[ns]) and the pyarrow writer
-    tz-aware, and the scan compares against each file's own type, so no
-    one scalar matches both; the row filter sees them after
-    `_op_table_dir` casts every file to the table's type."""
+    Arrow type error. Timestamps stay with the row filter too: files a
+    Spark write job staged (older tables) store them naive
+    (timestamp[ns]) and the pyarrow writer tz-aware, and the scan
+    compares against each file's own type, so no one scalar matches both;
+    the row filter sees them after `_op_table_dir` casts every file to
+    the table's type."""
     import pyarrow as pa
     import pyarrow.dataset as pads
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -561,55 +564,49 @@ def _stage_rows(
     num_buckets: int,
     bucket_cols: list,
     out_dir: str,
-) -> tuple[list, int, list | None]:
+) -> "StagedPart":
     """Executor-side staging shared by the batch and streaming writers:
-    materialize this partition's rows as parquet under ``out_dir``'s
-    bucket=<b>/ subdirs through write_bucketed (the same writer
-    Transaction._stage uses for driver-resident ops, and the python twin
-    of the JVM bucket_expr; the writers MUST agree or in-partition version
-    resolution breaks, tested) and return (relative
-    file paths, row count, key_string write-set or None when above the
-    tracking cap)."""
-    import pandas as pd
+    this partition's rows, cast to the table's types, staged as one part
+    through stage_part — the writer Transaction._stage runs for every op."""
     import pyarrow as pa
 
-    data_cols = [f.name for f in data_schema.fields]
+    names = [f.name for f in data_schema.fields]
     rows = [tuple(r) for r in iterator]
-    pdf = pd.DataFrame(rows, columns=data_cols)
-    pdf["_deleted"] = False
-    pdf["_opseq"] = 0
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False).cast(
-        physical_arrow_schema(data_schema)
+    cols = list(zip(*rows)) or [()] * len(names)
+    tbl = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, physical_arrow_schema(data_schema))],
+        names=names,
     )
-    rel_paths = write_bucketed(tbl, out_dir, num_buckets, bucket_cols)
-    # the part's write-set in the key_string form every writer records, so
-    # the writer kinds compare like-for-like
-    part_keys: list | None = list(write_set_keys(tbl, key_cols))
-    if len(part_keys) > DEFAULT_CONFIG.max_tracked_keys:
-        part_keys = None
-    return rel_paths, len(rows), part_keys
+    rel_paths, keys = stage_part(
+        physical_rows(tbl, data_schema, names, False, 0), out_dir, num_buckets,
+        bucket_cols, key_cols,
+    )
+    return StagedPart(rel_paths=rel_paths, n_rows=len(rows), keys=keys)
 
 
 @dataclass
 class StagedPart(WriterCommitMessage):
+    # data files this part wrote, relative to the writer's out dir
+    rel_paths: list
     n_rows: int
-    # canonical-string write-set of this part; None = too large to track
-    keys: list | None = None
+    # key_string write-set of this part; None = too large to track
+    keys: set | None = None
 
 
 class VersionedAppendWriter(DataSourceWriter):
     """Transactional bulk append: executors stage independent parquet parts
     under one tsn (the WAL-buffer appends); the driver's commit() publishes
     ONE manifest for all of them (group commit, system/instance.rs:102-111). A
-    failed job leaves only unpublished files — invisible by construction.
+    failed job leaves only unpublished files — invisible by construction —
+    and commit() keeps only the files the successful tasks reported
+    (keep_reported), so a failed task attempt's files are never published.
 
     Conflict protection is Transaction's own (tran_mgr parity): each part
     enumerates its distinct key set, merge_write_sets unions them
-    (degrading to 'conflicts with anything' above
-    DEFAULT_CONFIG.max_tracked_keys), and commit() claims its csn through
-    claim_csn over the conflict window that opens at `start_csn`, pinned
-    at planning time (Spark pickles the planned instance and runs commit()
-    on it). Any overlapping commit published in that window aborts the
+    (degrading to 'conflicts with anything' above MAX_TRACKED_KEYS), and
+    commit() claims its csn through claim_csn over the conflict window
+    that opens at `start_csn`, pinned at planning time (Spark pickles the
+    planned instance and runs commit() on it). Any overlapping commit published in that window aborts the
     append with ConflictError, and so does a window that vacuum partly
     reclaimed, so two concurrent writers upserting the same keys can no
     longer both win (no silent last-csn lost update)."""
@@ -631,7 +628,7 @@ class VersionedAppendWriter(DataSourceWriter):
         self.start_csn = latest_csn(self.path)
 
     def write(self, iterator) -> StagedPart:
-        _, n_rows, part_keys = _stage_rows(
+        return _stage_rows(
             iterator,
             self.data_schema,
             self.key_cols,
@@ -639,19 +636,22 @@ class VersionedAppendWriter(DataSourceWriter):
             self.bucket_cols,
             self.op_dir,
         )
-        return StagedPart(n_rows=n_rows, keys=part_keys)
 
     def commit(self, messages) -> None:
         parts = [m for m in messages if m is not None]
-        # an append that staged no row wrote no op dir: publish the commit
+        rel_paths = [p for m in parts for p in m.rel_paths]
+        keep_reported(self.op_dir, rel_paths)
+        # an append that staged no row names no op dir: publish the commit
         # without the op, as Transaction._stage drops an empty op —
-        # naming the missing dir would break every later read
+        # naming a missing dir would break every later read
         op = {"dir": self.op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}
+        if not rel_paths:
+            self.abort(messages)
         claim_csn(
             self.path,
             self.start_csn,
             self.tsn,
-            [op] if any(m.n_rows for m in parts) else [],
+            [op] if rel_paths else [],
             merge_write_sets(m.keys for m in parts),
             _table_grace(self.path),
             f"bulk append {self.tsn}",
@@ -662,13 +662,6 @@ class VersionedAppendWriter(DataSourceWriter):
         import shutil
 
         shutil.rmtree(os.path.dirname(self.op_dir), ignore_errors=True)
-
-
-@dataclass
-class StagedStreamPart(WriterCommitMessage):
-    rel_paths: list
-    n_rows: int
-    keys: list | None = None
 
 
 class VersionedStreamWriter(DataSourceStreamWriter):
@@ -692,11 +685,14 @@ class VersionedStreamWriter(DataSourceStreamWriter):
     check (system/instance.rs:221-304).
 
     Concurrency: the epoch claims its csn through claim_csn, Transaction's
-    own conflict check, over the manifests committed since
-    `last_seen_csn` with this writer's own manifests skipped; an overlap,
-    or a window vacuum partly reclaimed, raises ConflictError and the
-    stream fails loudly rather than losing an update. `last_seen_csn` is
-    the newest csn when this instance was built, or its own last publish."""
+    own conflict check, over the manifests committed since this writer's
+    own newest manifest (found by the replay scan), with its own manifests
+    skipped; an overlap, or a window vacuum partly reclaimed, raises
+    ConflictError and the stream fails loudly rather than losing an
+    update. PySpark builds a fresh writer for every micro-batch commit, so
+    the window cannot live in the instance; `last_seen_csn`, the newest
+    csn when this instance was built, opens it only for a writer that has
+    published nothing yet."""
 
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
@@ -761,8 +757,8 @@ class VersionedStreamWriter(DataSourceStreamWriter):
         )
         self.last_seen_csn = latest_csn(self.path)
 
-    def write(self, iterator) -> StagedStreamPart:
-        rel_paths, n_rows, part_keys = _stage_rows(
+    def write(self, iterator) -> StagedPart:
+        return _stage_rows(
             iterator,
             self.data_schema,
             self.key_cols,
@@ -770,7 +766,6 @@ class VersionedStreamWriter(DataSourceStreamWriter):
             self.bucket_cols,
             self.stage_root,
         )
-        return StagedStreamPart(rel_paths=rel_paths, n_rows=n_rows, keys=part_keys)
 
     def _discard(self, messages) -> None:
         for m in messages:
@@ -789,15 +784,19 @@ class VersionedStreamWriter(DataSourceStreamWriter):
         if not live:
             self._discard(messages)
             return
-        # exactly-once: a replayed epoch is already durable — drop the stage
-        for _, _, name in log_names(self.path):
+        # exactly-once: a replayed epoch is already durable — drop the stage;
+        # the same scan finds this writer's newest manifest, where the
+        # conflict window opens
+        own = []
+        for csn, _, name in log_names(self.path):
             mf = read_manifest(self.path, name)
-            if (
-                mf.get("writer") == self.writer_id
-                and mf.get("epoch") == batchId
-            ):
+            if mf.get("writer") != self.writer_id:
+                continue
+            if mf.get("epoch") == batchId:
                 self._discard(messages)
                 return
+            own.append(csn)
+        start_csn = max(own, default=self.last_seen_csn)
         tsn = f"s{uuid.uuid4().hex[:10]}b{batchId}"
         op_dir = os.path.join(self.path, "data", f"tsn={tsn}", "opseq=0")
         for m in live:
@@ -807,7 +806,7 @@ class VersionedStreamWriter(DataSourceStreamWriter):
                 os.rename(os.path.join(self.stage_root, rel), dest)
         self.last_seen_csn = claim_csn(
             self.path,
-            self.last_seen_csn,
+            start_csn,
             tsn,
             [{"dir": op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
             merge_write_sets(m.keys for m in live),

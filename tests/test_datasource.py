@@ -367,25 +367,44 @@ def test_writer_conflict_window_reclaimed_by_vacuum_raises(vt, spark, kind):
     assert rows_of(vt.snapshot()) == {1: ("txn", 2.0)}
 
 
-def test_jvm_and_python_writers_agree_on_buckets(vt, spark):
-    """The JVM bucket_expr (txn commits) and python bucket_of_py (bulk
-    append parts) MUST place a key in the same bucket=<b>/ dir, or
-    in-partition version resolution would miss cross-writer versions."""
+def test_txn_commit_and_bulk_append_agree_on_buckets(vt, spark):
+    """A txn commit (staged on the driver, or in a mapInArrow job for a
+    distributed frame) and a bulk append part MUST place a key in the same
+    bucket=<b>/ dir, or in-partition version resolution would miss
+    cross-writer versions."""
     import glob
     import os
 
     from db_core_spark.plans.versioned import bucket_of_py
 
-    _commit(vt, spark, [(5, "txn_v1", 1.0)])  # JVM writer
-    spark.createDataFrame([(5, "bulk_v2", 2.0)], SCHEMA).write.format("versioned").mode(
+    _commit(vt, spark, [(5, "txn_v1", 1.0)])  # driver-staged txn
+    t = vt.begin()
+    t.upsert(spark.createDataFrame([(5, "txn_v2", 1.5)], SCHEMA).repartition(2))
+    t.commit()  # txn staged by executor tasks
+    spark.createDataFrame([(5, "bulk_v3", 2.0)], SCHEMA).write.format("versioned").mode(
         "append"
-    ).option("path", vt.path).save()  # python writer, same key
+    ).option("path", vt.path).save()  # bulk append part, same key
     dirs = set()
     for f in glob.glob(os.path.join(vt.path, "data", "tsn=*", "opseq=*", "bucket=*", "*.parquet")):
         dirs.add(os.path.basename(os.path.dirname(f)))
     assert dirs == {f"bucket={bucket_of_py([5], vt.num_buckets)}"}
-    # the bucketed (shuffle-free) snapshot sees the newer bulk version win
-    assert rows_of(vt.snapshot()) == {5: ("bulk_v2", 2.0)}
+    # the bucketed (shuffle-free) snapshot sees the newest bulk version win
+    assert rows_of(vt.snapshot()) == {5: ("bulk_v3", 2.0)}
+
+
+def test_bulk_append_publishes_only_reported_files(vt, spark):
+    """commit() publishes only the files its messages report: a part whose
+    message never reached the driver (a failed task attempt) wrote files
+    under the op dir, and they must not become visible."""
+    from db_core_spark.sources.versioned_datasource import VersionedAppendWriter
+
+    w = VersionedAppendWriter(SCHEMA, {"path": vt.path})
+    first = w.write(iter([(1, "a", 1.0)]))
+    w.write(iter([(2, "lost", 2.0)]))  # its message is dropped
+    w.commit([first])
+    assert rows_of(vt.snapshot()) == {1: ("a", 1.0)}
+    assert rows_of(window_snapshot(vt)) == {1: ("a", 1.0)}
+    assert {r.k for r in vt.changes().collect()} == {1}
 
 
 def test_lookup_on_composite_bucket_prefix(spark, tmp_path):

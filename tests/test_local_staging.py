@@ -1,9 +1,10 @@
-"""Driver-local commit staging: an op whose frame is a LocalRelation (a
-pandas/Arrow `createDataFrame`, a `literal_frame`, a `delete_keys` list)
-stages in-process — one `toArrow()` job, then pyarrow writes one parquet
-file per non-empty bucket — instead of through a Spark write job. The
-reference's commit writes in-process too (system/instance.rs:141-187).
-Any other frame keeps the Spark writer; both must produce the same table."""
+"""Commit staging: one pyarrow writer, run in two places. An op whose frame
+is a LocalRelation (a pandas/Arrow `createDataFrame`, a `literal_frame`, a
+`delete_keys` list) stages in-process — one `toArrow()` job, then one
+parquet file per non-empty bucket — as the reference's commit writes
+in-process (system/instance.rs:141-187). Any other frame stages in one
+mapInArrow job, each task writing its rows through the same writer; both
+must produce the same table."""
 
 from __future__ import annotations
 
@@ -110,19 +111,58 @@ def test_object_put_runs_one_job_per_op(spark, tmp_path):
 # ----------------------------------------------------------------- layout
 
 
+def _bucket_files(op_dir: str) -> dict[str, list[str]]:
+    return {b: os.listdir(os.path.join(op_dir, b)) for b in os.listdir(op_dir)}
+
+
 def test_one_file_per_nonempty_bucket(spark, tmp_path):
-    vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=8)
+    """A driver-local op writes one file per non-empty bucket; a frame of 3
+    partitions at most one per partition and bucket, and no ``_tmp-`` file
+    of the rename-into-place writes stays behind."""
     rows = [(i, f"v{i}", float(i)) for i in range(40)]
-    txn = vt.begin()
-    txn.upsert(literal_frame(spark, rows, KV_SCHEMA))
-    txn.commit()
-    (op,) = _manifests(vt)[0]["ops"]
-    entries = sorted(os.listdir(op["dir"]))
     want = sorted({f"bucket={bucket_of_py([i], 8)}" for i in range(40)})
-    assert entries == want  # no _SUCCESS, no stray files beside the buckets
-    for b in entries:
-        files = os.listdir(os.path.join(op["dir"], b))
-        assert len(files) == 1 and files[0].endswith(".parquet")
+    for parts in (1, 3):
+        vt = VersionedTable.create(
+            spark, str(tmp_path / f"t{parts}"), ["k"], KV_SCHEMA, num_buckets=8
+        )
+        df = literal_frame(spark, rows, KV_SCHEMA)
+        txn = vt.begin()
+        txn.upsert(df if parts == 1 else df.repartition(parts))
+        txn.commit()
+        (op,) = _manifests(vt)[0]["ops"]
+        files = _bucket_files(op["dir"])
+        assert sorted(files) == want  # no _SUCCESS, no stray files beside the buckets
+        for names in files.values():
+            assert 1 <= len(names) <= parts
+            assert all(n.startswith("part-") and n.endswith(".parquet") for n in names)
+        assert _sorted_rows(vt.snapshot()) == sorted(rows, key=repr)
+
+
+def test_distributed_op_is_cast_to_table_types(spark, tmp_path):
+    """A distributed frame whose column types differ from the table's
+    (IntegerType into a LongType key, FloatType into a DoubleType column)
+    is cast before it reaches the writer: every file has the table's
+    types."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=4)
+    df = spark.range(20, numPartitions=2).select(
+        F.col("id").cast("int").alias("k"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+        F.col("id").cast("float").alias("x"),
+    )
+    txn = vt.begin()
+    txn.upsert(df)
+    txn.delete_keys(df.select("k").filter("k < 5"))
+    txn.commit()
+    paths = glob.glob(os.path.join(vt.path, "data", "tsn=*", "opseq=*", "bucket=*", "*.parquet"))
+    assert paths
+    for p in paths:
+        schema = pq.read_schema(p)
+        assert (str(schema.field("k").type), str(schema.field("x").type)) == ("int64", "double")
+    want = [(i, f"v{i}", float(i)) for i in range(5, 20)]
+    assert _sorted_rows(vt.snapshot()) == sorted(want, key=repr)
 
 
 def test_empty_local_upsert_publishes_no_op_dir(spark, tmp_path):
@@ -271,3 +311,51 @@ def test_mixed_local_and_spark_ops_resolve_by_opseq(spark, tmp_path):
     assert _sorted_rows(window_snapshot(vt)) == want
     assert _sorted_rows(vt.lookup({"k": 3})) == [(3, "local2", 5.0)]
     assert _manifests(vt)[-1]["write_keys"] == [["1"], ["3"]]
+
+
+# -------------------------------------------------------------- write-set
+
+
+def test_write_set_cap_degrades_to_untracked(spark, tmp_path, monkeypatch):
+    """A write-set over MAX_TRACKED_KEYS is recorded as ``write_keys: null``
+    and conflicts with any concurrent commit — for a driver-staged op, for a
+    distributed op (whose tasks stay under the cap; the driver's merge
+    crosses it) and for a bulk append."""
+    from db_core_spark.plans import versioned
+    from db_core_spark.plans.versioned import ConflictError
+    from db_core_spark.sources.versioned_datasource import VersionedAppendWriter
+
+    monkeypatch.setattr(versioned, "MAX_TRACKED_KEYS", 3)
+    vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=4)
+
+    def rows(ks):
+        return literal_frame(spark, [(k, f"v{k}", 0.0) for k in ks], KV_SCHEMA)
+
+    for frame in (rows(range(5)), rows(range(5, 10)).repartition(2)):
+        over, other = vt.begin(), vt.begin()
+        over.upsert(frame)
+        other.upsert(rows([100]))  # a key the capped commit does not write
+        over.commit()
+        assert _manifests(vt)[-1]["write_keys"] is None
+        with pytest.raises(ConflictError, match="untracked"):
+            other.commit()
+
+    txn = vt.begin()
+    txn.upsert(rows([1]))  # under the cap: tracked
+    txn.commit()
+    assert _manifests(vt)[-1]["write_keys"] == [["1"]]
+
+    # the bulk append's parts stay under the cap; its commit's merge
+    # crosses it (commit() is called in this process, so the patched cap
+    # applies; a Spark write runs it in a Python process of its own)
+    w = VersionedAppendWriter(KV_SCHEMA, {"path": vt.path})
+    w.commit([w.write(iter([(k, "bulk", 1.0) for k in ks])) for ks in ((20, 21), (22, 23))])
+    assert _manifests(vt)[-1]["write_keys"] is None
+    w = VersionedAppendWriter(KV_SCHEMA, {"path": vt.path})
+    msgs = [w.write(iter([(k, "bulk", 1.0) for k in ks])) for ks in ((30, 31), (32, 33))]
+    txn = vt.begin()
+    txn.upsert(rows([100]))
+    txn.commit()
+    with pytest.raises(ConflictError, match="untracked"):
+        w.commit(msgs)
+    assert _sorted_rows(vt.lookup({"k": 30})) == []

@@ -98,19 +98,28 @@ def test_hll_sketch_merge_identity_and_accuracy(spark):
     assert abs(merged - exact) / exact < 0.05
 
 
-def test_bucket_hash_jvm_python_equivalence(spark):
-    """bucket_expr (JVM crc32 of the canonical string) and bucket_of_py
-    (zlib.crc32) MUST agree for every supported key type — the invariant
-    the whole bucketed layout rests on. Checked elementwise over ints
-    (incl. negatives/extremes), strings (unicode, NUL-adjacent), NULLs,
-    booleans, dates and timestamps, in one Spark job."""
+# bucket ids (B=64) of _GOLDEN_ROWS as the JVM crc32 expression of the
+# canonical key string placed them on disk, dumped once from that
+# expression; every table written since keeps this placement
+_GOLDEN_BUCKETS = [
+    40, 16, 30, 0, 61, 20, 2, 14, 23, 53, 63, 21, 6, 44, 43, 50, 30, 7, 46, 60,
+    58, 38, 61, 16, 39, 52, 35, 41, 30, 63, 61, 10, 15, 2, 36, 20, 41, 12, 45, 58,
+    48, 15, 9, 16, 23, 3, 3, 59, 13, 26, 43, 19, 56, 30, 17, 23, 32, 37, 61, 5,
+    23, 39, 24, 45, 25, 38, 39, 25, 37, 54, 45, 30, 2, 12, 26, 13, 53, 32, 22, 44,
+    19, 38, 56, 56, 10, 10, 32, 45, 62, 9, 60, 28, 9, 19, 45, 54, 46, 49, 38, 25,
+    14, 17, 39, 15, 20, 43, 19, 15, 33, 18, 43, 8, 63, 55, 61, 54, 57, 43, 29, 30,
+    42, 7, 33, 5, 4, 24, 26, 54, 39, 21, 47, 16, 0, 45, 57, 22, 9, 17, 41, 59,
+    18, 6, 62, 24, 56, 26, 23, 36, 41, 2, 14, 16, 40, 17, 57, 14, 45, 32, 11, 12,
+    9, 8, 59, 56, 38, 44, 31, 56, 36, 52, 61, 19, 30, 14, 55, 15, 43, 26, 7, 5,
+    10, 18, 14, 27, 28, 60, 2, 12, 56, 30, 19, 45, 0, 57, 16, 15, 40, 47, 36, 32,
+    5, 4, 51, 38, 9, 61, 59,
+]
+
+
+def _golden_rows():
     import datetime as dt
 
-    from pyspark.sql import types as T
-
-    from db_core_spark.plans.versioned import bucket_expr, bucket_of_py
-
-    rows = [
+    return [
         (0, "a", True, dt.datetime(2020, 1, 1, 0, 0, 0)),
         (-1, "", False, dt.datetime(2020, 1, 1, 12, 34, 56, 789000)),
         (2**62, "héllo wörld", True, dt.datetime(1999, 12, 31, 23, 59, 59)),
@@ -118,23 +127,31 @@ def test_bucket_hash_jvm_python_equivalence(spark):
         (42, None, None, None),
         (7, "None", True, dt.datetime(1970, 1, 1)),
         (8, "tab\tand\nnewline", False, dt.datetime(2030, 6, 15, 1, 2, 3)),
-    ] + [(i * 7919, f"key_{i}", i % 2 == 0, dt.datetime(2021, 1, 1) + dt.timedelta(hours=i)) for i in range(200)]
-    schema = T.StructType(
-        [
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.StringType()),
-            T.StructField("c", T.BooleanType()),
-            T.StructField("d", T.TimestampType()),
-        ]
+    ] + [
+        (i * 7919, f"key_{i}", i % 2 == 0, dt.datetime(2021, 1, 1) + dt.timedelta(hours=i))
+        for i in range(200)
+    ]
+
+
+def test_bucket_hash_golden_pin():
+    """bucket_of_py, the one bucket hash, places every key where the
+    tables already on disk have it: ids pinned over ints (incl.
+    negatives/extremes), strings (unicode, NUL-adjacent, 'None'), NULLs,
+    booleans and timestamps (with and without a fraction) — elementwise
+    through bucket_of_py and column-wise through bucket_ids, whose
+    timestamp columns are tz-aware UTC in every op file."""
+    import pyarrow as pa
+
+    from db_core_spark.plans.versioned import bucket_ids, bucket_of_py
+
+    rows = _golden_rows()
+    assert [bucket_of_py(list(r), 64) for r in rows] == _GOLDEN_BUCKETS
+    tbl = pa.Table.from_arrays(
+        [pa.array(list(c)) for c in zip(*rows)], names=["a", "b", "c", "d"]
     )
-    df = spark.createDataFrame(rows, schema)
-    B = 64
-    got = df.select(
-        "a", "b", "c", "d", bucket_expr(["a", "b", "c", "d"], B).alias("jvm")
-    ).collect()
-    for r in got:
-        py = bucket_of_py([r.a, r.b, r.c, r.d], B)
-        assert py == r.jvm, (r.a, r.b, r.c, r.d, py, r.jvm)
+    utc = tbl.set_column(3, "d", tbl.column("d").cast(pa.timestamp("us", tz="UTC")))
+    for t in (tbl, utc):
+        assert bucket_ids(t, ["a", "b", "c", "d"], 64).to_pylist() == _GOLDEN_BUCKETS
 
 
 def test_pareto_distributed_rank_matches_global_window(spark):

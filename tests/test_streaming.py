@@ -738,6 +738,37 @@ def test_native_stream_writer_conflict_with_concurrent_append(spark, tmp_path):
     assert vt.snapshot().count() == 6
 
 
+def test_native_stream_writer_conflict_across_fresh_instances(spark, tmp_path):
+    """PySpark builds a fresh stream writer for every micro-batch commit, so
+    the conflict window must open at this writer's own newest manifest, not
+    at the instance's construction: a concurrent commit to an epoch's keys
+    between two epochs raises ConflictError, a disjoint epoch commits."""
+    import pytest as _pytest
+
+    from db_core_spark.plans.versioned import ConflictError, VersionedTable
+    from db_core_spark.sources.versioned_datasource import VersionedStreamWriter
+
+    ev = batch_events(spark)
+    vt = VersionedTable.create(
+        spark, str(tmp_path / "vt_fresh"), key_cols=["event_id"], schema=ev.schema
+    )
+    opts = {"path": vt.path, "writerid": "w1"}
+    rows = ev.limit(6).collect()
+    w = VersionedStreamWriter(ev.schema, opts)
+    w.commit([w.write(iter(rows[:3]))], batchId=0)
+
+    txn = vt.begin()
+    txn.upsert(spark.createDataFrame([rows[0]], ev.schema))
+    txn.commit()
+
+    w = VersionedStreamWriter(ev.schema, opts)  # built after the txn
+    with _pytest.raises(ConflictError):
+        w.commit([w.write(iter(rows[:1]))], batchId=1)
+    w = VersionedStreamWriter(ev.schema, opts)
+    w.commit([w.write(iter(rows[3:6]))], batchId=1)
+    assert vt.snapshot().count() == 6
+
+
 def test_stream_trending_topk_converges_to_batch(spark, stream_dir, tmp_path):
     """Live trending: after the bounded stream drains, the sink view's
     per-window top-3 equals the batch operator's answer (rank re-derived
