@@ -44,19 +44,19 @@ newest checkpoint, group visibility, the reclaimed-history guard, the
 conflict-checked claim) exists once, as the module-level functions below,
 for VersionedTable, Transaction and the DataSource's readers and writers
 alike.
-Snapshot reads go through the `versioned` Python DataSource with
-min(num_buckets, defaultParallelism) input partitions — one Python task per
-core, never more tasks than buckets. Each task owns a group of buckets,
-lists ONLY those buckets' files and resolves "newest visible version per
-key" one bucket at a time — zero shuffle, the Spark analog of the
-reference's O(versions-of-that-object) chain walk (block_driver.rs:461-486).
-Point reads (`lookup()`, and the ObjectStore reads that see no buffered
-writes) run that reader's fold for the key's one bucket in the driver
-process and schedule no Spark job. Checkpoints pin the op list on the
-driver and run the same reader's fold in one Spark job at the same width:
-each task writes each non-empty bucket's winners as one file, the driver
-publishes the manifest — shuffle-free end to end — and later reads fold
-only the (checkpoint, S] deltas above it. The version-chain view
+Snapshot reads and checkpoints pin their csn and op list on the driver
+and run one mapInArrow job (`_fold_job`) of min(num_buckets,
+defaultParallelism) tasks — one Python task per core, never more tasks
+than buckets. Each task owns a group of buckets, lists ONLY those buckets'
+files and resolves "newest visible version per key" one bucket at a time
+with the versioned reader's pyarrow fold — zero shuffle, the Spark analog
+of the reference's O(versions-of-that-object) chain walk
+(block_driver.rs:461-486). A snapshot task yields the folds; a checkpoint
+task writes each non-empty bucket's winners as one file and the driver
+publishes the manifest, so later reads fold only the (checkpoint, S]
+deltas above it. Point reads (`lookup()`, and the ObjectStore reads that
+see no buffered writes) run the same fold for the key's one bucket in the
+driver process and schedule no Spark job. The version-chain view
 (`history()`, `Transaction.read()`) reads every visible version through
 `_versions`.
 """
@@ -244,22 +244,34 @@ def write_bucketed(tbl, out_dir: str, num_buckets: int, bucket_cols: list[str]) 
     ]
 
 
-def _checkpoint_task(reader, out_dir: str, parts: list, batches):
-    """The checkpoint job's mapInArrow function. Each input row is the index
-    of one reader partition: fold its buckets one at a time and write each
-    non-empty bucket's winners as one file (write_bucket_file); yields the
-    written paths relative to ``out_dir``."""
+def _partition_ids(batches):
+    """The reader partition indices a fold job's task was handed."""
+    for batch in batches:
+        yield from batch.column(0).to_pylist()
+
+
+def _snapshot_task(reader, parts: list, batches):
+    """The snapshot job's mapInArrow function: stream the folds of its
+    reader partitions, one bucket at a time (`read`)."""
+    for i in _partition_ids(batches):
+        yield from reader.read(parts[i])
+
+
+def _checkpoint_task(out_dir: str, reader, parts: list, batches):
+    """The checkpoint job's mapInArrow function: fold its reader partitions
+    one bucket at a time and write each non-empty bucket's winners as one
+    file (write_bucket_file); yields the written paths relative to
+    ``out_dir``."""
     import pyarrow as pa
 
     name = f"part-{uuid.uuid4().hex}.parquet"
-    for batch in batches:
-        for i in batch.column(0).to_pylist():
-            paths = [
-                write_bucket_file(tbl, out_dir, b, name)
-                for b, tbl in reader.bucket_folds(parts[i])
-                if tbl.num_rows
-            ]
-            yield pa.RecordBatch.from_pydict({"path": pa.array(paths, pa.string())})
+    for i in _partition_ids(batches):
+        paths = [
+            write_bucket_file(tbl, out_dir, b, name)
+            for b, tbl in reader.bucket_folds(parts[i])
+            if tbl.num_rows
+        ]
+        yield pa.RecordBatch.from_pydict({"path": pa.array(paths, pa.string())})
 
 
 def _stage_task(data_schema, names, deleted, opseq, out_dir, num_buckets, bucket_cols,
@@ -679,9 +691,11 @@ class VersionedTable:
     fold. Enforced at two layers: (1) ``_committed_ops`` verifies the
     checkpoint+tail manifest chain covers the pinned csn contiguously and
     raises if vacuum reclaimed a needed manifest; (2) the scan-side file
-    resolution raises if an op directory named by a still-valid manifest
-    vanished mid-scan (reclaimed between planning and execution) instead of
-    treating the missing dir as empty. ``vacuum(grace)`` therefore only
+    resolution re-resolves the op list at the pinned csn when an op
+    directory vanished after pinning (a checkpoint plus vacuum folds the
+    same rows from the checkpoint), and raises if a directory that a
+    still-published manifest names is missing, instead of treating the
+    missing dir as empty. ``vacuum(grace)`` therefore only
     reclaims versions strictly older than the newest checkpoint minus the
     grace window — readers within the window are safe, readers beyond it
     fail loudly and re-pin. Mirrors the reference's version-chain
@@ -932,40 +946,55 @@ class VersionedTable:
         follows the cores, never the bucket count or a size estimate."""
         return min(self.num_buckets, self.spark.sparkContext.defaultParallelism)
 
+    def _pinned_reader(self, as_of_csn: int | None, **kw):
+        """The versioned reader of this table pinned now: its csn (as_of_csn,
+        else the latest) and that csn's op list resolved on the driver, so
+        vacuum-reclaimed history raises SnapshotUnavailableError here, and
+        planned at `_read_width()` bucket-group partitions."""
+        from db_core_spark.sources.versioned_datasource import (  # noqa: PLC0415
+            VersionedSnapshotReader,
+        )
+
+        latest = self.latest_csn()
+        csn = latest if as_of_csn is None else min(as_of_csn, latest)
+        return VersionedSnapshotReader(
+            self.schema,
+            {"path": self.path, "asofcsn": csn, "numpartitions": self._read_width()},
+            ops=self._committed_ops(csn), **kw,
+        )
+
+    def _fold_job(self, reader, task, schema) -> DataFrame:
+        """The one job of a snapshot or checkpoint: a mapInArrow over
+        spark.range(partitions) in which task i runs ``task(reader, parts,
+        batches)`` on reader partition i. A mapInArrow job, not an RDD one:
+        it runs in the Python workers the commit staging jobs use, where a
+        process's first RDD job starts another worker pool (~2 s)."""
+        parts = reader.partitions()
+        return self.spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
+            functools.partial(task, reader, parts), schema
+        )
+
     def snapshot(self, as_of_csn: int | None = None) -> DataFrame:
         """Snapshot read: newest visible version per key, tombstones dropped
         — the visibility rule of block_driver.rs:457-486.
 
-        Reads through the `versioned` Python DataSource with `_read_width()`
-        bucket-group partitions, each listing ONLY its buckets' files and
-        resolving versions in-partition, one bucket at a time — no global
-        window shuffle, the per-object chain-walk cost model of the
-        reference.
+        The snapshot is pinned when snapshot() is called, as lookup()'s is:
+        the csn (as_of_csn, else the latest) and its op list are resolved
+        here, so reclaimed history raises SnapshotUnavailableError from
+        snapshot() itself, and every action on the DataFrame returns the
+        rows of that csn, whatever commits, checkpoints and vacuums come
+        after (a vacuumed op list is re-resolved at the same csn, from the
+        checkpoint).
 
-        The read schema is declared, so Spark skips the source's Python
-        schema() planning call. It is taken from _meta.json, not from this
-        handle's `self.schema`: another handle's alter_add_column makes that
-        stale, and the reader emits the columns _meta.json names."""
-        from db_core_spark.sources import (  # noqa: PLC0415
-            VersionedDataSource,
-            register_versioned_format,
-        )
-
-        # availability check runs here, driver-side, so vacuum-reclaimed
-        # history raises a typed SnapshotUnavailableError (exceptions
-        # inside DataSource planning surface as opaque PythonExceptions)
-        self._committed_ops(as_of_csn)
-        options = {"path": self.path}
-        register_versioned_format(self.spark)
-        reader = (
-            self.spark.read.format("versioned")
-            .schema(VersionedDataSource(options).schema())
-            .options(**options)
-            .option("numPartitions", str(self._read_width()))
-        )
-        if as_of_csn is not None:
-            reader = reader.option("asOfCsn", str(as_of_csn))
-        return reader.load()
+        One mapInArrow job (`_fold_job`) of `_read_width()` tasks, each
+        folding its group of buckets one bucket at a time with the
+        versioned reader's fold — the job checkpoint() runs — with no
+        global window shuffle: the per-object chain-walk cost model of the
+        reference. The schema is the one _meta.json names, not this
+        handle's `self.schema`: another handle's alter_add_column makes
+        that stale."""
+        reader = self._pinned_reader(as_of_csn)
+        return self._fold_job(reader, _snapshot_task, reader.output_schema())
 
     def lookup(self, key: dict) -> DataFrame:
         """Point/prefix lookup by bucket-column values, answered in-process:
@@ -994,14 +1023,7 @@ class VersionedTable:
         missing = [c for c in self.bucket_cols if c not in key]
         if missing:
             raise ValueError(f"lookup needs all bucket columns; missing {missing}")
-        from db_core_spark.sources.versioned_datasource import (  # noqa: PLC0415
-            VersionedSnapshotReader,
-        )
-
-        reader = VersionedSnapshotReader(
-            self.schema, {"path": self.path},
-            ops=self._committed_ops(as_of_csn), key_equals=key,
-        )
+        reader = self._pinned_reader(as_of_csn, key_equals=key)
         (part,) = reader.partitions()
         return reader.fold(part), reader.output_schema()
 
@@ -1105,30 +1127,19 @@ class VersionedTable:
             # return before touching storage — re-resolving would clear the
             # live checkpoint dir that readers fold as their base.
             return csn
-        from db_core_spark.sources.versioned_datasource import (  # noqa: PLC0415
-            VersionedSnapshotReader,
-        )
-
-        # the versioned reader's fold, pinned driver-side at csn and planned
-        # at the snapshot width; each task folds its buckets one at a time
+        # the versioned reader's fold, pinned driver-side at csn; each task
+        # of the fold job snapshot() runs folds its buckets one at a time
         # and writes each non-empty bucket as one file (_checkpoint_task) —
         # shuffle-free end to end, and the same pyarrow writer as every op
-        reader = VersionedSnapshotReader(
-            self.schema, {"path": self.path, "numpartitions": str(self._read_width())},
-            ops=self._committed_ops(csn), include_meta=True,
-        )
+        reader = self._pinned_reader(csn, include_meta=True)
         out_dir = os.path.join(self._data_dir, f"checkpoint-{csn:010d}")
         # made before the job, so a fully tombstoned table gets a file-less
         # fold base that still reads as empty; files of a checkpoint that
         # died before its publish are cleared first
         shutil.rmtree(out_dir, ignore_errors=True)
         os.makedirs(out_dir)
-        # a mapInArrow job, not an RDD one: it runs in the Python workers
-        # the snapshot reads already started, where an RDD job's first use
-        # in a process starts another worker pool (~2 s)
-        parts = reader.partitions()
-        written = self.spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
-            functools.partial(_checkpoint_task, reader, out_dir, parts), "path string"
+        written = self._fold_job(
+            reader, functools.partial(_checkpoint_task, out_dir), "path string"
         ).collect()
         keep_reported(out_dir, [r.path for r in written])
         manifest = {

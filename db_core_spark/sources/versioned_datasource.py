@@ -27,18 +27,23 @@ groups of those buckets: each partition LISTS ONLY its buckets' files
 across ops and resolves versions locally, one bucket at a time — pruned IO
 and no shuffle (the same co-location argument as the reference's
 per-object version chains). A direct format("versioned") read plans one
-partition per bucket unless numPartitions says otherwise;
-VersionedTable.snapshot() asks for min(num_buckets, defaultParallelism)
-and declares the schema. keyEquals=<json> plans a single partition for a
-point lookup and pushes the bound key columns into the parquet scan. Three
-callers run the reader's fold (`VersionedSnapshotReader.fold`) outside a
-DataSource scan, so one fold implementation serves them all:
+partition per bucket unless numPartitions says otherwise. keyEquals=<json>
+plans a single partition for a point lookup and pushes the bound key
+columns into the parquet scan.
+
+One fold, `VersionedSnapshotReader.fold`, resolves versions in pyarrow (a
+stable sort on (_csn, _opseq) descending, the first row per key, no
+pandas round trip) for every read of the table: this module's own scan,
+and three callers in plans/versioned.py that build the reader in-process
+with the op list they pinned. VersionedTable.snapshot and
+VersionedTable.checkpoint plan min(num_buckets, defaultParallelism)
+partitions and run one mapInArrow job over them (`_fold_job`): a
+snapshot task yields its bucket folds, a checkpoint task (include_meta=True:
+winners keep _csn, _opseq, _deleted) writes them with the pyarrow writer.
 VersionedTable.lookup and the ObjectStore's committed reads hand the key
-over as Python values and fold its bucket in the driver process, and
-VersionedTable.checkpoint builds the reader with include_meta=True (winners
-keep _csn, _opseq, _deleted) and writes each task's bucket folds with the
-pyarrow writer. Ops whose bucket count differs from the table meta (layout
-migration) are read whole and row-filtered by bucket, per op.
+over as Python values and fold its one bucket in the driver process. Ops
+whose bucket count differs from the table meta (layout migration) are read
+whole and row-filtered by bucket, per op.
 
 Commit log: this module keeps no copy of the protocol. Readers and writers
 call the functions in plans/versioned.py that VersionedTable and
@@ -261,6 +266,20 @@ def _key_scan_filter(key_equals: dict, key_cols: list[str], data_schema):
     return pushed, rest
 
 
+def _row_filter_mask(tbl, row_filter: dict):
+    """The rows of ``tbl`` whose columns equal every value of
+    ``row_filter``, the keyEquals entries _key_scan_filter could not push,
+    compared as pandas `==` compares them (a string for an int column, a
+    null or a NaN matches nothing)."""
+    import numpy as np
+
+    pdf = tbl.select(list(row_filter)).to_pandas()
+    keep = np.ones(len(pdf), dtype=bool)
+    for c, v in row_filter.items():
+        keep &= (pdf[c] == v).to_numpy(dtype=bool)
+    return keep
+
+
 @dataclass
 class BucketSetPartition(InputPartition):
     """A snapshot partition: owns a set of physical buckets and lists ONLY
@@ -289,11 +308,13 @@ class VersionedSnapshotReader(DataSourceReader):
     the rows checkpoint() writes.
 
     `fold(partition)` resolves a partition as one pyarrow table. Spark
-    tasks stream per-bucket folds from `read` and checkpoint tasks write
+    tasks stream per-bucket folds from `read` (a format("versioned") scan
+    and VersionedTable.snapshot's job alike) and checkpoint tasks write
     them (`bucket_folds`); VersionedTable point reads call it on the driver
-    with the op list they pinned (`ops`) and the key as Python values
-    (`key_equals`, so dates and timestamps need no JSON form), so one fold
-    serves all three."""
+    with the key as Python values (`key_equals`, so dates and timestamps
+    need no JSON form), so one fold serves them all. A caller that pinned
+    its op list hands it over (`ops`) with the csn it was resolved at
+    (asOfCsn); an op dir gone since then is handled by `live_ops`."""
 
     def __init__(
         self,
@@ -304,8 +325,6 @@ class VersionedSnapshotReader(DataSourceReader):
         include_meta: bool = False,
     ):
         self.path = options["path"]
-        as_of = options.get("asofcsn")
-        self.as_of = int(as_of) if as_of is not None else None
         self.include_meta = include_meta
         self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols = _load_meta(
             self.path
@@ -315,11 +334,16 @@ class VersionedSnapshotReader(DataSourceReader):
         self.key_equals: dict | None = (
             _typed_key(key_equals, self.data_schema) if key_equals is not None else None
         )
-        self.ops = (
-            ops
-            if ops is not None
-            else committed_ops(self.path, self.as_of, _table_grace(self.path))
-        )
+        # the pinned csn: a caller handing over its op list pins the csn
+        # that list was resolved at (asOfCsn)
+        as_of = options.get("asofcsn")
+        if ops is None:
+            latest = latest_csn(self.path)
+            self.csn = latest if as_of is None else min(int(as_of), latest)
+            ops = committed_ops(self.path, self.csn, _table_grace(self.path))
+        else:
+            self.csn = int(as_of)
+        self.ops = ops
         if self.key_equals is not None:
             missing = [c for c in self.bucket_cols if c not in self.key_equals]
             if missing:
@@ -353,24 +377,39 @@ class VersionedSnapshotReader(DataSourceReader):
     def partitions(self):
         return [BucketSetPartition(buckets=g) for g in self.bucket_groups]
 
+    def live_ops(self) -> list[dict]:
+        """The pinned op list, re-resolved once at the pinned csn when one
+        of its op dirs is gone. A checkpoint plus vacuum since pinning
+        reclaims the deltas below the checkpoint, and any complete op list
+        for one csn folds the same rows, so the read goes on from the
+        checkpoint. Reclaimed history raises SnapshotUnavailableError
+        (committed_ops); a dir the re-resolved list still names is missing
+        although its manifest is published — the table is damaged, and the
+        read fails loudly rather than folding without it. (A missing
+        bucket=<b>/ subdir, by contrast, only means the op wrote no rows
+        for that bucket.)"""
+        if all(os.path.isdir(op["dir"]) for op in self.ops):
+            return self.ops
+        self.ops = committed_ops(self.path, self.csn, _table_grace(self.path))
+        for op in self.ops:
+            if not os.path.isdir(op["dir"]):
+                which = (
+                    f"the checkpoint under csn {self.csn}" if op["checkpoint"]
+                    else f"csn {op['csn']}"
+                )
+                raise RuntimeError(
+                    f"versioned read at csn {self.csn}: op dir {op['dir']} of "
+                    f"{which} is missing although its manifest is still "
+                    "published — the table's data is corrupt"
+                )
+        return self.ops
+
     def dirs_for_partition(self, partition) -> list[tuple[str, dict, bool]]:
         """(dir, op, pruned) listing this partition will read — planning is
         inspectable so tests can assert single-bucket IO pruning."""
         out = []
-        for op in self.ops:
+        for op in self.live_ops():
             if op["buckets"] == self.num_buckets:
-                if not os.path.isdir(op["dir"]):
-                    # the op list was pinned at plan time; the whole op dir
-                    # vanishing means vacuum reclaimed it between planning
-                    # and this task — fail LOUDLY rather than silently
-                    # returning a partial fold (a missing bucket=<b>/
-                    # subdir below, by contrast, just means the op wrote
-                    # no rows for that bucket and is skipped legitimately)
-                    raise RuntimeError(
-                        f"versioned read: op dir {op['dir']} (csn={op['csn']}) "
-                        "vanished mid-read — vacuum raced this pinned snapshot; "
-                        "re-run the read on a fresh snapshot"
-                    )
                 for b in partition.buckets:
                     d = os.path.join(op["dir"], f"bucket={b}")
                     if os.path.isdir(d):
@@ -399,6 +438,7 @@ class VersionedSnapshotReader(DataSourceReader):
     def fold(self, partition):
         """Resolve this partition's rows: newest visible version per key,
         tombstones hidden, as a pyarrow table typed by `output_schema()`."""
+        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -425,22 +465,30 @@ class VersionedSnapshotReader(DataSourceReader):
             tables.append(tbl)
         if not tables:
             return empty
-        pdf = pa.concat_tables(tables, promote_options="permissive").to_pandas()
-        if len(pdf) == 0:
+        tbl = pa.concat_tables(tables, promote_options="permissive")
+        if tbl.num_rows == 0:
             return empty
         # visibility rule (block_driver.rs:457-486): newest (_csn,_opseq)
-        # version per key wins; tombstone winners hide the key
-        pdf = (
-            pdf.sort_values(["_csn", "_opseq"], ascending=False, kind="mergesort")
-            .drop_duplicates(self.key_cols, keep="first")
+        # version per key wins; tombstone winners hide the key. The stable
+        # sort puts each key's newest version first; the smallest sorted
+        # position per key picks it. Grouping compares Arrow values, so
+        # int64 stays exact and a NaN key is not a NULL key.
+        order = pc.sort_indices(
+            tbl, sort_keys=[("_csn", "descending"), ("_opseq", "descending")]
         )
-        pdf = pdf[~pdf["_deleted"]]
-        for c, v in row_filter.items():
-            pdf = pdf[pdf[c] == v]
-        if len(pdf) == 0:
+        keys = tbl.select(self.key_cols).take(order).append_column(
+            "_pos", pa.array(np.arange(tbl.num_rows, dtype=np.int64))
+        )
+        first = keys.group_by(self.key_cols, use_threads=False).aggregate(
+            [("_pos", "min")]
+        )["_pos_min"]
+        out = tbl.take(order.take(first.sort()))
+        out = out.filter(pc.invert(out["_deleted"]))
+        if row_filter and out.num_rows:
+            out = out.filter(_row_filter_mask(out, row_filter))
+        if out.num_rows == 0:
             return empty
-        out = pa.Table.from_pandas(pdf[out_cols], preserve_index=False).select(out_cols)
-        return out.cast(out_schema)
+        return out.select(out_cols).cast(out_schema)
 
 
 @dataclass
@@ -804,21 +852,28 @@ class VersionedStreamWriter(DataSourceStreamWriter):
                 dest = os.path.join(op_dir, rel)
                 os.makedirs(os.path.dirname(dest), exist_ok=True)
                 os.rename(os.path.join(self.stage_root, rel), dest)
-        self.last_seen_csn = claim_csn(
-            self.path,
-            start_csn,
-            tsn,
-            [{"dir": op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
-            merge_write_sets(m.keys for m in live),
-            _table_grace(self.path),
-            f"stream sink epoch {batchId}",
-            extra={
-                "rows": sum(m.n_rows for m in live),
-                "writer": self.writer_id,
-                "epoch": batchId,
-            },
-            own_writer=self.writer_id,
-        )
+        try:
+            self.last_seen_csn = claim_csn(
+                self.path,
+                start_csn,
+                tsn,
+                [{"dir": op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
+                merge_write_sets(m.keys for m in live),
+                _table_grace(self.path),
+                f"stream sink epoch {batchId}",
+                extra={
+                    "rows": sum(m.n_rows for m in live),
+                    "writer": self.writer_id,
+                    "epoch": batchId,
+                },
+                own_writer=self.writer_id,
+            )
+        except BaseException:
+            # nothing was published: the epoch's moved files would sit
+            # unreferenced until vacuum's orphan sweep (Transaction.commit
+            # discards its staged tsn= dir the same way)
+            shutil.rmtree(os.path.dirname(op_dir), ignore_errors=True)
+            raise
         shutil.rmtree(self.stage_root, ignore_errors=True)
 
     def abort(self, messages, batchId: int) -> None:

@@ -503,15 +503,15 @@ def test_rebucket_layout_migration(spark, tmp_path):
 def test_vacuum_reader_safety(vt, spark):
     """Round-3 reader-safety item, two halves:
 
-    (a) A snapshot DataFrame held across checkpoint+vacuum re-plans at each
-        action (the Python DataSource re-resolves the op list per
-        execution), so re-collection returns the COMPLETE post-vacuum fold
-        — never a partial one — and a pinned as-of read whose history was
-        reclaimed raises rather than silently shrinking.
-    (b) The only true race window — vacuum deleting an op dir between a
-        scan's planning and its tasks — fails LOUDLY via the
-        dirs_for_partition guard (missing bucket subdirs stay a legitimate
-        skip; a missing op dir is an error)."""
+    (a) A snapshot DataFrame held across checkpoint+vacuum re-resolves its
+        op list at its pinned csn when the pinned op dirs are gone, so
+        collection returns the COMPLETE fold — never a partial one — and
+        an as-of read whose history was reclaimed raises rather than
+        silently shrinking.
+    (b) An op dir that a still-published manifest names is missing: that
+        is damage, not a vacuum race, and the read fails LOUDLY saying so
+        (missing bucket subdirs stay a legitimate skip; a missing op dir
+        is an error)."""
     import shutil
 
     import pytest as _pytest
@@ -546,8 +546,9 @@ def test_vacuum_reader_safety(vt, spark):
     victim = next(op for op in reader.ops if not op["checkpoint"])
     shutil.rmtree(victim["dir"])
     part = BucketSetPartition(buckets=tuple(range(vt.num_buckets)))
-    with _pytest.raises(RuntimeError, match="vacuum raced"):
+    with _pytest.raises(RuntimeError, match="manifest is still published") as err:
         list(reader.read(part))
+    assert victim["dir"] in str(err.value) and f"csn {victim['csn']}" in str(err.value)
 
 
 def test_batch_changes_feed_matches_commits(spark, tmp_path):

@@ -769,6 +769,42 @@ def test_native_stream_writer_conflict_across_fresh_instances(spark, tmp_path):
     assert vt.snapshot().count() == 6
 
 
+def test_stream_epoch_that_loses_its_claim_leaves_no_op_dir(spark, tmp_path):
+    """Two stream writers upsert one key: the epoch that loses the conflict
+    check publishes nothing, and removes the op dir it moved its staged
+    files into, so every tsn= dir under data/ is named by a manifest."""
+    import os
+
+    import pytest as _pytest
+
+    from db_core_spark.plans.versioned import ConflictError, VersionedTable, log_names, read_manifest
+    from db_core_spark.sources.versioned_datasource import VersionedStreamWriter
+
+    ev = batch_events(spark)
+    vt = VersionedTable.create(
+        spark, str(tmp_path / "vt_lost"), key_cols=["event_id"], schema=ev.schema
+    )
+    rows = ev.limit(2).collect()
+    txn = vt.begin()
+    txn.upsert(spark.createDataFrame(rows, ev.schema))
+    txn.commit()
+    w1 = VersionedStreamWriter(ev.schema, {"path": vt.path, "writerid": "w1"})
+    w2 = VersionedStreamWriter(ev.schema, {"path": vt.path, "writerid": "w2"})
+    w1.commit([w1.write(iter(rows[:1]))], batchId=0)
+    with _pytest.raises(ConflictError):
+        w2.commit([w2.write(iter(rows[:1]))], batchId=0)
+
+    data = os.path.join(vt.path, "data")
+    on_disk = {d for d in os.listdir(data) if d.startswith("tsn=")}
+    named = {
+        os.path.basename(os.path.dirname(op["dir"]))
+        for _, _, name in log_names(vt.path)
+        for op in read_manifest(vt.path, name)["ops"]
+    }
+    assert len(named) == 2
+    assert on_disk == named
+
+
 def test_stream_trending_topk_converges_to_batch(spark, stream_dir, tmp_path):
     """Live trending: after the bounded stream drains, the sink view's
     per-window top-3 equals the batch operator's answer (rank re-derived
