@@ -56,9 +56,11 @@ task writes each non-empty bucket's winners as one file and the driver
 publishes the manifest, so later reads fold only the (checkpoint, S]
 deltas above it. Point reads (`lookup()`, and the ObjectStore reads that
 see no buffered writes) run the same fold for the key's one bucket in the
-driver process and schedule no Spark job. The version-chain view
-(`history()`, `Transaction.read()`) reads every visible version through
-`_versions`.
+driver process and schedule no Spark job. The version-chain view,
+`history()`, runs the same job with the reader's unresolved read
+(`versions`) as its task. `Transaction.read()` layers a transaction's
+buffered ops over `snapshot(start_csn)`, so the fold is the one
+visibility rule across commits.
 """
 
 from __future__ import annotations
@@ -257,6 +259,26 @@ def _snapshot_task(reader, parts: list, batches):
         yield from reader.read(parts[i])
 
 
+def _history_task(reader, parts: list, batches):
+    """history()'s mapInArrow function: every version its reader partitions
+    hold (`versions`), one bucket at a time, from the op list pinned when
+    history() was called. `live_ops` replacing that list (a pinned op dir
+    is gone) raises instead of reading the re-resolved list, which a newer
+    checkpoint made shorter."""
+    import dataclasses
+
+    pinned = reader.ops
+    for i in _partition_ids(batches):
+        for b in parts[i].buckets:
+            tbl = reader.versions(dataclasses.replace(parts[i], buckets=(b,)))
+            if reader.ops is not pinned:
+                raise SnapshotUnavailableError(
+                    f"history at csn {reader.csn}: an op dir it pinned was "
+                    "reclaimed since history() was called"
+                )
+            yield from tbl.to_batches()
+
+
 def _checkpoint_task(out_dir: str, reader, parts: list, batches):
     """The checkpoint job's mapInArrow function: fold its reader partitions
     one bucket at a time and write each non-empty bucket's winners as one
@@ -341,19 +363,22 @@ def physical_rows(tbl, data_schema: T.StructType, names: list, deleted: bool, op
     table ``tbl``, whose columns are the op's columns ``names`` in order
     (all data columns of an upsert, the key columns of a delete). Every
     column is cast to the table's type, so every file has the table's
-    types; the columns a delete lacks are null."""
+    types; the columns a delete lacks are null, and nullable in its file
+    even where the table declares them NOT NULL (a required parquet column
+    holding nulls is unreadable)."""
     import pyarrow as pa
 
     physical = physical_arrow_schema(data_schema)
     n = tbl.num_rows
     cols = dict(zip(names, tbl.columns))
+    fields = [f if f.name in cols else f.with_nullable(True) for f in physical]
     return pa.Table.from_arrays(
         [
             cols[f.name].cast(f.type) if f.name in cols else pa.nulls(n, f.type)
-            for f in list(physical)[:-2]
+            for f in fields[:-2]
         ]
         + [pa.repeat(pa.scalar(deleted), n), pa.repeat(pa.scalar(opseq, pa.int64()), n)],
-        schema=physical,
+        schema=pa.schema(fields),
     )
 
 
@@ -695,7 +720,9 @@ class VersionedTable:
     directory vanished after pinning (a checkpoint plus vacuum folds the
     same rows from the checkpoint), and raises if a directory that a
     still-published manifest names is missing, instead of treating the
-    missing dir as empty. ``vacuum(grace)`` therefore only
+    missing dir as empty. A pinned ``history()`` raises instead of
+    re-resolving: a newer checkpoint's op list holds fewer versions.
+    ``vacuum(grace)`` therefore only
     reclaims versions strictly older than the newest checkpoint minus the
     grace window — readers within the window are safe, readers beyond it
     fail loudly and re-pin. Mirrors the reference's version-chain
@@ -868,79 +895,8 @@ class VersionedTable:
             read=self._read_manifest,
         )
 
-    def _empty(self) -> DataFrame:
-        full = T.StructType(list(self.schema.fields) + META_SCHEMA_FIELDS)
-        return literal_frame(self.spark, [], full)
-
-    def _versions(self, as_of: int | None) -> DataFrame:
-        """All visible row versions with (_csn,_opseq,_deleted) attached —
-        the version-store chain view behind history() and Transaction.read().
-
-        Both the checkpoint and the delta dirs are read with an EXPLICIT
-        schema, not inference: after alter_add_column the op dirs have
-        mixed schemas, and inference samples one file — a sampled OLD file
-        would silently drop the new column from NEW files; the explicit
-        schema null-fills it per file instead. It also reads a file-less
-        checkpoint (every key tombstoned) as empty, where inference raises,
-        and spares the inference job. `bucket`, the partition-dir
-        column of checkpoint and op dirs alike, is dropped by the select."""
-        ops = self._committed_ops(as_of)
-        if not ops:
-            return self._empty()
-        data = list(self.schema.fields)
-        bucket = T.StructField("bucket", T.IntegerType())
-        out_cols = [*[f.name for f in data], *META_COLS]
-        parts = []
-        delta_dirs = [o for o in ops if not o["checkpoint"]]
-        ckpt_dirs = [o["dir"] for o in ops if o["checkpoint"]]
-        if ckpt_dirs:
-            # checkpoint files carry physical _csn/_opseq columns already
-            parts.append(
-                self.spark.read.schema(T.StructType(data + META_SCHEMA_FIELDS + [bucket]))
-                .parquet(*ckpt_dirs)
-                .select(*out_cols)
-            )
-        if delta_dirs:
-            read_fields = data + [
-                T.StructField("_deleted", T.BooleanType()),
-                T.StructField("_opseq", T.LongType()),
-                T.StructField("tsn", T.StringType()),
-                T.StructField("opseq", T.IntegerType()),
-                bucket,
-            ]
-            df = self.spark.read.schema(T.StructType(read_fields)).option(
-                "basePath", self._data_dir
-            ).parquet(*[o["dir"] for o in delta_dirs])
-            # partition discovery yields tsn/opseq dir columns; map tsn->csn
-            # via a broadcast join on the (tiny) manifest map — a
-            # literal_frame (r11): the map is O(delta commits) driver rows,
-            # and the classic createDataFrame path made every consumer of
-            # the core read path schedule a 32-task Python-RDD scan just to
-            # deserialize it (the r10 litframe finding, deferred then)
-            mapping = literal_frame(
-                self.spark,
-                [
-                    (os.path.basename(os.path.dirname(o["dir"])).split("=", 1)[1],
-                     int(o["opseq"]), int(o["csn"]))
-                    for o in delta_dirs
-                ],
-                "tsn string, opseq int, _csn long",
-            )
-            df = (
-                df.withColumn("tsn", F.col("tsn").cast("string"))
-                .withColumn("opseq", F.col("opseq").cast("int"))
-                .join(F.broadcast(mapping), ["tsn", "opseq"])
-                .withColumn("_opseq", F.col("opseq").cast("long"))
-                .drop("tsn", "opseq")
-            )
-            parts.append(df.select(*out_cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     def _read_width(self) -> int:
-        """Bucket-group partitions of a snapshot or checkpoint read:
+        """Bucket-group partitions of a snapshot, checkpoint or history read:
         min(num_buckets, defaultParallelism). Every Python task pays a fixed
         worker cost before its fold starts (SCALING.md), so the task count
         follows the cores, never the bucket count or a size estimate."""
@@ -964,11 +920,15 @@ class VersionedTable:
         )
 
     def _fold_job(self, reader, task, schema) -> DataFrame:
-        """The one job of a snapshot or checkpoint: a mapInArrow over
-        spark.range(partitions) in which task i runs ``task(reader, parts,
-        batches)`` on reader partition i. A mapInArrow job, not an RDD one:
-        it runs in the Python workers the commit staging jobs use, where a
-        process's first RDD job starts another worker pool (~2 s)."""
+        """The one job of a snapshot, checkpoint or history: a mapInArrow
+        over spark.range(partitions) in which task i runs ``task(reader,
+        parts, batches)`` on reader partition i. A mapInArrow job, not an
+        RDD one: it runs in the Python workers the commit staging jobs use,
+        where a process's first RDD job starts another worker pool (~2 s).
+        An empty pinned op list folds to nothing: an empty local frame, no
+        Python job."""
+        if not reader.ops:
+            return literal_frame(self.spark, [], schema)
         parts = reader.partitions()
         return self.spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
             functools.partial(task, reader, parts), schema
@@ -1028,8 +988,14 @@ class VersionedTable:
         return reader.fold(part), reader.output_schema()
 
     def history(self) -> DataFrame:
-        """Every row version with metadata (the version-store chain view)."""
-        return self._versions(None)
+        """Every row version visible at the latest csn, unresolved, with
+        (_csn, _opseq, _deleted) — the version-store chain view. Pinned when
+        history() is called, as snapshot() is, and read by the versioned
+        reader's own reads (`versions`) in one `_fold_job`. An op dir of
+        the pinned list that is gone later raises: the list is not
+        re-resolved, since a newer checkpoint's list holds fewer versions."""
+        reader = self._pinned_reader(None)
+        return self._fold_job(reader, _history_task, reader.versions_schema())
 
     def diff(self, from_csn: int, to_csn: int) -> DataFrame:
         """Semantic diff between two snapshots: one row per key whose
@@ -1828,24 +1794,28 @@ class Transaction:
     def read(self) -> DataFrame:
         """Read-your-own-writes snapshot: committed state as of txn start +
         this txn's buffered ops layered on top (uncommitted data visible only
-        to self — block_driver.rs visibility `entry.tsn == reader.tsn`)."""
+        to self — block_driver.rs visibility `entry.tsn == reader.tsn`).
+
+        The committed part is snapshot(start_csn), so the fold alone decides
+        visibility across commits; a window over the snapshot and the
+        buffered ops then keeps each key's row from the last op that wrote
+        it, the snapshot ranking below every op."""
         self._check_open()
-        base = self.table._versions(self.start_csn)
-        parts = [base]
-        big = 1 << 60  # own writes sort above every committed csn
+        t = self.table
+        data_cols = [f.name for f in t.schema.fields]
+        base = t.snapshot(self.start_csn).select(*data_cols)
+        if not self._ops:
+            return base
+        vs = base.withColumn("_deleted", F.lit(False)).withColumn(
+            "_opseq", F.lit(-1).cast("long")
+        )
         for op in self._ops:
-            parts.append(
-                self._full_rows(op).withColumn("_csn", F.lit(big + op.opseq).cast("long"))
-            )
-        vs = parts[0]
-        for p in parts[1:]:
-            vs = vs.unionByName(p)
-        kc = self.table.key_cols
-        w = W.partitionBy(*kc).orderBy(F.desc("_csn"), F.desc("_opseq"))
+            vs = vs.unionByName(self._full_rows(op))
+        w = W.partitionBy(*t.key_cols).orderBy(F.desc("_opseq"))
         return (
             vs.withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
-            .drop("_rn", *META_COLS)
+            .drop("_rn", "_opseq", "_deleted")
         )
 
     # --------------------------------------------------------------- commit
@@ -2020,22 +1990,18 @@ class Transaction:
     # ------------------------------------------------------------ internals
 
     def _full_rows(self, op: _Op) -> DataFrame:
-        """Normalize an op to the full physical schema (+_opseq,_deleted;
-        _csn is virtual until commit)."""
-        t = self.table
-        if op.kind == "upsert":
-            df = op.df.select(*[f.name for f in t.schema.fields])
-            df = df.withColumn("_deleted", F.lit(False))
-        else:
-            df = op.df
-            for f in t.schema.fields:
-                if f.name not in df.columns:
-                    df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-            df = df.select(*[f.name for f in t.schema.fields]).withColumn(
-                "_deleted", F.lit(True)
-            )
-        return df.withColumn("_opseq", F.lit(op.opseq).cast("long")).withColumn(
-            "_csn", F.lit(None).cast("long")
+        """Normalize an op to the full physical schema (+_deleted,_opseq);
+        a delete's non-key columns are null."""
+        kc = self.table.key_cols
+        cols = [
+            F.col(f.name) if op.kind == "upsert" or f.name in kc
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in self.table.schema.fields
+        ]
+        return op.df.select(
+            *cols,
+            F.lit(op.kind == "delete").alias("_deleted"),
+            F.lit(op.opseq).cast("long").alias("_opseq"),
         )
 
     def _check_conflicts(self, my_keys: set[tuple] | None, upto: int) -> None:

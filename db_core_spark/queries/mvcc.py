@@ -819,7 +819,7 @@ def versioned_restore_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         # live; tombstoned keys = keys with a delete in history whose
         # newest version is the delete (a key whose newest version is
         # live is in the snapshot and was never counted).
-        hist = vt._versions(None)
+        hist = vt.history()
         row = (
             hist.groupBy("k")
             .agg(

@@ -31,19 +31,18 @@ partition per bucket unless numPartitions says otherwise. keyEquals=<json>
 plans a single partition for a point lookup and pushes the bound key
 columns into the parquet scan.
 
-One fold, `VersionedSnapshotReader.fold`, resolves versions in pyarrow (a
-stable sort on (_csn, _opseq) descending, the first row per key, no
-pandas round trip) for every read of the table: this module's own scan,
-and three callers in plans/versioned.py that build the reader in-process
-with the op list they pinned. VersionedTable.snapshot and
-VersionedTable.checkpoint plan min(num_buckets, defaultParallelism)
-partitions and run one mapInArrow job over them (`_fold_job`): a
-snapshot task yields its bucket folds, a checkpoint task (include_meta=True:
-winners keep _csn, _opseq, _deleted) writes them with the pyarrow writer.
-VersionedTable.lookup and the ObjectStore's committed reads hand the key
-over as Python values and fold its one bucket in the driver process. Ops
-whose bucket count differs from the table meta (layout migration) are read
-whole and row-filtered by bucket, per op.
+One reader serves every read of committed versions:
+`VersionedSnapshotReader.versions` reads a partition's op dirs, `_csn` from
+the manifest, and `fold` resolves them in pyarrow (a stable sort on (_csn,
+_opseq) descending, the first row per key). VersionedTable.snapshot,
+checkpoint and history pin the op list on the driver and run one
+mapInArrow job of min(num_buckets, defaultParallelism) tasks
+(`_fold_job`) that yield the folds, write them (include_meta=True) or
+yield `versions` unresolved; lookup() and the ObjectStore's committed
+reads fold the key's one bucket in the driver. Transaction.read starts
+from a snapshot. Ops whose bucket count differs from the table meta
+(layout migration) are read whole and row-filtered by bucket, per op. The
+CDC readers read one op dir per partition and yield Arrow batches.
 
 Commit log: this module keeps no copy of the protocol. Readers and writers
 call the functions in plans/versioned.py that VersionedTable and
@@ -61,7 +60,6 @@ import json
 import os
 import uuid
 from dataclasses import dataclass
-from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -98,6 +96,16 @@ META_FIELDS = [
     T.StructField("_csn", T.LongType()),
     T.StructField("_change", T.StringType()),
 ]
+
+
+def _changes_schema(data_schema: T.StructType, options: dict) -> T.StructType:
+    """The change feed's rows: the data columns, (_csn, _change) and, opted
+    in with includeOpseq (merge_from), the op's _opseq — the public feed
+    shape stays (_csn, _change) for every other consumer."""
+    fields = list(data_schema.fields) + META_FIELDS
+    if str(options.get("includeopseq", "false")).lower() == "true":
+        fields.append(T.StructField("_opseq", T.LongType()))
+    return T.StructType(fields)
 
 
 def _load_meta(path: str) -> tuple[list[str], T.StructType, int, list[str]]:
@@ -162,7 +170,9 @@ def _op_table_dir(
     ds = pads.dataset(dir_path, format="parquet")
     avail = set(ds.schema.names)
     present = [c for c in want if c in avail]
-    tbl = ds.to_table(columns=present, filter=row_filter)
+    # a dir with no files (the checkpoint of a fully tombstoned table) has
+    # no schema to filter on: it reads as an empty table of `want`
+    tbl = ds.to_table(columns=present, filter=row_filter if ds.files else None)
     missing = [c for c in want if c not in avail]
     if missing:
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -170,6 +180,7 @@ def _op_table_dir(
         arrow_types = {
             f.name: f.type for f in to_arrow_schema(data_schema)
         } if data_schema is not None else {}
+        arrow_types.update(_deleted=pa.bool_(), _opseq=pa.int64(), _csn=pa.int64())
         for c in missing:
             tbl = tbl.append_column(
                 c, pa.nulls(len(tbl), type=arrow_types.get(c, pa.null()))
@@ -307,14 +318,16 @@ class VersionedSnapshotReader(DataSourceReader):
     ``include_meta=True`` keeps (_csn, _opseq, _deleted) on the winners:
     the rows checkpoint() writes.
 
-    `fold(partition)` resolves a partition as one pyarrow table. Spark
-    tasks stream per-bucket folds from `read` (a format("versioned") scan
-    and VersionedTable.snapshot's job alike) and checkpoint tasks write
-    them (`bucket_folds`); VersionedTable point reads call it on the driver
-    with the key as Python values (`key_equals`, so dates and timestamps
-    need no JSON form), so one fold serves them all. A caller that pinned
-    its op list hands it over (`ops`) with the csn it was resolved at
-    (asOfCsn); an op dir gone since then is handled by `live_ops`."""
+    `versions(partition)` reads a partition's versions unresolved (what
+    history() yields) and `fold(partition)` resolves them as one pyarrow
+    table. Spark tasks stream per-bucket folds from `read` (a
+    format("versioned") scan and VersionedTable.snapshot's job alike) and
+    checkpoint tasks write them (`bucket_folds`); VersionedTable point
+    reads call `fold` on the driver with the key as Python values
+    (`key_equals`, so dates and timestamps need no JSON form), so one fold
+    serves them all. A caller that pinned its op list hands it over
+    (`ops`) with the csn it was resolved at (asOfCsn); an op dir gone
+    since then is handled by `live_ops` (history() raises instead)."""
 
     def __init__(
         self,
@@ -420,10 +433,23 @@ class VersionedSnapshotReader(DataSourceReader):
 
     # -------------------------------------------------------------- reading
 
+    def versions_schema(self) -> T.StructType:
+        """The rows of `versions`: the data columns plus (_csn, _opseq,
+        _deleted), every one nullable — a tombstone's other columns are
+        null, whatever the table declares."""
+        data = [T.StructField(f.name, f.dataType) for f in self.data_schema.fields]
+        return T.StructType(data + META_SCHEMA_FIELDS)
+
     def output_schema(self) -> T.StructType:
         if self.include_meta:
             return T.StructType(list(self.data_schema.fields) + META_SCHEMA_FIELDS)
         return self.data_schema
+
+    def _key_filters(self):
+        """keyEquals split by `_key_scan_filter`; (None, {}) for a scan."""
+        if self.key_equals is None:
+            return None, {}
+        return _key_scan_filter(self.key_equals, self.key_cols, self.data_schema)
 
     def bucket_folds(self, partition):
         """(bucket, fold) for each bucket of a partition, one bucket at a
@@ -435,23 +461,17 @@ class VersionedSnapshotReader(DataSourceReader):
         for _, tbl in self.bucket_folds(partition):
             yield from tbl.to_batches()
 
-    def fold(self, partition):
-        """Resolve this partition's rows: newest visible version per key,
-        tombstones hidden, as a pyarrow table typed by `output_schema()`."""
-        import numpy as np
+    def versions(self, partition):
+        """Every version of this partition's rows in the pinned op list,
+        unresolved, typed by `versions_schema()`: each op dir read through
+        `_op_table_dir` (keyEquals' key columns pushed into the scan)."""
         import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
         data_cols = [f.name for f in self.data_schema.fields]
-        out_cols = self.output_schema().fieldNames()
-        out_schema = to_arrow_schema(self.output_schema())
-        empty = out_schema.empty_table()
-        scan_filter, row_filter = None, {}
-        if self.key_equals is not None:
-            scan_filter, row_filter = _key_scan_filter(
-                self.key_equals, self.key_cols, self.data_schema
-            )
+        schema = to_arrow_schema(self.versions_schema())
+        scan_filter, _ = self._key_filters()
         tables = []
         for d, op, pruned in self.dirs_for_partition(partition):
             tbl = _op_table_dir(
@@ -464,10 +484,22 @@ class VersionedSnapshotReader(DataSourceReader):
                 tbl = tbl.filter(pc.is_in(ids, pa.array(partition.buckets, pa.int32())))
             tables.append(tbl)
         if not tables:
-            return empty
+            return schema.empty_table()
         tbl = pa.concat_tables(tables, promote_options="permissive")
+        return tbl.select(schema.names).cast(schema)
+
+    def fold(self, partition):
+        """Resolve this partition's rows: newest visible version per key,
+        tombstones hidden, as a pyarrow table typed by `output_schema()`."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        out_schema = to_arrow_schema(self.output_schema())
+        tbl = self.versions(partition)
         if tbl.num_rows == 0:
-            return empty
+            return out_schema.empty_table()
         # visibility rule (block_driver.rs:457-486): newest (_csn,_opseq)
         # version per key wins; tombstone winners hide the key. The stable
         # sort puts each key's newest version first; the smallest sorted
@@ -484,11 +516,10 @@ class VersionedSnapshotReader(DataSourceReader):
         )["_pos_min"]
         out = tbl.take(order.take(first.sort()))
         out = out.filter(pc.invert(out["_deleted"]))
+        _, row_filter = self._key_filters()
         if row_filter and out.num_rows:
             out = out.filter(_row_filter_mask(out, row_filter))
-        if out.num_rows == 0:
-            return empty
-        return out.select(out_cols).cast(out_schema)
+        return out.select(out_schema.names).cast(out_schema)
 
 
 @dataclass
@@ -519,13 +550,13 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
     batch driver-side; this keeps its csn-offset contract)."""
 
     def __init__(self, schema: T.StructType, options: dict):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         self.path = options["path"]
         self.key_cols, self.data_schema, _, _ = _load_meta(self.path)
+        self.arrow_schema = to_arrow_schema(_changes_schema(self.data_schema, options))
         start = options.get("startingcsn")
         self.start_csn = int(start) if start is not None else 0
-        self.include_opseq = (
-            str(options.get("includeopseq", "false")).lower() == "true"
-        )
 
     def initialOffset(self) -> dict:
         return {"csn": self.start_csn}
@@ -535,13 +566,23 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
         return {"csn": max(deltas, default=self.start_csn)}
 
     def partitions(self, start: dict, end: dict) -> list[CDCPartition]:
+        lo, hi = start["csn"], end["csn"]
+        names = log_names(self.path)
+        # completeness guard (the engine's complete-fold-or-loud-error
+        # contract): a vacuum-reclaimed commit inside the window would
+        # otherwise just be ABSENT from the feed — the consumer sees a
+        # silently incomplete ledger, the unsafe direction for CDC
+        missing = reclaimed_csns(names, lo, hi)
+        if missing:
+            raise RuntimeError(
+                f"changes({lo}, {hi}): commits {missing[:10]} were "
+                "vacuum-reclaimed inside the window; the change feed cannot "
+                "be complete"
+            )
         parts: list[CDCPartition] = []
         # name-bounded: only manifests inside the batch window are opened;
         # an aborted/force-aborted group contributes no change rows
-        for m in visible_manifests(
-            self.path, log_names(self.path), start["csn"], end["csn"],
-            _table_grace(self.path),
-        ):
+        for m in visible_manifests(self.path, names, lo, hi, _table_grace(self.path)):
             for op in m["ops"]:
                 has_pre = bool(op.get("preimages"))
                 pre_dir = os.path.join(op["dir"], "_preimg")
@@ -585,7 +626,12 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
                     )
         return parts
 
-    def read(self, partition: CDCPartition) -> Iterator[Tuple]:
+    def read(self, partition: CDCPartition):
+        """The partition's change rows as Arrow batches: the dir's data
+        columns, its commit's `_csn`, the op kind as `_change` and, opted
+        in, the op's `_opseq`."""
+        import pyarrow as pa
+
         data_cols = [f.name for f in self.data_schema.fields]
         tbl = _op_table_dir(
             partition.dir,
@@ -593,13 +639,15 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
             data_cols,
             data_schema=self.data_schema,
         )
-        extra = (partition.opseq,) if self.include_opseq else ()
-        for row in tbl.select(data_cols).to_pylist():
-            yield (
-                tuple(row[c] for c in data_cols)
-                + (partition.csn, partition.kind)
-                + extra
+        n = tbl.num_rows
+        tbl = tbl.select(data_cols + ["_csn"]).append_column(
+            "_change", pa.repeat(pa.scalar(partition.kind), n)
+        )
+        if "_opseq" in self.arrow_schema.names:
+            tbl = tbl.append_column(
+                "_opseq", pa.repeat(pa.scalar(partition.opseq, pa.int64()), n)
             )
+        yield from tbl.cast(self.arrow_schema).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # manifests are immutable; nothing to release per epoch
@@ -894,12 +942,7 @@ class VersionedDataSource(DataSource):
     def schema(self):
         _, data_schema, _, _ = _load_meta(self.options["path"])
         if self._mode() == "true":
-            fields = list(data_schema.fields) + META_FIELDS
-            if str(self.options.get("includeopseq", "false")).lower() == "true":
-                # opt-in ONLY (merge_from): the public feed shape stays
-                # (_csn, _change) for every existing consumer/oracle
-                fields = fields + [T.StructField("_opseq", T.LongType())]
-            return T.StructType(fields)
+            return _changes_schema(data_schema, self.options)
         return data_schema
 
     def reader(self, schema: T.StructType) -> DataSourceReader:
@@ -948,29 +991,16 @@ class VersionedChangesBatchReader(DataSourceReader):
 
     def __init__(self, schema: T.StructType, options: dict):
         self._delegate = VersionedChangeStreamReader(schema, options)
-        names = log_names(options["path"])
         from_csn = int(options.get("fromcsn", 0))
         to = options.get("tocsn")
-        if to is not None:
-            to_csn = int(to)
-        else:
-            to_csn = max((c for c, is_ck, _ in names if not is_ck), default=0)
+        to_csn = int(to) if to is not None else self._delegate.latestOffset()["csn"]
         if from_csn > to_csn:
             raise ValueError(f"fromCsn {from_csn} > toCsn {to_csn}")
-        # completeness guard (the engine's complete-fold-or-loud-error
-        # contract): a vacuum-reclaimed commit inside the requested window
-        # would otherwise just be ABSENT from the feed — the consumer sees
-        # a silently incomplete ledger, the unsafe direction for CDC
-        missing = reclaimed_csns(names, from_csn, to_csn)
-        if missing:
-            raise RuntimeError(
-                f"changes({from_csn}, {to_csn}): commits "
-                f"{missing[:10]} were vacuum-reclaimed inside the "
-                "window; the batch change feed cannot be complete"
-            )
         self._window = ({"csn": from_csn}, {"csn": to_csn})
 
     def partitions(self):
+        # a commit vacuum reclaimed inside the window raises here, as it
+        # does for a stream
         parts = self._delegate.partitions(*self._window)
         # an empty batch window still needs ONE partition: Spark's batch
         # DataSource path calls read(None) when the list is empty

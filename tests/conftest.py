@@ -52,17 +52,94 @@ def duck():
     return con
 
 
+def change_rows(reader, parts):
+    """The change rows a CDC reader yields for ``parts``, as tuples in its
+    schema's column order (the reader yields Arrow batches)."""
+    return [
+        r for p in parts for b in reader.read(p) for r in zip(*b.to_pydict().values())
+    ]
+
+
+def jvm_versions(vt, as_of_csn=None):
+    """Every row version visible at ``as_of_csn`` (default: latest) with
+    (_csn, _opseq, _deleted), read by the JVM parquet reader — a second
+    implementation of the versioned reader's `versions`, kept as the tests'
+    reference. The schema is the one _meta.json names, as every read's is.
+
+    Checkpoint and delta dirs are read with an EXPLICIT schema: after
+    alter_add_column the op dirs have mixed schemas, and inference samples
+    one file; the explicit schema null-fills the new column per file, and
+    reads a file-less checkpoint (every key tombstoned) as empty. Delta rows
+    get `_csn` through a broadcast join on the tsn -> csn map of the
+    manifests; `bucket`, the partition-dir column, is dropped."""
+    from pyspark.sql import functions as F, types as T
+
+    from db_core_spark.operators.litframe import literal_frame
+    from db_core_spark.plans.versioned import META_COLS, META_SCHEMA_FIELDS, table_meta
+
+    spark = vt.spark
+    data = list(T.StructType.fromJson(table_meta(vt.path)["schema"]).fields)
+    ops = vt._committed_ops(as_of_csn)
+    out_cols = [*[f.name for f in data], *META_COLS]
+    if not ops:
+        return literal_frame(spark, [], T.StructType(data + META_SCHEMA_FIELDS))
+    bucket = T.StructField("bucket", T.IntegerType())
+    parts = []
+    delta_dirs = [o for o in ops if not o["checkpoint"]]
+    ckpt_dirs = [o["dir"] for o in ops if o["checkpoint"]]
+    if ckpt_dirs:
+        # checkpoint files carry physical _csn/_opseq columns already
+        parts.append(
+            spark.read.schema(T.StructType(data + META_SCHEMA_FIELDS + [bucket]))
+            .parquet(*ckpt_dirs)
+            .select(*out_cols)
+        )
+    if delta_dirs:
+        read_fields = data + [
+            T.StructField("_deleted", T.BooleanType()),
+            T.StructField("_opseq", T.LongType()),
+            T.StructField("tsn", T.StringType()),
+            T.StructField("opseq", T.IntegerType()),
+            bucket,
+        ]
+        df = (
+            spark.read.schema(T.StructType(read_fields))
+            .option("basePath", vt._data_dir)
+            .parquet(*[o["dir"] for o in delta_dirs])
+        )
+        mapping = literal_frame(
+            spark,
+            [
+                (os.path.basename(os.path.dirname(o["dir"])).split("=", 1)[1],
+                 int(o["opseq"]), int(o["csn"]))
+                for o in delta_dirs
+            ],
+            "tsn string, opseq int, _csn long",
+        )
+        parts.append(
+            df.withColumn("tsn", F.col("tsn").cast("string"))
+            .withColumn("opseq", F.col("opseq").cast("int"))
+            .join(F.broadcast(mapping), ["tsn", "opseq"])
+            .withColumn("_opseq", F.col("opseq").cast("long"))
+            .select(*out_cols)
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def window_snapshot(vt, as_of_csn=None):
     """Reference resolution of a VersionedTable snapshot, the check on its
     bucketed reader: one JVM window over every visible version
-    (`_versions`), newest (_csn, _opseq) per key, tombstones dropped."""
+    (`jvm_versions`), newest (_csn, _opseq) per key, tombstones dropped."""
     from pyspark.sql import Window, functions as F
 
     from db_core_spark.plans.versioned import META_COLS
 
     w = Window.partitionBy(*vt.key_cols).orderBy(F.desc("_csn"), F.desc("_opseq"))
     return (
-        vt._versions(as_of_csn)
+        jvm_versions(vt, as_of_csn)
         .withColumn("_rn", F.row_number().over(w))
         .filter((F.col("_rn") == 1) & ~F.col("_deleted"))
         .drop("_rn", *META_COLS)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F, types as T
 
 from db_core_spark.plans import VersionedTable
 from db_core_spark.sources import register_versioned_format
-from tests.conftest import window_snapshot
+from tests.conftest import change_rows, window_snapshot
 
 SCHEMA = T.StructType(
     [
@@ -177,6 +177,42 @@ def test_cdc_stream_tails_commit_log(vt, spark, tmp_path):
     _commit(vt, spark, [(4, "d", 4.0)])
     run_once()
     assert set(got) == {(4, 4, "upsert")}
+
+
+def test_cdc_stream_restart_refuses_vacuum_reclaimed_commits(vt, spark, tmp_path):
+    """A stream restarted from its checkpoint after checkpoint() +
+    vacuum(0) reclaimed commits it has not delivered raises, as changes()
+    over the same window does, instead of skipping them and delivering
+    only the commits after."""
+    got: list[tuple] = []
+
+    def run_once():
+        q = (
+            spark.readStream.format("versioned")
+            .option("path", vt.path)
+            .option("readChanges", "true")
+            .load()
+            .writeStream.foreachBatch(
+                lambda df, _id: got.extend((r.k, r._csn) for r in df.collect())
+            )
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    _commit(vt, spark, [(1, "a", 1.0)])
+    run_once()
+    assert got == [(1, 1)]
+    _commit(vt, spark, [(2, "b", 2.0)])
+    _commit(vt, spark, [(3, "c", 3.0)])
+    vt.checkpoint()
+    vt.vacuum(retain_seconds=0.0)
+    _commit(vt, spark, [(4, "d", 4.0)])
+    got.clear()
+    with pytest.raises(Exception, match="vacuum-reclaimed"):
+        run_once()
+    assert got == []
 
 
 def test_stream_requires_cdc_option(vt, spark, tmp_path):
@@ -457,7 +493,7 @@ def test_cdc_backfill_plans_multiple_partitions(vt, spark):
     tail = reader.partitions({"csn": 1}, {"csn": 2})
     assert {p.csn for p in tail} == {2}
     # rows across partitions reassemble the full change feed exactly once
-    rows = [r for p in parts for r in reader.read(p)]
+    rows = change_rows(reader, parts)
     assert len(rows) == 80
     assert {(r[0], r[3], r[4]) for r in rows} == {
         (i, c, "upsert") for i in range(40) for c in (1, 2)

@@ -13,10 +13,11 @@ leaks, rollback bleed) actually hide."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F, types as T
 
 from db_core_spark.plans import VersionedTable
+from tests.conftest import change_rows
 
 SCHEMA = T.StructType(
     [
@@ -592,10 +593,8 @@ def test_cdc_windows_tile_the_ledger(spark, tmp_path_factory, script, cuts):
     )
 
     def rows(lo, hi):
-        out = []
-        for p in reader.partitions({"csn": lo}, {"csn": hi}):
-            out.extend(reader.read(p))
-        return sorted(out, key=str)
+        parts = reader.partitions({"csn": lo}, {"csn": hi})
+        return sorted(change_rows(reader, parts), key=str)
 
     bounds = sorted({0, head, *[min(c, head) for c in cuts]})
     tiled = []
@@ -731,6 +730,8 @@ rb_step = st.one_of(
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(script=st.lists(rb_step, min_size=2, max_size=5), probe=st.integers(0, 4))
+# a file-less checkpoint read whole after a rebucket, under a key filter
+@example(script=[[("delete", 0)], "checkpoint", ("rebucket", 1)], probe=0)
 def test_rebucket_mixed_layouts_stay_readable(
     spark, tmp_path_factory, script, probe
 ):

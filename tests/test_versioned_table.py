@@ -22,7 +22,7 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from db_core_spark.plans import ConflictError, VersionedTable
-from tests.conftest import window_snapshot
+from tests.conftest import change_rows, window_snapshot
 
 SCHEMA = T.StructType(
     [
@@ -711,7 +711,7 @@ def test_alter_add_column_schema_evolution(vt, spark):
     from db_core_spark.sources.versioned_datasource import VersionedChangeStreamReader
 
     rdr = VersionedChangeStreamReader(new_schema, {"path": vt.path})
-    rows = [r for p in rdr.partitions({"csn": 0}, {"csn": 2}) for r in rdr.read(p)]
+    rows = change_rows(rdr, rdr.partitions({"csn": 0}, {"csn": 2}))
     by_key = {}
     for r in rows:
         by_key.setdefault(r[0], []).append(r)
@@ -736,7 +736,7 @@ def test_empty_op_commit_is_harmless(vt, spark):
     from db_core_spark.sources.versioned_datasource import VersionedChangeStreamReader
 
     rdr = VersionedChangeStreamReader(SCHEMA, {"path": vt.path})
-    rows = [r for p in rdr.partitions({"csn": 0}, {"csn": 2}) for r in rdr.read(p)]
+    rows = change_rows(rdr, rdr.partitions({"csn": 0}, {"csn": 2}))
     assert [(r[0], r[3]) for r in rows] == [(1, 1)]
     # and life continues on top of the empty commit
     t = vt.begin()
