@@ -58,7 +58,9 @@ deltas above it. Point reads (`lookup()`, and the ObjectStore reads that
 see no buffered writes) run the same fold for the key's one bucket in the
 driver process and schedule no Spark job. The version-chain view,
 `history()`, runs the same job with the reader's unresolved read
-(`versions`) as its task. `Transaction.read()` layers a transaction's
+(`versions`) as its task; the change feed, `changes()`, runs it over its
+pinned window's op bucket dirs with the CDC stream reader's `read`, at
+most one task per core. `Transaction.read()` layers a transaction's
 buffered ops over `snapshot(start_csn)`, so the fold is the one
 visibility rule across commits.
 """
@@ -68,6 +70,7 @@ from __future__ import annotations
 import datetime
 import functools
 import json
+import operator
 import os
 import shutil
 import threading
@@ -252,9 +255,9 @@ def _partition_ids(batches):
         yield from batch.column(0).to_pylist()
 
 
-def _snapshot_task(reader, parts: list, batches):
-    """The snapshot job's mapInArrow function: stream the folds of its
-    reader partitions, one bucket at a time (`read`)."""
+def _read_task(reader, parts: list, batches):
+    """The snapshot and change-feed jobs' mapInArrow function: stream
+    ``reader.read`` of each partition the task was handed."""
     for i in _partition_ids(batches):
         yield from reader.read(parts[i])
 
@@ -919,18 +922,21 @@ class VersionedTable:
             ops=self._committed_ops(csn), **kw,
         )
 
-    def _fold_job(self, reader, task, schema) -> DataFrame:
-        """The one job of a snapshot, checkpoint or history: a mapInArrow
-        over spark.range(partitions) in which task i runs ``task(reader,
-        parts, batches)`` on reader partition i. A mapInArrow job, not an
-        RDD one: it runs in the Python workers the commit staging jobs use,
-        where a process's first RDD job starts another worker pool (~2 s).
-        An empty pinned op list folds to nothing: an empty local frame, no
-        Python job."""
-        if not reader.ops:
+    def _fold_job(self, reader, task, schema, parts: list | None = None) -> DataFrame:
+        """The one job of a snapshot, checkpoint, history or change feed: a
+        mapInArrow over spark.range(len(parts)) (default: the reader's
+        partitions) in min(len(parts), defaultParallelism) tasks, each
+        running ``task(reader, parts, batches)`` on the partition indices
+        it is handed. A mapInArrow job, not an RDD one: it runs in the
+        Python workers the commit staging jobs use, where a process's first
+        RDD job starts another worker pool (~2 s). An empty pinned op list
+        or partition list reads nothing: an empty local frame, no job."""
+        if parts is None:
+            parts = reader.partitions() if reader.ops else []
+        if not parts:
             return literal_frame(self.spark, [], schema)
-        parts = reader.partitions()
-        return self.spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
+        width = min(len(parts), self.spark.sparkContext.defaultParallelism)
+        return self.spark.range(len(parts), numPartitions=width).mapInArrow(
             functools.partial(task, reader, parts), schema
         )
 
@@ -954,7 +960,7 @@ class VersionedTable:
         handle's `self.schema`: another handle's alter_add_column makes
         that stale."""
         reader = self._pinned_reader(as_of_csn)
-        return self._fold_job(reader, _snapshot_task, reader.output_schema())
+        return self._fold_job(reader, _read_task, reader.output_schema())
 
     def lookup(self, key: dict) -> DataFrame:
         """Point/prefix lookup by bucket-column values, answered in-process:
@@ -1055,28 +1061,30 @@ class VersionedTable:
     ) -> DataFrame:
         """BATCH change feed (Delta's table_changes(from, to) shape): every
         change row committed in (from_csn, to_csn], with (_csn, _change)
-        and pre-image retraction rows where the table records them. The
-        batch twin of the CDC stream — same partition planning (one input
-        partition per op/bucket dir), no streaming checkpoint needed. Use
+        and pre-image retraction rows where the table records them. Use
         `diff()` for the endpoint comparison instead of the full ledger.
         ``include_opseq`` additionally exposes the op's position within its
         transaction as ``_opseq`` — required whenever a consumer resolves
         'latest change per key' (one txn may upsert AND delete the same
-        key: both rows share a csn, and only opseq orders them)."""
-        from db_core_spark.sources import register_versioned_format  # noqa: PLC0415
+        key: both rows share a csn, and only opseq orders them).
 
-        register_versioned_format(self.spark)
-        reader = (
-            self.spark.read.format("versioned")
-            .option("path", self.path)
-            .option("readChanges", "true")
-            .option("fromCsn", str(from_csn))
+        Pinned when called, as snapshot() is: to_csn (default: the latest
+        csn) is resolved and the CDC stream reader plans the window here,
+        so ``from_csn > to_csn`` and a vacuum-reclaimed window raise from
+        changes() itself. One `_fold_job` runs that reader's `read`."""
+        from db_core_spark.sources.versioned_datasource import (  # noqa: PLC0415
+            VersionedChangeStreamReader,
         )
-        if to_csn is not None:
-            reader = reader.option("toCsn", str(to_csn))
-        if include_opseq:
-            reader = reader.option("includeOpseq", "true")
-        return reader.load()
+
+        reader = VersionedChangeStreamReader(
+            None, {"path": self.path, "includeopseq": str(include_opseq).lower()}
+        )
+        if to_csn is None:
+            to_csn = self.latest_csn()
+        if from_csn > to_csn:
+            raise ValueError(f"changes: from_csn {from_csn} > to_csn {to_csn}")
+        parts = reader.partitions({"csn": from_csn}, {"csn": to_csn})
+        return self._fold_job(reader, _read_task, reader.feed_schema, parts)
 
     # ----------------------------------------------------------- maintenance
 
@@ -1367,9 +1375,10 @@ class VersionedTable:
                     "key-level merge cannot be computed"
                 )
             keys: set = set()
-            for m in t._manifests():
-                if m.get("type") == "checkpoint" or m["csn"] <= base_csn:
+            for c, is_ck, name in names:
+                if is_ck or c <= base_csn:
                     continue
+                m = t._read_manifest(name)
                 wk = m.get("write_keys")
                 if wk is None:
                     raise ConflictError(
@@ -1468,7 +1477,9 @@ class VersionedTable:
         total_bytes = 0
         per_bucket: dict[int, int] = {}
         for op in ops:
-            for root, _dirs, files in os.walk(op["dir"]):
+            for root, dirs, files in os.walk(op["dir"]):
+                # _preimg/ (CDC before-images) is not in the fold set
+                dirs[:] = [d for d in dirs if not d.startswith("_")]
                 bucket = None
                 base = os.path.basename(root)
                 if base.startswith("bucket="):
@@ -1879,9 +1890,9 @@ class Transaction:
         CDC before-images (config.cdc_preimages or commit(capture_preimages=
         True)): for each op, the previous values of the op's keys — folded
         through EARLIER ops of the same txn, so multi-op txns retract
-        correctly — are written to an `_preimg/` subdir of the op dir.
-        Underscore-prefixed, so every snapshot reader (JVM parquet scan,
-        pyarrow dataset, the versioned DataSource) ignores it by
+        correctly — are staged like an op frame into an `_preimg/` subdir
+        of the op dir, and the op records ``preimages: true``.
+        Underscore-prefixed, so every snapshot reader ignores it by
         convention; only the CDC stream reader targets it explicitly."""
         t = self.table
         capture = (
@@ -1893,11 +1904,26 @@ class Transaction:
         # start, updated per op below (lazy plans; op counts are small)
         state = t.snapshot(as_of_csn=self.start_csn) if capture else None
         kc = t.key_cols
+        data_cols = [f.name for f in t.schema.fields]
         ops_meta = []
         write_sets = []
+
+        def stage_frame(frame, args, out_dir):
+            # one mapInArrow job over the frame's partitions; only the
+            # files a successful task reported are kept
+            staged = frame.mapInArrow(
+                functools.partial(
+                    _stage_task, *args, out_dir, t.num_buckets, t.bucket_cols, kc
+                ),
+                "paths array<string>, keys array<array<string>>",
+            ).collect()
+            paths = [p for r in staged for p in r.paths]
+            keep_reported(out_dir, paths)
+            return paths, [r.keys for r in staged]
+
         for op in self._ops:
             out_dir = os.path.join(t._data_dir, f"tsn={self.tsn}", f"opseq={op.opseq}")
-            names = [f.name for f in t.schema.fields] if op.kind == "upsert" else kc
+            names = data_cols if op.kind == "upsert" else kc
             frame = op.df.select(*names)
             args = (t.schema, names, op.kind == "delete", op.opseq)
             # toArrow() reuses the plan this check optimized
@@ -1908,15 +1934,8 @@ class Transaction:
                 )
                 write_sets.append(keys)
             else:
-                staged = frame.mapInArrow(
-                    functools.partial(
-                        _stage_task, *args, out_dir, t.num_buckets, t.bucket_cols, kc
-                    ),
-                    "paths array<string>, keys array<array<string>>",
-                ).collect()
-                paths = [p for r in staged for p in r.paths]
-                keep_reported(out_dir, paths)
-                write_sets.extend(r.keys for r in staged)
+                paths, keys = stage_frame(frame, args, out_dir)
+                write_sets.extend(keys)
             # an op that staged ZERO rows (empty upsert / delete of nothing)
             # writes no parquet files — referencing its dir would break
             # every reader, so it is dropped from the manifest (the commit
@@ -1931,22 +1950,28 @@ class Transaction:
             if capture:
                 # preimages: previous values of this op's keys, relative to
                 # the running pre-state (committed snapshot + earlier ops of
-                # this txn) — the retraction rows an incremental MV needs
-                written = self.table.spark.read.parquet(out_dir).select(
-                    *[f.name for f in t.schema.fields], "_deleted"
+                # this txn) — the retraction rows an incremental MV needs.
+                # Keys match null-safely, as the fold groups them.
+                written = t.spark.read.parquet(out_dir).select(*data_cols, "_deleted")
+                op_keys = written.select(
+                    *[F.col(c).alias(f"_key{i}") for i, c in enumerate(kc)]
+                ).distinct()
+                same_key = functools.reduce(operator.and_, [
+                    F.col(c).eqNullSafe(F.col(f"_key{i}")) for i, c in enumerate(kc)
+                ])
+                # an op none of whose keys had a pre-state row gets no dir
+                stage_frame(
+                    state.join(op_keys, same_key, "left_semi").select(*data_cols),
+                    (t.schema, data_cols, False, op.opseq),
+                    os.path.join(out_dir, "_preimg"),
                 )
-                op_keys = written.select(*kc).distinct()
-                pre = state.join(op_keys, kc, "left_semi")
-                pre_dir = os.path.join(out_dir, "_preimg")
-                pre.write.mode("errorifexists").parquet(pre_dir)
-                if any(f.endswith(".parquet") for f in os.listdir(pre_dir)):
-                    ops_meta[-1]["preimages"] = True
+                ops_meta[-1]["preimages"] = True
                 if op.kind == "upsert":
                     state = written.filter(~F.col("_deleted")).drop(
                         "_deleted"
-                    ).unionByName(state.join(op_keys, kc, "left_anti"))
+                    ).unionByName(state.join(op_keys, same_key, "left_anti"))
                 else:
-                    state = state.join(op_keys, kc, "left_anti")
+                    state = state.join(op_keys, same_key, "left_anti")
         # write-set keys come from the rows that were staged, not from a
         # second execution of op.df, so the tracked set is exact even if a
         # source plan were nondeterministic. key_string form: JSON-safe

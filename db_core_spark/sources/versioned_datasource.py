@@ -42,7 +42,11 @@ yield `versions` unresolved; lookup() and the ObjectStore's committed
 reads fold the key's one bucket in the driver. Transaction.read starts
 from a snapshot. Ops whose bucket count differs from the table meta
 (layout migration) are read whole and row-filtered by bucket, per op. The
-CDC readers read one op dir per partition and yield Arrow batches.
+change feed has one read too: the CDC stream reader plans one partition
+per op bucket dir (or _preimg dir) of a csn window and yields its rows as
+Arrow batches; VersionedTable.changes() pins a window and runs that read
+in one `_fold_job` of min(partitions, defaultParallelism) tasks. A batch
+format("versioned") load with readChanges is refused.
 
 Commit log: this module keeps no copy of the protocol. Readers and writers
 call the functions in plans/versioned.py that VersionedTable and
@@ -524,8 +528,8 @@ class VersionedSnapshotReader(DataSourceReader):
 
 @dataclass
 class CDCPartition(InputPartition):
-    """One executor task of a CDC micro-batch: a single directory (an op
-    dir's bucket=<b>/ subdirs, or an op's _preimg dir) plus the
+    """One input partition of a CDC window: a single directory (an op
+    dir's bucket=<b>/ subdir, or an op's _preimg dir) plus the
     commit identity to stamp on its rows. ``opseq`` is the op's position
     WITHIN its transaction — surfaced as an ``_opseq`` column only when
     the reader was opened with includeOpseq (merge_from needs it: a txn
@@ -544,17 +548,19 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
     WAL-tailing parity: src/log_mgr/io.rs:254-441.
 
     Scale shape: the driver only lists manifests (metadata); each bucket
-    subdir of an op dir becomes its own input
-    partition, so a large backfill replay fans out across executors instead
-    of funneling through the driver (the round-1 Simple reader read every
-    batch driver-side; this keeps its csn-offset contract)."""
+    subdir of an op dir becomes its own input partition, so a large
+    backfill replay fans out across executors instead of funneling through
+    the driver. VersionedTable.changes() plans a window with `partitions`
+    and reads it with `read` in one fold job of at most one task per core,
+    so the batch and stream feeds share one read."""
 
     def __init__(self, schema: T.StructType, options: dict):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         self.path = options["path"]
         self.key_cols, self.data_schema, _, _ = _load_meta(self.path)
-        self.arrow_schema = to_arrow_schema(_changes_schema(self.data_schema, options))
+        self.feed_schema = _changes_schema(self.data_schema, options)
+        self.arrow_schema = to_arrow_schema(self.feed_schema)
         start = options.get("startingcsn")
         self.start_csn = int(start) if start is not None else 0
 
@@ -584,20 +590,19 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
         # an aborted/force-aborted group contributes no change rows
         for m in visible_manifests(self.path, names, lo, hi, _table_grace(self.path)):
             for op in m["ops"]:
-                has_pre = bool(op.get("preimages"))
+                part = functools.partial(
+                    CDCPartition, csn=m["csn"], opseq=int(op.get("opseq", 0))
+                )
+                # an op that captured preimages and found no pre-state row
+                # has no _preimg dir
                 pre_dir = os.path.join(op["dir"], "_preimg")
-                if has_pre and op["kind"] == "delete":
-                    # preimage-enabled delete: emit the old rows WITH their
-                    # column values as the delete change rows (instead of
-                    # the key-only tombstones in the op dir) — deleting a
-                    # key that never existed emits nothing, which is the
-                    # correct retraction semantics
-                    parts.append(
-                        CDCPartition(
-                            dir=pre_dir, csn=m["csn"], kind="delete",
-                            opseq=int(op.get("opseq", 0)),
-                        )
-                    )
+                pre = op.get("preimages") and os.path.isdir(pre_dir)
+                if op.get("preimages") and op["kind"] == "delete":
+                    # preimage-enabled delete: the old rows WITH their column
+                    # values are the delete change rows (not the key-only
+                    # tombstones in the op dir) — deleting a key that never
+                    # existed emits nothing, the correct retraction
+                    parts += [part(dir=pre_dir, kind="delete")] if pre else []
                     continue
                 bucket_dirs = (
                     sorted(
@@ -608,22 +613,11 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
                     if os.path.isdir(op["dir"])
                     else []
                 )
-                for d in bucket_dirs or [op["dir"]]:
-                    parts.append(
-                        CDCPartition(
-                            dir=d, csn=m["csn"], kind=op["kind"],
-                            opseq=int(op.get("opseq", 0)),
-                        )
-                    )
-                if has_pre:
+                parts += [part(dir=d, kind=op["kind"]) for d in bucket_dirs or [op["dir"]]]
+                if pre:
                     # upsert with preimages: previous values of updated keys
                     # ride along as update_preimage retraction rows
-                    parts.append(
-                        CDCPartition(
-                            dir=pre_dir, csn=m["csn"], kind="update_preimage",
-                            opseq=int(op.get("opseq", 0)),
-                        )
-                    )
+                    parts.append(part(dir=pre_dir, kind="update_preimage"))
         return parts
 
     def read(self, partition: CDCPartition):
@@ -930,7 +924,9 @@ class VersionedStreamWriter(DataSourceStreamWriter):
 
 class VersionedDataSource(DataSource):
     """format("versioned"): batch snapshot / time-travel reads, CDC streaming
-    reads, and transactional appends over a VersionedTable directory."""
+    reads, and transactional appends over a VersionedTable directory. The
+    batch change feed is VersionedTable.changes(), which runs the stream
+    reader's planning and read in one fold job."""
 
     @classmethod
     def name(cls) -> str:
@@ -947,7 +943,10 @@ class VersionedDataSource(DataSource):
 
     def reader(self, schema: T.StructType) -> DataSourceReader:
         if self._mode() == "true":
-            return VersionedChangesBatchReader(schema, dict(self.options))
+            raise ValueError(
+                "batch change-feed reads go through VersionedTable.changes(); "
+                "readChanges is a readStream option"
+            )
         return VersionedSnapshotReader(schema, dict(self.options))
 
     def writer(self, schema: T.StructType, overwrite: bool) -> DataSourceWriter:
@@ -979,34 +978,3 @@ class VersionedDataSource(DataSource):
 def register(spark) -> None:
     """Idempotently register format('versioned') on a session."""
     spark.dataSource.register(VersionedDataSource)
-
-
-class VersionedChangesBatchReader(DataSourceReader):
-    """BATCH change feed (the table_changes(from, to) shape): every change
-    row committed in (fromCsn, toCsn], with (_csn, _change) metadata and
-    pre-image retraction rows where the table records them. Reuses the
-    stream reader's name-bounded partition planning verbatim, so a batch
-    backfill fans out one input partition per op/bucket dir exactly like a
-    streaming replay — the driver only lists manifests."""
-
-    def __init__(self, schema: T.StructType, options: dict):
-        self._delegate = VersionedChangeStreamReader(schema, options)
-        from_csn = int(options.get("fromcsn", 0))
-        to = options.get("tocsn")
-        to_csn = int(to) if to is not None else self._delegate.latestOffset()["csn"]
-        if from_csn > to_csn:
-            raise ValueError(f"fromCsn {from_csn} > toCsn {to_csn}")
-        self._window = ({"csn": from_csn}, {"csn": to_csn})
-
-    def partitions(self):
-        # a commit vacuum reclaimed inside the window raises here, as it
-        # does for a stream
-        parts = self._delegate.partitions(*self._window)
-        # an empty batch window still needs ONE partition: Spark's batch
-        # DataSource path calls read(None) when the list is empty
-        return parts or [CDCPartition(dir="", csn=0, kind="_empty")]
-
-    def read(self, partition):
-        if partition is None or partition.kind == "_empty":
-            return iter(())
-        return self._delegate.read(partition)

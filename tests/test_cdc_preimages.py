@@ -8,6 +8,8 @@ image before a write)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F, types as T
 
@@ -183,3 +185,46 @@ def test_preimg_dirs_invisible_to_snapshot_readers(vt, spark, tmp_path):
     assert {(r.k, r.v) for r in window_snapshot(vt).collect()} == {(1, 11)}
     # history (raw version scan) also unpolluted by preimage files
     assert vt.history().count() == 2
+
+
+def test_null_key_preimages_retract(vt, spark):
+    """A NULL key's update and delete carry its before-image like any other
+    key's: preimage capture matches keys null-safely, as the fold does, so
+    an incremental MV over the feed converges to the (empty) snapshot."""
+    t = vt.begin()
+    t.upsert(rows(spark, (None, "a", 10), (1, "a", 1)))
+    t.commit()
+    t = vt.begin()
+    t.upsert(rows(spark, (None, "a", 11), (1, "a", 2)))
+    t.commit()
+    t = vt.begin()
+    t.delete_keys([(None,), (1,)])
+    t.commit()
+
+    got = {(r.k, r.grp, r.v, r._csn, r._change) for r in vt.changes().collect()}
+    assert got == {
+        (None, "a", 10, 1, "upsert"),
+        (1, "a", 1, 1, "upsert"),
+        (None, "a", 11, 2, "upsert"),
+        (1, "a", 2, 2, "upsert"),
+        (None, "a", 10, 2, "update_preimage"),
+        (1, "a", 1, 2, "update_preimage"),
+        (None, "a", 11, 3, "delete"),
+        (1, "a", 2, 3, "delete"),
+    }
+    signed = sum(v if ch == "upsert" else -v for _, _, v, _, ch in got)
+    assert signed == 0 and vt.snapshot().count() == 0
+
+
+def test_preimage_delete_of_absent_key_emits_nothing(vt, spark):
+    """A preimage-enabled delete of a key with no row stages no _preimg
+    dir; the op still records preimages, so its key-only tombstone is not
+    emitted as a delete change row."""
+    t = vt.begin()
+    t.delete_keys([(0,)])
+    csn = t.commit()
+    m = vt._read_manifest(f"{csn:010d}.json")
+    (op,) = m["ops"]
+    assert op["preimages"] is True
+    assert not os.path.exists(os.path.join(op["dir"], "_preimg"))
+    assert vt.changes().collect() == []

@@ -368,6 +368,39 @@ def test_merge_from_upsert_then_delete_same_txn(spark, tmp_path):
     }
 
 
+def test_merge_from_opens_only_the_manifests_in_its_window(spark, tmp_path, monkeypatch):
+    """merge_from's change sets read only the commit manifests above the
+    base csn, on both sides — not every manifest of both logs."""
+    from db_core_spark.plans.versioned import ConflictError
+
+    src = VersionedTable.create(spark, str(tmp_path / "src"), key_cols=["k"], schema=SCHEMA)
+    for i in range(4):
+        put(spark, src, [(i, "base", 0.0)])
+    src.checkpoint()
+    br = src.clone(str(tmp_path / "branch"))
+    base = src.latest_csn()
+    put(spark, src, [(0, "ours", 1.0)])
+    put(spark, br, [(0, "theirs", 2.0)])
+    put(spark, br, [(7, "new", 3.0)])
+
+    calls: list[tuple[str, str]] = []
+    orig = VersionedTable._read_manifest
+
+    def counting(self, name):
+        calls.append((self.path, name))
+        return orig(self, name)
+
+    monkeypatch.setattr(VersionedTable, "_read_manifest", counting)
+    # the conflict on k=0 raises before any apply: every read is the
+    # change-set computation's
+    with pytest.raises(ConflictError):
+        src.merge_from(br)
+    assert sorted(calls) == sorted(
+        [(src.path, f"{base + 1:010d}.json")]
+        + [(br.path, f"{c:010d}.json") for c in (base + 1, base + 2)]
+    )
+
+
 def test_changes_include_opseq_orders_within_txn(spark, tmp_path):
     """The public feed shape stays (_csn, _change); include_opseq opts in
     to the op's within-txn position so consumers can totally order changes

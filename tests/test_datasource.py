@@ -10,6 +10,12 @@ Parity concerns mirrored (citations into /root/reference):
 
 from __future__ import annotations
 
+import ast
+import inspect
+import textwrap
+import uuid
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F, types as T
 
@@ -683,6 +689,110 @@ def test_batch_changes_refuses_vacuum_reclaimed_window(spark, tmp_path):
     # window spanning reclaimed commits: loud failure, not a partial feed
     with pytest.raises(Exception, match="vacuum-reclaimed"):
         vt.changes(from_csn=0).count()
+
+
+@contextmanager
+def job_tasks(spark):
+    """Yields a list that holds, on exit, the task count of each Spark job
+    started inside the block (its stages' tasks, counted through the
+    status tracker's job group)."""
+    sc = spark.sparkContext
+    group = f"changes-{uuid.uuid4().hex}"
+    out: list[int] = []
+    sc.setJobGroup(group, "changes")
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        for job in sorted(tracker.getJobIdsForGroup(group)):
+            stages = tracker.getJobInfo(job).stageIds
+            out.append(sum(tracker.getStageInfo(s).numTasks for s in stages))
+
+
+def _bucketed_feed_table(spark, tmp_path, commits: int):
+    vt = VersionedTable.create(
+        spark, str(tmp_path / "feed"), key_cols=["k"], schema=SCHEMA, num_buckets=16
+    )
+    for c in range(commits):
+        _commit(vt, spark, [(i, f"c{c}", float(i)) for i in range(50)])
+    return vt
+
+
+def test_changes_runs_one_job_of_at_most_one_task_per_core(spark, tmp_path):
+    """changes() reads every op bucket dir of its window in ONE job of
+    min(dirs, defaultParallelism) tasks, each reading the dirs spark.range
+    hands it — not one Python task per op x bucket dir."""
+    from db_core_spark.sources.versioned_datasource import (
+        VersionedChangeStreamReader,
+    )
+
+    vt = _bucketed_feed_table(spark, tmp_path, commits=3)
+    dirs = VersionedChangeStreamReader(None, {"path": vt.path}).partitions(
+        {"csn": 0}, {"csn": 3}
+    )
+    cores = spark.sparkContext.defaultParallelism
+    assert len(dirs) > cores
+    with job_tasks(spark) as tasks:
+        rows = vt.changes().collect()
+    assert tasks == [cores]
+    assert len(rows) == 150
+    assert {(r.k, r.v, r._csn) for r in rows} == {
+        (i, f"c{c}", c + 1) for i in range(50) for c in range(3)
+    }
+
+
+def test_changes_empty_window_runs_no_job(spark, tmp_path):
+    vt = _bucketed_feed_table(spark, tmp_path, commits=1)
+    with job_tasks(spark) as tasks:
+        assert vt.changes(from_csn=1).collect() == []
+        assert vt.changes(from_csn=1, include_opseq=True).columns[-1] == "_opseq"
+    assert tasks == []
+
+
+def test_changes_pins_and_checks_its_window_at_the_call(vt, spark):
+    """from_csn > to_csn and a window vacuum reclaimed raise from changes()
+    itself, and the window is the one resolved at the call: a commit after
+    it is not in the frame."""
+    for i in range(3):
+        _commit(vt, spark, [(i, f"v{i}", float(i))])
+    with pytest.raises(ValueError, match="from_csn 3 > to_csn 1"):
+        vt.changes(from_csn=3, to_csn=1)
+    feed = vt.changes(from_csn=1)
+    _commit(vt, spark, [(9, "late", 9.0)])
+    assert {(r.k, r._csn) for r in feed.collect()} == {(1, 2), (2, 3)}
+    vt.checkpoint()
+    vt.vacuum(retain_seconds=0)
+    # every delta is reclaimed and none came after: still loud, not empty
+    with pytest.raises(RuntimeError, match="vacuum-reclaimed"):
+        vt.changes(from_csn=0)
+    assert vt.changes(from_csn=4).collect() == []
+
+
+def test_batch_read_changes_load_is_refused(vt, spark):
+    _commit(vt, spark, [(1, "a", 1.0)])
+    with pytest.raises(Exception, match=r"VersionedTable\.changes\(\)"):
+        (
+            spark.read.format("versioned")
+            .option("path", vt.path)
+            .option("readChanges", "true")
+            .load()
+            .collect()
+        )
+
+
+def test_changes_builds_through_the_fold_job():
+    from db_core_spark.sources import versioned_datasource
+
+    assert not hasattr(versioned_datasource, "VersionedChangesBatchReader")
+    calls = {
+        n.func.attr if isinstance(n.func, ast.Attribute) else getattr(n.func, "id", "")
+        for n in ast.walk(ast.parse(textwrap.dedent(inspect.getsource(VersionedTable.changes))))
+        if isinstance(n, ast.Call)
+    }
+    assert "_fold_job" in calls
+    assert not {"format", "load", "register_versioned_format"} & calls
 
 
 def test_datasource_group_visibility_uses_table_grace(spark, tmp_path):

@@ -4,8 +4,9 @@ Every op, checkpoint and DataSource part file is written by
 ``write_bucket_file`` (through ``write_bucketed`` for op parts), so the
 bucket hash, the file layout and the rename-into-place rule live once. No
 second writer may come back: no other ``pq.write_table`` call, no JVM
-``partitionBy("bucket")`` staging write and no JVM twin of the bucket hash.
-The CDC ``_preimg`` write is a JVM write of unbucketed rows and stays.
+``partitionBy("bucket")`` staging write, no JVM twin of the bucket hash and
+no DataFrameWriter chain (``<frame>.write.<...>``) — the CDC ``_preimg``
+rows are staged by the same writer as an op's.
 """
 
 from __future__ import annotations
@@ -60,6 +61,14 @@ def test_one_data_file_writer(path):
         and any(isinstance(a, ast.Constant) and a.value == "bucket" for a in n.args)
     ]
     assert calls == []
+    # no DataFrameWriter chain, <frame>.write.<...>
+    writer_chains = [
+        n.lineno for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+        and isinstance(n.value, ast.Attribute)
+        and n.value.attr == "write"
+    ]
+    assert writer_chains == []
 
 
 def test_write_bucket_file_is_in_the_scanned_sources():

@@ -803,6 +803,8 @@ def test_rebucket_mixed_layouts_stay_readable(
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(script=script)
+# a delete of a key that never existed: no pre-state row, no change row
+@example(script=[([("delete", 0)], True)])
 def test_preimage_retraction_fold_equals_snapshot_aggregates(
     spark, tmp_path_factory, script
 ):

@@ -830,6 +830,31 @@ def test_stats_reports_live_fold_set(vt, spark):
     assert s3["csn"] == 3  # history metadata intact
 
 
+def test_stats_counts_only_the_fold_set_with_preimages(spark, tmp_path):
+    """CDC before-images under an op's _preimg/ are not in the fold set:
+    a table that captures them reports the same live files, per bucket
+    too, as one that does not."""
+    from db_core_spark.config import EngineConfig
+
+    def table(name, preimages):
+        vt = VersionedTable.create(
+            spark, str(tmp_path / name), key_cols=["k"], schema=SCHEMA,
+            config=EngineConfig(cdc_preimages=preimages, num_buckets=4),
+        )
+        for i in range(3):
+            t = vt.begin()
+            t.upsert(spark.createDataFrame([(1, f"a{i}", 1.0), (2, f"b{i}", 2.0)], SCHEMA))
+            t.commit()
+        return vt
+
+    plain, pre = table("plain", False), table("pre", True)
+    assert any("_preimg" in root for root, _, files in os.walk(pre.path) if files)
+    s_plain, s_pre = plain.stats(), pre.stats()
+    assert s_pre["n_live_files"] == s_plain["n_live_files"] == 6
+    assert s_pre["files_per_bucket"] == s_plain["files_per_bucket"]
+    assert sum(s_pre["files_per_bucket"].values()) == 6
+
+
 def test_vacuum_dry_run_predicts_without_deleting(vt, spark):
     for i in range(4):
         t = vt.begin()
