@@ -14,7 +14,9 @@ re-exposed here; per SURVEY.md §4.2 they map to session/cluster config:
 | version_retain_time (3600 s)    | -> version_retain_seconds                |
 | writer_num, block_fill_ratio    | Spark task writers / parquet row groups  |
 | lock striping (tran_mgr)        | -> plans.versioned.MAX_TRACKED_KEYS, a   |
-|                                 |    constant write-set degradation bound  |
+|                                 |    constant row bound above which a      |
+|                                 |    commit's write-set (read from its op  |
+|                                 |    files) is untracked                   |
 | wait_for timeouts (tran_mgr.rs:108-127) | -> conflict_retry_attempts       |
 
 Session-level knobs (cores, shuffle partitions, AQE, Arrow) live in

@@ -438,8 +438,7 @@ class GroupTransaction:
             # skip the marker round-trip entirely
             (name, txn), = touched.items()
             try:
-                ops_meta, keys = txn._stage()
-                return {name: txn._claim(ops_meta, keys, extra=extra)}
+                return {name: txn._claim(txn._stage(), extra=extra)}
             except BaseException:
                 txn._discard_staged()  # failed commit leaves no orphans
                 raise
@@ -459,9 +458,8 @@ class GroupTransaction:
             # 2. CLAIM per-table csns; manifests carry the group field and
             # are invisible until the marker decides
             for name, txn in touched.items():
-                ops_meta, keys = staged[name]
                 claimed[name] = txn._claim(
-                    ops_meta, keys, extra=extra, group=group_field
+                    staged[name], extra=extra, group=group_field
                 )
         except Exception:
             # 3a. DECIDE: abort. Already-claimed manifests stay as empty

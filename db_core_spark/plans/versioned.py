@@ -12,8 +12,9 @@ Reference-parity map (citations into /root/reference):
 - tombstone delete             <- src/system/instance.rs:191-210 (deleted flag
   on entries). Here: _deleted=true rows that win the window hide the key.
 - optimistic conflict check    <- src/tran_mgr/tran_mgr.rs:85-127 replaces
-  pessimistic object locks: at commit, write-sets are compared against
-  manifests published since txn start (documented divergence, SURVEY.md §7.3).
+  pessimistic object locks: at commit, the keys in the txn's op files are
+  compared against those of the commits published since txn start
+  (documented divergence, SURVEY.md §7.3).
 - crash recovery               <- src/system/instance.rs:221-304 (restore
   checkpoint + redo log + rollback open txns). Here recovery is a *property*:
   state is the fold of published manifests; staged-but-unpublished files are
@@ -28,22 +29,22 @@ data/checkpoint-<csn>/bucket=<b>/ — every table is key-hash bucketed
 (num_buckets >= 1). `write_bucket_file` writes every data file, as a
 `_tmp-` file renamed into place (readers skip `_`-prefixed files).
 `stage_part` writes one part of an op: it splits the rows by
-`bucket_of_py` through `write_bucketed` and records their write-set. A
-commit casts each op to the table's types (`physical_rows`) and stages it
-in-process after one toArrow() job when its frame is a LocalRelation (rows
-already on the driver: pandas/Arrow frames, delete_keys lists, object
-chunks) — the reference's commit writes in-process too
-(system/instance.rs:141-187) — else in one shuffle-free mapInArrow job
-over the frame's own partitions; the versioned DataSource's batch and
-stream writers call `stage_part` on the executors. A driver publishing
-task-written files first deletes those no successful task reported
-(`keep_reported`). Every writer caps its write-set (`key_string` form)
-through `merge_write_sets` and claims its csn through `claim_csn`: the
-commit-log protocol (name-only log listing, op-list resolution from the
-newest checkpoint, group visibility, the reclaimed-history guard, the
-conflict-checked claim) exists once, as the module-level functions below,
-for VersionedTable, Transaction and the DataSource's readers and writers
-alike.
+`bucket_of_py` through `write_bucketed`. A commit casts each op to the
+table's types (`physical_rows`) and stages it in-process after one
+toArrow() job when its frame is a LocalRelation (rows already on the
+driver: pandas/Arrow frames, delete_keys lists, object chunks) — the
+reference's commit writes in-process too (system/instance.rs:141-187) —
+else in one shuffle-free mapInArrow job over the frame's own partitions;
+the versioned DataSource's batch and stream writers call `stage_part` on
+the executors. A driver publishing task-written files first deletes those
+no successful task reported (`keep_reported`). Every writer claims its csn
+through `claim_csn`. A manifest names its ops, not its keys: a commit's
+write-set is `op_write_set` of its ops, read from their files only when a
+conflict check or `merge_from` needs it. The commit-log protocol
+(name-only log listing, op-list resolution from the newest checkpoint,
+group visibility, the reclaimed-history guard, the conflict-checked claim)
+exists once, as the module-level functions below, for VersionedTable,
+Transaction and the DataSource's readers and writers alike.
 Snapshot reads and checkpoints pin their csn and op list on the driver
 and run one mapInArrow job (`_fold_job`) of min(num_buckets,
 defaultParallelism) tasks — one Python task per core, never more tasks
@@ -300,64 +301,71 @@ def _checkpoint_task(out_dir: str, reader, parts: list, batches):
 
 
 def _stage_task(data_schema, names, deleted, opseq, out_dir, num_buckets, bucket_cols,
-                key_cols, batches):
+                batches):
     """Transaction._stage's mapInArrow function for an op frame that is not
     on the driver: the task's rows, cast to the table's types, staged as
-    one part (stage_part); yields one row of (relative paths, write-set)."""
+    one part (stage_part); yields one row of its relative paths."""
     import pyarrow as pa
 
     batches = list(batches)
-    paths, keys = [], set()
+    paths = []
     if batches:
         tbl = physical_rows(pa.Table.from_batches(batches), data_schema, names, deleted, opseq)
-        paths, keys = stage_part(tbl, out_dir, num_buckets, bucket_cols, key_cols)
+        paths = stage_part(tbl, out_dir, num_buckets, bucket_cols)
     yield pa.RecordBatch.from_pydict(
-        {"paths": [paths], "keys": [None if keys is None else [list(k) for k in keys]]},
-        schema=pa.schema([("paths", pa.list_(pa.string())),
-                          ("keys", pa.list_(pa.list_(pa.string())))]),
+        {"paths": [paths]}, schema=pa.schema([("paths", pa.list_(pa.string()))])
     )
 
 
-def key_string(v) -> str:
-    """Canonical write-set string of one key value: ``str()`` of the
-    python value, with a tz-aware timestamp first converted to naive UTC.
-    Every writer records its manifest ``write_keys`` through this, so a
-    key encodes the same whether its value is naive or tz-aware (pulled
-    with ``DataFrame.toArrow()``, or staged from a UTC-cast pyarrow
-    table) — the conflict check and merge_from compare these strings
-    directly."""
+def key_string(v) -> str | None:
+    """Canonical in-memory write-set value of one key value: ``str()`` of
+    the python value, with a tz-aware timestamp first converted to naive
+    UTC, and None for NULL (so a NULL key is not the string 'None'). A
+    write-set is never stored: the conflict check and merge_from encode
+    the keys they compare through this, from op files (op_write_set) or
+    from ``DataFrame.toArrow()``, so a key encodes the same whether its
+    value reads naive or tz-aware."""
+    if v is None:
+        return None
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
         v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return str(v)
 
 
-def write_set_keys(tbl, key_cols: list[str]) -> set[tuple[str, ...]]:
+def write_set_keys(tbl, key_cols: list[str]) -> set[tuple]:
     """The key_string write-set of a pyarrow table or record batch."""
-    cols = [
-        map(_column_encoder(tbl.schema.field(c).type, key_string), tbl.column(c).to_pylist())
-        for c in key_cols
-    ]
+    cols = []
+    for c in key_cols:
+        col = tbl.column(c)
+        enc = key_string if col.null_count else _column_encoder(col.type, key_string)
+        cols.append(map(enc, col.to_pylist()))
     return set(zip(*cols))
 
 
-#: write-set size above which conflict tracking degrades to 'conflicts
-#: with anything' (bounded driver memory, the safe direction); applied
-#: only through merge_write_sets
+#: rows above which a commit's write-set is untracked: it conflicts with
+#: any concurrent commit (bounded driver memory, the safe direction);
+#: applied only through op_write_set
 MAX_TRACKED_KEYS = 100_000
 
 
-def merge_write_sets(parts) -> set[tuple] | None:
-    """Union of per-part key_string write-sets (iterables of keys; None =
-    a part too large to track). Degrades to None — conflicts with
-    anything — when any part is untracked or the union exceeds
-    MAX_TRACKED_KEYS. Every writer caps its write-set here."""
+def op_write_set(ops: list[dict], key_cols: list[str]) -> set[tuple] | None:
+    """The key_string write-set of a commit's ops, read from their data
+    files — the rows that were staged, so the set is exact even if an op's
+    source plan was nondeterministic. The rows are first counted from the
+    parquet footers, and only the key columns are read, when that count is
+    at most MAX_TRACKED_KEYS; above it the set is None (untracked). pyarrow's
+    discovery skips ``_``-prefixed paths, so an op's ``_preimg/`` rows and
+    ``_tmp-`` files are not part of it. A missing op dir raises
+    FileNotFoundError."""
+    import pyarrow.dataset as pads
+
+    parts = [pads.dataset(op["dir"], format="parquet") for op in ops]
+    if sum(p.count_rows() for p in parts) > MAX_TRACKED_KEYS:
+        return None
     keys: set[tuple] = set()
-    for part in parts:
-        if part is None:
-            return None
-        keys.update(tuple(k) for k in part)
-        if len(keys) > MAX_TRACKED_KEYS:
-            return None
+    for p in parts:
+        if p.files:
+            keys |= write_set_keys(p.to_table(columns=key_cols), key_cols)
     return keys
 
 
@@ -385,14 +393,12 @@ def physical_rows(tbl, data_schema: T.StructType, names: list, deleted: bool, op
     )
 
 
-def stage_part(tbl, out_dir: str, num_buckets: int, bucket_cols: list, key_cols: list):
+def stage_part(tbl, out_dir: str, num_buckets: int, bucket_cols: list) -> list[str]:
     """Stage one part of an op: write the physical rows of pyarrow table
-    ``tbl`` through write_bucketed and return (relative paths, key_string
-    write-set, or None above MAX_TRACKED_KEYS). Every op writer calls it:
-    Transaction._stage in the driver or in a mapInArrow task, and the
-    DataSource's batch and stream writers."""
-    paths = write_bucketed(tbl, out_dir, num_buckets, bucket_cols)
-    return paths, merge_write_sets([write_set_keys(tbl, key_cols)])
+    ``tbl`` through write_bucketed and return the relative paths. Every op
+    writer calls it: Transaction._stage in the driver or in a mapInArrow
+    task, and the DataSource's batch and stream writers."""
+    return write_bucketed(tbl, out_dir, num_buckets, bucket_cols)
 
 
 def keep_reported(out_dir: str, rel_paths) -> None:
@@ -417,7 +423,7 @@ def publish_manifest(log_dir: str, name: str, manifest: dict) -> bool:
     system/instance.rs:212-219). On object stores this becomes a conditional put."""
     tmp = os.path.join(log_dir, f"_tmp-{uuid.uuid4().hex}.json")
     # json.dumps runs the C encoder; json.dump streams through the pure
-    # Python one (2-3x slower on a 50k-key write set)
+    # Python one
     payload = json.dumps(manifest)
     with open(tmp, "w") as f:
         f.write(payload)
@@ -498,7 +504,7 @@ def resolve_group_status(
 _LOG = "_commitlog"
 
 # protocol fields a caller's ``extra`` manifest fields may not overwrite
-_RESERVED_FIELDS = frozenset({"csn", "tsn", "ops", "write_keys", "ts", "type", "dir", "group"})
+_RESERVED_FIELDS = frozenset({"csn", "tsn", "ops", "ts", "type", "dir", "group"})
 
 
 def log_names(path: str) -> list[tuple[int, bool, str]]:
@@ -606,7 +612,7 @@ def check_conflicts(
     path: str,
     start_csn: int,
     upto: int,
-    my_keys: set[tuple] | None,
+    ops: list[dict],
     grace: float,
     who: str,
     *,
@@ -614,12 +620,15 @@ def check_conflicts(
     read=None,
     own_writer: str | None = None,
 ) -> None:
-    """Optimistic conflict check of a write-set against every commit in
-    (start_csn, upto): ConflictError when a visible concurrent commit's
-    write-set overlaps ``my_keys``, or either side is untracked (None).
-    A commit whose group is still pending is resolved first (bounded wait
-    + force-abort), so the check is never one-eyed. ``own_writer`` skips
-    the manifests a stream writer published itself. ``who`` prefixes the
+    """Optimistic conflict check of the commit of ``ops`` against every
+    commit in (start_csn, upto): ConflictError when a visible concurrent
+    commit's write-set overlaps this one's, or either side is untracked.
+    Both write-sets are op_write_set of the commits' ops, read only when
+    the window holds a visible concurrent commit; a concurrent op dir that
+    is gone raises, since isolation cannot be verified without it. A
+    commit whose group is still pending is resolved first (bounded wait +
+    force-abort), so the check is never one-eyed. ``own_writer`` skips the
+    manifests a stream writer published itself. ``who`` prefixes the
     error messages."""
     names = log_names(path) if names is None else names
     # completeness: a vacuum-reclaimed commit inside the window would make
@@ -632,15 +641,27 @@ def check_conflicts(
             f"vacuum-reclaimed commits {missing}; cannot verify write-set "
             "isolation — retry on a fresh snapshot"
         )
-    for m in visible_manifests(path, names, start_csn, upto - 1, grace, read):
-        if own_writer is not None and m.get("writer") == own_writer:
-            continue
-        theirs = m.get("write_keys")
-        if my_keys is None or theirs is None:
+    concurrent = [
+        m for m in visible_manifests(path, names, start_csn, upto - 1, grace, read)
+        if own_writer is None or m.get("writer") != own_writer
+    ]
+    if not concurrent:
+        return
+    key_cols = table_meta(path)["key_cols"]
+    mine = op_write_set(ops, key_cols)
+    for m in concurrent:
+        try:
+            theirs = op_write_set(m["ops"], key_cols)
+        except FileNotFoundError as exc:
+            raise ConflictError(
+                f"{who}: an op dir of concurrent commit csn={m['csn']} is gone; "
+                "cannot verify write-set isolation — retry on a fresh snapshot"
+            ) from exc
+        if mine is None or theirs is None:
             raise ConflictError(
                 f"{who}: concurrent commit csn={m['csn']} with untracked write-set"
             )
-        if my_keys & {tuple(k) for k in theirs}:
+        if mine & theirs:
             raise ConflictError(
                 f"{who}: write-set overlaps concurrent commit csn={m['csn']}"
             )
@@ -651,7 +672,6 @@ def claim_csn(
     start_csn: int,
     tsn: str,
     ops: list[dict],
-    my_keys: set[tuple] | None,
     grace: float,
     who: str,
     *,
@@ -663,7 +683,10 @@ def claim_csn(
     publish=None,
 ) -> int:
     """Claim the next csn by atomic manifest publish, conflict-checking the
-    (start_csn, candidate) window on every attempt; returns the csn.
+    (start_csn, candidate) window on every attempt (check_conflicts, which
+    reads this commit's write-set from ``ops`` only when the window holds
+    a concurrent commit); returns the csn. The manifest names the ops,
+    not their keys.
 
     ``extra`` merges LAST into the manifest, so a caller key colliding
     with a protocol field would silently overwrite it (a 'csn' in extra
@@ -682,14 +705,13 @@ def claim_csn(
         names = log_names(path)
         candidate = max((c for c, _, _ in names), default=0) + 1
         check_conflicts(
-            path, start_csn, candidate, my_keys, grace, who,
+            path, start_csn, candidate, ops, grace, who,
             names=names, read=read, own_writer=own_writer,
         )
         manifest = {
             "csn": candidate,
             "tsn": tsn,
             "ops": ops,
-            "write_keys": sorted(my_keys) if my_keys is not None else None,
             "ts": time.time(),
             **({"group": group} if group is not None else {}),
             **(extra or {}),
@@ -1295,12 +1317,9 @@ class VersionedTable:
                 if group_visible(m, self.config.group_pending_grace_seconds):
                     m["group"] = None  # frozen: decided markers are immutable
                 else:
-                    # hole commit: wrote NOTHING, so its write-set is the
-                    # EMPTY list — None means "untracked, conflicts with
-                    # everything" to _check_conflicts and would wrongly
-                    # abort any clone-side txn whose window spans this csn
+                    # hole commit: the aborted group's member wrote nothing
                     m = {"csn": csn, "tsn": m.get("tsn"), "ops": [],
-                         "write_keys": [], "ts": m.get("ts", time.time())}
+                         "ts": m.get("ts", time.time())}
             if m.get("ops"):
                 m["ops"] = [dict(op, dir=translate(op["dir"])) for op in m["ops"]]
             publish_manifest(dst_log, name, m)
@@ -1329,9 +1348,10 @@ class VersionedTable:
         table, in ONE atomic transaction — the git-merge workflow for
         data: clone -> experiment on the branch -> merge back.
 
-        Change sets come from manifest ``write_keys`` (pure metadata — no
-        data scan decides the merge); a side with an untracked write-set
-        raises. Keys changed on BOTH sides since the base are conflicts:
+        Change sets are the write-sets of each side's visible commits since
+        the base (op_write_set: the key columns of their op files, no fold
+        decides the merge); a side with an untracked write-set raises.
+        Keys changed on BOTH sides since the base are conflicts:
         ``on_conflict='error'`` raises ConflictError listing them,
         ``'ours'`` keeps this table's version (applies only their
         non-conflicting changes), ``'theirs'`` lets the branch win.
@@ -1375,23 +1395,21 @@ class VersionedTable:
                     "key-level merge cannot be computed"
                 )
             keys: set = set()
-            for c, is_ck, name in names:
-                if is_ck or c <= base_csn:
-                    continue
-                m = t._read_manifest(name)
-                wk = m.get("write_keys")
+            grace = t.config.group_pending_grace_seconds
+            for m in visible_manifests(t.path, names, base_csn, hi, grace, t._read_manifest):
+                wk = op_write_set(m["ops"], t.key_cols)
                 if wk is None:
                     raise ConflictError(
                         f"merge_from: commit csn={m['csn']} on {t.path} has an "
                         "untracked write-set; cannot compute a key-level merge"
                     )
-                keys |= {tuple(k) for k in wk}
+                keys |= wk
             return keys
 
         ours, theirs = changed(self), changed(other)
         conflicts = ours & theirs
         if conflicts and on_conflict == "error":
-            sample = sorted(conflicts)[:10]
+            sample = sorted(conflicts, key=str)[:10]
             raise ConflictError(
                 f"merge_from: {len(conflicts)} key(s) changed on both sides "
                 f"since csn {base_csn} (e.g. {sample}); pass "
@@ -1425,7 +1443,7 @@ class VersionedTable:
             .drop("_opseq")
         )
         # Membership against apply_keys must use the SAME encoding that
-        # produced write_keys — key_string over arrow-materialized values.
+        # produced the write-sets — key_string over arrow-materialized values.
         # Spark's cast('string') diverges for booleans ('true' vs 'True')
         # and floats in scientific notation, and a miss here silently
         # DROPS a branch change (the unsafe direction — unlike the conflict
@@ -1443,7 +1461,11 @@ class VersionedTable:
         if not wanted_typed:
             return {"applied": 0, "deleted": 0, "conflicts": len(conflicts)}
         wanted = literal_frame(self.spark, wanted_typed, key_schema)
-        latest = latest_all.join(F.broadcast(wanted), kc, "left_semi")
+        # null-safe, as the fold groups keys: a NULL key is a key
+        same_key = functools.reduce(
+            operator.and_, [latest_all[c].eqNullSafe(wanted[c]) for c in kc]
+        )
+        latest = latest_all.join(F.broadcast(wanted), same_key, "left_semi")
         data_cols = [f.name for f in self.schema.fields]
         ups = latest.filter(F.col("_change") != "delete").select(*data_cols)
         dels = latest.filter(F.col("_change") == "delete").select(*kc)
@@ -1852,8 +1874,7 @@ class Transaction:
         if capture_preimages is not None:
             self._capture_preimages = capture_preimages
         try:
-            ops_meta, my_keys = self._stage()
-            csn = self._claim(ops_meta, my_keys, max_csn_attempts, extra)
+            csn = self._claim(self._stage(), max_csn_attempts, extra)
         except BaseException:
             # failed commit = nothing published; its staged tsn= files would
             # otherwise sit orphaned until vacuum (rollback() is blocked by
@@ -1869,11 +1890,11 @@ class Transaction:
             self.table.maybe_checkpoint()
         return csn
 
-    def _stage(self) -> tuple[list[dict], set[tuple] | None]:
+    def _stage(self) -> list[dict]:
         """Phase 1 of commit: write every op's data files (invisible until a
-        manifest publishes) and collect the write-set. Split out so a
-        multi-table GroupTransaction can stage ALL tables before claiming
-        any csn (plans/group.py).
+        manifest publishes) and return the ops' manifest entries. Split out
+        so a multi-table GroupTransaction can stage ALL tables before
+        claiming any csn (plans/group.py).
 
         One writer, two places to run it: every op is cast to the table's
         types (physical_rows) and staged through stage_part. An op whose
@@ -1884,8 +1905,9 @@ class Transaction:
         runs one mapInArrow job over its own partitions (_stage_task): each
         task stages its rows as one part, so the op writes at most one file
         per partition and non-empty bucket, and the driver keeps only the
-        files the successful tasks reported (keep_reported). The write-set
-        is the union of the parts' write-sets (merge_write_sets).
+        files the successful tasks reported (keep_reported). The commit's
+        write-set is read back from these files (op_write_set) only if a
+        conflict check needs it.
 
         CDC before-images (config.cdc_preimages or commit(capture_preimages=
         True)): for each op, the previous values of the op's keys — folded
@@ -1906,20 +1928,17 @@ class Transaction:
         kc = t.key_cols
         data_cols = [f.name for f in t.schema.fields]
         ops_meta = []
-        write_sets = []
 
         def stage_frame(frame, args, out_dir):
             # one mapInArrow job over the frame's partitions; only the
             # files a successful task reported are kept
             staged = frame.mapInArrow(
-                functools.partial(
-                    _stage_task, *args, out_dir, t.num_buckets, t.bucket_cols, kc
-                ),
-                "paths array<string>, keys array<array<string>>",
+                functools.partial(_stage_task, *args, out_dir, t.num_buckets, t.bucket_cols),
+                "paths array<string>",
             ).collect()
             paths = [p for r in staged for p in r.paths]
             keep_reported(out_dir, paths)
-            return paths, [r.keys for r in staged]
+            return paths
 
         for op in self._ops:
             out_dir = os.path.join(t._data_dir, f"tsn={self.tsn}", f"opseq={op.opseq}")
@@ -1928,14 +1947,12 @@ class Transaction:
             args = (t.schema, names, op.kind == "delete", op.opseq)
             # toArrow() reuses the plan this check optimized
             if frame._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation":
-                paths, keys = stage_part(
+                paths = stage_part(
                     physical_rows(frame.toArrow(), *args), out_dir, t.num_buckets,
-                    t.bucket_cols, kc,
+                    t.bucket_cols,
                 )
-                write_sets.append(keys)
             else:
-                paths, keys = stage_frame(frame, args, out_dir)
-                write_sets.extend(keys)
+                paths = stage_frame(frame, args, out_dir)
             # an op that staged ZERO rows (empty upsert / delete of nothing)
             # writes no parquet files — referencing its dir would break
             # every reader, so it is dropped from the manifest (the commit
@@ -1972,18 +1989,11 @@ class Transaction:
                     ).unionByName(state.join(op_keys, same_key, "left_anti"))
                 else:
                     state = state.join(op_keys, same_key, "left_anti")
-        # write-set keys come from the rows that were staged, not from a
-        # second execution of op.df, so the tracked set is exact even if a
-        # source plan were nondeterministic. key_string form: JSON-safe
-        # for any key type and identical across writers (cross-type str
-        # collisions can only cause a SPURIOUS conflict — the safe
-        # direction).
-        return ops_meta, merge_write_sets(write_sets)
+        return ops_meta
 
     def _claim(
         self,
         ops_meta: list[dict],
-        my_keys: set[tuple] | None,
         max_csn_attempts: int = 50,
         extra: dict | None = None,
         group: dict | None = None,
@@ -1993,7 +2003,7 @@ class Transaction:
         the table's _publish."""
         t = self.table
         return claim_csn(
-            t.path, self.start_csn, self.tsn, ops_meta, my_keys,
+            t.path, self.start_csn, self.tsn, ops_meta,
             t.config.group_pending_grace_seconds, f"txn {self.tsn}",
             group=group, extra=extra, attempts=max_csn_attempts,
             read=t._read_manifest, publish=t._publish,
@@ -2027,13 +2037,6 @@ class Transaction:
             *cols,
             F.lit(op.kind == "delete").alias("_deleted"),
             F.lit(op.opseq).cast("long").alias("_opseq"),
-        )
-
-    def _check_conflicts(self, my_keys: set[tuple] | None, upto: int) -> None:
-        check_conflicts(
-            self.table.path, self.start_csn, upto, my_keys,
-            self.table.config.group_pending_grace_seconds, f"txn {self.tsn}",
-            read=self.table._read_manifest,
         )
 
     def _check_open(self) -> None:

@@ -281,11 +281,9 @@ def group_txn_two_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead.upsert("evens", poison)
     dead.upsert("odds", poison)
     for name, txn in dead._txns.items():
-        ops_meta, keys = txn._stage()
+        ops_meta = txn._stage()
         txn._done = True
-        txn._claim(
-            ops_meta, keys, group={"dir": db.group_dir, "id": dead.gid}
-        )
+        txn._claim(ops_meta, group={"dir": db.group_dir, "id": dead.gid})
     dead._done = True
     evens = db.table("evens").snapshot().withColumn("side", F.lit("evens"))
     odds = db.table("odds").snapshot().withColumn("side", F.lit("odds"))

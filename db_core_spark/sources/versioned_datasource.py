@@ -52,9 +52,9 @@ Commit log: this module keeps no copy of the protocol. Readers and writers
 call the functions in plans/versioned.py that VersionedTable and
 Transaction call — log_names, committed_ops (op list from the newest
 checkpoint, group visibility, the reclaimed-history guard),
-visible_manifests, claim_csn (the conflict-checked csn claim) and
-merge_write_sets — passing the group grace persisted in the table's
-_meta.json (`_table_grace`), since a DataSource has no EngineConfig.
+visible_manifests and claim_csn (the conflict-checked csn claim, which
+reads write-sets from op files) — passing the group grace persisted in the
+table's _meta.json (`_table_grace`), since a DataSource has no EngineConfig.
 """
 
 from __future__ import annotations
@@ -86,7 +86,6 @@ from db_core_spark.plans.versioned import (
     keep_reported,
     latest_csn,
     log_names,
-    merge_write_sets,
     physical_arrow_schema,
     physical_rows,
     read_manifest,
@@ -568,8 +567,9 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
         return {"csn": self.start_csn}
 
     def latestOffset(self) -> dict:
-        deltas = [c for c, is_ck, _ in log_names(self.path) if not is_ck]
-        return {"csn": max(deltas, default=self.start_csn)}
+        # checkpoints count: a window whose every delta vacuum reclaimed
+        # must reach `partitions`' reclaimed-history guard, not read empty
+        return {"csn": max((c for c, _, _ in log_names(self.path)), default=self.start_csn)}
 
     def partitions(self, start: dict, end: dict) -> list[CDCPartition]:
         lo, hi = start["csn"], end["csn"]
@@ -650,7 +650,6 @@ class VersionedChangeStreamReader(DataSourceStreamReader):
 def _stage_rows(
     iterator,
     data_schema: T.StructType,
-    key_cols: list,
     num_buckets: int,
     bucket_cols: list,
     out_dir: str,
@@ -667,11 +666,10 @@ def _stage_rows(
         [pa.array(c, type=f.type) for c, f in zip(cols, physical_arrow_schema(data_schema))],
         names=names,
     )
-    rel_paths, keys = stage_part(
-        physical_rows(tbl, data_schema, names, False, 0), out_dir, num_buckets,
-        bucket_cols, key_cols,
+    rel_paths = stage_part(
+        physical_rows(tbl, data_schema, names, False, 0), out_dir, num_buckets, bucket_cols
     )
-    return StagedPart(rel_paths=rel_paths, n_rows=len(rows), keys=keys)
+    return StagedPart(rel_paths=rel_paths, n_rows=len(rows))
 
 
 @dataclass
@@ -679,8 +677,6 @@ class StagedPart(WriterCommitMessage):
     # data files this part wrote, relative to the writer's out dir
     rel_paths: list
     n_rows: int
-    # key_string write-set of this part; None = too large to track
-    keys: set | None = None
 
 
 class VersionedAppendWriter(DataSourceWriter):
@@ -691,21 +687,20 @@ class VersionedAppendWriter(DataSourceWriter):
     and commit() keeps only the files the successful tasks reported
     (keep_reported), so a failed task attempt's files are never published.
 
-    Conflict protection is Transaction's own (tran_mgr parity): each part
-    enumerates its distinct key set, merge_write_sets unions them
-    (degrading to 'conflicts with anything' above MAX_TRACKED_KEYS), and
-    commit() claims its csn through claim_csn over the conflict window
-    that opens at `start_csn`, pinned at planning time (Spark pickles the
-    planned instance and runs commit() on it). Any overlapping commit published in that window aborts the
-    append with ConflictError, and so does a window that vacuum partly
-    reclaimed, so two concurrent writers upserting the same keys can no
-    longer both win (no silent last-csn lost update)."""
+    Conflict protection is Transaction's own (tran_mgr parity): commit()
+    claims its csn through claim_csn over the conflict window that opens
+    at `start_csn`, pinned at planning time (Spark pickles the planned
+    instance and runs commit() on it). When that window holds a commit,
+    the append's write-set is read from its op dir (op_write_set,
+    'conflicts with anything' above MAX_TRACKED_KEYS rows). Any overlapping
+    commit published in that window aborts the append with ConflictError,
+    and so does a window that vacuum partly reclaimed, so two concurrent
+    writers upserting the same keys can no longer both win (no silent
+    last-csn lost update)."""
 
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
-        self.key_cols, self.data_schema, self.num_buckets, self.bucket_cols = _load_meta(
-            self.path
-        )
+        _, self.data_schema, self.num_buckets, self.bucket_cols = _load_meta(self.path)
         if [f.name for f in schema.fields] != [f.name for f in self.data_schema.fields]:
             raise ValueError(
                 f"schema mismatch: table has {self.data_schema.fieldNames()}, "
@@ -721,7 +716,6 @@ class VersionedAppendWriter(DataSourceWriter):
         return _stage_rows(
             iterator,
             self.data_schema,
-            self.key_cols,
             self.num_buckets,
             self.bucket_cols,
             self.op_dir,
@@ -742,7 +736,6 @@ class VersionedAppendWriter(DataSourceWriter):
             self.start_csn,
             self.tsn,
             [op] if rel_paths else [],
-            merge_write_sets(m.keys for m in parts),
             _table_grace(self.path),
             f"bulk append {self.tsn}",
             extra={"rows": sum(m.n_rows for m in parts)},
@@ -786,12 +779,7 @@ class VersionedStreamWriter(DataSourceStreamWriter):
 
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
-        (
-            self.key_cols,
-            self.data_schema,
-            self.num_buckets,
-            self.bucket_cols,
-        ) = _load_meta(self.path)
+        _, self.data_schema, self.num_buckets, self.bucket_cols = _load_meta(self.path)
         if [f.name for f in schema.fields] != [
             f.name for f in self.data_schema.fields
         ]:
@@ -851,7 +839,6 @@ class VersionedStreamWriter(DataSourceStreamWriter):
         return _stage_rows(
             iterator,
             self.data_schema,
-            self.key_cols,
             self.num_buckets,
             self.bucket_cols,
             self.stage_root,
@@ -900,7 +887,6 @@ class VersionedStreamWriter(DataSourceStreamWriter):
                 start_csn,
                 tsn,
                 [{"dir": op_dir, "opseq": 0, "kind": "upsert", "buckets": self.num_buckets}],
-                merge_write_sets(m.keys for m in live),
                 _table_grace(self.path),
                 f"stream sink epoch {batchId}",
                 extra={

@@ -264,7 +264,7 @@ def test_branch_merge_from_clone(spark, tmp_path):
 
 @pytest.mark.heavy
 def test_branch_merge_boolean_and_timestamp_keys(spark, tmp_path):
-    """Regression: write_keys are str()-encoded from arrow values
+    """Regression: write-set keys are str()-encoded from arrow values
     ('True', '2024-01-01 00:00:00'), while a Spark cast('string') yields
     'true' / a different timestamp text — a membership check mixing the
     two encodings silently SKIPS the branch's changes for such keys.
@@ -306,7 +306,7 @@ def test_branch_merge_boolean_and_timestamp_keys(spark, tmp_path):
 
 
 def test_merge_from_refuses_vacuum_reclaimed_window(spark, tmp_path):
-    """merge_from computes change sets from manifest write_keys over
+    """merge_from computes change sets from the op files of the commits in
     (base_csn, head]. If checkpoint+vacuum reclaimed commits INSIDE that
     window, their write-sets are gone — a silent partial merge would drop
     branch changes and blind the conflict check, so it must raise."""
@@ -324,7 +324,7 @@ def test_merge_from_refuses_vacuum_reclaimed_window(spark, tmp_path):
     t = br.begin(); t.upsert(spark.createDataFrame([(1, 100)], schema)); t.commit()
     t = br.begin(); t.upsert(spark.createDataFrame([(2, 200)], schema)); t.commit()
     # reclaim the branch's merge window: checkpoint covers both commits,
-    # vacuum(0) removes their delta manifests (and write-sets)
+    # vacuum(0) removes their delta manifests (and op dirs)
     br.checkpoint()
     br.vacuum(retain_seconds=0)
 
@@ -465,3 +465,37 @@ def test_torn_clone_refuses_to_open(vt, spark, tmp_path, monkeypatch):
     # ... and a clean-path retry produces a full, correct clone
     good = vt.clone(str(tmp_path / "clone_ok"))
     assert rows_of(good.snapshot()) == rows_of(vt.snapshot())
+
+
+def test_null_key_is_not_the_string_none(spark, tmp_path):
+    """A NULL key and the string key 'None' are different keys.
+    merge_from(on_conflict='ours') applies a branch's NULL-key upsert
+    while this table wrote 'None', and two concurrent commits of the two
+    keys do not conflict."""
+    schema = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
+    src = VersionedTable.create(spark, str(tmp_path / "nsrc"), key_cols=["k"], schema=schema)
+    t = src.begin()
+    t.upsert(spark.createDataFrame([("a", 1)], schema))
+    t.commit()
+    br = src.clone(str(tmp_path / "nbr"))
+    t = br.begin()
+    t.upsert(spark.createDataFrame([(None, 10)], schema))
+    t.commit()
+    t = src.begin()
+    t.upsert(spark.createDataFrame([("None", 20)], schema))
+    t.commit()
+
+    res = src.merge_from(br, on_conflict="ours")
+    assert res == {"applied": 1, "deleted": 0, "conflicts": 0}
+    assert {(r.k, r.v) for r in src.snapshot().collect()} == {
+        ("a", 1), ("None", 20), (None, 10)
+    }
+
+    a, b = src.begin(), src.begin()
+    a.upsert(spark.createDataFrame([(None, 11)], schema))
+    b.upsert(spark.createDataFrame([("None", 21)], schema))
+    a.commit()
+    b.commit()
+    assert {(r.k, r.v) for r in src.snapshot().collect()} == {
+        ("a", 1), ("None", 21), (None, 11)
+    }

@@ -221,6 +221,31 @@ def test_cdc_stream_restart_refuses_vacuum_reclaimed_commits(vt, spark, tmp_path
     assert got == []
 
 
+def test_cdc_stream_over_a_fully_reclaimed_window_raises(vt, spark, tmp_path):
+    """A fresh stream over a table whose every delta checkpoint() +
+    vacuum(0) reclaimed raises: its latest offset counts the checkpoint's
+    csn, so the window reaches the reclaimed-history guard instead of
+    reading as empty."""
+    for k in (1, 2, 3):
+        _commit(vt, spark, [(k, "a", float(k))])
+    vt.checkpoint()
+    vt.vacuum(retain_seconds=0.0)
+    got: list = []
+    q = (
+        spark.readStream.format("versioned")
+        .option("path", vt.path)
+        .option("readChanges", "true")
+        .load()
+        .writeStream.foreachBatch(lambda df, _id: got.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="vacuum-reclaimed"):
+        q.awaitTermination(120)
+    assert got == []
+
+
 def test_stream_requires_cdc_option(vt, spark, tmp_path):
     _commit(vt, spark, [(1, "a", 1.0)])
     # the guard fires when the stream reader is instantiated at query start
@@ -296,14 +321,14 @@ def test_bulk_append_conflict_with_concurrent_commit(vt, spark):
     """Two-directional conflict protection for the bulk writer (tran_mgr
     parity): a bulk append planned before a concurrent overlapping commit
     must abort instead of silently winning last-csn (lost update)."""
-    from db_core_spark.plans.versioned import ConflictError
+    from db_core_spark.plans.versioned import ConflictError, op_write_set
     from db_core_spark.sources.versioned_datasource import VersionedAppendWriter
 
     _commit(vt, spark, [(1, "a", 1.0)])
     # plan the bulk writer (pins start_csn), stage a part touching k=1
     w = VersionedAppendWriter(SCHEMA, {"path": vt.path})
     msg = w.write(iter([(1, "bulk", 5.0), (9, "new", 9.0)]))
-    assert msg.keys is not None and ("1",) in {tuple(k) for k in msg.keys}
+    assert ("1",) in op_write_set([{"dir": w.op_dir}], ["k"])
     # concurrent txn commits an overlapping key after the writer was planned
     _commit(vt, spark, [(1, "other", 2.0)])
     with pytest.raises(ConflictError):
@@ -317,8 +342,8 @@ def test_bulk_append_conflict_with_concurrent_commit(vt, spark):
 
 def test_bulk_append_conflicts_optimistic_txn_both_ways(vt, spark):
     """A txn that began before a bulk append committed overlapping keys must
-    abort at commit — the writer now enumerates write_keys so the txn-side
-    check sees real overlap, not just the conservative None."""
+    abort at commit — the txn-side check reads the append's keys from its
+    op dir, so it sees real overlap, not just the conservative None."""
     from db_core_spark.plans.versioned import ConflictError
 
     _commit(vt, spark, [(1, "a", 1.0)])
@@ -345,8 +370,8 @@ def test_timestamp_key_bulk_append_conflicts_with_txn(spark, tmp_path, local):
     """A bulk append and a concurrent Transaction that write the same
     timestamp key must conflict, in both orders. The pyarrow writers see
     the key tz-aware (UTC-cast table, toArrow()), a Spark-written file
-    reads back naive; every writer records write_keys through key_string,
-    so both spell the key the same and the overlap is not lost."""
+    reads back naive; every write-set is encoded through key_string, so
+    both spell the key the same and the overlap is not lost."""
     import datetime as dt
 
     from db_core_spark.operators.litframe import literal_frame
@@ -831,9 +856,8 @@ def test_datasource_group_visibility_uses_table_grace(spark, tmp_path):
     staged = {n: t._stage() for n, t in g._txns.items()}
     group_field = {"dir": db.group_dir, "id": g.gid}
     for name, txn in g._txns.items():
-        ops_meta, keys = staged[name]
         txn._done = True
-        txn._claim(ops_meta, keys, group=group_field)
+        txn._claim(staged[name], group=group_field)
 
     pending = [m for m in db.table("a")._manifests() if m.get("group") is not None]
     assert pending

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F, types as T
 
 from db_core_spark.config import EngineConfig
 from db_core_spark.plans import ConflictError, Database, VersionedTable
-from db_core_spark.plans.versioned import resolve_group_status
+from db_core_spark.plans.versioned import op_write_set, resolve_group_status
 
 SCHEMA = T.StructType(
     [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
@@ -130,9 +130,8 @@ def test_crashed_coordinator_force_aborted_by_reader(db, spark):
     staged = {n: t._stage() for n, t in touched.items()}
     group_field = {"dir": db.group_dir, "id": g.gid}
     for name, txn in touched.items():
-        ops_meta, keys = staged[name]
         txn._done = True
-        txn._claim(ops_meta, keys, group=group_field)
+        txn._claim(staged[name], group=group_field)
     # crash here: no marker. Readers resolve after grace (0.2 s).
     assert state(db, "a") == set()
     assert state(db, "b") == set()
@@ -206,11 +205,9 @@ def test_cdc_stream_excludes_aborted_group(db, spark, tmp_path):
     g2.upsert("b", rows(spark, (11, "dead")))
     touched = {n: t for n, t in g2._txns.items()}
     for name, txn in touched.items():
-        ops_meta, keys = txn._stage()
+        ops_meta = txn._stage()
         txn._done = True
-        txn._claim(
-            ops_meta, keys, group={"dir": db.group_dir, "id": g2.gid}
-        )
+        txn._claim(ops_meta, group={"dir": db.group_dir, "id": g2.gid})
     from db_core_spark.plans.versioned import publish_manifest
 
     publish_manifest(db.group_dir, f"{g2.gid}.json", {"status": "aborted"})
@@ -642,9 +639,8 @@ def test_snapshot_pin_pending_group_straddle_is_refused(spark, tmp_path):
     group_field = {"dir": db.group_dir, "id": g.gid}
     claimed = {}
     for name, txn in touched.items():
-        ops_meta, keys = staged[name]
         txn._done = True
-        claimed[name] = txn._claim(ops_meta, keys, group=group_field)
+        claimed[name] = txn._claim(staged[name], group=group_field)
     # coordinator paused between CLAIM and DECIDE: group is pending
     includes_member = {"a": claimed["a"], "b": claimed["b"]}
     assert not db._pin_is_consistent(includes_member)
@@ -694,10 +690,10 @@ def test_database_clone_to_relative_path(db, spark):
 
 
 def test_cloned_aborted_group_hole_has_empty_write_set(db, spark, tmp_path):
-    """Clone rewrites an aborted-group member manifest as a hole commit.
-    Its write-set is the EMPTY list — None means 'untracked, conflicts
-    with everything' to _check_conflicts and would abort any clone-side
-    txn whose conflict window spans the hole csn."""
+    """Clone rewrites an aborted-group member manifest as a hole commit
+    with no ops, so its write-set is empty — an untracked (None) set
+    conflicts with everything and would abort any clone-side txn whose
+    conflict window spans the hole csn."""
     t0 = db.table("a").begin()
     t0.upsert(rows(spark, (1, "base")))
     base_csn = t0.commit()
@@ -721,7 +717,7 @@ def test_cloned_aborted_group_hole_has_empty_write_set(db, spark, tmp_path):
 
     c = src_a.clone(str(tmp_path / "aclone"))
     holes = [m for m in c._manifests() if not m.get("ops") and m.get("type") != "checkpoint"]
-    assert holes and all(m.get("write_keys") == [] for m in holes)
+    assert holes and all(op_write_set(m["ops"], ["k"]) == set() for m in holes)
 
     # a clone-side txn whose window spans the hole must NOT spuriously abort
     txn = c.begin(at_csn=base_csn)

@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from db_core_spark.operators.litframe import literal_frame
 from db_core_spark.plans import ObjectStore, VersionedTable
-from db_core_spark.plans.versioned import bucket_of_py
+from db_core_spark.plans.versioned import bucket_of_py, op_write_set
 from tests.conftest import window_snapshot
 
 
@@ -62,6 +62,11 @@ def _manifests(vt) -> list[dict]:
             with open(os.path.join(log, name)) as fh:
                 out.append(json.load(fh))
     return out
+
+
+def _write_set(m: dict):
+    """The write-set of a commit manifest, read from its op files."""
+    return op_write_set(m["ops"], ["k"])
 
 
 # ------------------------------------------------------------- job counts
@@ -245,8 +250,8 @@ def test_local_and_spark_staging_are_equivalent(spark, tmp_path, kind):
         tables[local] = vt
     loc, dist = tables[True], tables[False]
 
-    assert [m["write_keys"] for m in _manifests(loc)] == [
-        m["write_keys"] for m in _manifests(dist)
+    assert [_write_set(m) for m in _manifests(loc)] == [
+        _write_set(m) for m in _manifests(dist)
     ]
     snap = _sorted_rows(loc.snapshot())
     assert snap == _sorted_rows(dist.snapshot())
@@ -310,17 +315,18 @@ def test_mixed_local_and_spark_ops_resolve_by_opseq(spark, tmp_path):
     assert _sorted_rows(vt.snapshot()) == want
     assert _sorted_rows(window_snapshot(vt)) == want
     assert _sorted_rows(vt.lookup({"k": 3})) == [(3, "local2", 5.0)]
-    assert _manifests(vt)[-1]["write_keys"] == [["1"], ["3"]]
+    assert _write_set(_manifests(vt)[-1]) == {("1",), ("3",)}
 
 
 # -------------------------------------------------------------- write-set
 
 
 def test_write_set_cap_degrades_to_untracked(spark, tmp_path, monkeypatch):
-    """A write-set over MAX_TRACKED_KEYS is recorded as ``write_keys: null``
-    and conflicts with any concurrent commit — for a driver-staged op, for a
-    distributed op (whose tasks stay under the cap; the driver's merge
-    crosses it) and for a bulk append."""
+    """A commit whose op files hold more than MAX_TRACKED_KEYS rows has an
+    untracked write-set (op_write_set is None) and conflicts with any
+    concurrent commit — for a driver-staged op, for a distributed op
+    (whose tasks each stay under the cap; their files together cross it)
+    and for a bulk append."""
     from db_core_spark.plans import versioned
     from db_core_spark.plans.versioned import ConflictError
     from db_core_spark.sources.versioned_datasource import VersionedAppendWriter
@@ -336,21 +342,21 @@ def test_write_set_cap_degrades_to_untracked(spark, tmp_path, monkeypatch):
         over.upsert(frame)
         other.upsert(rows([100]))  # a key the capped commit does not write
         over.commit()
-        assert _manifests(vt)[-1]["write_keys"] is None
+        assert _write_set(_manifests(vt)[-1]) is None
         with pytest.raises(ConflictError, match="untracked"):
             other.commit()
 
     txn = vt.begin()
     txn.upsert(rows([1]))  # under the cap: tracked
     txn.commit()
-    assert _manifests(vt)[-1]["write_keys"] == [["1"]]
+    assert _write_set(_manifests(vt)[-1]) == {("1",)}
 
-    # the bulk append's parts stay under the cap; its commit's merge
-    # crosses it (commit() is called in this process, so the patched cap
-    # applies; a Spark write runs it in a Python process of its own)
+    # the bulk append's parts stay under the cap; its op dir crosses it
+    # (commit() is called in this process, so the patched cap applies; a
+    # Spark write runs it in a Python process of its own)
     w = VersionedAppendWriter(KV_SCHEMA, {"path": vt.path})
     w.commit([w.write(iter([(k, "bulk", 1.0) for k in ks])) for ks in ((20, 21), (22, 23))])
-    assert _manifests(vt)[-1]["write_keys"] is None
+    assert _write_set(_manifests(vt)[-1]) is None
     w = VersionedAppendWriter(KV_SCHEMA, {"path": vt.path})
     msgs = [w.write(iter([(k, "bulk", 1.0) for k in ks])) for ks in ((30, 31), (32, 33))]
     txn = vt.begin()

@@ -327,8 +327,8 @@ def test_object_store_equals_bytes_model(spark, tmp_path_factory, script):
 # Three-way branch merge vs an exact model: fork a clone, drive random
 # committed scripts on BOTH sides, then merge_from under each on_conflict
 # mode. The model computes write-tracked change sets (same definition as
-# manifest write_keys: keys WRITTEN since the fork, whether or not the
-# value ended up different), adjudicates conflicts, and predicts both the
+# op_write_set: keys WRITTEN since the fork, whether or not the value
+# ended up different), adjudicates conflicts, and predicts both the
 # final table state and merge_from's {applied, deleted, conflicts} counts.
 side_script = st.lists(
     st.lists(op, min_size=1, max_size=2), min_size=0, max_size=2

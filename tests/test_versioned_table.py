@@ -460,19 +460,16 @@ def test_commit_log_reads_bounded_by_checkpoint(vt, spark, monkeypatch):
     only its window — with 500 fabricated commits the counts stay bounded."""
     import time as _time
 
-    from db_core_spark.plans.versioned import publish_manifest
+    from db_core_spark.plans.versioned import check_conflicts, publish_manifest
 
     N = 500
     for c in range(1, N + 1):
+        # op-less commits: the count is of manifest opens, and an empty
+        # commit's write-set needs no op file
         publish_manifest(
             vt._log_dir,
             f"{c:010d}.json",
-            {
-                "csn": c, "tsn": f"t{c}",
-                "ops": [{"dir": f"{vt._data_dir}/fake{c}", "opseq": 0,
-                         "kind": "upsert", "buckets": 16}],
-                "write_keys": [[str(c)]], "ts": _time.time(),
-            },
+            {"csn": c, "tsn": f"t{c}", "ops": [], "ts": _time.time()},
         )
     publish_manifest(
         vt._log_dir,
@@ -494,9 +491,10 @@ def test_commit_log_reads_bounded_by_checkpoint(vt, spark, monkeypatch):
     assert len(calls) == 1 + (N - 490)  # checkpoint base + 10 deltas
     assert sum(o["checkpoint"] for o in ops) == 1
     calls.clear()
-    txn = vt.begin()
-    txn.start_csn = 495
-    txn._check_conflicts({("nope",)}, upto=N + 1)
+    check_conflicts(
+        vt.path, 495, N + 1, [], vt.config.group_pending_grace_seconds, "txn",
+        read=vt._read_manifest,
+    )
     assert len(calls) == N - 495  # only the conflict window is opened
 
 
@@ -1079,3 +1077,76 @@ def test_run_transaction_nested_timeout_is_not_retried(vt, spark):
     with pytest.raises(ConflictTimeoutError):
         vt.run_transaction(outer_build)  # untimed outer MUST NOT retry
     assert calls == [1]
+
+
+# ------------------------------------------------- write-sets from op files
+
+
+def test_commit_with_empty_conflict_window_reads_no_write_set(vt, spark, monkeypatch):
+    """A commit's write-set is read from its op files only when its
+    conflict window holds a concurrent commit: a commit with an empty
+    window encodes no key, and one with a concurrent commit encodes both
+    sides once."""
+    from db_core_spark.plans import versioned
+
+    calls: list[int] = []
+    orig = versioned.write_set_keys
+
+    def counting(tbl, key_cols):
+        calls.append(tbl.num_rows)
+        return orig(tbl, key_cols)
+
+    monkeypatch.setattr(versioned, "write_set_keys", counting)
+    t = vt.begin()
+    t.upsert(spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], SCHEMA))
+    t.upsert(spark.createDataFrame([(3, "c", 3.0)], SCHEMA).repartition(2))
+    t.commit()
+    assert calls == []
+
+    a, b = vt.begin(), vt.begin()
+    a.upsert(spark.createDataFrame([(4, "a", 4.0)], SCHEMA))
+    b.upsert(spark.createDataFrame([(5, "b", 5.0)], SCHEMA))
+    a.commit()
+    assert calls == []
+    b.commit()
+    assert sorted(calls) == [1, 1]
+
+
+def test_bulk_commit_manifest_names_ops_not_keys(vt, spark):
+    """A 5k-row commit's manifest stays under 1 KB: it names the op dirs,
+    and the write-set is read back from them."""
+    from db_core_spark.plans.versioned import op_write_set
+
+    t = vt.begin()
+    t.upsert(spark.createDataFrame([(i, "v", float(i)) for i in range(5000)], SCHEMA))
+    csn = t.commit()
+    path = os.path.join(vt._log_dir, f"{csn:010d}.json")
+    assert os.path.getsize(path) < 1024
+    with open(path) as fh:
+        m = json.load(fh)
+    assert "write_keys" not in m
+    assert op_write_set(m["ops"], ["k"]) == {(str(i),) for i in range(5000)}
+
+
+def test_conflict_window_over_a_missing_op_dir_raises(vt, spark):
+    """A concurrent commit in the window whose op dir is gone cannot be
+    checked, so the commit aborts even though the keys differ."""
+    import shutil
+
+    a, b = vt.begin(), vt.begin()
+    a.upsert(spark.createDataFrame([(1, "a", 1.0)], SCHEMA))
+    b.upsert(spark.createDataFrame([(2, "b", 2.0)], SCHEMA))
+    csn = a.commit()
+    for op in vt._read_manifest(f"{csn:010d}.json")["ops"]:
+        shutil.rmtree(op["dir"])
+    with pytest.raises(ConflictError, match="is gone"):
+        b.commit()
+
+
+def test_no_manifest_carries_a_write_set():
+    """Pinned in source, as tests/test_single_writer.py pins the one
+    writer: no module writes or reads a stored write-set."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent / "db_core_spark"
+    assert [str(p) for p in root.rglob("*.py") if "write_keys" in p.read_text()] == []
