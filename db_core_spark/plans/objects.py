@@ -9,18 +9,18 @@ of [off, off+len) returns the covering chunks, mirroring the cursor walk of
 block_driver.rs:530-586. write-at-offset is read-modify-write of the
 affected chunks inside the transaction (write_ins semantics,
 block_driver.rs:353-382), which becomes new row versions at commit. The
-chunk rows are driver-built literal frames, so the commit writes them
-in-process (Transaction._stage's LocalRelation path): one toArrow() job
-per op and no Spark write job.
+chunk rows are driver-built pyarrow Tables (typed by OBJECT_SCHEMA), so the
+commit writes them in-process and runs no Spark job for them.
 
-Committed reads (reader=None: read, read_at, length, read_snapshot) run no
-Spark job: VersionedTable.lookup_table folds the object's one bucket
-(bucket_cols=["obj_id"]) in the driver process and the bytes come straight
-from that Arrow table — the reference's in-process version-chain walk
-(block_driver.rs:461-486). A transaction with no buffered ops reads the
-same way at its start csn; that covers the chunk listing put() and delete()
-do before they stage anything. Once a transaction has buffered ops, its
-reads go through Transaction.read() so they see its own writes.
+Reads (read, read_at, length, read_snapshot, and the chunk listing put()
+and delete() do) run no Spark job either: VersionedTable.lookup_table folds
+the object's one bucket (bucket_cols=["obj_id"]) in the driver process and
+the bytes come straight from that Arrow table — the reference's in-process
+version-chain walk (block_driver.rs:461-486). Inside a transaction,
+Transaction.lookup_table folds the same bucket at the start csn and layers
+the transaction's own chunk rows over it, so the reads see its own writes;
+only a transaction holding a DataFrame op (a caller's upsert or merge)
+reads through Transaction.read().
 
 Client reads return driver-side `bytes` — the reference API is a client
 byte-copy loop (read_next into a buffer); bulk analytics over object payloads
@@ -29,9 +29,10 @@ should use VersionedTable.snapshot() directly as a DataFrame instead.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from db_core_spark.operators.litframe import literal_frame
 from db_core_spark.plans.versioned import Transaction, VersionedTable
 
 OBJECT_SCHEMA = T.StructType(
@@ -41,6 +42,7 @@ OBJECT_SCHEMA = T.StructType(
         T.StructField("payload", T.BinaryType(), True),
     ]
 )
+OBJECT_ARROW_SCHEMA = to_arrow_schema(OBJECT_SCHEMA)
 
 
 class ObjectStore:
@@ -78,6 +80,15 @@ class ObjectStore:
             for i in range((len(data) + cs - 1) // cs or 1)
         ]
 
+    @staticmethod
+    def _chunk_table(rows: list[tuple]):
+        """(obj_id, chunk_no, payload) rows as an op's pyarrow Table."""
+        cols = list(zip(*rows)) or [()] * 3
+        return pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, OBJECT_ARROW_SCHEMA)],
+            schema=OBJECT_ARROW_SCHEMA,
+        )
+
     def put(self, txn: Transaction, obj_id: int, data: bytes) -> None:
         """Create/replace an object (open_create + write_next loop,
         system/instance.rs:173-187, 429-444). Replacing also tombstones chunks past
@@ -88,7 +99,7 @@ class ObjectStore:
         stale = [(obj_id, c) for c in old if c > new_last]
         if stale:
             txn.delete_keys([{"obj_id": o, "chunk_no": c} for o, c in stale])
-        txn.upsert(literal_frame(self.spark, rows, OBJECT_SCHEMA))
+        txn.upsert(self._chunk_table(rows))
 
     def write_at(self, txn: Transaction, obj_id: int, offset: int, data: bytes) -> None:
         """Overwrite bytes at offset (seek + write_next: write_ins overwrite
@@ -115,7 +126,7 @@ class ObjectStore:
             piece = bytes(span[i * cs : (i + 1) * cs])
             if piece:
                 new_rows.append((obj_id, c, piece))
-        txn.upsert(literal_frame(self.spark, new_rows, OBJECT_SCHEMA))
+        txn.upsert(self._chunk_table(new_rows))
 
     def append(self, txn: Transaction, obj_id: int, data: bytes) -> None:
         """Append at EOF (write_append, block_driver.rs:384-455)."""
@@ -153,7 +164,7 @@ class ObjectStore:
         return span[rel : rel + length]
 
     def length(self, reader, obj_id: int) -> int:
-        tbl = self._committed(reader, obj_id)
+        tbl = self._rows(reader, obj_id)
         if tbl is not None:
             return sum(map(len, _chunk_map(tbl).values()))
         df = reader.read().filter(F.col("obj_id") == obj_id)
@@ -167,24 +178,20 @@ class ObjectStore:
 
     # ------------------------------------------------------------- internals
 
-    def _committed(self, reader, obj_id: int):
-        """The object's rows as `reader` sees them, folded in-process as a
-        pyarrow table — when that view is committed state: the latest
-        snapshot for reader=None, the start snapshot for a transaction with
-        no buffered ops. None for a transaction with buffered ops: only
-        Transaction.read() layers those over the committed rows."""
+    def _rows(self, reader, obj_id: int):
+        """The object's rows as `reader` sees them, resolved in-process as a
+        pyarrow table: the latest snapshot for reader=None, the
+        transaction's own view (Transaction.lookup_table) otherwise. None
+        for a transaction holding a DataFrame op: only Transaction.read()
+        resolves those."""
         if reader is None:
             return self.table.lookup_table({"obj_id": obj_id})
-        reader._check_open()
-        if reader._ops:
-            return None
-        return self.table.lookup_table({"obj_id": obj_id}, reader.start_csn)
+        return reader.lookup_table({"obj_id": obj_id})
 
     def _chunks(self, reader, obj_id: int, first: int | None = None, last: int | None = None):
-        """{chunk_no: payload} of one object, chunks first..last if given.
-        Committed views fold the object's bucket in-process; a transaction
-        with buffered ops reads through its DataFrame."""
-        tbl = self._committed(reader, obj_id)
+        """{chunk_no: payload} of one object, chunks first..last if given,
+        resolved in-process unless the transaction holds a DataFrame op."""
+        tbl = self._rows(reader, obj_id)
         if tbl is not None:
             chunks = _chunk_map(tbl)
             if first is None:
@@ -199,7 +206,7 @@ class ObjectStore:
         """Chunk ids only — no payload bytes cross the wire. put()/delete()
         need just the id set; collecting payloads made a replace/delete
         O(object size) in driver memory for no reason."""
-        tbl = self._committed(txn, obj_id)
+        tbl = self._rows(txn, obj_id)
         if tbl is not None:
             return tbl.column("chunk_no").to_pylist()
         df = txn.read().filter(F.col("obj_id") == obj_id)

@@ -30,11 +30,13 @@ data/checkpoint-<csn>/bucket=<b>/ — every table is key-hash bucketed
 `_tmp-` file renamed into place (readers skip `_`-prefixed files).
 `stage_part` writes one part of an op: it splits the rows by
 `bucket_of_py` through `write_bucketed`. A commit casts each op to the
-table's types (`physical_rows`) and stages it in-process after one
-toArrow() job when its frame is a LocalRelation (rows already on the
-driver: pandas/Arrow frames, delete_keys lists, object chunks) — the
-reference's commit writes in-process too (system/instance.rs:141-187) —
-else in one shuffle-free mapInArrow job over the frame's own partitions;
+table's types (`physical_rows`) and stages it in-process when its rows are
+already on the driver — a pyarrow Table op (delete_keys lists, object
+chunks), or a frame whose plan is a LocalRelation (pandas/Arrow frames),
+collected with no Spark job up to LOCAL_COLLECT_ROWS rows and pulled by one
+toArrow() job above — as the reference's commit writes in-process
+(system/instance.rs:141-187); any other frame stages in one shuffle-free
+mapInArrow job over its own partitions;
 the versioned DataSource's batch and stream writers call `stage_part` on
 the executors. A driver publishing task-written files first deletes those
 no successful task reported (`keep_reported`). Every writer claims its csn
@@ -55,15 +57,17 @@ of the reference's O(versions-of-that-object) chain walk
 (block_driver.rs:461-486). A snapshot task yields the folds; a checkpoint
 task writes each non-empty bucket's winners as one file and the driver
 publishes the manifest, so later reads fold only the (checkpoint, S]
-deltas above it. Point reads (`lookup()`, and the ObjectStore reads that
-see no buffered writes) run the same fold for the key's one bucket in the
-driver process and schedule no Spark job. The version-chain view,
+deltas above it. Point reads (`lookup()` and the ObjectStore reads) run
+the same fold for the key's one bucket in the driver process and schedule
+no Spark job. The version-chain view,
 `history()`, runs the same job with the reader's unresolved read
 (`versions`) as its task; the change feed, `changes()`, runs it over its
 pinned window's op bucket dirs with the CDC stream reader's `read`, at
 most one task per core. `Transaction.read()` layers a transaction's
-buffered ops over `snapshot(start_csn)`, so the fold is the one
-visibility rule across commits.
+buffered ops over `snapshot(start_csn)`, and `Transaction.lookup_table()`
+its Table ops over the key's driver fold with the fold's own
+newest-version step, so the fold is the one visibility rule across
+commits.
 """
 
 from __future__ import annotations
@@ -722,10 +726,40 @@ def claim_csn(
     raise RuntimeError("could not claim a csn (too much commit contention)")
 
 
+#: rows at or below which a LocalRelation op frame is collected (its
+#: LocalTableScanExec runs no Spark job) rather than pulled by one toArrow()
+#: job; collect() plus the Arrow conversion beat toArrow() up to about 8000
+#: rows of 3 columns on 4 cores (SCALING.md), and half that leaves room for
+#: wider rows
+LOCAL_COLLECT_ROWS = 4096
+
+
+def local_arrow(frame: DataFrame):
+    """The rows of ``frame`` as a pyarrow Table typed by its Arrow schema
+    when its optimized plan is a LocalRelation (rows already on the driver),
+    else None. The row count is the plan's own (``data().size()``), never an
+    estimate: up to LOCAL_COLLECT_ROWS rows are collected, with no Spark
+    job, and converted the way Spark Connect converts local rows
+    (collect()'s naive local-time timestamps become UTC instants); above,
+    one toArrow() job, which reuses the plan this check optimized."""
+    plan = frame._jdf.queryExecution().optimizedPlan()
+    if plan.nodeName() != "LocalRelation":
+        return None
+    if plan.data().size() > LOCAL_COLLECT_ROWS:
+        return frame.toArrow()
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = frame.collect()
+    if not rows:
+        return to_arrow_schema(frame.schema).empty_table()
+    return LocalDataToArrowConversion.convert(rows, frame.schema, False)
+
+
 @dataclass
 class _Op:
     kind: str  # "upsert" | "delete"
-    df: DataFrame
+    rows: "DataFrame | pyarrow.Table"
     opseq: int
 
 
@@ -1723,22 +1757,34 @@ class Transaction:
 
     # ------------------------------------------------------------------ ops
 
-    def upsert(self, df: DataFrame) -> None:
+    def upsert(self, rows) -> None:
         """INSERT/UPDATE: stage new row versions (open_create/open_write +
-        write_next, system/instance.rs:141-187, 429-444)."""
+        write_next, system/instance.rs:141-187, 429-444). `rows` is a
+        DataFrame or a pyarrow Table holding the table's columns; a Table
+        is staged in this process at commit, with no Spark job."""
         self._check_open()
-        self._ops.append(_Op("upsert", df, opseq=len(self._ops)))
+        self._ops.append(_Op("upsert", rows, opseq=len(self._ops)))
 
     def delete_keys(self, keys) -> None:
         """DELETE: stage tombstones for the given keys (system/instance.rs:191-210).
-        `keys` is a DataFrame of key columns or a list of dicts/tuples."""
+        `keys` is a DataFrame or pyarrow Table holding the key columns, or a
+        list of dicts/tuples, which becomes a Table typed by the key schema."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         self._check_open()
         kc = self.table.key_cols
-        if not isinstance(keys, DataFrame):
+        if isinstance(keys, DataFrame):
+            keys = keys.select(*kc)
+        elif isinstance(keys, pa.Table):
+            keys = keys.select(kc)
+        else:
             key_schema = T.StructType([self.table.schema[k] for k in kc])
             rows = [tuple(k[c] for c in kc) if isinstance(k, dict) else tuple(k) for k in keys]
-            keys = literal_frame(self.table.spark, rows, key_schema)
-        self._ops.append(_Op("delete", keys.select(*kc), opseq=len(self._ops)))
+            keys = pa.Table.from_pylist(
+                [dict(zip(kc, r)) for r in rows], schema=to_arrow_schema(key_schema)
+            )
+        self._ops.append(_Op("delete", keys, opseq=len(self._ops)))
 
     def savepoint(self) -> int:
         """Mark the current op position; a later :meth:`rollback_to` this
@@ -1851,6 +1897,51 @@ class Transaction:
             .drop("_rn", "_opseq", "_deleted")
         )
 
+    def lookup_table(self, key: dict):
+        """The rows of read() whose key columns equal `key` (every bucket
+        column bound), as a driver-side pyarrow Table and with no Spark job:
+        the committed rows at start_csn (VersionedTable.lookup_table)
+        beneath this transaction's buffered ops for the key, resolved by the
+        fold's own newest-version step (`newest_versions`), the committed
+        rows ranking below every op. None when a buffered op is a
+        DataFrame: only read() resolves those. `key` binds key columns
+        only: a filter on any other column would have to wait for the
+        resolution."""
+        self._check_open()
+        t = self.table
+        other = sorted(set(key) - set(t.key_cols))
+        if other:
+            raise ValueError(f"Transaction.lookup_table binds key columns only, not {other}")
+        if any(isinstance(op.rows, DataFrame) for op in self._ops):
+            return None
+        base = t.lookup_table(key, self.start_csn)
+        if not self._ops:
+            return base
+        import pyarrow as pa
+
+        from db_core_spark.sources.versioned_datasource import (  # noqa: PLC0415
+            _row_filter_mask,
+            _typed_key,
+            newest_versions,
+        )
+
+        key = _typed_key(key, t.schema)
+        n = base.num_rows
+        parts = [
+            base.append_column("_deleted", pa.repeat(pa.scalar(False), n)).append_column(
+                "_opseq", pa.repeat(pa.scalar(-1, pa.int64()), n)
+            )
+        ]
+        for op in self._ops:
+            rows = self._physical(op)
+            parts.append(rows.filter(_row_filter_mask(rows, key)))
+        vs = pa.concat_tables(parts, promote_options="permissive")
+        vs = vs.append_column(
+            "_csn", pa.repeat(pa.scalar(self.start_csn, pa.int64()), vs.num_rows)
+        )
+        out = newest_versions(vs, t.key_cols)
+        return out.select(base.schema.names).cast(base.schema)
+
     # --------------------------------------------------------------- commit
 
     def commit(
@@ -1898,14 +1989,16 @@ class Transaction:
 
         One writer, two places to run it: every op is cast to the table's
         types (physical_rows) and staged through stage_part. An op whose
-        frame is a LocalRelation (rows already on the driver: a pandas or
-        Arrow createDataFrame, a literal_frame, a delete_keys list) comes
-        over in ONE ``toArrow()`` job (a JVM-side local scan: no Python
-        worker, no shuffle) and is staged in this process. Any other frame
-        runs one mapInArrow job over its own partitions (_stage_task): each
-        task stages its rows as one part, so the op writes at most one file
-        per partition and non-empty bucket, and the driver keeps only the
-        files the successful tasks reported (keep_reported). The commit's
+        rows are already on the driver is staged in this process: a pyarrow
+        Table op (a delete_keys list, object chunks) as it is, a frame whose
+        plan is a LocalRelation (a pandas or Arrow createDataFrame, a
+        literal_frame) through local_arrow — collected with no Spark job up
+        to LOCAL_COLLECT_ROWS rows, one toArrow() job (a JVM-side local
+        scan: no Python worker, no shuffle) above. Any other frame runs one
+        mapInArrow job over its own partitions (_stage_task): each task
+        stages its rows as one part, so the op writes at most one file per
+        partition and non-empty bucket, and the driver keeps only the files
+        the successful tasks reported (keep_reported). The commit's
         write-set is read back from these files (op_write_set) only if a
         conflict check needs it.
 
@@ -1942,14 +2035,16 @@ class Transaction:
 
         for op in self._ops:
             out_dir = os.path.join(t._data_dir, f"tsn={self.tsn}", f"opseq={op.opseq}")
-            names = data_cols if op.kind == "upsert" else kc
-            frame = op.df.select(*names)
+            names = self._names(op)
             args = (t.schema, names, op.kind == "delete", op.opseq)
-            # toArrow() reuses the plan this check optimized
-            if frame._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation":
+            if isinstance(op.rows, DataFrame):
+                frame = op.rows.select(*names)
+                tbl = local_arrow(frame)
+            else:
+                tbl = op.rows.select(names)
+            if tbl is not None:
                 paths = stage_part(
-                    physical_rows(frame.toArrow(), *args), out_dir, t.num_buckets,
-                    t.bucket_cols,
+                    physical_rows(tbl, *args), out_dir, t.num_buckets, t.bucket_cols
                 )
             else:
                 paths = stage_frame(frame, args, out_dir)
@@ -2024,16 +2119,33 @@ class Transaction:
 
     # ------------------------------------------------------------ internals
 
+    def _names(self, op: _Op) -> list[str]:
+        """The columns an op holds: every data column of an upsert, the key
+        columns of a delete."""
+        t = self.table
+        return [f.name for f in t.schema.fields] if op.kind == "upsert" else t.key_cols
+
+    def _physical(self, op: _Op):
+        """physical_rows of a Table op: its rows in the table's types, a
+        delete's non-key columns null, plus _deleted and _opseq."""
+        names = self._names(op)
+        return physical_rows(
+            op.rows.select(names), self.table.schema, names, op.kind == "delete", op.opseq
+        )
+
     def _full_rows(self, op: _Op) -> DataFrame:
         """Normalize an op to the full physical schema (+_deleted,_opseq);
-        a delete's non-key columns are null."""
+        a delete's non-key columns are null. A Table op becomes a frame
+        only here (a local relation: createDataFrame runs no job)."""
+        if not isinstance(op.rows, DataFrame):
+            return self.table.spark.createDataFrame(self._physical(op))
         kc = self.table.key_cols
         cols = [
             F.col(f.name) if op.kind == "upsert" or f.name in kc
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in self.table.schema.fields
         ]
-        return op.df.select(
+        return op.rows.select(
             *cols,
             F.lit(op.kind == "delete").alias("_deleted"),
             F.lit(op.opseq).cast("long").alias("_opseq"),

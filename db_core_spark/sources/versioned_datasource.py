@@ -294,6 +294,31 @@ def _row_filter_mask(tbl, row_filter: dict):
     return keep
 
 
+def newest_versions(tbl, key_cols: list[str]):
+    """The visibility rule (block_driver.rs:457-486) over a pyarrow table of
+    versions carrying (_csn, _opseq, _deleted): the newest (_csn, _opseq)
+    version per key wins and a tombstone winner hides the key. The stable
+    sort puts each key's newest version first; the smallest sorted position
+    per key picks it. Grouping compares Arrow values, so int64 stays exact
+    and a NaN key is not a NULL key. The fold and Transaction.lookup_table
+    resolve through it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    order = pc.sort_indices(
+        tbl, sort_keys=[("_csn", "descending"), ("_opseq", "descending")]
+    )
+    keys = tbl.select(key_cols).take(order).append_column(
+        "_pos", pa.array(np.arange(tbl.num_rows, dtype=np.int64))
+    )
+    first = keys.group_by(key_cols, use_threads=False).aggregate(
+        [("_pos", "min")]
+    )["_pos_min"]
+    out = tbl.take(order.take(first.sort()))
+    return out.filter(pc.invert(out["_deleted"]))
+
+
 @dataclass
 class BucketSetPartition(InputPartition):
     """A snapshot partition: owns a set of physical buckets and lists ONLY
@@ -494,31 +519,13 @@ class VersionedSnapshotReader(DataSourceReader):
     def fold(self, partition):
         """Resolve this partition's rows: newest visible version per key,
         tombstones hidden, as a pyarrow table typed by `output_schema()`."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
         out_schema = to_arrow_schema(self.output_schema())
         tbl = self.versions(partition)
         if tbl.num_rows == 0:
             return out_schema.empty_table()
-        # visibility rule (block_driver.rs:457-486): newest (_csn,_opseq)
-        # version per key wins; tombstone winners hide the key. The stable
-        # sort puts each key's newest version first; the smallest sorted
-        # position per key picks it. Grouping compares Arrow values, so
-        # int64 stays exact and a NaN key is not a NULL key.
-        order = pc.sort_indices(
-            tbl, sort_keys=[("_csn", "descending"), ("_opseq", "descending")]
-        )
-        keys = tbl.select(self.key_cols).take(order).append_column(
-            "_pos", pa.array(np.arange(tbl.num_rows, dtype=np.int64))
-        )
-        first = keys.group_by(self.key_cols, use_threads=False).aggregate(
-            [("_pos", "min")]
-        )["_pos_min"]
-        out = tbl.take(order.take(first.sort()))
-        out = out.filter(pc.invert(out["_deleted"]))
+        out = newest_versions(tbl, self.key_cols)
         _, row_filter = self._key_filters()
         if row_filter and out.num_rows:
             out = out.filter(_row_filter_mask(out, row_filter))
@@ -861,19 +868,28 @@ class VersionedStreamWriter(DataSourceStreamWriter):
         if not live:
             self._discard(messages)
             return
-        # exactly-once: a replayed epoch is already durable — drop the stage;
-        # the same scan finds this writer's newest manifest, where the
-        # conflict window opens
-        own = []
-        for csn, _, name in log_names(self.path):
+        # exactly-once: a replayed epoch is already durable — drop the stage.
+        # The scan runs newest-first and stops at this writer's first
+        # manifest with an epoch <= batchId (a writer's epochs only grow),
+        # so it opens only the manifests since the writer's last epoch;
+        # checkpoints carry no writer and are not opened. The newest own
+        # manifest is where the conflict window opens.
+        start_csn = None
+        for csn, is_ck, name in reversed(log_names(self.path)):
+            if is_ck:
+                continue
             mf = read_manifest(self.path, name)
             if mf.get("writer") != self.writer_id:
                 continue
+            if start_csn is None:
+                start_csn = csn
             if mf.get("epoch") == batchId:
                 self._discard(messages)
                 return
-            own.append(csn)
-        start_csn = max(own, default=self.last_seen_csn)
+            if mf.get("epoch", batchId) < batchId:
+                break
+        if start_csn is None:
+            start_csn = self.last_seen_csn
         tsn = f"s{uuid.uuid4().hex[:10]}b{batchId}"
         op_dir = os.path.join(self.path, "data", f"tsn={tsn}", "opseq=0")
         for m in live:

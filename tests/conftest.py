@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -50,6 +52,22 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMALL}/{t}.parquet')"
         )
     return con
+
+
+@contextmanager
+def job_count(spark):
+    """Yields a list that holds, on exit, the number of Spark jobs started
+    inside the block (counted through the status tracker's job group)."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    out: list[int] = []
+    sc.setJobGroup(group, "job count")
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
 
 def change_rows(reader, parts):

@@ -1,10 +1,12 @@
-"""Commit staging: one pyarrow writer, run in two places. An op whose frame
-is a LocalRelation (a pandas/Arrow `createDataFrame`, a `literal_frame`, a
-`delete_keys` list) stages in-process — one `toArrow()` job, then one
-parquet file per non-empty bucket — as the reference's commit writes
-in-process (system/instance.rs:141-187). Any other frame stages in one
-mapInArrow job, each task writing its rows through the same writer; both
-must produce the same table."""
+"""Commit staging: one pyarrow writer, run in two places. An op whose rows
+are already on the driver — a pyarrow Table (a `delete_keys` list, object
+chunks) or a frame whose plan is a LocalRelation (a pandas/Arrow
+`createDataFrame`, a `literal_frame`) — stages in-process, one parquet file
+per non-empty bucket, as the reference's commit writes in-process
+(system/instance.rs:141-187): a small LocalRelation is collected with no
+Spark job, a large one pulled by one `toArrow()` job. Any other frame stages
+in one mapInArrow job, each task writing its rows through the same writer;
+all of them must produce the same table."""
 
 from __future__ import annotations
 
@@ -12,33 +14,15 @@ import datetime as dt
 import glob
 import json
 import os
-import uuid
-from contextlib import contextmanager
 
 import pandas as pd
 import pytest
 from pyspark.sql import types as T
 
 from db_core_spark.operators.litframe import literal_frame
-from db_core_spark.plans import ObjectStore, VersionedTable
+from db_core_spark.plans import ObjectStore, VersionedTable, versioned
 from db_core_spark.plans.versioned import bucket_of_py, op_write_set
-from tests.conftest import window_snapshot
-
-
-@contextmanager
-def job_count(spark):
-    """Yields a list that holds, on exit, the number of Spark jobs started
-    inside the block (counted through the status tracker's job group)."""
-    sc = spark.sparkContext
-    group = f"local-staging-{uuid.uuid4().hex}"
-    out: list[int] = []
-    sc.setJobGroup(group, "local staging")
-    try:
-        yield out
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+from tests.conftest import job_count, window_snapshot
 
 
 def _schema(key_type) -> T.StructType:
@@ -72,45 +56,78 @@ def _write_set(m: dict):
 # ------------------------------------------------------------- job counts
 
 
-def test_small_local_commits_run_one_job_per_op(spark, tmp_path):
+def test_small_local_commits_run_no_job(spark, tmp_path):
     vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=8)
     pdf = pd.DataFrame({"k": range(10), "v": [f"v{i}" for i in range(10)], "x": [0.5] * 10})
     txn = vt.begin()
     txn.upsert(spark.createDataFrame(pdf, KV_SCHEMA))
     with job_count(spark) as jobs:
         txn.commit()
-    assert jobs == [1]
+    assert jobs == [0]
 
     txn = vt.begin()
     txn.delete_keys([{"k": 3}, {"k": 4}])
     with job_count(spark) as jobs:
         txn.commit()
-    assert jobs == [1]
+    assert jobs == [0]
 
     txn = vt.begin()
     txn.upsert(spark.createDataFrame(pdf.head(2), KV_SCHEMA))
     txn.delete_keys([{"k": 5}])
     with job_count(spark) as jobs:
         txn.commit()
-    assert jobs == [2]
+    assert jobs == [0]
     assert sorted(r.k for r in vt.snapshot().collect()) == [0, 1, 2, 6, 7, 8, 9]
 
 
-def test_object_put_runs_one_job_per_op(spark, tmp_path):
+def test_object_put_runs_no_job(spark, tmp_path):
     store = ObjectStore.create(spark, str(tmp_path / "objects"), chunk_size=64)
     data = bytes(range(256)) * 2
     txn = store.begin()
     store.put(txn, 1, data)
     with job_count(spark) as jobs:
         txn.commit()
-    assert jobs == [1]
+    assert jobs == [0]
     # a shorter rewrite adds a delete op for the stale chunks: two ops
     txn = store.begin()
     store.put(txn, 1, data[:100])
     with job_count(spark) as jobs:
         txn.commit()
-    assert jobs == [2]
+    assert jobs == [0]
     assert store.read(None, 1) == data[:100]
+
+
+def test_local_relation_above_the_bound_runs_one_job(spark, tmp_path):
+    """A LocalRelation of more than LOCAL_COLLECT_ROWS rows (counted from
+    its plan) is pulled by one toArrow() job; the plan check itself runs
+    none."""
+    n = versioned.LOCAL_COLLECT_ROWS + 1
+    vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=4)
+    pdf = pd.DataFrame({"k": range(n), "v": [f"v{i}" for i in range(n)], "x": [0.5] * n})
+    txn = vt.begin()
+    txn.upsert(spark.createDataFrame(pdf, KV_SCHEMA))
+    with job_count(spark) as jobs:
+        txn.commit()
+    assert jobs == [1]
+    assert vt.snapshot().count() == n
+
+
+def test_distributed_frame_runs_one_map_in_arrow_job(spark, tmp_path):
+    """A frame that is not on the driver stages in one mapInArrow job over
+    its partitions: the commit runs the jobs a collect() of the frame runs
+    (adaptive execution runs the repartition's shuffle as a job of its own)
+    and no more."""
+    vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=4)
+    rows = [(i, f"v{i}", float(i)) for i in range(10)]
+    frame = literal_frame(spark, rows, KV_SCHEMA).repartition(2)
+    with job_count(spark) as read_jobs:
+        frame.collect()
+    txn = vt.begin()
+    txn.upsert(frame)
+    with job_count(spark) as jobs:
+        txn.commit()
+    assert jobs == read_jobs == [2]
+    assert _sorted_rows(vt.snapshot()) == sorted(rows, key=repr)
 
 
 # ----------------------------------------------------------------- layout

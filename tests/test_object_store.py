@@ -9,6 +9,8 @@ import random
 import pytest
 
 from db_core_spark.plans import ObjectStore
+from db_core_spark.plans.objects import OBJECT_SCHEMA
+from tests.conftest import job_count
 
 CHUNK = 256  # small chunk size to exercise multi-chunk paths cheaply
 
@@ -98,3 +100,43 @@ def test_uncommitted_object_invisible_to_others(store):
     assert store.read(t, 21) == b"dirty"  # read-your-own-writes
     t.rollback()
     assert store.read(None, 21) is None
+
+
+def test_transaction_reads_run_no_job(spark, store):
+    """Inside a transaction, the chunk listing of each put, write_at's
+    read-modify-write and read() resolve in the driver: the object's bucket
+    at the start csn beneath the transaction's own chunk rows
+    (Transaction.lookup_table). Four puts, a write_at and a read run no
+    Spark job, and return what a committed read returns afterwards; once a
+    DataFrame op is buffered, the reads go through Transaction.read() and
+    agree."""
+    base = bytes(range(256)) * 3
+    t = store.begin()
+    store.put(t, 1, base)
+    t.commit()
+    t = store.begin()
+    with job_count(spark) as jobs:
+        store.put(t, 1, b"x" * 600)  # shorter rewrite: the stale chunk goes
+        store.put(t, 2, b"two" * 200)
+        store.put(t, 1, base[:300])  # lists the first put's chunks
+        store.put(t, 3, b"three")
+        store.write_at(t, 2, 100, b"SPLICE")
+        got = {o: store.read(t, o) for o in (1, 2, 3)}
+        length = store.length(t, 1)
+    assert jobs == [0]
+    t.commit()
+    assert got == {o: store.read(None, o) for o in (1, 2, 3)}
+    assert got[1] == base[:300] and length == 300
+    assert got[2] == (b"two" * 200)[:100] + b"SPLICE" + (b"two" * 200)[106:]
+
+    t = store.begin()
+    store.put(t, 4, b"four" * 100)
+    store.delete(t, 3)
+    driver = [store.read(t, o) for o in (1, 2, 3, 4)]
+    with pytest.raises(ValueError, match="key columns only"):
+        t.lookup_table({"obj_id": 4, "payload": b"four"})
+    t.upsert(spark.createDataFrame([(9, 0, b"df")], OBJECT_SCHEMA))
+    assert t.lookup_table({"obj_id": 4}) is None
+    assert [store.read(t, o) for o in (1, 2, 3, 4)] == driver
+    assert driver[2] is None and driver[3] == b"four" * 100
+    t.rollback()

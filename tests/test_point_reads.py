@@ -7,34 +7,17 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import types as T
 
 from db_core_spark.plans import ObjectStore, SnapshotUnavailableError, VersionedTable
+from tests.conftest import job_count
 
 SCHEMA = T.StructType(
     [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
 )
 CHUNK = 256
-
-
-@contextmanager
-def job_count(spark):
-    """Yields a list that holds, on exit, the number of Spark jobs started
-    inside the block (counted through the status tracker's job group)."""
-    sc = spark.sparkContext
-    group = f"point-reads-{uuid.uuid4().hex}"
-    out: list[int] = []
-    sc.setJobGroup(group, "point read")
-    try:
-        yield out
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
 
 def _commit(vt, spark, rows=(), deletes=()):

@@ -20,7 +20,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import types as T
 
 from db_core_spark.plans import VersionedTable
-from db_core_spark.sources.versioned_datasource import VersionedSnapshotReader
+from db_core_spark.sources.versioned_datasource import VersionedSnapshotReader, newest_versions
 
 SCHEMA = T.StructType(
     [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
@@ -139,6 +139,9 @@ def test_snapshot_does_not_read_the_versioned_format():
 
 
 def test_fold_has_no_pandas_round_trip():
-    calls = _calls(VersionedSnapshotReader.fold)
+    # the fold resolves through newest_versions, the step
+    # Transaction.lookup_table shares
+    assert "newest_versions" in _calls(VersionedSnapshotReader.fold)
+    calls = _calls(VersionedSnapshotReader.fold) | _calls(newest_versions)
     assert not {"to_pandas", "from_pandas", "sort_values", "drop_duplicates"} & calls
     assert {"sort_indices", "group_by"} <= calls

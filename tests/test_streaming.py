@@ -1059,3 +1059,53 @@ def test_epoch_replay_check_is_incremental(spark, tmp_path):
     finally:
         vt._read_manifest = orig
     assert commit_microbatch(vt, spark.createDataFrame([(4, 40)], schema), 4, "w", cache=cache) is True
+
+
+def test_stream_epoch_opens_only_the_manifests_since_its_last(spark, tmp_path, monkeypatch):
+    """The sink's replay check scans the log newest-first and stops at this
+    writer's newest manifest with an epoch <= batchId (a writer's epochs
+    only grow), so an epoch's commit reads the manifests published since
+    the writer's previous epoch, not the table's whole history. With 200
+    commits before the writer's first epoch, that epoch opens all 200; the
+    next opens only its own previous manifest, and one after three other
+    commits opens those three and its own. A replayed epoch is still
+    found and dropped."""
+    from pyspark.sql import types as T
+
+    from db_core_spark.plans import VersionedTable
+    from db_core_spark.sources import versioned_datasource as vds
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType())]
+    )
+    vt = VersionedTable.create(spark, str(tmp_path / "log"), key_cols=["k"], schema=schema)
+
+    def other_commits(n):
+        for i in range(n):
+            txn = vt.begin()
+            txn.delete_keys([{"k": -1 - i}])
+            txn.commit()
+
+    opened: list[str] = []
+
+    def counting(path, name):
+        opened.append(name)
+        return read_manifest(path, name)
+
+    read_manifest = vds.read_manifest
+    monkeypatch.setattr(vds, "read_manifest", counting)
+
+    def epoch(batch_id, rows):
+        opened.clear()
+        w = vds.VersionedStreamWriter(schema, {"path": vt.path, "writerid": "w"})
+        w.commit([w.write(iter(rows))], batchId=batch_id)
+        return len(opened)
+
+    other_commits(200)
+    assert epoch(0, [(1, "a")]) == 200
+    assert epoch(1, [(2, "b")]) == 1
+    other_commits(3)
+    assert epoch(2, [(3, "c")]) == 4
+    assert epoch(2, [(3, "replayed")]) == 1
+    assert vt.latest_csn() == 206
+    assert sorted(tuple(r) for r in vt.snapshot().collect()) == [(1, "a"), (2, "b"), (3, "c")]
