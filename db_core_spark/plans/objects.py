@@ -19,8 +19,9 @@ the bytes come straight from that Arrow table — the reference's in-process
 version-chain walk (block_driver.rs:461-486). Inside a transaction,
 Transaction.lookup_table folds the same bucket at the start csn and layers
 the transaction's own chunk rows over it, so the reads see its own writes;
-only a transaction holding a DataFrame op (a caller's upsert or merge)
-reads through Transaction.read().
+a caller's upsert of a pandas or Arrow frame is a Table op too. Only a
+transaction holding a frame op whose rows are not on the driver (a merge,
+an upsert of a distributed frame) reads through Transaction.read().
 
 Client reads return driver-side `bytes` — the reference API is a client
 byte-copy loop (read_next into a buffer); bulk analytics over object payloads

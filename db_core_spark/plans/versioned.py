@@ -29,14 +29,15 @@ data/checkpoint-<csn>/bucket=<b>/ — every table is key-hash bucketed
 (num_buckets >= 1). `write_bucket_file` writes every data file, as a
 `_tmp-` file renamed into place (readers skip `_`-prefixed files).
 `stage_part` writes one part of an op: it splits the rows by
-`bucket_of_py` through `write_bucketed`. A commit casts each op to the
+`bucket_ids` (the per-key `bucket_of_py`, computed for all rows at once)
+through `write_bucketed`. A commit casts each op to the
 table's types (`physical_rows`) and stages it in-process when its rows are
 already on the driver — a pyarrow Table op (delete_keys lists, object
 chunks), or a frame whose plan is a LocalRelation (pandas/Arrow frames),
-collected with no Spark job up to LOCAL_COLLECT_ROWS rows and pulled by one
-toArrow() job above — as the reference's commit writes in-process
-(system/instance.rs:141-187); any other frame stages in one shuffle-free
-mapInArrow job over its own partitions;
+which the driver JVM converts to Arrow when the op is added (`local_arrow`),
+with no Spark job at any row count — as the reference's commit writes
+in-process (system/instance.rs:141-187); any other frame stages in one
+shuffle-free mapInArrow job over its own partitions;
 the versioned DataSource's batch and stream writers call `stage_part` on
 the executors. A driver publishing task-written files first deletes those
 no successful task reported (`keep_reported`). Every writer claims its csn
@@ -137,8 +138,10 @@ def bucket_of_py(values, num_buckets: int) -> int:
     """Bucket id of one key: zlib.crc32 of the canonical key string (each
     value as Spark casts it to string, NULL -> 'None', joined with NUL)
     mod B. crc32 so the id is stable across processes and releases. Every
-    file on disk was placed by this function; a golden test pins its ids
-    across ints, strings, NULLs, booleans and timestamps
+    file on disk was placed by this function or by bucket_ids, its
+    vectorised form for a whole table; a golden test pins their ids
+    across ints, strings, NULLs, booleans and timestamps, and an
+    agreement test holds bucket_ids to this function
     (tests/test_scale_patterns.py), so existing tables keep their
     placement."""
     return _crc_bucket(map(_bucket_canon, values), num_buckets)
@@ -196,15 +199,89 @@ def table_meta(path: str) -> dict:
 
 
 def bucket_ids(tbl, bucket_cols: list[str], num_buckets: int):
-    """bucket_of_py of every row of pyarrow table ``tbl``, encoded a
-    column at a time, as an int32 array."""
+    """bucket_of_py of every row of pyarrow table ``tbl``, as an int32
+    array, with no per-row Python for short keys: each key column's
+    canonical strings are built in Arrow (`_canon_strings`), NUL-joined,
+    and hashed by `_crc32_rows`."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    canon = [
-        map(_column_encoder(tbl.schema.field(c).type, _bucket_canon), tbl.column(c).to_pylist())
-        for c in bucket_cols
-    ]
-    return pa.array([_crc_bucket(k, num_buckets) for k in zip(*canon)], type=pa.int32())
+    strs = [_canon_strings(tbl.column(c)) for c in bucket_cols]
+    keys = strs[0] if len(strs) == 1 else pc.binary_join_element_wise(
+        *strs, pa.scalar("\x00", pa.large_string())
+    )
+    return pa.array((_crc32_rows(keys) % num_buckets).astype("int32"))
+
+
+def _canon_strings(col):
+    """The _bucket_canon strings of one arrow column as a large_string
+    array: string columns as they are and integer columns cast in Arrow
+    (both agree with ``str``), every other type through _column_encoder;
+    NULL becomes 'None'."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_integer(t):
+        return pc.fill_null(pc.cast(col, pa.large_string()), "None").combine_chunks()
+    enc = _column_encoder(t, _bucket_canon)
+    return pa.array(map(enc, col.to_pylist()), pa.large_string())
+
+
+@functools.cache
+def _crc_table():
+    """The 256-entry table of the reflected CRC-32 zlib.crc32 computes."""
+    import numpy as np
+
+    c = np.arange(256, dtype=np.uint32)
+    for _ in range(8):
+        c = np.where(c & 1, (c >> 1) ^ np.uint32(0xEDB88320), c >> 1)
+    return c
+
+
+def _crc32_rows(arr):
+    """zlib.crc32 of the utf-8 bytes of every value of large_string array
+    ``arr``, as a uint32 numpy array. Byte position i of every row still
+    longer than i is hashed in one numpy step (rows sorted by length, so
+    the live rows are a prefix), up to 64 positions: past them zlib is
+    faster per byte. A row left over — a longer key, or one of the few
+    still live once a step would cost more than their zlib calls —
+    finishes with ``zlib.crc32(rest, running)``, so a long key costs what
+    zlib costs."""
+    import numpy as np
+
+    n = len(arr)
+    _, obuf, dbuf = arr.buffers()
+    offsets = np.frombuffer(obuf, dtype=np.int64, count=n + 1, offset=arr.offset * 8)
+    data = np.frombuffer(dbuf or b"", dtype=np.uint8)  # no buffer when every key is ""
+    lengths = np.diff(offsets)
+    order = np.argsort(-lengths, kind="stable")
+    pos, lens = offsets[:-1][order], lengths[order]
+    crc = np.full(n, 0xFFFFFFFF, dtype=np.uint32)
+    table = _crc_table()
+    byte, idx = np.empty(n, np.uint8), np.empty(n, np.uint32)
+    steps = min(int(lens[0]), 64) if n else 0
+    i = 0
+    while i < steps:
+        while lens[n - 1] <= i:
+            n -= 1
+        # a numpy step costs about what 8 zlib calls do
+        if n <= 8 * (steps - i):
+            break
+        c = crc[:n]
+        np.take(data, pos[:n], out=byte[:n])
+        np.bitwise_and(np.bitwise_xor(c, byte[:n], out=idx[:n]), 0xFF, out=idx[:n])
+        np.bitwise_xor(np.right_shift(c, 8, out=c), np.take(table, idx[:n]), out=c)
+        pos[:n] += 1
+        i += 1
+    crc ^= np.uint32(0xFFFFFFFF)
+    for j in range(n):
+        if lens[j] > i:
+            start = int(pos[j])
+            crc[j] = zlib.crc32(data[start:start + int(lens[j]) - i], int(crc[j]))
+    out = np.empty_like(crc)
+    out[order] = crc
+    return out
 
 
 def write_bucket_file(tbl, out_dir: str, bucket: int, name: str) -> str:
@@ -240,7 +317,7 @@ def write_bucket_file(tbl, out_dir: str, bucket: int, name: str) -> str:
 def write_bucketed(tbl, out_dir: str, num_buckets: int, bucket_cols: list[str]) -> list[str]:
     """The pyarrow writer of an op's data files: split the physical rows
     (data columns, _deleted, _opseq) of pyarrow table ``tbl`` by
-    bucket_of_py and write ONE parquet file per non-empty bucket=<b>/
+    bucket_ids and write ONE parquet file per non-empty bucket=<b>/
     subdir of ``out_dir``. Returns the written paths relative to
     ``out_dir``; empty when ``tbl`` has no rows. Called through
     stage_part by every op writer."""
@@ -726,34 +803,51 @@ def claim_csn(
     raise RuntimeError("could not claim a csn (too much commit contention)")
 
 
-#: rows at or below which a LocalRelation op frame is collected (its
-#: LocalTableScanExec runs no Spark job) rather than pulled by one toArrow()
-#: job; collect() plus the Arrow conversion beat toArrow() up to about 8000
-#: rows of 3 columns on 4 cores (SCALING.md), and half that leaves room for
-#: wider rows
-LOCAL_COLLECT_ROWS = 4096
-
-
 def local_arrow(frame: DataFrame):
-    """The rows of ``frame`` as a pyarrow Table typed by its Arrow schema
-    when its optimized plan is a LocalRelation (rows already on the driver),
-    else None. The row count is the plan's own (``data().size()``), never an
-    estimate: up to LOCAL_COLLECT_ROWS rows are collected, with no Spark
-    job, and converted the way Spark Connect converts local rows
-    (collect()'s naive local-time timestamps become UTC instants); above,
-    one toArrow() job, which reuses the plan this check optimized."""
-    plan = frame._jdf.queryExecution().optimizedPlan()
-    if plan.nodeName() != "LocalRelation":
-        return None
-    if plan.data().size() > LOCAL_COLLECT_ROWS:
-        return frame.toArrow()
-    from pyspark.sql.conversion import LocalDataToArrowConversion
+    """The rows of ``frame`` as a pyarrow Table when they are already on
+    the driver, else None, with no Spark job at any row count. The rows
+    are on the driver when the frame's analyzed plan is a LocalRelation (a
+    pandas or Arrow createDataFrame; no optimizer pass) or its optimized
+    plan is (a Project the optimizer folds into one). The driver JVM
+    converts the relation's rows to Arrow IPC streams with the confs
+    toArrow() reads (records per batch, session time zone, large var
+    types) and serves them to this process."""
+    import pyarrow as pa
+    from pyspark.serializers import NoOpSerializer
     from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.util import _load_from_socket
 
-    rows = frame.collect()
-    if not rows:
+    qe = frame._jdf.queryExecution()
+    plan = qe.analyzed()
+    if plan.nodeName() != "LocalRelation":
+        plan = qe.optimizedPlan()
+        if plan.nodeName() != "LocalRelation":
+            return None
+    spark = frame.sparkSession
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().conf()
+    converters = getattr(jvm.org.apache.spark.sql.execution.arrow, "ArrowConverters$")
+    streams = converters.__getattr__("MODULE$").toBatchWithSchemaIterator(
+        plan.data().iterator(),
+        plan.schema(),
+        conf.arrowMaxRecordsPerBatch(),
+        -1,  # no byte bound per batch, as toArrow()
+        conf.sessionLocalTimeZone(),
+        True,  # errorOnDuplicatedFieldNames
+        conf.arrowUseLargeVarTypes(),
+    )
+    port, secret, server = jvm.PythonRDD.serveIterator(streams, "local arrow")
+    try:
+        # each served frame is one IPC stream (schema, one batch)
+        tables = [
+            pa.ipc.open_stream(s).read_all()
+            for s in _load_from_socket((port, secret), NoOpSerializer())
+        ]
+    finally:
+        server.getResult()  # joins the serving thread; raises its error
+    if not tables:
         return to_arrow_schema(frame.schema).empty_table()
-    return LocalDataToArrowConversion.convert(rows, frame.schema, False)
+    return pa.concat_tables(tables)
 
 
 @dataclass
@@ -1760,10 +1854,9 @@ class Transaction:
     def upsert(self, rows) -> None:
         """INSERT/UPDATE: stage new row versions (open_create/open_write +
         write_next, system/instance.rs:141-187, 429-444). `rows` is a
-        DataFrame or a pyarrow Table holding the table's columns; a Table
-        is staged in this process at commit, with no Spark job."""
-        self._check_open()
-        self._ops.append(_Op("upsert", rows, opseq=len(self._ops)))
+        DataFrame or a pyarrow Table holding the table's columns (see
+        _add for which ops stage with no Spark job)."""
+        self._add("upsert", rows)
 
     def delete_keys(self, keys) -> None:
         """DELETE: stage tombstones for the given keys (system/instance.rs:191-210).
@@ -1772,19 +1865,30 @@ class Transaction:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        self._check_open()
         kc = self.table.key_cols
-        if isinstance(keys, DataFrame):
-            keys = keys.select(*kc)
-        elif isinstance(keys, pa.Table):
-            keys = keys.select(kc)
-        else:
+        if not isinstance(keys, (DataFrame, pa.Table)):
             key_schema = T.StructType([self.table.schema[k] for k in kc])
             rows = [tuple(k[c] for c in kc) if isinstance(k, dict) else tuple(k) for k in keys]
             keys = pa.Table.from_pylist(
                 [dict(zip(kc, r)) for r in rows], schema=to_arrow_schema(key_schema)
             )
-        self._ops.append(_Op("delete", keys, opseq=len(self._ops)))
+        self._add("delete", keys)
+
+    def _add(self, kind: str, rows) -> None:
+        """Buffer an op holding exactly its columns (_names); a missing
+        column raises here. A frame whose rows are already on the driver
+        (local_arrow) becomes a Table op, selected in Arrow so its analyzed
+        plan stays a LocalRelation: every Table op stages in this process at
+        commit, with no Spark job, and answers Transaction.lookup_table in
+        the driver."""
+        self._check_open()
+        names = self._names(kind)
+        if isinstance(rows, DataFrame):
+            tbl = local_arrow(rows)
+            rows = rows.select(*names) if tbl is None else tbl
+        if not isinstance(rows, DataFrame):
+            rows = rows.select(names)
+        self._ops.append(_Op(kind, rows, opseq=len(self._ops)))
 
     def savepoint(self) -> int:
         """Mark the current op position; a later :meth:`rollback_to` this
@@ -1903,8 +2007,9 @@ class Transaction:
         the committed rows at start_csn (VersionedTable.lookup_table)
         beneath this transaction's buffered ops for the key, resolved by the
         fold's own newest-version step (`newest_versions`), the committed
-        rows ranking below every op. None when a buffered op is a
-        DataFrame: only read() resolves those. `key` binds key columns
+        rows ranking below every op. None when a buffered op is a frame
+        whose rows are not on the driver (a frame op, see _add): only
+        read() resolves those. `key` binds key columns
         only: a filter on any other column would have to wait for the
         resolution."""
         self._check_open()
@@ -1988,19 +2093,16 @@ class Transaction:
         claiming any csn (plans/group.py).
 
         One writer, two places to run it: every op is cast to the table's
-        types (physical_rows) and staged through stage_part. An op whose
-        rows are already on the driver is staged in this process: a pyarrow
-        Table op (a delete_keys list, object chunks) as it is, a frame whose
-        plan is a LocalRelation (a pandas or Arrow createDataFrame, a
-        literal_frame) through local_arrow — collected with no Spark job up
-        to LOCAL_COLLECT_ROWS rows, one toArrow() job (a JVM-side local
-        scan: no Python worker, no shuffle) above. Any other frame runs one
-        mapInArrow job over its own partitions (_stage_task): each task
-        stages its rows as one part, so the op writes at most one file per
-        partition and non-empty bucket, and the driver keeps only the files
-        the successful tasks reported (keep_reported). The commit's
-        write-set is read back from these files (op_write_set) only if a
-        conflict check needs it.
+        types (physical_rows) and staged through stage_part. A Table op —
+        a pyarrow Table, a delete_keys list, object chunks, or a frame whose
+        rows were on the driver when it was added (_add: a pandas or Arrow
+        createDataFrame, a literal_frame) — is staged in this process, with
+        no Spark job. A frame op runs one mapInArrow job over its own
+        partitions (_stage_task): each task stages its rows as one part,
+        so the op writes at most one file per partition and non-empty
+        bucket, and the driver keeps only the files the successful tasks
+        reported (keep_reported). The commit's write-set is read back from
+        these files (op_write_set) only if a conflict check needs it.
 
         CDC before-images (config.cdc_preimages or commit(capture_preimages=
         True)): for each op, the previous values of the op's keys — folded
@@ -2035,19 +2137,11 @@ class Transaction:
 
         for op in self._ops:
             out_dir = os.path.join(t._data_dir, f"tsn={self.tsn}", f"opseq={op.opseq}")
-            names = self._names(op)
-            args = (t.schema, names, op.kind == "delete", op.opseq)
             if isinstance(op.rows, DataFrame):
-                frame = op.rows.select(*names)
-                tbl = local_arrow(frame)
+                args = (t.schema, self._names(op.kind), op.kind == "delete", op.opseq)
+                paths = stage_frame(op.rows, args, out_dir)
             else:
-                tbl = op.rows.select(names)
-            if tbl is not None:
-                paths = stage_part(
-                    physical_rows(tbl, *args), out_dir, t.num_buckets, t.bucket_cols
-                )
-            else:
-                paths = stage_frame(frame, args, out_dir)
+                paths = stage_part(self._physical(op), out_dir, t.num_buckets, t.bucket_cols)
             # an op that staged ZERO rows (empty upsert / delete of nothing)
             # writes no parquet files — referencing its dir would break
             # every reader, so it is dropped from the manifest (the commit
@@ -2119,18 +2213,17 @@ class Transaction:
 
     # ------------------------------------------------------------ internals
 
-    def _names(self, op: _Op) -> list[str]:
+    def _names(self, kind: str) -> list[str]:
         """The columns an op holds: every data column of an upsert, the key
         columns of a delete."""
         t = self.table
-        return [f.name for f in t.schema.fields] if op.kind == "upsert" else t.key_cols
+        return [f.name for f in t.schema.fields] if kind == "upsert" else t.key_cols
 
     def _physical(self, op: _Op):
         """physical_rows of a Table op: its rows in the table's types, a
         delete's non-key columns null, plus _deleted and _opseq."""
-        names = self._names(op)
         return physical_rows(
-            op.rows.select(names), self.table.schema, names, op.kind == "delete", op.opseq
+            op.rows, self.table.schema, self._names(op.kind), op.kind == "delete", op.opseq
         )
 
     def _full_rows(self, op: _Op) -> DataFrame:

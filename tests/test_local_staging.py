@@ -1,12 +1,12 @@
 """Commit staging: one pyarrow writer, run in two places. An op whose rows
 are already on the driver — a pyarrow Table (a `delete_keys` list, object
 chunks) or a frame whose plan is a LocalRelation (a pandas/Arrow
-`createDataFrame`, a `literal_frame`) — stages in-process, one parquet file
-per non-empty bucket, as the reference's commit writes in-process
-(system/instance.rs:141-187): a small LocalRelation is collected with no
-Spark job, a large one pulled by one `toArrow()` job. Any other frame stages
-in one mapInArrow job, each task writing its rows through the same writer;
-all of them must produce the same table."""
+`createDataFrame`, a `literal_frame`) — becomes a Table op when it is added
+(the driver JVM converts the relation to Arrow) and stages in-process, one
+parquet file per non-empty bucket, with no Spark job at any row count, as
+the reference's commit writes in-process (system/instance.rs:141-187). Any
+other frame stages in one mapInArrow job, each task writing its rows
+through the same writer; all of them must produce the same table."""
 
 from __future__ import annotations
 
@@ -20,7 +20,7 @@ import pytest
 from pyspark.sql import types as T
 
 from db_core_spark.operators.litframe import literal_frame
-from db_core_spark.plans import ObjectStore, VersionedTable, versioned
+from db_core_spark.plans import ObjectStore, VersionedTable
 from db_core_spark.plans.versioned import bucket_of_py, op_write_set
 from tests.conftest import job_count, window_snapshot
 
@@ -60,21 +60,23 @@ def test_small_local_commits_run_no_job(spark, tmp_path):
     vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=8)
     pdf = pd.DataFrame({"k": range(10), "v": [f"v{i}" for i in range(10)], "x": [0.5] * 10})
     txn = vt.begin()
-    txn.upsert(spark.createDataFrame(pdf, KV_SCHEMA))
+    frame = spark.createDataFrame(pdf, KV_SCHEMA)
     with job_count(spark) as jobs:
+        txn.upsert(frame)
         txn.commit()
     assert jobs == [0]
 
     txn = vt.begin()
-    txn.delete_keys([{"k": 3}, {"k": 4}])
     with job_count(spark) as jobs:
+        txn.delete_keys([{"k": 3}, {"k": 4}])
         txn.commit()
     assert jobs == [0]
 
     txn = vt.begin()
-    txn.upsert(spark.createDataFrame(pdf.head(2), KV_SCHEMA))
-    txn.delete_keys([{"k": 5}])
+    frame = spark.createDataFrame(pdf.head(2), KV_SCHEMA)
     with job_count(spark) as jobs:
+        txn.upsert(frame)
+        txn.delete_keys([{"k": 5}])
         txn.commit()
     assert jobs == [0]
     assert sorted(r.k for r in vt.snapshot().collect()) == [0, 1, 2, 6, 7, 8, 9]
@@ -97,19 +99,60 @@ def test_object_put_runs_no_job(spark, tmp_path):
     assert store.read(None, 1) == data[:100]
 
 
-def test_local_relation_above_the_bound_runs_one_job(spark, tmp_path):
-    """A LocalRelation of more than LOCAL_COLLECT_ROWS rows (counted from
-    its plan) is pulled by one toArrow() job; the plan check itself runs
-    none."""
-    n = versioned.LOCAL_COLLECT_ROWS + 1
+def test_bulk_local_commits_run_no_job(spark, tmp_path):
+    """A LocalRelation op runs no Spark job at any row count, from upsert
+    through commit: a 50k-row pandas frame, and a createDataFrame(...)
+    .withColumn(...) frame, whose Project the optimizer folds into a
+    LocalRelation."""
+    from pyspark.sql import functions as F
+
+    n = 50_000
     vt = VersionedTable.create(spark, str(tmp_path / "t"), ["k"], KV_SCHEMA, num_buckets=4)
     pdf = pd.DataFrame({"k": range(n), "v": [f"v{i}" for i in range(n)], "x": [0.5] * n})
-    txn = vt.begin()
-    txn.upsert(spark.createDataFrame(pdf, KV_SCHEMA))
-    with job_count(spark) as jobs:
-        txn.commit()
-    assert jobs == [1]
+    bulk = spark.createDataFrame(pdf, KV_SCHEMA)
+    derived = spark.createDataFrame(pdf.head(100), KV_SCHEMA).withColumn("x", F.col("x") * 4)
+    assert derived._jdf.queryExecution().analyzed().nodeName() == "Project"
+    for frame in (bulk, derived):
+        txn = vt.begin()
+        with job_count(spark) as jobs:
+            txn.upsert(frame)
+            txn.commit()
+        assert jobs == [0]
     assert vt.snapshot().count() == n
+    assert _sorted_rows(vt.lookup({"k": 99})) == [(99, "v99", 2.0)]
+    assert _sorted_rows(vt.lookup({"k": 100})) == [(100, "v100", 0.5)]
+
+
+def test_pandas_upsert_in_object_store_txn_is_read_in_the_driver(spark, tmp_path):
+    """A pandas-frame upsert inside an ObjectStore transaction is a Table
+    op, so Transaction.lookup_table (and the object reads through it)
+    answers with no Spark job, with the rows read() returns."""
+    from db_core_spark.plans.objects import OBJECT_SCHEMA
+
+    store = ObjectStore.create(spark, str(tmp_path / "objects"), chunk_size=4)
+    txn = store.begin()
+    store.put(txn, 1, b"committed")
+    txn.commit()
+    txn = store.begin()
+    store.put(txn, 2, b"own put")
+    txn.upsert(
+        spark.createDataFrame(
+            pd.DataFrame({"obj_id": [1, 1, 3], "chunk_no": [0, 3, 0],
+                          "payload": [b"COMM", b"xy", b"new"]}),
+            OBJECT_SCHEMA,
+        )
+    )
+    with job_count(spark) as jobs:
+        got = {o: txn.lookup_table({"obj_id": o}) for o in (1, 2, 3)}
+        data = {o: store.read(txn, o) for o in (1, 2, 3)}
+    assert jobs == [0]
+    assert data == {1: b"COMMittedxy", 2: b"own put", 3: b"new"}
+    snap = txn.read()
+    for o, tbl in got.items():
+        want = snap.filter(f"obj_id = {o}").collect()
+        assert sorted(tuple(r.values()) for r in tbl.to_pylist()) == sorted(
+            tuple(r) for r in want
+        )
 
 
 def test_distributed_frame_runs_one_map_in_arrow_job(spark, tmp_path):

@@ -150,8 +150,110 @@ def test_bucket_hash_golden_pin():
         [pa.array(list(c)) for c in zip(*rows)], names=["a", "b", "c", "d"]
     )
     utc = tbl.set_column(3, "d", tbl.column("d").cast(pa.timestamp("us", tz="UTC")))
-    for t in (tbl, utc):
+    # the same rows at a non-zero array offset, and split over chunks
+    padded = pa.concat_tables([tbl.slice(0, 3), tbl]).combine_chunks()
+    sliced = padded.slice(3)
+    assert sliced.column("b").chunk(0).offset == 3
+    chunked = pa.concat_tables([tbl.slice(0, 5), tbl.slice(5, 100), tbl.slice(105)])
+    assert chunked.column("b").num_chunks == 3
+    for t in (tbl, utc, sliced, chunked):
         assert bucket_ids(t, ["a", "b", "c", "d"], 64).to_pylist() == _GOLDEN_BUCKETS
+
+
+def _agreement_columns(n: int) -> dict:
+    """Key columns of ``n`` rows across the types a key may have, each with
+    NULLs: strings holding 'None', '' and non-ASCII text, every integer
+    width, booleans, timestamps, doubles with NaN and -0.0, and dates."""
+    import datetime as dt
+    import random
+
+    import pyarrow as pa
+
+    rnd = random.Random(17)
+
+    def nulls(values):
+        return [None if rnd.random() < 0.1 else v for v in values]
+
+    words = ["None", "", "a", "héllo wörld", "日本語キー", "tab\tnul", "x" * 70, "🙂"]
+    cols = {
+        "s": pa.array(nulls(rnd.choice(words) + rnd.choice(words) for _ in range(n))),
+        "no_null": pa.array([rnd.choice(words) for _ in range(n)]),
+        "ls": pa.array(nulls(rnd.choice(words) for _ in range(n)), pa.large_string()),
+        "bool": pa.array(nulls(rnd.random() < 0.5 for _ in range(n))),
+        "ts": pa.array(
+            nulls(dt.datetime(2000, 1, 1) + dt.timedelta(microseconds=rnd.randrange(10**15))
+                  for _ in range(n)),
+            pa.timestamp("us"),
+        ),
+        "dbl": pa.array(
+            nulls(rnd.choice([float("nan"), -0.0, 0.0, 1e308, -2.5, rnd.random()])
+                  for _ in range(n)),
+            pa.float64(),
+        ),
+        "date": pa.array(
+            nulls(dt.date(1960, 1, 1) + dt.timedelta(days=rnd.randrange(40000)) for _ in range(n)),
+            pa.date32(),
+        ),
+    }
+    for t in (pa.int8(), pa.int16(), pa.int32(), pa.int64(),
+              pa.uint8(), pa.uint16(), pa.uint32(), pa.uint64()):
+        bits = t.bit_width
+        lo, hi = (-(2 ** (bits - 1)), 2 ** (bits - 1) - 1) if pa.types.is_signed_integer(t) else (
+            0, 2**bits - 1)
+        cols[str(t)] = pa.array(
+            nulls(rnd.choice([lo, hi, 0, rnd.randint(lo, hi)]) for _ in range(n)), t
+        )
+    return cols
+
+
+def test_bucket_ids_agree_with_bucket_of_py():
+    """bucket_ids, vectorised over the table, gives every row the id
+    bucket_of_py gives its key: one column at a time, and multi-column keys
+    (where a NULL and 'None' canonicalise alike)."""
+    import zlib
+
+    import pyarrow as pa
+
+    from db_core_spark.plans.versioned import _crc32_rows, bucket_ids, bucket_of_py
+
+    full = pa.table(_agreement_columns(3000))
+    keys = [[c] for c in full.column_names] + [
+        ["s", "int64"],
+        ["ls", "s", "bool"],
+        ["uint64", "ts", "date", "dbl"],
+        full.column_names,
+    ]
+    # a slice: arrays at a non-zero offset
+    for tbl in (full, full.slice(7, 2000)):
+        rows = tbl.to_pylist()
+        for cols in keys:
+            want = [bucket_of_py([r[c] for c in cols], 61) for r in rows]
+            assert bucket_ids(tbl, cols, 61).to_pylist() == want, cols
+    # the hash itself over an array at a non-zero offset
+    arr = pa.array(["x", "héllo", "", "None"] * 50, pa.large_string()).slice(3)
+    assert _crc32_rows(arr).tolist() == [zlib.crc32(v.encode()) for v in arr.to_pylist()]
+    # NULL next to 'None': the same canonical string, so the same bucket
+    pair = pa.table({"a": pa.array([None, "None", ""]), "b": pa.array(["None", None, None])})
+    ids = bucket_ids(pair, ["a", "b"], 1 << 30).to_pylist()
+    assert ids[0] == ids[1] != ids[2]
+
+
+def test_bucket_ids_of_a_long_key_cost_what_zlib_costs():
+    """One 1 MB key among short ones hashes in well under 2 s: a key longer
+    than the column-wise byte positions finishes through zlib.crc32."""
+    import time
+
+    import pyarrow as pa
+
+    from db_core_spark.plans.versioned import bucket_ids, bucket_of_py
+
+    keys = [f"k{i}" for i in range(1000)]
+    keys.insert(500, "é" * (1 << 19))
+    tbl = pa.table({"k": keys})
+    t0 = time.perf_counter()
+    got = bucket_ids(tbl, ["k"], 1 << 20).to_pylist()
+    assert time.perf_counter() - t0 < 2.0
+    assert got == [bucket_of_py([k], 1 << 20) for k in keys]
 
 
 def test_pareto_distributed_rank_matches_global_window(spark):

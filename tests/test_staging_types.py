@@ -1,10 +1,10 @@
 """Type fidelity of commit staging: the same rows staged through each of the
-four ways an op reaches the writer — a pyarrow Table op, a small
-LocalRelation collected on the driver, a LocalRelation above
-LOCAL_COLLECT_ROWS pulled by toArrow(), and a distributed frame staged by a
-mapInArrow job — write identical files. The process runs in a time zone
-other than UTC: collect() returns TimestampType values as naive datetimes in
-the process's local time, which must still stage as the same UTC instants."""
+four ways an op reaches the writer — a pyarrow Table op, a frame whose
+analyzed plan is a LocalRelation, a frame whose Project the optimizer folds
+into a LocalRelation (both converted to Arrow by the driver JVM when the op
+is added), and a distributed frame staged by a mapInArrow job — write
+identical files. The process runs in a time zone other than UTC: a
+timestamp must still stage as the same UTC instant on every path."""
 
 from __future__ import annotations
 
@@ -17,10 +17,10 @@ import time
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import types as T
+from pyspark.sql import functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from db_core_spark.plans import VersionedTable, versioned
+from db_core_spark.plans import VersionedTable
 
 SCHEMA = T.StructType(
     [
@@ -106,23 +106,28 @@ def _staged(vt) -> dict[str, tuple]:
     return {b: (sorted(rows), schemas) for b, (rows, schemas) in out.items()}
 
 
-def test_four_staging_paths_write_identical_files(spark, tmp_path, monkeypatch, new_york_tz):
+def test_four_staging_paths_write_identical_files(spark, tmp_path, new_york_tz):
     assert time.localtime(1704164645).tm_hour == 22  # 2024-01-02 03:04:05 UTC
     src = pa.Table.from_pylist(ROWS, schema=to_arrow_schema(SCHEMA))
-    bound = versioned.LOCAL_COLLECT_ROWS
+    folded = spark.createDataFrame(src).withColumn("big", F.col("big") + F.lit(0))
+    for frame, analyzed in ((spark.createDataFrame(src), "LocalRelation"), (folded, "Project")):
+        qe = frame._jdf.queryExecution()
+        assert (qe.analyzed().nodeName(), qe.optimizedPlan().nodeName()) == (
+            analyzed, "LocalRelation"
+        )
     paths = {
-        # name: (the op's rows, LOCAL_COLLECT_ROWS while it stages)
-        "table_op": (lambda: src, bound),
-        "collected": (lambda: spark.createDataFrame(src), bound),
-        "to_arrow": (lambda: spark.createDataFrame(src), 0),
-        "distributed": (lambda: spark.createDataFrame(src).repartition(2), bound),
+        # name: (the op's rows, whether the op is a Table op once added)
+        "table_op": (lambda: src, True),
+        "analyzed_local": (lambda: spark.createDataFrame(src), True),
+        "folded_local": (lambda: folded, True),
+        "distributed": (lambda: spark.createDataFrame(src).repartition(2), False),
     }
     staged, rows_a = {}, {}
-    for name, (make, rows_bound) in paths.items():
-        monkeypatch.setattr(versioned, "LOCAL_COLLECT_ROWS", rows_bound)
+    for name, (make, table_op) in paths.items():
         vt = VersionedTable.create(spark, str(tmp_path / name), ["k"], SCHEMA, num_buckets=4)
         txn = vt.begin()
         txn.upsert(make())
+        assert isinstance(txn._ops[0].rows, pa.Table) == table_op, name
         txn.delete_keys([{"k": "b"}])
         txn.commit()
         staged[name] = _staged(vt)
